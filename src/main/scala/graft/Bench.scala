@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-round benchmark main: runs every registered query on
@@ -38,13 +40,14 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  import Verify.jsonStr
+
+  /** One timed run of a query: wall seconds (-1 = failed), shuffle-write
+    * MB, 1-min load at its start, GC millis, and the Spark jobs and
+    * task-seconds it scheduled (-1 when it failed).
+    */
+  private final case class Run(sec: Double, shuffleMb: Double, load: Double,
+                               gcMs: Long, jobs: Long, taskSec: Double)
 
   private def r3(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
 
@@ -128,35 +131,38 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.defaultCpus
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // per-query shuffle-bytes tracker (SCALING.md's scaling-curve column):
-    // task-end shuffle WRITE bytes — what would cross the network on a real
-    // cluster, the budget that matters at 100 TB. Listener events are
-    // delivered async, so each snapshot polls until the counter stops
-    // moving (bounded); the wait happens OUTSIDE the timing window.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+    val spark = LocalSession(cpus)
+    // per-query Spark counters, read as deltas around each timed query:
+    //  - shuffle WRITE bytes (SCALING.md's scaling-curve column) — what
+    //    would cross the network on a real cluster, the budget that
+    //    matters at 100 TB;
+    //  - jobs started and task-seconds — a query whose wall clock is job
+    //    count × scheduler overhead needs fewer actions, one dominated by
+    //    task time needs cheaper per-task work.
+    // Listener events are delivered async, so each snapshot polls until
+    // the counters stop moving (bounded); the wait happens OUTSIDE the
+    // timing window.
+    val shuffleBytes = new AtomicLong(0)
+    val jobs = new AtomicLong(0)
+    val taskMs = new AtomicLong(0)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics
         if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
         ()
       }
     })
-    def settledShuffleBytes(): Long = {
-      var prev = shuffleBytes.get
+    def settledCounters(): (Long, Long, Long) = {
+      def now = (shuffleBytes.get, jobs.get, taskMs.get)
+      var prev = now
       var tries = 0
       while (tries < 20) {
         Thread.sleep(25)
-        val cur = shuffleBytes.get
+        val cur = now
         if (cur == prev) return cur
         prev = cur; tries += 1
       }
@@ -184,8 +190,7 @@ object Bench {
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Double, Long) = {
+    def runOne(name: String, fn: (SparkSession, String) => DataFrame): Run = {
       // pay accumulated GC debt outside the next query's timing window —
       // without this one random query per run absorbs a multi-second pause
       System.gc()
@@ -198,7 +203,7 @@ object Bench {
           System.err.println(s"[bench] $name primer failed: ${e.getMessage}")
         }
       }
-      val sh0 = settledShuffleBytes()
+      val (sh0, jobs0, taskMs0) = settledCounters()
       val loadAtStart = osBean.getSystemLoadAverage
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
@@ -208,8 +213,13 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
       val sec = if (okQ) (System.nanoTime() - t0) / 1e9 else -1.0
-      val shMb = if (okQ) (settledShuffleBytes() - sh0) / 1e6 else -1.0
-      (sec, shMb, loadAtStart, gcMillis() - gc0)
+      val gcMs = gcMillis() - gc0
+      if (!okQ) Run(sec, -1.0, loadAtStart, gcMs, -1L, -1.0)
+      else {
+        val (sh1, jobs1, taskMs1) = settledCounters()
+        Run(sec, (sh1 - sh0) / 1e6, loadAtStart, gcMs, jobs1 - jobs0,
+          (taskMs1 - taskMs0) / 1e3)
+      }
     }
     // load-gate (r14 replay lesson: a sustained-load driver session
     // inflated the near-dedup family ~2-3x and defeated min-of-2 — both
@@ -223,10 +233,7 @@ object Bench {
     if (!canonical)
       System.err.println(f"[bench] load $loadStart%.2f >= ceiling " +
         f"$canonicalLoadCeiling%.1f at start — artifact marked non-canonical")
-    val firstPass = selected.map { case (name, fn) =>
-      val (sec, shMb, ld, gc) = runOne(name, fn)
-      (name, fn, sec, shMb, ld, gc)
-    }
+    val firstPass = selected.map { case (name, fn) => (name, fn, runOne(name, fn)) }
     // best-of-2 on the tail (r13 advice #1): any query whose first run
     // clears RERUN_THRESHOLD seconds is timed once more and scored as the
     // MIN of the two runs — a one-off multi-second stall (GC storm, page
@@ -234,15 +241,14 @@ object Bench {
     // reading, while a real regression reproduces in both runs. Bounded
     // cost: only the handful of >threshold queries pay a second run.
     val rerunThreshold = sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_S", "3.0").toDouble
-    val resultsFull = firstPass.map { case (name, fn, sec1, sh1, ld1, gc1) =>
-      if (sec1 >= rerunThreshold) {
-        val (sec2, sh2, ld2, gc2) = runOne(name, fn)
-        if (sec2 >= 0 && sec2 < sec1)
-          (name, sec2, sh2, ld2, gc2, Some((sec1, sec2)))
-        else (name, sec1, sh1, ld1, gc1, Some((sec1, sec2)))
-      } else (name, sec1, sh1, ld1, gc1, None)
+    val resultsFull = firstPass.map { case (name, fn, run1) =>
+      if (run1.sec >= rerunThreshold) {
+        val run2 = runOne(name, fn)
+        val scored = if (run2.sec >= 0 && run2.sec < run1.sec) run2 else run1
+        (name, scored, Some((run1.sec, run2.sec)))
+      } else (name, run1, None)
     }
-    val results = resultsFull.map { case (n, sec, _, _, _, _) => (n, sec) }
+    val results = resultsFull.map { case (n, run, _) => (n, run.sec) }
     val ok = results.collect { case (_, v) if v >= 0 => v }
     val nFailed = results.count(_._2 < 0)
     val total = ok.sum
@@ -281,23 +287,25 @@ object Bench {
       s""""measured_rows":${sr.measuredRows},"runs":$runsJson,""" +
       s""""spread":${r3(sr.spread)}}"""
 
-    val fullQs = results.map { case (k, v) => jsonStr(k) + ":" + r3(v) }
-      .mkString("{", ",", "}")
-    val fullSh = resultsFull.map { case (k, _, mb, _, _, _) => jsonStr(k) + ":" + r3(mb) }
-      .mkString("{", ",", "}")
+    def perQuery(v: Run => String): String =
+      resultsFull.map { case (k, run, _) => jsonStr(k) + ":" + v(run) }
+        .mkString("{", ",", "}")
+    val fullQs = perQuery(run => r3(run.sec))
+    val fullSh = perQuery(run => r3(run.shuffleMb))
     // load at each query's start + the run-wide max: a reader comparing
     // rounds can drop (or deflate) exactly the queries that ran hot
-    val fullLoad = resultsFull.map { case (k, _, _, ld, _, _) => jsonStr(k) + ":" + r3(ld) }
-      .mkString("{", ",", "}")
+    val fullLoad = perQuery(run => r3(run.load))
     // GC millis spent inside each query's timing window (scored run)
-    val fullGc = resultsFull.map { case (k, _, _, _, gc, _) => jsonStr(k) + ":" + gc }
-      .mkString("{", ",", "}")
+    val fullGc = perQuery(_.gcMs.toString)
+    // Spark jobs started and task-seconds spent by the scored run
+    val fullJobs = perQuery(_.jobs.toString)
+    val fullTaskSec = perQuery(run => r3(run.taskSec))
     // both raw timings for every re-run tail query: [first, second] — the
     // scored figure is their min, and the spread IS the noise evidence
-    val fullReruns = resultsFull.collect { case (k, _, _, _, _, Some((a, b))) =>
+    val fullReruns = resultsFull.collect { case (k, _, Some((a, b))) =>
       jsonStr(k) + s":[${r3(a)},${r3(b)}]"
     }.mkString("{", ",", "}")
-    val loadMax = resultsFull.map(_._4).foldLeft(0.0)(math.max)
+    val loadMax = resultsFull.map(_._2.load).foldLeft(0.0)(math.max)
     // n_queries = ATTEMPTED (stable denominator across artifacts even when
     // failures differ — round-10 lesson); n_ok/n_failed break it down.
     // mean_per_query stays mean over the ok set (a -1 would poison it).
@@ -310,7 +318,8 @@ object Bench {
       s""""env":$env,"stream":$stream,""" +
       s""""queries":$fullQs,"queries_shuffle_mb":$fullSh,""" +
       s""""queries_load":$fullLoad,"queries_gc_ms":$fullGc,""" +
-      s""""rerun_threshold_s":${r3(rerunThreshold)},"queries_rerun":$fullReruns}"""
+      s""""rerun_threshold_s":${r3(rerunThreshold)},"queries_rerun":$fullReruns,""" +
+      s""""queries_jobs":$fullJobs,"queries_task_sec":$fullTaskSec}"""
     Files.write(Paths.get(outFile), full.getBytes("UTF-8"))
 
     // the slowest queries are the only per-query data that fits the tail

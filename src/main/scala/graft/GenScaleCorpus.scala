@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Generates an N× scaled copy of a testdata dir's `documents` /
@@ -42,14 +42,7 @@ object GenScaleCorpus {
     val Array(srcDir, outDir, multS) = args
     val mult = multS.toInt
     require(mult >= 1, "multiplier must be >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
     val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")

@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -79,11 +79,15 @@ class QueueSourceProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     QueueSourceProvider.schema
 
+  // options are case-insensitive, like every built-in source's:
+  // `maxPerBatch` and `maxperbatch` name the same cap
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new QueueTable(properties.getOrDefault("queue", "default"),
-      properties.getOrDefault("maxperbatch", "1000").toLong,
-      properties.getOrDefault("targetperpartition", "1000").toLong)
+                        properties: util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    new QueueTable(options.getOrDefault("queue", "default"),
+      options.getOrDefault("maxPerBatch", "1000").toLong,
+      options.getOrDefault("targetPerPartition", "1000").toLong)
+  }
 }
 
 object QueueSourceProvider {
@@ -110,22 +114,44 @@ final class QueueTable(queue: String, maxPerBatch: Long,
 }
 
 /** Offset-tracked micro-batch view of one queue. `maxPerBatch` caps batch
-  * admission like the reference's NSQ `rdy` window (`Nsq.php:75-77`);
+  * admission like the reference's NSQ `rdy` window (`Nsq.php:75-77`): it
+  * is the default [[ReadLimit]], so Spark itself plans each batch's end
+  * offset at most `maxPerBatch` past its start, and `AvailableNow` drains
+  * the backlog present at start in capped batches.
   * `targetPerPartition` range-splits an admitted batch so a large backlog
   * drains across tasks instead of serializing through one reader.
   */
 final class QueueMicroBatchStream(queue: String, maxPerBatch: Long,
-                                  targetPerPartition: Long = 1000L) extends MicroBatchStream {
+                                  targetPerPartition: Long = 1000L)
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
+  // AvailableNow's fixed end: the queue depth when the trigger was prepared
+  @volatile private var availableNowEnd: Option[Long] = None
+
   override def initialOffset(): Offset = QueueOffset(0L)
 
+  /** The queue's current end, ignoring the cap. */
   override def latestOffset(): Offset = QueueOffset(MessageQueues.size(queue))
+
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPerBatch)
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val lo = Option(start).fold(0L)(_.asInstanceOf[QueueOffset].value)
+    val end = availableNowEnd.getOrElse(MessageQueues.size(queue))
+    val capped = limit match {
+      case m: ReadMaxRows => math.min(end, lo + m.maxRows)
+      case _ => end
+    }
+    QueueOffset(math.max(lo, capped))
+  }
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = Some(MessageQueues.size(queue))
 
   override def deserializeOffset(json: String): Offset = QueueOffset(json.toLong)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[QueueOffset].value
-    val hi0 = end.asInstanceOf[QueueOffset].value
-    val hi = math.min(hi0, lo + maxPerBatch)
+    val hi = end.asInstanceOf[QueueOffset].value
     if (hi <= lo) Array.empty
     else {
       val per = math.max(targetPerPartition, 1L)

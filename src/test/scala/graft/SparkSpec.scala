@@ -7,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fast; tests only create tiny in-memory frames).
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(cpus = 2)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -15,13 +15,35 @@ class QueueSourceSpec extends SparkSpec {
     assert(got == Seq((0L, "m1"), (1L, "m2"), (2L, "m3")))
   }
 
+  /** Drains `queue` with an `AvailableNow` trigger, `cap` passed under the
+    * option key `capKey`; returns the offsets of each micro-batch.
+    */
+  private def drainBatches(queue: String, capKey: String, cap: Int): Seq[Seq[Long]] = {
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    val q = spark.readStream.format("graft.streaming.QueueSourceProvider")
+      .option("queue", queue).option(capKey, cap.toString).load()
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        batches.add(b.select("offset").as[Long].collect().toSeq); ()
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    import scala.jdk.CollectionConverters._
+    batches.asScala.toSeq.filter(_.nonEmpty)
+  }
+
   test("maxPerBatch caps batch admission (rdy window) but still drains fully") {
-    MessageQueues.clear("qb")
-    MessageQueues.push("qb", (1 to 10).map(i => s"m$i"): _*)
-    val df = spark.readStream.format("graft.streaming.QueueSourceProvider")
-      .option("queue", "qb").option("maxPerBatch", "3").load()
-    val got = Streams.runToMemoryComplete(spark, df, outputMode = "append")
-    assert(got.count() == 10)
+    // both spellings: options are case-insensitive
+    Seq("maxPerBatch", "maxperbatch").foreach { key =>
+      val queue = s"qb_$key"
+      MessageQueues.clear(queue)
+      MessageQueues.push(queue, (0 until 25).map(i => s"m$i"): _*)
+      val batches = drainBatches(queue, key, cap = 7)
+      assert(batches.forall(_.size <= 7), s"$key: batch over the cap: $batches")
+      assert(batches.flatten.sorted == (0L until 25L),
+        s"$key: messages lost or duplicated: $batches")
+    }
   }
 
   test("restart from checkpoint resumes at the committed offset — no reprocessing") {
