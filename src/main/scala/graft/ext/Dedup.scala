@@ -2,10 +2,11 @@ package graft.ext
 
 import scala.jdk.CollectionConverters._
 
-import graft.functions.{TextFunctions => T, VectorFunctions => V}
+import graft.functions.{MinHashSignature, TextFunctions => T, VectorFunctions => V}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Deduplication for training-data pipelines: exact, MinHash+LSH, SimHash,
@@ -101,41 +102,31 @@ object Dedup {
   /** MinHash signature column: `numHashes` permutations approximated by
     * seeded xxhash64 over word `shingleN`-gram shingles. Deterministic
     * (seeds are literals). Empty-shingle docs get the hash of the raw text
-    * so they only collide with identical text.
+    * so they only collide with identical text. Runs as the native
+    * [[graft.functions.MinHashSignature]] kernel: one tokenize pass, each
+    * shingle's bytes hashed once, inside whole-stage codegen.
     */
   def minhashSignature(text: Column, shingleN: Int = 3, numHashes: Int = 16): Column =
-    minhashFromShingles(T.wordShingles(text, shingleN), text, numHashes)
+    Bridge.column(MinHashSignature(Bridge.expression(text), shingleN, numHashes))
 
-  /** [[minhashSignature]] over an already-computed string-shingle column
-    * (`fallback` = the raw text, hashed when the shingle array is empty).
-    * Lets [[nearDedup]] materialize the shingle pipeline once and feed it
-    * to both the candidate and rescore stages. Identical expression tree —
-    * and therefore identical signatures — to the text-column overload.
-    */
-  private[ext] def minhashFromShingles(shingles: Column, fallback: Column,
-                                       numHashes: Int): Column =
-    // let-bound shingles: the shingle pipeline runs once per row, not once
-    // per hash function (numHashes× speedup at equal semantics)
-    graft.functions.ExprOps.let(shingles) { sh =>
-      transform(sequence(lit(0), lit(numHashes - 1)), h =>
-        coalesce(array_min(transform(sh, s => xxhash64(s, h))), xxhash64(fallback, h)))
-    }
+  /** The distinct word-shingle hashes the exact-Jaccard stages count. */
+  private def shingleSet(text: Column, shingleN: Int): Column =
+    array_distinct(T.wordShingleHashes(text, shingleN))
 
-  /** One-scan shingle preparation shared by [[nearDedup]]'s candidate and
-    * rescore stages. The two stages need DIFFERENT shingle representations —
-    * the MinHash signature seeds hash shingle STRINGS ([[T.wordShingles]]),
-    * while the exact-Jaccard rescore counts combined word-hash shingles
-    * ([[T.wordShingleHashes]]) — so both are computed in ONE projection over
-    * the corpus; a caller that persists the result turns what used to be
-    * two-to-three full-corpus tokenize+shingle scans into one. Standalone
-    * (unpersisted) use stays free: Catalyst prunes whichever column the
-    * consumer doesn't read, collapsing to exactly the old per-stage plan.
+  /** One-scan shingle preparation shared by the candidate and rescore
+    * stages: (id, sig, __sh) — the MinHash signature the LSH banding keys
+    * on and the distinct word-hash shingles the exact-Jaccard rescore
+    * counts, both from ONE projection over the corpus, so a caller that
+    * persists the result tokenizes the corpus once. Both columns are
+    * native kernels, so the projection stays in whole-stage codegen.
+    * Unpersisted use stays free: Catalyst prunes whichever column the
+    * consumer doesn't read.
     */
   private[ext] def shingledFrame(df: DataFrame, idCol: String, textCol: String,
-                                 shingleN: Int): DataFrame =
-    df.select(col(idCol).as("id"), col(textCol).as("__text"),
-      T.wordShingles(col(textCol), shingleN).as("__shingles"),
-      array_distinct(T.wordShingleHashes(col(textCol), shingleN)).as("__sh"))
+                                 shingleN: Int, numHashes: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+      minhashSignature(col(textCol), shingleN, numHashes).as("sig"),
+      shingleSet(col(textCol), shingleN).as("__sh"))
 
   /** MinHash + LSH banding: near-duplicate candidate pairs (idA < idB) whose
     * signatures collide in at least one band, with the estimated Jaccard
@@ -172,7 +163,8 @@ object Dedup {
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
                             maxBucketSize: Int = 1000): DataFrame =
-    minhashCandidatePairsShingled(shingledFrame(df, idCol, textCol, shingleN),
+    minhashCandidatePairsShingled(
+      shingledFrame(df, idCol, textCol, shingleN, bands * rowsPerBand),
       bands, rowsPerBand, maxBucketSize)
 
   /** [[minhashCandidatePairs]] → [[rescoreJaccard]] over ONE shared shingle
@@ -181,38 +173,30 @@ object Dedup {
     * than cluster labels. Composing the two public stages instead
     * tokenizes+shingles the corpus twice (each computes its own
     * [[shingledFrame]]) — a full redundant corpus scan at 100 TB. Results
-    * are identical to the two-stage composition: the candidate signature is
-    * [[minhashFromShingles]] of the same shingle column either way, and the
-    * rescore's `__sh` IS the `array_distinct(wordShingleHashes)` column the
-    * text overload computes inline.
+    * are identical to the two-stage composition: both read the same
+    * [[shingledFrame]] columns.
     */
   def minhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
                       maxBucketSize: Int = 1000,
                       minJaccard: Double = 0.0): DataFrame = {
-    val shingled = shingledCheckpointed(docs, idCol, textCol, shingleN)
+    val shingled = shingledCheckpointed(docs, idCol, textCol, shingleN,
+      bands * rowsPerBand)
     rescoreJaccardShingled(shingled,
       minhashCandidatePairsShingled(shingled, bands, rowsPerBand, maxBucketSize),
       minJaccard)
   }
 
-  /** [[minhashCandidatePairs]] over a [[shingledFrame]] (persisted or not).
-    * Same plan, same results — the signature is [[minhashFromShingles]] of
-    * the precomputed string-shingle column.
-    */
-  /** (id, sig, band, bucket) LSH band postings of a [[shingledFrame]] —
-    * the shape [[buildNearIndex]] persists for the corpus and
-    * [[nearDedupIncremental]] recomputes for each query batch. Extracted
-    * from [[minhashCandidatePairsShingled]] verbatim so stored and
-    * recomputed postings are definitionally the same expression tree
-    * (identical text → identical bucket, across builds and queries).
+  /** (id, sig, band, bucket) LSH band postings of a [[shingledFrame]]
+    * (whose `sig` has `bands * rowsPerBand` hashes) — the shape
+    * [[buildNearIndex]] persists for the corpus and [[nearDedupIncremental]]
+    * recomputes for each query batch, so stored and recomputed postings are
+    * definitionally the same expression tree (identical text → identical
+    * bucket, across builds and queries).
     */
   private[ext] def bandedSignatures(shingled: DataFrame, bands: Int,
-                                    rowsPerBand: Int): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    shingled.select(col("id"),
-        minhashFromShingles(col("__shingles"), col("__text"), numHashes).as("sig"))
-      .select(col("id"), col("sig"),
+                                    rowsPerBand: Int): DataFrame =
+    shingled.select(col("id"), col("sig"),
         explode(transform(sequence(lit(0), lit(bands - 1)), b =>
           struct(b.as("band"),
             xxhash64(array_join(transform(
@@ -220,8 +204,8 @@ object Dedup {
               _.cast("string")), ","))
               .as("bucket")))).as("bb"))
       .select(col("id"), col("sig"), col("bb.band"), col("bb.bucket"))
-  }
 
+  /** [[minhashCandidatePairs]] over a [[shingledFrame]] (persisted or not). */
   private[ext] def minhashCandidatePairsShingled(shingled: DataFrame,
                                                  bands: Int = 4, rowsPerBand: Int = 4,
                                                  maxBucketSize: Int = 1000): DataFrame = {
@@ -271,8 +255,7 @@ object Dedup {
     // guide §1.2 step 1: don't compute things twice). Stored form is
     // (id, array<bigint>) — the same bytes [[buildNearIndex]] persists per
     // corpus, spilled to executor disk when larger than memory.
-    val sh = df.select(col(idCol).as("id"),
-      array_distinct(T.wordShingleHashes(col(textCol), shingleN)).as("sh"))
+    val sh = df.select(col(idCol).as("id"), shingleSet(col(textCol), shingleN).as("sh"))
       .localCheckpoint(true)
     val sizes = sh.select(col("id"), size(col("sh")).cast("bigint").as("n"))
     val inv0 = sh.select(col("id"), explode(col("sh")).as("sh_h"))
@@ -354,13 +337,12 @@ object Dedup {
     // both size lookups, so the lazy form re-tokenized the corpus up to
     // 4× per call (same single-scan rationale as [[ngramJaccardPairs]];
     // the composed pipelines already share [[shingledCheckpointed]])
-    rescoreJaccardShingled(shingledFrame(docs, idCol, textCol, shingleN)
-        .select("id", "__sh").localCheckpoint(true),
+    rescoreJaccardShingled(docs.select(col(idCol).as("id"),
+        shingleSet(col(textCol), shingleN).as("__sh")).localCheckpoint(true),
       pairs, minJaccard)
 
-  /** [[rescoreJaccard]] over a [[shingledFrame]] (persisted or not). Same
-    * plan, same results — `__sh` IS the `array_distinct(wordShingleHashes)`
-    * column the text overload computed inline.
+  /** [[rescoreJaccard]] over a frame with (id, __sh) columns, such as a
+    * [[shingledFrame]] (persisted or not).
     */
   private[ext] def rescoreJaccardShingled(shingled: DataFrame, pairs: DataFrame,
                                           minJaccard: Double = 0.0): DataFrame = {
@@ -425,8 +407,7 @@ object Dedup {
     // posting chain AND the per-doc size lookup (`nSh`) — two lazy
     // references, two full shingle evaluations before this checkpoint.
     // Stored form is the compact (id, distinct-hash array).
-    val sh = df.select(col(idCol).as("id"),
-      array_distinct(T.wordShingleHashes(col(textCol), shingleN)).as("sh"))
+    val sh = df.select(col(idCol).as("id"), shingleSet(col(textCol), shingleN).as("sh"))
       .localCheckpoint(true)
     val inv = sh.select(col("id"), explode(col("sh")).as("sh_h"))
     // one explicit repartition on the shingle hash; the df aggregation AND
@@ -807,36 +788,22 @@ object Dedup {
     docs.join(dupes, Seq(idCol), "left_anti")
   }
 
-  /** The whole near-dup pipeline as one call (and one config op):
-    * MinHash+LSH candidates → exact-Jaccard rescore ≥ `minJaccard` →
-    * connected components → one representative (min id) per cluster.
-    * Every stage keeps its documented scale bound — banded candidates,
-    * rescore linear in candidate posting lists, O(log D) label rounds —
-    * so this composition is 100 TB-safe end to end. Returns the KEPT
-    * documents with their original schema.
-    *
-    * Cost shape: the corpus is tokenized+shingled exactly ONCE — a
-    * persisted [[shingledFrame]] carries both the string shingles the
-    * MinHash signature hashes and the word-hash shingles the rescore
-    * counts — and the confirmed pair set is local-checkpointed before the
-    * `isEmpty` gate, so neither that action nor connectedComponents'
-    * first cut re-executes the candidates→rescore plan. Without both, the
-    * pipeline paid two-to-three redundant full-corpus shingle scans — a
-    * constant factor that is real money at 100 TB.
-    */
   /** Materialized [[shingledFrame]]: `localCheckpoint(true)` instead of
     * `persist()` (r19). Storage footprint is the same — persist's first
     * action materialized every column anyway — but the checkpoint also
     * TRUNCATES THE LOGICAL PLAN to a LogicalRDD. The shingled frame is
     * referenced 4-6× per composed dedup plan (sample pre-drop, banding,
-    * rescore postings, size lookups, batch-vs-corpus banding), each
-    * reference embedding the full shingle expression tree, and the
+    * rescore postings, size lookups, batch-vs-corpus banding), and each
+    * unmaterialized reference would recompute the signature and shingle
+    * kernels over the corpus and embed the upstream plan; before r19 the
     * measured cost was DRIVER PLANNING: `dedup_near_classify` spent
     * ~4.4 s of its ~12 s wall in two zero-job gaps analyzing a 274 KB
     * plan (guide §7.3 — very large plans; §3.3 — localCheckpoint to
     * truncate). Trade: lineage is gone, so an executor loss mid-pipeline
     * fails the job instead of recomputing — same trade the pipeline
     * already accepted for `confirmed.localCheckpoint` and the CC rounds.
+    * The stored form is compact: per document its id, `numHashes` longs
+    * of signature and its distinct shingle hashes.
     *
     * Storage release (r20, guide §5): the checkpointed RDD cannot be
     * unpersisted here — the RETURNED frame still references it lazily and
@@ -849,16 +816,17 @@ object Dedup {
     * references (or collect results) to bound executor storage.
     */
   private def shingledCheckpointed(docs: DataFrame, idCol: String,
-                                   textCol: String, shingleN: Int): DataFrame =
-    shingledFrame(docs, idCol, textCol, shingleN).localCheckpoint(true)
+                                   textCol: String, shingleN: Int,
+                                   numHashes: Int): DataFrame =
+    shingledFrame(docs, idCol, textCol, shingleN, numHashes).localCheckpoint(true)
 
   /** Candidates → exact-Jaccard rescore → connected components over ONE
     * shared shingle scan — the composition [[nearDedup]] runs before
     * choosing representatives, exposed for callers that want the cluster
     * labels themselves. Composing the public `minhashCandidatePairs` +
     * `rescoreJaccard` instead tokenizes+shingles the corpus twice (each
-    * computes its own [[shingledFrame]]) — a full redundant corpus scan
-    * at 100 TB. Returns (id, comp), non-singletons only (same contract as
+    * computes its own shingle frame) — a full redundant corpus scan at
+    * 100 TB. Returns (id, comp), non-singletons only (same contract as
     * [[connectedComponents]]).
     */
   def nearDupComponents(docs: DataFrame, idCol: String, textCol: String,
@@ -866,27 +834,51 @@ object Dedup {
                         bands: Int = 4, rowsPerBand: Int = 4,
                         maxBucketSize: Int = 1000,
                         checkpointDir: Option[String] = None): DataFrame = {
-    val shingled = shingledCheckpointed(docs, idCol, textCol, shingleN)
+    val shingled = shingledCheckpointed(docs, idCol, textCol, shingleN,
+      bands * rowsPerBand)
     val confirmed = rescoreJaccardShingled(shingled,
       minhashCandidatePairsShingled(shingled, bands, rowsPerBand, maxBucketSize),
       minJaccard).localCheckpoint(true)
     connectedComponents(confirmed, checkpointDir = checkpointDir)
   }
 
+  /** The whole near-dup pipeline as one call (and one config op):
+    * MinHash+LSH candidates → exact-Jaccard rescore ≥ `minJaccard` →
+    * connected components → one representative (min id) per cluster.
+    * Every stage keeps its documented scale bound — banded candidates,
+    * rescore linear in candidate posting lists, O(log D) label rounds —
+    * so this composition is 100 TB-safe end to end. Returns the KEPT
+    * documents with their original schema.
+    *
+    * Cost shape: the input is read exactly ONCE. One local checkpoint
+    * holds the input's own columns next to the signature (`__sig`) and
+    * the distinct shingle hashes (`__sh`); the pair pipeline reads its
+    * (id, sig, __sh) projection and the kept rows come from the same
+    * checkpoint, so an expensive upstream plan (a clean + quality filter)
+    * never runs twice. The confirmed pair set is local-checkpointed before
+    * the `isEmpty` gate, so neither that action nor connectedComponents'
+    * first cut re-executes the candidates→rescore plan.
+    */
   def nearDedup(docs: DataFrame, idCol: String, textCol: String,
                 minJaccard: Double = 0.8, shingleN: Int = 3,
                 bands: Int = 4, rowsPerBand: Int = 4,
                 maxBucketSize: Int = 1000,
                 checkpointDir: Option[String] = None): DataFrame = {
-    val shingled = shingledCheckpointed(docs, idCol, textCol, shingleN)
+    val withShingles = docs.select(col("*"),
+        minhashSignature(col(textCol), shingleN, bands * rowsPerBand).as("__sig"),
+        shingleSet(col(textCol), shingleN).as("__sh"))
+      .localCheckpoint(true)
+    val shingled = withShingles.select(col(idCol).as("id"), col("__sig").as("sig"),
+      col("__sh"))
     val candidates = minhashCandidatePairsShingled(shingled,
       bands, rowsPerBand, maxBucketSize)
     // eager localCheckpoint: materialize the pair pipeline once; the
     // confirmed set (id pairs + score) is tiny next to the corpus
     val confirmed = rescoreJaccardShingled(shingled, candidates, minJaccard)
       .localCheckpoint(true)
-    if (confirmed.isEmpty) docs
-    else representatives(docs,
+    val kept = withShingles.drop("__sig", "__sh")
+    if (confirmed.isEmpty) kept
+    else representatives(kept,
       connectedComponents(confirmed, checkpointDir = checkpointDir), idCol)
   }
 
@@ -1190,7 +1182,8 @@ object Dedup {
                      bands: Int = 4, rowsPerBand: Int = 4): Unit = {
     val spark = docs.sparkSession
     IndexFormat.invalidate(spark, dir)
-    val shingled = shingledFrame(docs, idCol, textCol, shingleN).persist()
+    val shingled = shingledFrame(docs, idCol, textCol, shingleN,
+      bands * rowsPerBand).persist()
     try {
       bandedSignatures(shingled, bands, rowsPerBand)
         .select("band", "bucket", "id")
@@ -1231,7 +1224,8 @@ object Dedup {
                                          shingleN: Int, bands: Int,
                                          rowsPerBand: Int): Unit = {
     val spark = docs.sparkSession
-    val shingled = shingledFrame(docs, idCol, textCol, shingleN).persist()
+    val shingled = shingledFrame(docs, idCol, textCol, shingleN,
+      bands * rowsPerBand).persist()
     try {
       bandedSignatures(shingled, bands, rowsPerBand)
         .select("band", "bucket", "id")
@@ -1363,7 +1357,8 @@ object Dedup {
     IndexFormat.check(spark, indexDir, nearIndexFormat(shingleN, bands, rowsPerBand))
     // batch-sized by contract (a daily batch), so the eager checkpoint is
     // bounded; see [[shingledCheckpointed]] for the plan-size rationale
-    val shingled = shingledCheckpointed(batch, idCol, textCol, shingleN)
+    val shingled = shingledCheckpointed(batch, idCol, textCol, shingleN,
+      bands * rowsPerBand)
     locally {
       // within-batch: candidates → exact rescore → min-label components
       val confirmed = rescoreJaccardShingled(shingled,

@@ -9,14 +9,18 @@ object ExprOps {
   /** Let-binding for Column expressions: evaluate `c` ONCE and reuse it in
     * `body` via the bound lambda variable.
     *
-    * Spark's DSL has no `let`, so composing functions (shingles → hashes →
-    * min) textually duplicates the sub-expression tree — Catalyst evaluates
-    * a duplicated shingle pipeline once per occurrence, which turned the
-    * MinHash signature into an O(hashes × shingle-build) per-row cost.
+    * Spark's DSL has no `let`, so composing functions textually duplicates
+    * the sub-expression tree, and Catalyst evaluates every copy (a
+    * `FilterExec` eliminates no common subexpressions at all).
     * Encoding: wrap in a 1-element array and `transform` over it — the
     * higher-order function evaluates its input once and binds it to a
-    * `NamedLambdaVariable`, giving genuine sharing inside codegen, with no
-    * shuffle and no UDF.
+    * `NamedLambdaVariable`, with no shuffle and no UDF.
+    *
+    * Cost: `ArrayTransform` is CodegenFallback, so the bound body runs
+    * interpreted, and the operator holding it drops out of
+    * WholeStageCodegen. Worth it when `c` is expensive and referenced more
+    * than once; a hot per-element loop belongs in a native expression
+    * instead (see [[MinHashSignature]]).
     */
   def let(c: Column)(body: Column => Column): Column =
     element_at(transform(array(c), body), 1)

@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Text-analysis column functions for the large-scale training-data tier
-  * (SURVEY.md §7.1 `ext/`). Pure `org.apache.spark.sql.functions`
-  * compositions — no UDFs, everything stays inside WholeStageCodegen, which
-  * is what makes these viable over 100 TB of documents.
+  * (SURVEY.md §7.1 `ext/`). `org.apache.spark.sql.functions` compositions
+  * plus native codegen'd expressions for the per-token hot loops — no UDFs,
+  * which is what makes these viable over 100 TB of documents.
   */
 object TextFunctions {
 
@@ -60,21 +61,17 @@ object TextFunctions {
     }
 
   /** Word n-gram shingle HASHES: per-word xxhash64 combined with a second
-    * xxhash64 over the n consecutive word hashes. Set-equivalent to hashing
-    * [[wordShingles]] strings (only equality matters for Jaccard /
-    * document-frequency semantics, and collisions are equally negligible)
-    * but far cheaper: no per-shingle string concatenation, no string
-    * re-hashing — each word is hashed once and each shingle is a fixed
-    * n-long hash combine, all inside whole-stage codegen. Empty array when
-    * the document has fewer than n words.
+    * xxhash64 over the n consecutive word hashes, in document order.
+    * Set-equivalent to hashing [[wordShingles]] strings (only equality
+    * matters for Jaccard / document-frequency semantics, and collisions are
+    * equally negligible) but far cheaper: no per-shingle string
+    * concatenation, each word is hashed once and each shingle is a fixed
+    * n-long hash combine. Runs as the native [[ShingleHashes]] kernel (one
+    * pass over the bytes, inside whole-stage codegen). Empty array when the
+    * document has fewer than n words; null text → null.
     */
   def wordShingleHashes(text: Column, n: Int): Column =
-    ExprOps.let(transform(tokens(text), w => xxhash64(w))) { h =>
-      when(size(h) < n, array().cast("array<bigint>"))
-        .otherwise(transform(
-          sequence(lit(1), size(h) - (n - 1)),
-          i => xxhash64((0 until n).map(j => element_at(h, i + lit(j))): _*)))
-    }
+    Bridge.column(ShingleHashes(Bridge.expression(text), n))
 
   private def hitsOn(padded: Column, words: Seq[String]): Column =
     words.map(w => when(instr(padded, s" $w ") > 0, 1).otherwise(0))
@@ -104,13 +101,18 @@ object TextFunctions {
 
   /** Quality score in [0,1000] (per-mille, integer-exact): length component
     * scaled by punctuation penalty — the shape of a heuristic web-text
-    * quality filter.
+    * quality filter. The argument is let-bound: it is referenced six times
+    * below, and an inlined `cleanText(...)` argument would otherwise run once
+    * per reference (Spark pushes a filter on this score below the
+    * projection that computes its argument, and `FilterExec` does not
+    * eliminate common subexpressions).
     */
-  def qualityPerMille(text: Column): Column = {
-    val lenComponent = least(tokenCount(text).cast("double") / 100.0, lit(1.0))
-    val punctPenalty = lit(1.0) - least(punctPerMille(text).cast("double") / 300.0, lit(1.0))
-    floor(lenComponent * punctPenalty * 1000 + 0.5).cast("bigint")
-  }
+  def qualityPerMille(text: Column): Column =
+    ExprOps.let(text) { t =>
+      val lenComponent = least(tokenCount(t).cast("double") / 100.0, lit(1.0))
+      val punctPenalty = lit(1.0) - least(punctPerMille(t).cast("double") / 300.0, lit(1.0))
+      floor(lenComponent * punctPenalty * 1000 + 0.5).cast("bigint")
+    }
 
   /** Document fingerprint: minimum md5 over word 3-gram shingles (a
     * one-permutation MinHash). Lexicographic min over hex strings is

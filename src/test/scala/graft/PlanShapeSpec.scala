@@ -106,6 +106,33 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("native shingle kernels run inside whole-stage codegen") {
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import graft.functions.{MinHashSignature, ShingleHashes}
+    // the declarative shingle compositions were CodegenFallback and pulled
+    // their projection out of codegen; the kernels must stay in it — both
+    // in a plain projection and in the MinHash candidate plan
+    def codegenProjections(plan: SparkPlan) = plan.collect {
+      case w: WholeStageCodegenExec =>
+        w.child.collect { case p: ProjectExec => p.projectList }.flatten
+    }.flatten
+    def holds(plan: SparkPlan, cls: Class[_]): Boolean =
+      codegenProjections(plan).exists(_.find(cls.isInstance).isDefined)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val d = spark.read.parquet(s"$sf/documents.parquet")
+      val plain = d.select(graft.ext.Dedup.minhashSignature(col("text")),
+          array_distinct(graft.functions.TextFunctions.wordShingleHashes(col("text"), 3)))
+        .queryExecution.executedPlan
+      assert(holds(plain, classOf[MinHashSignature]) && holds(plain, classOf[ShingleHashes]),
+        s"a kernel fell out of codegen:\n$plain")
+      val pairs = graft.ext.Dedup.minhashCandidatePairs(d, "doc_id", "text")
+        .queryExecution.executedPlan
+      assert(holds(pairs, classOf[MinHashSignature]),
+        s"the candidate plan's signature fell out of codegen:\n$pairs")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("semantic cell assignment is a pure codegen projection — zero exchanges") {
     // SemDeDup's scale contract: assigning 100 TB of embeddings to cells
     // must be a per-row argmax over broadcast-literal anchors (k native

@@ -1,5 +1,7 @@
 package graft.ext
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 class DedupSpec extends SparkSpec {
@@ -259,6 +261,76 @@ class DedupSpec extends SparkSpec {
     val solo = Seq((1L, "unique one"), (2L, "entirely different two"))
       .toDF("id", "text")
     assert(Dedup.nearDedup(solo, "id", "text").count() == 2)
+  }
+
+  /** A corpus with planted near-dup clusters, as a parquet source. */
+  private def nearDupParquet(): (String, Long) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nd_scan_").toString
+    val r = new scala.util.Random(11L)
+    val rows = (0 until 60).flatMap { d =>
+      val text = Seq.fill(30)(s"w${r.nextInt(5000)}").mkString(" ")
+      val copies = if (d % 5 == 0) Seq(text, text + " tail") else Nil
+      (text +: copies).zipWithIndex.map { case (t, c) => (d * 10L + c, t) }
+    }
+    rows.toDF("id", "text").repartition(3).write.parquet(s"$dir/docs")
+    (s"$dir/docs", rows.size.toLong)
+  }
+
+  test("nearDedup reads its input once: task recordsRead of file scans equals the row count") {
+    val (path, n) = nearDupParquet()
+    // stages scanning the source carry a FileScanRDD; reads of checkpointed
+    // blocks also count as input records, so only scan stages are summed
+    val scanStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val readByStage = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name.contains("FileScanRDD")))
+          scanStages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          readByStage.merge(e.stageId, e.taskMetrics.inputMetrics.recordsRead, _ + _)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val kept = Dedup.nearDedup(spark.read.parquet(path), "id", "text", minJaccard = 0.5)
+        .select("id").as[Long].collect()
+      // every planted copy folds into its original's cluster
+      assert(kept.length == 60 && kept.forall(_ % 10 == 0))
+      def scanned: Long = readByStage.asScala.collect {
+        case (st, r) if scanStages.contains(st) => r.longValue
+      }.sum
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (scanned < n && System.currentTimeMillis() < deadline) Thread.sleep(25)
+      Thread.sleep(200)
+      assert(scanned == n, s"file scans read $scanned records for a $n-row source")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("near-index postings equal those of the pre-kernel signature composition") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.{ShingleOracle, TextFunctions}
+    val (path, _) = nearDupParquet()
+    val docs = spark.read.parquet(path)
+    val dir = java.nio.file.Files.createTempDirectory("graft_nd_idx_").toString
+    Dedup.buildNearIndex(docs, "id", "text", dir)
+    // the stored layout, recomputed from the declarative compositions
+    val sig = docs.select(col("id"),
+      ShingleOracle.minhashSignature(col("text"), 3, 16).as("sig"))
+    val buckets = sig.select(col("id"), posexplode(transform(sequence(lit(0), lit(3)), b =>
+        xxhash64(array_join(transform(slice(col("sig"), b * lit(4) + 1, lit(4)),
+          _.cast("string")), ",")))).as(Seq("band", "bucket")))
+      .select("band", "bucket", "id").as[(Int, Long, Long)].collect().toSet
+    assert(spark.read.parquet(s"$dir/buckets").as[(Int, Long, Long)].collect().toSet == buckets)
+    val shingles = docs.select(col("id"),
+        array_distinct(ShingleOracle.wordShingleHashes(col("text"), 3)).as("sh"))
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(spark.read.parquet(s"$dir/shingles").as[(Long, Seq[Long])].collect().toMap == shingles)
+    // the stored file schemas are those the composition produced
+    assert(spark.read.parquet(s"$dir/shingles").schema ==
+      docs.select(col("id"), array_distinct(
+        ShingleOracle.wordShingleHashes(col("text"), 3)).as("sh")).schema)
   }
 
   test("nearDedupEmbeddings keeps one representative per identical-vector cluster") {
