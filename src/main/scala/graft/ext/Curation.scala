@@ -31,7 +31,7 @@ object Curation {
     * uniform to ±0.8‰ which is fine for sampling).
     *
     * Cross-engine note: DuckDB mirrors this exactly via instr-folding of the
-    * same md5 hex prefix (see SparkEntry oracle SQL), which is what makes
+    * same md5 hex prefix (see `SparkEntry.duckBucket`), which is what makes
     * every curation operator hash-verifiable.
     */
   def hashBucket(key: Column, buckets: Int, salt: String = "graft"): Column = {

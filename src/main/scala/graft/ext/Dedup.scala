@@ -531,34 +531,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** SimHash via explode + codegen'd aggregates — numerically identical to
-    * `TextFunctions.simhash64` but built for bulk scoring: higher-order
-    * array folds run interpreted (CodegenFallback), so 64 bit-vote folds
-    * per row dominate at corpus scale; exploding tokens and summing the 64
-    * bit votes as plain aggregates stays inside WholeStageCodegen with
-    * map-side partial aggregation (the shuffle carries one 64-vote partial
-    * row per doc per partition, not tokens). Returns (id, h).
-    */
-  private[ext] def simhash64ViaAgg(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = df.select(col(idCol).as("id"),
-      explode_outer(T.tokens(col(textCol))).as("w"))
-      // xxhash64(null) hashes to the seed, not null — keep empty docs null
-      // so their votes stay 0 and h = 0, matching simhash64("")
-      .select(col("id"),
-        when(col("w").isNull, lit(null).cast("long"))
-          .otherwise(xxhash64(col("w"))).as("hw"))
-    val votes = (0 until 64).map { b =>
-      sum(when(col("hw").isNull, lit(0L)).otherwise(
-        when(shiftright(col("hw"), b).bitwiseAND(lit(1L)) === 1L, lit(1L))
-          .otherwise(lit(-1L)))).as(s"v$b")
-    }
-    tok.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(b =>
-          when(col(s"v$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L)))
-          .reduce((x, y) => x.bitwiseOR(y)).as("h"))
-  }
-
   /** Connected components over a candidate-pair graph — the step between
     * "near-dup pairs" and "keep one document per duplicate CLUSTER".
     * Per round: (1) min-label propagation — each node adopts the smallest
@@ -985,38 +957,15 @@ object Dedup {
   /** Above this anchor count, cell assignment switches from the
     * literal-argmax projection ([[assignSemanticCells]] — k inlined cosine
     * expressions; ideal plan, hostile to codegen in the thousands) to the
-    * broadcast-join + `max_by` reduction ([[assignSemanticCellsJoin]]).
-    * Both break ties identically (lowest cell), proven equivalent by spec.
+    * per-partition argmax loop ([[assignSemanticCellsPartition]]). Both
+    * break ties identically (lowest cell), proven equivalent by spec.
     */
   private val LiteralAssignMaxK = 128
 
   /** [[assignSemanticCells]] for LARGE k — the regime SemDeDup actually
-    * runs at web scale (the paper uses ~50k clusters): anchors become a
-    * broadcast FRAME, each row meets all k via a broadcast nested-loop
-    * join, and `max_by(cell, (cos, -cell))` reduces to the argmax with a
-    * partial (map-side) aggregate, so the shuffle carries ONE row per
-    * input row, never the k-expanded join. Requires unique `id`s (every
-    * caller's contract already). Returns (cell, id, v).
-    */
-  private[graft] def assignSemanticCellsJoin(df0: DataFrame,
-                                             anchors: Array[Array[Double]]): DataFrame = {
-    val spark = df0.sparkSession
-    import spark.implicits._
-    val aDf = broadcast(anchors.zipWithIndex.toSeq
-      .map { case (v, i) => (i, v.toSeq) }.toDF("__cell", "__av"))
-    df0.crossJoin(aDf)
-      .groupBy("id")
-      .agg(
-        max_by(col("__cell"),
-          struct(V.cosine(col("v"), col("__av")).as("cos"),
-            (-col("__cell")).as("negCell"))).as("cell"),
-        first(col("v")).as("v"))
-      .select("cell", "id", "v")
-  }
-
-  /** [[assignSemanticCellsJoin]] without the row expansion: the join path
-    * materializes rows × k joined rows before `max_by` reduces them — row
-    * overhead (~µs each), not arithmetic, dominates, which priced a
+    * runs at web scale (the paper uses ~50k clusters). A broadcast-join +
+    * `max_by` form materializes rows × k joined rows before reducing them —
+    * row overhead (~µs each), not arithmetic, dominates, which priced a
     * 200k-row × k=6400 assignment in HOURS. Here the anchors broadcast as
     * a plain array and each partition runs the argmax as a tight loop:
     * rows × k × dim fused multiply-adds, zero intermediate rows, zero
@@ -1027,8 +976,8 @@ object Dedup {
     * [[graft.functions.CosineSimilarity]] exactly (left-to-right
     * accumulation, per-element double widening, `dot/sqrt(na*nb)`,
     * zero-norm → 0.0) and ties break to the lowest cell by
-    * strictly-greater comparison — bit-identical verdicts to both sibling
-    * paths, proven by spec. Null vector elements read as 0.0, same as the
+    * strictly-greater comparison — bit-identical verdicts to the literal
+    * argmax, proven by spec. Null vector elements read as 0.0, same as the
     * native expression.
     */
   private[graft] def assignSemanticCellsPartition(df0: DataFrame,
@@ -1082,9 +1031,8 @@ object Dedup {
 
   /** Dispatch: literal argmax for small k (ideal codegen'd plan),
     * partition-loop argmax beyond [[LiteralAssignMaxK]] (flat cost in k,
-    * no row expansion). [[assignSemanticCellsJoin]] stays as the
-    * declarative reference both are spec-checked against. `df0` must be
-    * (id, v).
+    * no row expansion). DedupSpec checks both against a declarative
+    * broadcast-join + `max_by` reference. `df0` must be (id, v).
     */
   private def assignCells(df0: DataFrame,
                           anchors: Array[Array[Double]]): DataFrame =

@@ -27,9 +27,10 @@ import org.apache.spark.sql.types._
   *  - codes persist via [[writeCodes]] like the int8 table
   *    ([[Similarity.writeCodes]]): written once, scanned by every query.
   *
-  * Like the other approximate indexes, PQ is not SQL-oracle-able — it
-  * carries a planted-duplicate recall gate (`ann_pq_recall`) plus unit
-  * specs, per the `SparkEntry.rowsOnlyGates` contract.
+  * PQ is oracled end to end: `ann_pq` persists its codebooks, and the
+  * DuckDB oracle `read_parquet()`s them to re-derive the encoding and the
+  * ADC search in SQL. The planted-duplicate gates (`ann_pq_recall`,
+  * `ann_pq_persisted_recall`) and unit specs come on top.
   */
 object Pq {
 

@@ -54,7 +54,7 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
 
 object WinnowFingerprints {
 
-  private final val Base = 1000003L
+  private[functions] final val Base = 1000003L
 
   /** Selected fingerprint hashes in document order (consecutive duplicates
     * collapsed). Shared by interpreted eval and generated code.
@@ -111,49 +111,6 @@ object WinnowFingerprints {
         if (idx != lastIdx) { out += hashes(idx); lastIdx = idx }
       }
       i += 1
-    }
-    out.toArray
-  }
-
-  /** The SIGMOD'03 selection spelled out directly — rightmost minimum of
-    * each w-window by linear rescan, O(m·w). Kept as the executable
-    * specification the optimized deque form is property-tested against
-    * (never called from query paths).
-    */
-  private[functions] def winnowReference(s: UTF8String, k: Int, w: Int): Array[Long] = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    if (n < k) return Array.empty
-    val m = n - k + 1
-    var pow = 1L
-    var i = 1
-    while (i < k) { pow *= Base; i += 1 }
-    val hashes = new Array[Long](m)
-    var h = 0L
-    i = 0
-    while (i < k) { h = h * Base + (bytes(i) & 0xff); i += 1 }
-    hashes(0) = h
-    i = 1
-    while (i < m) {
-      h = (h - (bytes(i - 1) & 0xff) * pow) * Base + (bytes(i + k - 1) & 0xff)
-      hashes(i) = h
-      i += 1
-    }
-    if (m <= w) {
-      var min = hashes(0); var idx = 0
-      i = 1
-      while (i < m) { if (hashes(i) <= min) { min = hashes(i); idx = i }; i += 1 }
-      return Array(hashes(idx))
-    }
-    val out = ArrayBuffer.empty[Long]
-    var lastIdx = -1
-    var start = 0
-    while (start + w <= m) {
-      var min = hashes(start); var idx = start
-      i = start + 1
-      while (i < start + w) { if (hashes(i) <= min) { min = hashes(i); idx = i }; i += 1 }
-      if (idx != lastIdx) { out += hashes(idx); lastIdx = idx }
-      start += 1
     }
     out.toArray
   }

@@ -26,105 +26,32 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   test("registry size is pinned (dropped coverage must fail loudly)") {
-    // round-10 lesson: 14 queries silently vanished from the correctness
-    // artifact when a fixture type drift made them throw. The count below
-    // is updated DELIBERATELY when queries are added/removed — any other
-    // change to it is lost coverage.
-    // 149 since round 12 (+dedup_near_classify, +ann_ivf_append_recall,
-    // +ann_ivfpq_append_recall, +search_bm25_indexed,
-    // +search_bm25_index_append, +search_bm25_batch, +search_hybrid_rrf,
-    // +dedup_semantic_pairs, +dedup_semantic, +dedup_semantic_incremental,
-    // +dedup_dup_spans, +dedup_strip_spans, +curate_decontam_indexed,
-    // +text_repetition, +dedup_strip_lines)
-    // 154 late round 12 (+text_lm_score, +text_lm_persisted,
-    // +curate_ppl_buckets, +curate_dsir, +curate_nb_quality,
-    // +text_bpe_counts, +text_bpe_counts_gate, +curate_dsir_sample)
-    // 168 round 12 Hamming/heuristic-filter/URL/JSONL/bigram/ORC tier
-    // (+ann_hamming_topk, +ann_hamming_rescored, +ann_hamming_batch,
-    // +vec_sign_bits, +text_gopher_quality, +text_html_extract,
-    // +curate_url_normalize, +curate_url_dedup, +sink_file_jsonl,
-    // +text_lm_bigram, +sink_file_orc)
-    // 174: +text_script, +text_redact_cc, +text_lm_bigram_persisted,
-    // +curate_chunk_sentences, +sink_upsert_partitioned, +dedup_cross_corpus
-    // 178 round 13 real-codec media tier: -mm_decode_features (stub
-    // retired), +mm_decode, +mm_image_dedup, +mm_image_search,
-    // +mm_audio_meta, +mm_audio_windows (mm_resize replaced in place)
-    // 180 round 13: +mm_video_meta (RIFF/AVI avih parse — the video leg
-    // of the container triad), +mm_decode_quarantine (lenient decode
-    // splits a dirty corpus in one pass)
-    // 186 round 13 image/audio-quality + C4 tier: +mm_image_quality
-    // (exact luma stats + LAION-style gates), +mm_ahash (average hash,
-    // second perceptual family), +mm_audio_energy (real PCM window
-    // energy/peak), +mm_pair_curation (decode→near-dup→caption gate
-    // end-to-end), +text_c4_clean, +curate_c4_filter (Raffel et al. 2020
-    // §2.2 line + page rules)
-    // 188 round 13: +dedup_bloom (Dolma-style broadcast-bitmap membership
-    // dedup, probes replayed as exact set-membership in the oracle),
-    // +stream_ingest_bloom (the map-only streaming admission built on it)
-    // 194 round 14: +mm_image_orient, +mm_image_dedup_orient (EXIF
-    // orientation normalized away — oracle has zero orientation math),
-    // +mm_audio_quarantine, +mm_video_quarantine (lenient decode twins),
-    // +mm_video_frames (LIST(movi) frame walk + per-frame dHash),
-    // +text_bpe_external (public merges.txt loader, gate shape)
-    // 197 round 14 crawl-container tier: +src_warc_records,
-    // +src_warc_http (ISO 28500 WARC parse incl. multi-member gzip,
-    // full formula oracles), +mm_pdf_text (ISO 32000 object walk +
-    // FlateDecode + content-stream text extraction)
-    // 202 round 15: +mm_video_dedup (frame-hash video near-dup pairs,
-    // df-cap replayed), +mm_video_dedup_reenc (re-encoded copies via
-    // Hamming-clustered representatives, recursive-CTE closure oracle),
-    // +src_warc_pipeline (crawl→curated-corpus END-TO-END: C4 rules +
-    // URL dedup + content dedup replayed wholesale), +mm_pdf_pipeline
-    // (PDF extraction → chunking → per-chunk quality), +mm_audio_dedup
-    // (energy-delta-sign fingerprint — audio joins the Hamming tier),
-    // +mm_video_scenes (shot-boundary detection + scene index — the
-    // one-frame-per-scene sampling primitive), +mm_video_pipeline (the
-    // A/V end-to-end composite: quarantine → frames → scenes → keyframe
-    // sample → near-dup pairs)
-    // 208 round 17: +mm_mp4_meta (ISO-BMFF box walk: ftyp/mvhd/tkhd/
-    // stts/stsz), +mm_mp4_frames (stsz/stsc/stco sample walk — same
-    // dHash oracle as mm_video_frames, different container),
-    // +mm_pdf_unicode (/ToUnicode CMap: bfchar/bfrange → UTF-16BE,
-    // Greek codepoints re-derived via chr()), +mm_video_dedup_mixed
-    // (AVI+MP4 mixed corpus through the mm_video_dedup SQL verbatim)
-    // 209 round 17: +mm_pdf_objstm (PDF 1.5+ /Type /ObjStm packed
-    // page/font dicts, mm_pdf_unicode SQL verbatim)
-    // 210 round 17: +mm_image_scrub (metadata PII scrub: eXIf/APPn strip,
-    // scrubbed decode = raw grid — plain-pattern dhash oracle)
-    // 213 round 17: +mm_audio_scrub, +mm_video_scrub (LIST(INFO) strip,
-    // base meta oracles + stripped flag), +mm_mp4_scrub (size-preserving
-    // udta neutralization — stco offsets survive)
-    // 216 round 18: +mm_mp4_frames_avorder (audio-track-first MP4 — the
-    // hdlr 'vide' typed track selection, mm_mp4_frames SQL verbatim),
-    // +mm_mp4_meta_vfr (multi-entry stts → duration-weighted fps),
-    // +mm_mp4_keyframes (stss sync-sample table → keyframe-only decode)
-    // 217 round 18: +mm_media_scrub_lenient (quarantine-in-place scrub
-    // twin: junk flows through unmodified with scrub_ok=false)
-    // 218 round 18: +mm_mp4_pipeline (stss keyframes → near-dup pairs —
-    // the video pipeline shape at keyframe-decode cost)
-    // 219 round 18: +mm_image_scrub_jpeg (Exif drops, APP14/ICC survive,
-    // MPF + post-EOI trailer gone — per-row flags + raw dims)
-    // 222 round 18: +mm_mp4_frag_meta/_frames/_keyframes (fragmented MP4:
-    // moof/tfhd/trun sample runs + trex defaults; frames/keyframes share
-    // the plain-container SQLs verbatim)
-    // 223 round 18: +mm_mp4_frag_scrub (size-preserving udta zeroing
-    // leaves every fragment offset valid — frag-meta SQL + flags)
-    // 224 round 18: +mm_mp4_scenes (the videoScenes slot off the
-    // sync-sample walk: scene_idx = sync rank, start frame, dhash)
-    // 226 round 19: +mm_mp4_keyframes_lenient/mm_mp4_scenes_lenient (the
-    // keyframe-path maxFrames guard: sparse-stss rows bit-equal to the
-    // strict walk, no-stss degenerate shapes quarantine at the cap)
-    // 227 round 19: +mm_mp4_meta_elst (edts/elst edit-list fact:
-    // has_edit_list from the planting column, box-walk facts unperturbed)
-    // 230 round 19: +mm_mp4_segment_meta/_frames/_keyframes (moov-less
-    // styp/sidx DASH media segments: sidx supplies timescale/duration/
-    // track binding; frames/keyframes share the plain-container SQLs)
-    // 231 round 19: +mm_mp4_meta_ctts (ctts composition-offset fact:
-    // has_comp_offsets from the planting column — decode order ≠
-    // presentation order is now routable, like has_edit_list)
+    // queries that silently drop out of the registry are lost coverage the
+    // driver cannot see; change this count only when adding or removing a
+    // query on purpose
     assert(SparkEntry.queries.size == 231,
       s"query registry changed size: ${SparkEntry.queries.size} (expected 231); " +
         "if intentional, update this pin")
+  }
+
+  test("the registry rejects a duplicate name and a dangling gate by name") {
+    import graft.queries.{Gate, Oracle, QueryCase}
+    val build: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => s.emptyDataFrame
+    val ok = QueryCase("a", build, Oracle("SELECT 1"))
+    val dup = intercept[IllegalArgumentException](
+      QueryCase.validated(Seq(ok, QueryCase("b", build, Gate("a")), ok)))
+    assert(dup.getMessage.contains("duplicate query names: a"), dup.getMessage)
+    val dangling = intercept[IllegalArgumentException](
+      QueryCase.validated(Seq(ok, QueryCase("b", build, Gate("missing")))))
+    assert(dangling.getMessage.contains("gate 'missing' for rows-only 'b'"),
+      dangling.getMessage)
+    val gateOnGate = intercept[IllegalArgumentException](
+      QueryCase.validated(Seq(ok, QueryCase("b", build, Gate("a")),
+        QueryCase("c", build, Gate("b")))))
+    assert(gateOnGate.getMessage.contains("gate 'b' for rows-only 'c'"),
+      gateOnGate.getMessage)
+    assert(QueryCase.validated(Seq(ok, QueryCase("b", build, Gate("a")))).size == 2)
   }
 
   test("events.ts type drift: nanos-BIGINT and timestamp[us] fixtures agree") {

@@ -4,6 +4,34 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 
+/** Declarative reference for semantic cell assignment: anchors become a
+  * broadcast frame, each row meets all k via a nested-loop join, and
+  * `max_by(cell, (cos, -cell))` reduces to the argmax (ties to the lowest
+  * cell). The production paths ([[Dedup.assignSemanticCells]],
+  * [[Dedup.assignSemanticCellsPartition]]) are checked against it; no query
+  * path calls it. `df0` is (id, v) with unique ids; returns (cell, id, v).
+  */
+object SemanticCellsOracle {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+  import graft.functions.VectorFunctions
+
+  def assignCells(df0: DataFrame, anchors: Array[Array[Double]]): DataFrame = {
+    val spark = df0.sparkSession
+    import spark.implicits._
+    val aDf = broadcast(anchors.zipWithIndex.toSeq
+      .map { case (v, i) => (i, v.toSeq) }.toDF("__cell", "__av"))
+    df0.crossJoin(aDf)
+      .groupBy("id")
+      .agg(
+        max_by(col("__cell"),
+          struct(VectorFunctions.cosine(col("v"), col("__av")).as("cos"),
+            (-col("__cell")).as("negCell"))).as("cell"),
+        first(col("v")).as("v"))
+      .select("cell", "id", "v")
+  }
+}
+
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -157,17 +185,6 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long, Int)].collect().map(r => (r._1, r._2)).toSet
     assert(out.contains((1L, 2L)))
     assert(!out.contains((1L, 4L)))
-  }
-
-  test("simhash64ViaAgg is bit-identical to the expression form") {
-    import graft.functions.TextFunctions
-    import org.apache.spark.sql.functions.col
-    val withEmpty = docs.union(Seq((9L, ""), (10L, "   ")).toDF("id", "text"))
-    val expr = withEmpty.select(col("id"), TextFunctions.simhash64(col("text")).as("h"))
-      .as[(Long, Long)].collect().toMap
-    val agg = Dedup.simhash64ViaAgg(withEmpty, "id", "text")
-      .as[(Long, Long)].collect().toMap
-    assert(expr == agg)
   }
 
   test("rescoreJaccard restores exact similarity on a candidate set") {
@@ -592,7 +609,7 @@ class DedupSpec extends SparkSpec {
     val byLit = Dedup.assignSemanticCells(
         semVecs.select(col("id"), col("v")), "v", a)
       .select("id", "cell").as[(Long, Int)].collect().toMap
-    val byJoin = Dedup.assignSemanticCellsJoin(
+    val byJoin = SemanticCellsOracle.assignCells(
         semVecs.select(col("id"), col("v")), a)
       .select("id", "cell").as[(Long, Int)].collect().toMap
     assert(byLit == byJoin)
