@@ -3,7 +3,7 @@ package graft.ext
 import scala.jdk.CollectionConverters._
 
 import graft.functions.{MinHashSignature, TextFunctions => T, VectorFunctions => V}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -63,8 +63,18 @@ object Dedup {
     * width (hash-groupBy; md5 collision odds are negligible at any corpus
     * size we target).
     */
-  def exact(df: DataFrame, contentCols: Seq[String], idCol: String): DataFrame = {
-    val w = Window.partitionBy(contentHash(contentCols)).orderBy(col(idCol))
+  def exact(df: DataFrame, contentCols: Seq[String], idCol: String): DataFrame =
+    firstPerKey(df, contentHash(contentCols), idCol)
+
+  /** [[exact]] for callers that keep the content hash: `df` gains `__h`
+    * ([[contentHash]]) and the window groups on that column, so each row
+    * is hashed once. Same survivors as [[exact]].
+    */
+  def exactHashed(df: DataFrame, contentCols: Seq[String], idCol: String): DataFrame =
+    firstPerKey(df.withColumn("__h", contentHash(contentCols)), col("__h"), idCol)
+
+  private def firstPerKey(df: DataFrame, key: Column, idCol: String): DataFrame = {
+    val w = Window.partitionBy(key).orderBy(col(idCol))
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
@@ -435,49 +445,57 @@ object Dedup {
 
   /** Drop every `fresh` row whose `keyCol` value already exists in
     * `stored` — the exact-identity admission primitive every continuous
-    * ingest shares, shaped so the STORED side is scanned, never shuffled:
-    * the bounded batch keys broadcast INTO the stored table (semi join →
-    * the stored rows that hit), the surviving hit set — at most one row
-    * per distinct batch key after the distinct — broadcasts back as the
-    * anti-join's right side. A direct `fresh LEFT ANTI stored` cannot
-    * broadcast (anti cannot broadcast its left, and the stored side
-    * outgrows the threshold on day one), so it degenerates to a
-    * sort-merge join that re-shuffles the whole persisted key column
-    * every micro-batch — ~16 GB moved per batch at 1B stored 16-byte
-    * hashes, daily, forever. This shape moves O(batch) bytes at any
-    * corpus size; the same economics as [[graft.ext.Media.dhashDupIds]]
-    * on the media side. NULL keys never equi-match on either side, so
-    * null-keyed fresh rows are always admitted — same semantics as the
-    * plain anti-join it replaces (callers relying on that: URL ingest's
-    * unparseable-URL passthrough).
+    * ingest shares, shaped so the STORED side is scanned once and never
+    * shuffled. It runs eagerly, in three steps:
+    *  1. `fresh` is pinned (`localCheckpoint`, eager), so its upstream
+    *     plan (parse, in-batch dedup window) runs once. The pin keeps the
+    *     plan's coalesced partitioning: a micro-batch stays one partition
+    *     and lands as one file;
+    *  2. the pinned non-null keys broadcast INTO the stored key scan as a
+    *     left-semi join, and the stored keys that hit are collected to the
+    *     driver, deduplicated per partition (no `distinct` shuffle). This
+    *     hit set holds at most the batch's distinct keys per stored
+    *     partition;
+    *  3. the result is the pin filtered by `NOT IN` the hit set. It reads
+    *     only the pin, never `stored` again, so a caller may write it
+    *     twice, or append to `stored`, without a second probe.
+    * A direct `fresh LEFT ANTI stored` cannot broadcast (anti cannot
+    * broadcast its left, and the stored side outgrows the threshold on
+    * day one), so it degenerates to a sort-merge join that re-shuffles the
+    * whole persisted key column every micro-batch — ~16 GB moved per batch
+    * at 1B stored 16-byte hashes, daily, forever. This shape moves
+    * O(batch) bytes at any corpus size; the same economics as
+    * [[graft.ext.Media.dhashDupIds]] on the media side. Do not move the
+    * hit set's `IN` onto the stored scan instead of the semi join: parquet
+    * pushes the list down and the scan costs several times the join.
+    * NULL keys never equi-match, so null-keyed fresh rows are always
+    * admitted — same semantics as the plain anti-join (callers relying on
+    * that: URL ingest's unparseable-URL passthrough).
     *
-    * The force-broadcast assumes `fresh` is BOUNDED (a micro-batch): its
-    * distinct key set must fit the driver and Spark's 8 GB broadcast hard
-    * limit. Streaming call sites satisfy that by construction; for batch
-    * callers whose increment is an arbitrary input, pass a finite
-    * `maxBroadcastKeys` — the fresh side is then pinned
-    * (`localCheckpoint`) and its distinct keys counted once, and past the
-    * threshold the admission falls back to the plain shuffled left-anti
-    * join: slower (the stored key column shuffles once) but it completes
-    * on any increment size instead of failing the broadcast.
+    * The broadcast assumes `fresh` is BOUNDED (a micro-batch): its key set
+    * must fit the driver and Spark's 8 GB broadcast hard limit. Streaming
+    * call sites satisfy that by construction; for batch callers whose
+    * increment is an arbitrary input, pass a finite `maxBroadcastKeys` —
+    * the pinned distinct keys are counted, and past the threshold the
+    * admission falls back to the plain shuffled left-anti join: slower
+    * (the stored key column shuffles once) but it completes on any
+    * increment size instead of failing the broadcast.
     */
   def admitNewByKey(fresh: DataFrame, stored: DataFrame, keyCol: String,
                     maxBroadcastKeys: Long = Long.MaxValue): DataFrame = {
-    def broadcastShape(f: DataFrame): DataFrame = {
-      val hits = stored.select(col(keyCol))
-        .join(broadcast(f.select(col(keyCol)).distinct()),
-          Seq(keyCol), "left_semi")
-        .distinct()
-      f.join(broadcast(hits), Seq(keyCol), "left_anti")
-    }
-    if (maxBroadcastKeys == Long.MaxValue) broadcastShape(fresh)
-    else {
-      // pin fresh so the guard count and the admission read one
-      // computation (fresh is often a non-trivial dedup plan)
-      val f = fresh.localCheckpoint(true)
-      if (f.select(col(keyCol)).distinct().count() <= maxBroadcastKeys)
-        broadcastShape(f)
-      else f.join(stored.select(col(keyCol)), Seq(keyCol), "left_anti")
+    val pinned = fresh.localCheckpoint(true)
+    val key = pinned(keyCol)
+    if (maxBroadcastKeys != Long.MaxValue &&
+        pinned.select(key).distinct().count() > maxBroadcastKeys) {
+      // the using-column join moves the key first; keep fresh's order
+      pinned.join(stored.select(col(keyCol)), Seq(keyCol), "left_anti")
+        .select(pinned.columns.map(pinned(_)): _*)
+    } else {
+      val probe = stored.select(col(keyCol))
+        .join(broadcast(pinned.select(key).where(key.isNotNull)), Seq(keyCol), "left_semi")
+      val hits = probe.mapPartitions(_.toSet.iterator)(Encoders.row(probe.schema))
+        .collect().map(_.get(0)).distinct
+      if (hits.isEmpty) pinned else pinned.where(key.isNull || !key.isin(hits: _*))
     }
   }
 
@@ -487,7 +505,7 @@ object Dedup {
     * shape: the corpus never rescans its content, only its content-hash
     * column is read, and that column is never shuffled — the admission
     * goes through [[admitNewByKey]] (batch hashes broadcast into the
-    * stored side, bounded hit set broadcast back), so each increment
+    * stored side, bounded hit set collected back), so each increment
     * moves O(batch) bytes at any corpus size. The broadcast assumes the
     * increment is micro-batch-sized; when it is an arbitrary batch input,
     * pass a finite `maxBroadcastKeys` to fall back to the shuffled
@@ -497,8 +515,7 @@ object Dedup {
   def incrementalExact(batch: DataFrame, corpus: DataFrame,
                        contentCols: Seq[String], idCol: String,
                        maxBroadcastKeys: Long = Long.MaxValue): DataFrame = {
-    val fresh = exact(batch, contentCols, idCol)
-      .withColumn("__h", contentHash(contentCols))
+    val fresh = exactHashed(batch, contentCols, idCol)
     val seen = corpus.select(contentHash(contentCols).as("__h"))
     admitNewByKey(fresh, seen, "__h", maxBroadcastKeys).drop("__h")
   }

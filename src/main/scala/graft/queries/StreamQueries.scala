@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.Curation
 import graft.streaming.Streams
-import graft.SparkEntry.{duckBucket, tsTCol, withNanosAsLong}
+import graft.SparkEntry.{duckBucket, tmpDir, tsTCol, withNanosAsLong}
 
 /** Streaming: file streams over the events table (AvailableNow), the queue
   * source, windows, stream joins and streaming dedup ingest.
@@ -51,6 +51,18 @@ object StreamQueries {
     * different ids, written to `tmp/in` as 4 files and streamed one file
     * per micro-batch.
     */
+  /** The per-scale-factor scratch dir `name`, emptied: an ingest case
+    * starts from no corpus and no checkpoint. It is wiped at the start of
+    * the call, not the end, because the returned frame reads the corpus
+    * lazily.
+    */
+  private def emptyTmpDir(s: SparkSession, dir: String, name: String): String = {
+    val tmp = tmpDir(dir, name)
+    val p = new org.apache.hadoop.fs.Path(tmp)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    tmp
+  }
+
   private def duplicatedFeed(s: SparkSession, dir: String, tmp: String): DataFrame = {
     val docs = Tables(s, dir).documents.select("doc_id", "text")
     docs.unionByName(docs.withColumn("doc_id", col("doc_id") + 1000000L))
@@ -161,7 +173,7 @@ object StreamQueries {
     // arrival order, deliberately not asserted (the unit spec pins the
     // in-batch min-id rule)
     QueryCase("stream_ingest_dedup", (s, dir) => withShufflePartitions(s, 8) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ingest_q_").toString
+      val tmp = emptyTmpDir(s, dir, "ingest_dedup")
       val q = Streams.ingestDedup(
         duplicatedFeed(s, dir, tmp),
         s"$tmp/corpus", contentCols = Seq("text"), idCol = "doc_id",
@@ -178,7 +190,7 @@ object StreamQueries {
     // probes are md5-derived, so a run either has a collision forever or
     // never — this fixture has none)
     QueryCase("stream_ingest_bloom", (s, dir) => withShufflePartitions(s, 8) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ingest_b_").toString
+      val tmp = emptyTmpDir(s, dir, "ingest_bloom")
       val q = Streams.ingestBloomDedup(
         duplicatedFeed(s, dir, tmp),
         s"$tmp/corpus", s"$tmp/bloom", idCol = "doc_id", textCol = "text",

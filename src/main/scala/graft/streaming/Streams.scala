@@ -2,10 +2,12 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Structured Streaming layer. The reference's "streaming" is a push loop —
   * one MQ delivery per DAG walk, no event time, no windows, no late-data
@@ -199,15 +201,24 @@ object Streams {
     * micro-batch admits only rows whose content is new (not in the stored
     * corpus, not earlier in the batch) and appends them to `corpusPath`.
     * The corpus rows are written WITH their content-hash column (`__h`,
-    * [[graft.ext.Dedup.contentHash]]), so each batch's anti-join reads ONLY
-    * that column back — a column-pruned scan of fixed-width hashes. Without
-    * the stored hash, every batch would re-read and re-hash the full
-    * content of the whole corpus, making continuous ingest O(corpus) per
-    * batch.
+    * [[graft.ext.Dedup.contentHash]]), so each batch reads ONLY that column
+    * back — a column-pruned scan of fixed-width hashes. Without the stored
+    * hash, every batch would re-read and re-hash the full content of the
+    * whole corpus.
+    *
+    * Per micro-batch: each row is hashed once and the in-batch min-id
+    * survivors are computed once and pinned; the corpus format comes from
+    * the file listing and one footer read on the driver (no schema
+    * inference job); the pinned hashes broadcast into one scan of the
+    * stored `__h` column, whose hits return to the driver; the batch minus
+    * those hits is appended as one file ([[graft.ext.Dedup.admitNewByKey]]).
+    * A small batch into a hash-format corpus runs 5 Spark jobs: the window
+    * shuffle, the pin, the key broadcast, the stored probe and the write.
+    * Bytes moved are O(batch); bytes read are the stored `__h` column.
     *
     * Delivery is idempotent BY CONSTRUCTION, not just by checkpoint: a
-    * replayed micro-batch re-runs the anti-join against a corpus that
-    * already holds its content, admits zero rows, and appends nothing — so
+    * replayed micro-batch re-probes a corpus that already holds its
+    * content, admits zero rows, and appends nothing — so
     * failure/retry cannot double-ingest content even across checkpoint
     * loss. (Which ID survives for duplicated content follows batch arrival
     * order; the admitted CONTENT set is order-independent.)
@@ -777,11 +788,7 @@ object Streams {
           col(idCol).as("file_id"), col("rec_idx"), col("warc_type"),
           col("record_id"), col("target_uri"), col("warc_date"),
           col("content_type"), col("body"))
-        .withColumn("__h", graft.ext.Dedup.contentHash(Seq("target_uri", "body")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__h")).orderBy(col("rec_uid"))
-      val fresh = recs.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
+      val fresh = graft.ext.Dedup.exactHashed(recs, Seq("target_uri", "body"), "rec_uid")
       if (!graft.ext.Dedup.nearIndexDataExists(spark, hashesPath)) {
         val kept = fresh.localCheckpoint(true)
         if (!kept.isEmpty) {
@@ -794,10 +801,11 @@ object Streams {
       } else {
         graft.ext.IndexFormat.check(spark, indexDir, fmt)
         // batch hashes broadcast into the stored table; the hit set comes
-        // back bounded — the identity table is scanned, never shuffled
+        // back bounded — the identity table is scanned, never shuffled.
+        // The admitted frame reads only the pinned batch, so the appends
+        // below cannot re-probe the table they grow
         val admitted = graft.ext.Dedup.admitNewByKey(
             fresh, spark.read.parquet(hashesPath), "__h")
-          .localCheckpoint(true)
         if (!admitted.isEmpty) {
           graft.ext.IndexFormat.invalidate(spark, indexDir)
           admitted.select(outCols.map(col): _*)
@@ -859,11 +867,7 @@ object Streams {
           concat_ws(":", col(idCol).cast("string"), col("stream_idx")).as("page_uid"),
           col(idCol).as("doc_id"), col("stream_idx"), col("pdf_version"),
           col("text"))
-        .withColumn("__h", graft.ext.Dedup.contentHash(Seq("text")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__h")).orderBy(col("page_uid"))
-      val fresh = pages.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
+      val fresh = graft.ext.Dedup.exactHashed(pages, Seq("text"), "page_uid")
       if (!graft.ext.Dedup.nearIndexDataExists(spark, hashesPath)) {
         val kept = fresh.localCheckpoint(true)
         if (!kept.isEmpty) {
@@ -879,7 +883,6 @@ object Streams {
         // shuffled — see Dedup.admitNewByKey
         val admitted = graft.ext.Dedup.admitNewByKey(
             fresh, spark.read.parquet(hashesPath), "__h")
-          .localCheckpoint(true)
         if (!admitted.isEmpty) {
           graft.ext.IndexFormat.invalidate(spark, indexDir)
           admitted.select(outCols.map(col): _*)
@@ -999,15 +1002,7 @@ object Streams {
       require(!batch.columns.exists(_.equalsIgnoreCase("__h")),
         "'__h' is the reserved corpus content-hash column — rename it upstream")
       val spark = batch.sparkSession
-      val path = new org.apache.hadoop.fs.Path(corpusPath)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // globStatus returns null (not empty) for zero matches on some
-      // filesystems — an existing-but-empty corpus dir must read as absent
-      val hasCorpus = fs.exists(path) && Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(s"$corpusPath/*.parquet")))
-        .exists(_.nonEmpty)
-      val fresh = graft.ext.Dedup.exact(batch, contentCols, idCol)
-        .withColumn("__h", graft.ext.Dedup.contentHash(contentCols))
+      val fresh = graft.ext.Dedup.exactHashed(batch, contentCols, idCol)
       // a corpus NEVER mixes formats: a pre-hash-format corpus (no __h in
       // its schema) would read half-null __h after a mixed append, and
       // null hash keys never match an equi-join — silent re-ingestion. So
@@ -1017,24 +1012,48 @@ object Streams {
       // both admission paths go through Dedup.admitNewByKey: the stored
       // hash column (or the recomputed legacy hashes) is scanned with the
       // bounded batch hashes broadcast into it, never shuffled per batch
-      val (admitted, outCols) =
-        if (!hasCorpus) (fresh, batch.columns :+ "__h")
-        else {
-          val corpus = spark.read.parquet(corpusPath)
-          if (corpus.columns.contains("__h"))
-            (graft.ext.Dedup.admitNewByKey(fresh, corpus.select("__h"), "__h"),
-              batch.columns :+ "__h")
-          else
-            (graft.ext.Dedup.admitNewByKey(fresh,
-              corpus.select(graft.ext.Dedup.contentHash(contentCols).as("__h")),
-              "__h").drop("__h"),
-              batch.columns)
-        }
-      // fixed column order (the using-column join reorders __h first):
-      // every corpus file carries the identical schema
+      val (admitted, outCols) = corpusColumns(spark, corpusPath) match {
+        case None => (fresh, batch.columns :+ "__h")
+        case Some(cols) if cols("__h") =>
+          (graft.ext.Dedup.admitNewByKey(fresh, storedKeys(spark, corpusPath, "__h"), "__h"),
+            batch.columns :+ "__h")
+        case Some(_) =>
+          (graft.ext.Dedup.admitNewByKey(fresh,
+            spark.read.parquet(corpusPath)
+              .select(graft.ext.Dedup.contentHash(contentCols).as("__h")),
+            "__h"),
+            batch.columns)
+      }
+      // fixed column order: every corpus file carries the identical schema
       admitted.select(outCols.map(col): _*)
         .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(corpusPath)
   }
+
+  /** The column names of the corpus at `corpusPath`, or None when it has
+    * no data yet (no directory, or one without a `*.parquet` file). Read
+    * on the driver from one footer: a corpus never mixes formats, so any
+    * file speaks for all, and Spark's own schema inference would read one
+    * footer too, in a job of its own.
+    */
+  private def corpusColumns(spark: SparkSession, corpusPath: String): Option[Set[String]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new org.apache.hadoop.fs.Path(corpusPath)
+    // globStatus returns null (not empty) for zero matches on some
+    // filesystems — an existing-but-empty corpus dir reads as absent
+    Option(path.getFileSystem(conf).globStatus(new org.apache.hadoop.fs.Path(path, "*.parquet")))
+      .flatMap(_.headOption).map { st =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+        finally reader.close()
+      }
+  }
+
+  /** The stored string key columns `keys` of an ingest corpus, read with
+    * their known schema (no inference job).
+    */
+  private def storedKeys(spark: SparkSession, corpusPath: String, keys: String*): DataFrame =
+    spark.read.schema(StructType(keys.map(StructField(_, StringType)))).parquet(corpusPath)
 
   /** Streaming corpus ingest with URL-level dedup BEFORE the content-hash
     * admission — the C4-shaped crawl-ingest path ([[graft.ext.Urls]]):
@@ -1061,31 +1080,25 @@ object Streams {
         c.equalsIgnoreCase("__h") || c.equalsIgnoreCase("__u")),
         "'__h'/'__u' are reserved corpus columns — rename them upstream")
       val spark = batch.sparkSession
-      val path = new org.apache.hadoop.fs.Path(corpusPath)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasCorpus = fs.exists(path) && Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(s"$corpusPath/*.parquet")))
-        .exists(_.nonEmpty)
       // within-batch URL dedup first (cheapest), then content-exact
       val urlKept = graft.ext.Urls.dedupByUrl(batch, idCol, urlCol)
         .withColumnRenamed("url_norm", "__u")
-      val fresh = graft.ext.Dedup.exact(urlKept, contentCols, idCol)
-        .withColumn("__h", graft.ext.Dedup.contentHash(contentCols))
-      val admitted =
-        if (!hasCorpus) fresh
-        else {
-          val corpus = spark.read.parquet(corpusPath)
-          require(corpus.columns.contains("__u") && corpus.columns.contains("__h"),
+      val fresh = graft.ext.Dedup.exactHashed(urlKept, contentCols, idCol)
+      val admitted = corpusColumns(spark, corpusPath) match {
+        case None => fresh
+        case Some(cols) =>
+          require(cols("__u") && cols("__h"),
             s"corpus at $corpusPath lacks the stored __u/__h columns — it was " +
               "not created by ingestUrlDedup (refusing to silently re-ingest)")
+          val stored = storedKeys(spark, corpusPath, "__u", "__h")
           // NULL __u never equi-joins → malformed-URL rows pass to the
           // content stage on both sides, by construction (admitNewByKey
           // preserves that); stored __u/__h columns are scanned with the
           // batch keys broadcast into them, never shuffled per batch
           graft.ext.Dedup.admitNewByKey(
-            graft.ext.Dedup.admitNewByKey(fresh, corpus.select("__u"), "__u"),
-            corpus.select("__h"), "__h")
-        }
+            graft.ext.Dedup.admitNewByKey(fresh, stored.select("__u"), "__u"),
+            stored.select("__h"), "__h")
+      }
       val outCols = batch.columns :+ "__u" :+ "__h"
       admitted.select(outCols.map(col): _*)
         .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(corpusPath)
@@ -1249,7 +1262,6 @@ object Streams {
         // stored id column scanned, never shuffled (Dedup.admitNewByKey)
         val fresh = graft.ext.Dedup.admitNewByKey(perId,
             spark.read.parquet(corpusPath).select(col(idCol)), idCol)
-          .localCheckpoint(true)
         if (!fresh.isEmpty)
           graft.ext.Ivf.appendCorpusAndIndex(fresh, corpusPath, idCol, vecCol,
             indexDir)

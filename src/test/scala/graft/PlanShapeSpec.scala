@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** Plan-shape regression tests: the scale properties the engine promises
@@ -245,16 +247,26 @@ class PlanShapeSpec extends SparkSpec {
       s"hot-hash cap is not a broadcast anti-join:\n$plan")
   }
 
-  test("exact-identity admission broadcasts both legs — stored hashes never shuffle") {
-    // the continuous-ingest scale contract (r15 verdict #1): a direct
-    // `fresh LEFT ANTI stored` cannot broadcast its left side, so past the
-    // broadcast threshold it sort-merge-joins — re-shuffling the whole
-    // persisted hash column every micro-batch, forever. Dedup.admitNewByKey
-    // must plan two BroadcastHashJoins (batch keys semi INTO the stored
-    // scan; bounded hit set anti back) and no SortMergeJoin even with
-    // auto-broadcast off (the threshold can't save a corpus-sized table).
+  test("exact-identity admission probes the stored hashes through a broadcast — stored hashes never shuffle") {
+    // the continuous-ingest scale contract: a direct `fresh LEFT ANTI
+    // stored` cannot broadcast its left side, so past the broadcast
+    // threshold it sort-merge-joins — re-shuffling the whole persisted
+    // hash column every micro-batch, forever. Dedup.admitNewByKey must
+    // probe the stored scan with the batch keys broadcast into it (a
+    // BroadcastHashJoin LeftSemi, no SortMergeJoin) even with
+    // auto-broadcast off, and its result must read only the pinned batch:
+    // no join and no exchange left in the returned plan
+    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        probes.add(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.listenerManager.register(listener)
     try {
       val corpus = spark.range(5000)
         .select($"id", ($"id" % 97).cast("string").as("text"))
@@ -262,11 +274,19 @@ class PlanShapeSpec extends SparkSpec {
         .select(($"id" + 9000).as("id"), ($"id" + 50).cast("string").as("text"))
       val out = graft.ext.Dedup.incrementalExact(batch, corpus, Seq("text"), "id")
       val plan = physical(out)
-      assert(!plan.contains("SortMergeJoin"),
-        s"stored hash column shuffles (SMJ) in the admission:\n$plan")
-      assert(plan.split("BroadcastHashJoin", -1).length - 1 >= 2,
-        s"admission lost its broadcast semi/anti pair:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      assert(!plan.contains("Join") && !plan.contains("Exchange"),
+        s"the admitted frame re-joins or re-shuffles:\n$plan")
+      // query-execution events arrive asynchronously
+      def semi = probes.asScala.filter(_.contains("LeftSemi"))
+      val deadline = System.currentTimeMillis() + 10000
+      while (semi.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(25)
+      assert(semi.size == 1, s"expected one stored-key probe, got:\n${probes.asScala.mkString("\n")}")
+      assert(semi.head.contains("BroadcastHashJoin") && !semi.head.contains("SortMergeJoin"),
+        s"stored hash column shuffles in the admission probe:\n${semi.head}")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("tokenStats aggregates with exactly one exchange (map-side combine)") {

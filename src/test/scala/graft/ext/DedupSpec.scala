@@ -264,6 +264,39 @@ class DedupSpec extends SparkSpec {
       maxBroadcastKeys = 1L)) == Seq(11L))
   }
 
+  test("admitNewByKey admits null keys even when the stored side holds nulls") {
+    val stored = Seq[String]("aa", null, null).toDF("k")
+    val fresh = Seq[(Long, String)]((10L, "aa"), (11L, null), (12L, "bb"), (13L, null))
+      .toDF("id", "k")
+    val out = Dedup.admitNewByKey(fresh, stored, "k")
+    assert(out.columns.toSeq == Seq("id", "k"))
+    assert(out.select("id").as[Long].collect().sorted.toSeq == Seq(11L, 12L, 13L))
+  }
+
+  test("admitNewByKey drops a key stored many times once, admits the rest once") {
+    // stored duplicates spread over partitions: each hit is one key, and
+    // no fresh row is duplicated or lost
+    val stored = (Seq.fill(7)("aa") ++ Seq("bb", "bb")).toDF("k").repartition(3)
+    val fresh = Seq((10L, "aa"), (11L, "bb"), (12L, "cc"), (13L, "dd")).toDF("id", "k")
+    assert(Dedup.admitNewByKey(fresh, stored, "k").as[(Long, String)]
+      .collect().sorted.toSeq == Seq((12L, "cc"), (13L, "dd")))
+  }
+
+  test("admitNewByKey on an all-hit replay admits nothing, and never re-reads stored") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_admit_").toString
+    val fresh = Seq((1L, "aa"), (2L, "bb"), (3L, "cc")).toDF("id", "k")
+    fresh.select("k").write.parquet(s"$dir/stored")
+    def stored = spark.read.parquet(s"$dir/stored")
+    assert(Dedup.admitNewByKey(fresh, stored, "k").isEmpty)
+    // the admitted frame reads only the pinned batch: appending its keys
+    // to the stored side afterwards does not change what it admits
+    val more = Seq((4L, "dd"), (5L, "ee")).toDF("id", "k")
+    val admitted = Dedup.admitNewByKey(more, stored, "k")
+    more.select("k").write.mode("append").parquet(s"$dir/stored")
+    assert(admitted.select("id").as[Long].collect().sorted.toSeq == Seq(4L, 5L))
+    assert(Dedup.admitNewByKey(more, stored, "k").isEmpty)
+  }
+
   test("nearDedup keeps one representative per near-dup cluster, all singletons") {
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = Seq(

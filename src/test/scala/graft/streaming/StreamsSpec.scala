@@ -1077,6 +1077,71 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("ingestDedup admits one micro-batch into a hash-format corpus in at most 5 jobs and one file") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_jobs_").toString
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.ingestDedup(mem.toDF().toDF("doc_id", "text"),
+      s"$dir/corpus", contentCols = Seq("text"), idCol = "doc_id",
+      checkpoint = s"$dir/ckpt", trigger = Trigger.ProcessingTime(0))
+    def files = new java.io.File(s"$dir/corpus").list().count(_.endsWith(".parquet"))
+    // jobs of this query only, counted from their start events
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("sql.streaming.queryId") == q.id.toString)
+          jobs.add(e.jobId)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.add(e.jobId)
+    }
+    try {
+      // pre-seed the corpus (the bootstrap batch writes __h)
+      mem.addData((1L to 200L).map(i => (i, s"doc $i")): _*)
+      q.processAllAvailable()
+      val before = files
+      spark.sparkContext.addSparkListener(listener)
+      // one micro-batch: new content, an in-batch duplicate and re-sends
+      mem.addData(((201L to 300L).map(i => (i, s"doc $i")) :+ ((301L, "doc 250"))) ++
+        (1L to 20L).map(i => (1000L + i, s"doc $i")): _*)
+      q.processAllAvailable()
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (!ended.containsAll(jobs) && System.currentTimeMillis() < deadline) Thread.sleep(25)
+      Thread.sleep(200)
+      assert(jobs.size >= 1 && jobs.size <= 5, s"one micro-batch ran ${jobs.size} jobs")
+      assert(files == before + 1)
+      val stored = spark.read.parquet(s"$dir/corpus")
+      assert(stored.count() == 300L)
+      assert(stored.select("doc_id").as[Long].collect().max == 300L)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      q.stop()
+    }
+  }
+
+  test("ingestDedup treats an existing corpus dir without parquet files as no corpus") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_empty_").toString
+    new java.io.File(s"$dir/corpus").mkdirs()
+    new java.io.File(s"$dir/corpus/_SUCCESS").createNewFile()
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.ingestDedup(mem.toDF().toDF("doc_id", "text"),
+      s"$dir/corpus", contentCols = Seq("text"), idCol = "doc_id",
+      checkpoint = s"$dir/ckpt", trigger = Trigger.ProcessingTime(0))
+    try {
+      mem.addData((2L, "alpha"), (1L, "alpha"), (3L, "beta"))
+      q.processAllAvailable()
+      mem.addData((4L, "beta"), (5L, "gamma"))
+      q.processAllAvailable()
+      val stored = spark.read.parquet(s"$dir/corpus")
+      assert(stored.columns.toSeq == Seq("doc_id", "text", "__h"))
+      assert(stored.select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1).toSeq ==
+        Seq((1L, "alpha"), (3L, "beta"), (5L, "gamma")))
+    } finally q.stop()
+  }
+
   test("ingestUrlDedup dedups by canonical URL then content, idempotently") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_ingest_url_").toString
