@@ -247,15 +247,16 @@ class PlanShapeSpec extends SparkSpec {
       s"hot-hash cap is not a broadcast anti-join:\n$plan")
   }
 
-  test("exact-identity admission probes the stored hashes through a broadcast — stored hashes never shuffle") {
+  test("exact-identity admission broadcasts both legs — stored hashes never shuffle") {
     // the continuous-ingest scale contract: a direct `fresh LEFT ANTI
     // stored` cannot broadcast its left side, so past the broadcast
     // threshold it sort-merge-joins — re-shuffling the whole persisted
-    // hash column every micro-batch, forever. Dedup.admitNewByKey must
-    // probe the stored scan with the batch keys broadcast into it (a
-    // BroadcastHashJoin LeftSemi, no SortMergeJoin) even with
-    // auto-broadcast off, and its result must read only the pinned batch:
-    // no join and no exchange left in the returned plan
+    // hash column every micro-batch, forever. Both legs of
+    // Dedup.admitNewByKey stay on the broadcast side: the batch keys are
+    // broadcast into the stored scan (a BroadcastHashJoin LeftSemi, no
+    // SortMergeJoin, even with auto-broadcast off), and the bounded hit
+    // set comes back to the driver as a literal filter on the pinned
+    // batch — no join and no exchange left in the returned plan
     val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
