@@ -5,7 +5,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.core.RowDecode
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -495,6 +496,30 @@ object Media {
         s"unsupported media container: $m")
     }
 
+  /** Fact columns of the scrubs: the scrubbed payload and how many bytes
+    * the scrub removed.
+    */
+  private val ScrubFields = Seq(
+    StructField("content", BinaryType, nullable = false),
+    StructField("bytes_removed", IntegerType, nullable = false))
+
+  /** [[ScrubFields]] facts of one payload under `strip`. */
+  private def scrubFacts(strip: Array[Byte] => Array[Byte])
+                        (bytes: Array[Byte]): Seq[Seq[Any]] = {
+    val scrubbed = strip(bytes)
+    Seq(Seq[Any](scrubbed, bytes.length - scrubbed.length))
+  }
+
+  /** A scrub twin's quarantine: the payload stays intact (so a downstream
+    * ingest can still quarantine it WITH content) and `bytes_removed=0`.
+    */
+  private def scrubLenient(df: DataFrame, idCol: String, contentCol: String,
+                           strip: Array[Byte] => Array[Byte]): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 1,
+      RowDecode.nullable(ScrubFields, "bytes_removed") ++ RowDecode.flags("scrub"),
+      keepOnFailure = { case ("content", b) => b; case ("bytes_removed", _) => 0 })(
+      scrubFacts(strip))
+
   /** [[stripMediaMeta]] over a frame: output (idCol, content scrubbed,
     * bytes_removed — 0 for the size-preserving MP4 neutralization, whose
     * effect the `meta_zeroed` check in the oracle observes instead). One
@@ -502,79 +527,28 @@ object Media {
     * PII-scrub stage of an ingest runs at scan cost.
     */
   def stripMediaMetadata(df: DataFrame, idCol: String,
-                         contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false),
-      StructField("bytes_removed", IntegerType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val scrubbed = stripMediaMeta(bytes)
-        Row(r.get(0), scrubbed, bytes.length - scrubbed.length)
-      }
-    }, outSchema)
-  }
+                         contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, ScrubFields)(
+      scrubFacts(stripMediaMeta))
 
-  /** [[stripMediaMetadata]] for DIRTY corpora — the scrub twin of the
-    * `decode*Lenient` pattern: a malformed payload must not fail the task
-    * when the scrub composes upstream of an ingest sink whose quarantine
-    * exists precisely for dirty crawls. A row whose container walk throws
-    * keeps its ORIGINAL bytes with `scrub_ok=false` and the failure class
-    * in `scrub_err` (`bytes_removed=0`) — the payload stays intact so the
-    * downstream ingest can still quarantine it WITH content, and the flag
-    * makes "PII may remain" an explicit, filterable fact rather than a
-    * silent pass-through. Good rows are bit-equal to the strict path.
+  /** [[stripMediaMetadata]] for DIRTY corpora, under the
+    * [[graft.core.RowDecode]] quarantine policy: the scrub composes
+    * upstream of an ingest sink whose quarantine exists precisely for
+    * dirty crawls. A row whose container walk throws keeps its ORIGINAL
+    * bytes with `scrub_ok=false` (`bytes_removed=0`), so "PII may remain"
+    * is an explicit, filterable fact rather than a silent pass-through.
+    * Good rows are bit-equal to the strict path.
     */
   def stripMediaMetadataLenient(df: DataFrame, idCol: String,
-                                contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = true),
-      StructField("bytes_removed", IntegerType, nullable = false),
-      StructField("scrub_ok", BooleanType, nullable = false),
-      StructField("scrub_err", StringType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        try {
-          val scrubbed = stripMediaMeta(bytes)
-          Row(r.get(0), scrubbed, bytes.length - scrubbed.length, true, null)
-        } catch {
-          case e: Exception =>
-            Row(r.get(0), bytes, 0, false, e.getClass.getSimpleName)
-        }
-      }
-    }, outSchema)
-  }
+                                contentCol: String): DataFrame =
+    scrubLenient(df, idCol, contentCol, stripMediaMeta)
 
   /** [[stripImageMetadata]]'s lenient twin — same contract as
     * [[stripMediaMetadataLenient]], restricted to the image containers.
     */
   def stripImageMetadataLenient(df: DataFrame, idCol: String,
-                                contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = true),
-      StructField("bytes_removed", IntegerType, nullable = false),
-      StructField("scrub_ok", BooleanType, nullable = false),
-      StructField("scrub_err", StringType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        try {
-          val scrubbed = stripImageMeta(bytes)
-          Row(r.get(0), scrubbed, bytes.length - scrubbed.length, true, null)
-        } catch {
-          case e: Exception =>
-            Row(r.get(0), bytes, 0, false, e.getClass.getSimpleName)
-        }
-      }
-    }, outSchema)
-  }
+                                contentCol: String): DataFrame =
+    scrubLenient(df, idCol, contentCol, stripImageMeta)
 
   /** A RIFF `LIST(INFO)` payload holding one IART (artist) tag — the
     * metadata the WAV/AVI scrub exists to remove, as fixtures plant it.
@@ -595,65 +569,40 @@ object Media {
     * scrub oracles.
     */
   def genInfoTagged(df: DataFrame, idCol: String, contentCol: String,
-                    artistCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol), col(artistCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val tag = "LIST" -> infoList(r.getString(2))
-        val tagged = sniffMime(bytes) match {
-          case "audio/wav" => riffBuild("WAVE", riffChunks(bytes).flatMap {
-            case c @ ("data", _) => Seq(tag, c)
-            case c => Seq(c)
-          })
-          case "video/avi" => riffBuild("AVI ", riffChunks(bytes) :+ tag)
-          case m => throw new IllegalArgumentException(
-            s"genInfoTagged supports WAV/AVI, got $m")
-        }
-        Row(r.get(0), tagged)
+                    artistCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(contentCol), col(artistCol)) { r =>
+      val bytes = r.getAs[Array[Byte]](1)
+      val tag = "LIST" -> infoList(r.getString(2))
+      sniffMime(bytes) match {
+        case "audio/wav" => riffBuild("WAVE", riffChunks(bytes).flatMap {
+          case c @ ("data", _) => Seq(tag, c)
+          case c => Seq(c)
+        })
+        case "video/avi" => riffBuild("AVI ", riffChunks(bytes) :+ tag)
+        case m => throw new IllegalArgumentException(
+          s"genInfoTagged supports WAV/AVI, got $m")
       }
-    }, outSchema)
-  }
+    }
 
   /** [[stripImageMeta]] over a frame: output (idCol, content scrubbed,
     * bytes_removed). One byte walk per row, pixels untouched, no shuffle —
     * the PII-scrub stage of an image ingest runs at scan cost.
     */
   def stripImageMetadata(df: DataFrame, idCol: String,
-                         contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false),
-      StructField("bytes_removed", IntegerType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val scrubbed = stripImageMeta(bytes)
-        Row(r.get(0), scrubbed, bytes.length - scrubbed.length)
-      }
-    }, outSchema)
-  }
+                         contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, ScrubFields)(
+      scrubFacts(stripImageMeta))
 
   /** Insert an eXIf orientation chunk into every PNG payload (pixels
     * untouched) — the df form of [[pngWithOrientation]], the fixture side
     * of the metadata scrub oracle.
     */
   def genTaggedPngs(df: DataFrame, idCol: String, contentCol: String,
-                    orientCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol), col(orientCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        Row(r.get(0), pngWithOrientation(r.getAs[Array[Byte]](1), r.getInt(2)))
-      }
-    }, outSchema)
-  }
+                    orientCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(contentCol),
+      col(orientCol).cast("int")) { r =>
+      pngWithOrientation(r.getAs[Array[Byte]](1), r.getInt(2))
+    }
 
   /** Adobe-style tagged JPEG fixtures, one per input row: a real
     * ImageIO-encoded gray JPEG at (`wCol`×`hCol`) carrying EVERY channel
@@ -667,43 +616,35 @@ object Media {
     * (JPEG is lossy); the oracle replays dims + marker-survival flags.
     */
   def genAdobeTaggedJpegs(df: DataFrame, idCol: String, wCol: String,
-                          hCol: String, orientCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(wCol).cast("int"),
-      col(hCol).cast("int"), col(orientCol).cast("int"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0); val w = r.getInt(1); val h = r.getInt(2)
-        val img = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        var i = 0
-        while (i < w * h) {
-          img.getRaster.setSample(i % w, i / w, 0, ((id * 31 + i * 7) % 256).toInt)
-          i += 1
-        }
-        val bos = new ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "jpg", bos)
-        val withExif = jpegWithOrientation(bos.toByteArray, r.getInt(3))
-        def seg(marker: Int, payload: Array[Byte]): Array[Byte] =
-          Array(0xff.toByte, marker.toByte,
-            ((payload.length + 2) >> 8).toByte,
-            ((payload.length + 2) & 0xff).toByte) ++ payload
-        val app14 = seg(0xee, "Adobe".getBytes("US-ASCII") ++
-          Array[Byte](0, 100, 0, 0, 0, 0, 1))
-        val xapp14 = seg(0xee, s"XAPP14-PII serial=$id".getBytes("US-ASCII"))
-        val icc = seg(0xe2, IccIdentifier ++ Array[Byte](0, 1, 1) ++
-          Array.fill[Byte](8)(0x42))
-        val mpf = seg(0xe2, "MPFSECRET".getBytes("US-ASCII") ++
-          Array.fill[Byte](8)(0x24))
-        val trailer = s"TRAILER-PII preview=$id".getBytes("US-ASCII")
-        Row(id, withExif.take(2) ++ app14 ++ xapp14 ++ icc ++ mpf ++
-          withExif.drop(2) ++ trailer)
+                          hCol: String, orientCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(wCol).cast("int"),
+      col(hCol).cast("int"), col(orientCol).cast("int")) { r =>
+      val id = r.getLong(0); val w = r.getInt(1); val h = r.getInt(2)
+      val img = new java.awt.image.BufferedImage(w, h,
+        java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      var i = 0
+      while (i < w * h) {
+        img.getRaster.setSample(i % w, i / w, 0, ((id * 31 + i * 7) % 256).toInt)
+        i += 1
       }
-    }, outSchema)
-  }
+      val bos = new ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "jpg", bos)
+      val withExif = jpegWithOrientation(bos.toByteArray, r.getInt(3))
+      def seg(marker: Int, payload: Array[Byte]): Array[Byte] =
+        Array(0xff.toByte, marker.toByte,
+          ((payload.length + 2) >> 8).toByte,
+          ((payload.length + 2) & 0xff).toByte) ++ payload
+      val app14 = seg(0xee, "Adobe".getBytes("US-ASCII") ++
+        Array[Byte](0, 100, 0, 0, 0, 0, 1))
+      val xapp14 = seg(0xee, s"XAPP14-PII serial=$id".getBytes("US-ASCII"))
+      val icc = seg(0xe2, IccIdentifier ++ Array[Byte](0, 1, 1) ++
+        Array.fill[Byte](8)(0x42))
+      val mpf = seg(0xe2, "MPFSECRET".getBytes("US-ASCII") ++
+        Array.fill[Byte](8)(0x24))
+      val trailer = s"TRAILER-PII preview=$id".getBytes("US-ASCII")
+      withExif.take(2) ++ app14 ++ xapp14 ++ icc ++ mpf ++
+        withExif.drop(2) ++ trailer
+    }
 
   /** Container sniff from magic bytes — decode-independent, so a payload
     * that LIES about its type still reports what it actually is.
@@ -788,26 +729,33 @@ object Media {
     * row a multimodal curation pipeline joins on. One decode per row,
     * no shuffle. Input: (idCol, contentCol binary); output adds
     * (width, height, channels, mime, dhash). Undecodable payloads throw —
-    * quarantine upstream with a mime filter if the corpus is dirty.
+    * quarantine with [[decodeImageMetaLenient]] if the corpus is dirty.
     */
   def decodeImageMeta(df: DataFrame, idCol: String,
-                      contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(in.schema.fields ++ Seq(
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("channels", IntegerType, nullable = false),
-      StructField("mime", StringType, nullable = false),
-      StructField("dhash", LongType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val (w, h, bands, px) = decodeLuma(bytes)
-        Row(r.get(0), r.get(1), w, h, bands, sniffMime(bytes), dHash64(px, w, h))
-      }
-    }, outSchema)
+                      contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 2, ImageFields)(imageFacts)
+
+  /** Fact columns of [[decodeImageMeta]]. */
+  private val ImageFields = Seq(
+    StructField("width", IntegerType, nullable = false),
+    StructField("height", IntegerType, nullable = false),
+    StructField("channels", IntegerType, nullable = false),
+    StructField("mime", StringType, nullable = false),
+    StructField("dhash", LongType, nullable = false))
+
+  private def imageFacts(bytes: Array[Byte]): Seq[Seq[Any]] = {
+    val (w, h, bands, px) = decodeLuma(bytes)
+    Seq(Seq[Any](w, h, bands, sniffMime(bytes), dHash64(px, w, h)))
   }
+
+  /** [[sniffMime]] that reads a missing (null) payload as opaque bytes —
+    * the `mime` a lenient decoder keeps on a quarantined row.
+    */
+  private def mimeOf(bytes: Array[Byte]): String =
+    if (bytes == null) "application/octet-stream" else sniffMime(bytes)
+
+  /** The `mime` column of the lenient decoders, kept on quarantined rows. */
+  private val MimeField = StructField("mime", StringType, nullable = false)
 
   /** Real image resize (area/block-mean, grayscale) to `tw`×`th`: decode,
     * [[blockMean]], re-encode as a gray PNG. Returns
@@ -819,21 +767,14 @@ object Media {
     * choice for hash pipelines precisely because it is exact.)
     */
   def resizeImage(df: DataFrame, idCol: String, contentCol: String,
-                  tw: Int, th: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
+                  tw: Int, th: Int): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, Seq(
       StructField("content", BinaryType, nullable = false),
       StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, _, px) = decodeLuma(r.getAs[Array[Byte]](1))
-        val small = blockMean(px, w, h, tw, th)
-        Row(r.get(0), encodeGrayPng(small, tw, th), tw, th)
-      }
-    }, outSchema)
-  }
+      StructField("height", IntegerType, nullable = false))) { bytes =>
+      val (w, h, _, px) = decodeLuma(bytes)
+      Seq(Seq[Any](encodeGrayPng(blockMean(px, w, h, tw, th), tw, th), tw, th))
+    }
 
   /** Encode a row-major gray grid (values 0..255) as a PNG — fixture
     * generator AND the re-encode half of [[resizeImage]]. PNG is lossless,
@@ -854,43 +795,15 @@ object Media {
     bos.toByteArray
   }
 
-  /** [[decodeImageMeta]] for DIRTY corpora: undecodable payloads are
-    * quarantined in place instead of failing the job — `decode_ok=false`
-    * with null facts and the failure class in `decode_err`, so one pass
-    * splits a crawl into the processable stream
-    * (`filter($"decode_ok")`) and a quarantine ledger
-    * (`filter(!$"decode_ok")`) without re-reading bytes. Strict
-    * [[decodeImageMeta]] stays the default — a fixture pipeline WANTS to
-    * fail loudly on a bad byte; lenient is for the open web.
+  /** [[decodeImageMeta]] for DIRTY corpora, under the
+    * [[graft.core.RowDecode]] quarantine policy: (decode_ok, decode_err)
+    * follow the input columns; a quarantined row keeps its sniffed `mime`.
     */
   def decodeImageMetaLenient(df: DataFrame, idCol: String,
-                             contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(in.schema.fields ++ Seq(
-      StructField("decode_ok", BooleanType, nullable = false),
-      StructField("decode_err", StringType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("channels", IntegerType, nullable = true),
-      StructField("mime", StringType, nullable = false),
-      StructField("dhash", LongType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val mime = if (bytes == null) "application/octet-stream" else sniffMime(bytes)
-        try {
-          require(bytes != null, "null payload")
-          val (w, h, bands, px) = decodeLuma(bytes)
-          Row(r.get(0), r.get(1), true, null, w, h, bands, mime, dHash64(px, w, h))
-        } catch {
-          case e: Exception =>
-            Row(r.get(0), r.get(1), false, e.getClass.getSimpleName,
-              null, null, null, mime, null)
-        }
-      }
-    }, outSchema)
-  }
+                             contentCol: String): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 2,
+      RowDecode.flags("decode") ++ RowDecode.nullable(ImageFields, "mime"),
+      keepOnFailure = { case ("mime", b) => mimeOf(b) })(imageFacts)
 
   /** Explode every image payload to its luma grid: one row per pixel,
     * (idCol, x, y, gray) — the feature-extract shape downstream per-pixel
@@ -898,22 +811,15 @@ object Media {
     * count multiplies by width×height: use on thumbnails/resized output,
     * not raw corpus images.
     */
-  def imagePixels(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
+  def imagePixels(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, Seq(
       StructField("x", IntegerType, nullable = false),
       StructField("y", IntegerType, nullable = false),
-      StructField("gray", IntegerType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val (w, h, _, px) = decodeLuma(r.getAs[Array[Byte]](1))
-        val id = r.get(0)
-        (0 until h).iterator.flatMap(y => (0 until w).iterator.map(x =>
-          Row(id, x, y, px(y * w + x))))
-      }
-    }, outSchema)
-  }
+      StructField("gray", IntegerType, nullable = false))) { bytes =>
+      val (w, h, _, px) = decodeLuma(bytes)
+      (0 until h).iterator.flatMap(y => (0 until w).iterator.map(x =>
+        Seq[Any](x, y, px(y * w + x))))
+    }
 
   /** Near-duplicate image pairs by dHash Hamming distance ≤ `maxDist`,
     * WITHOUT the all-pairs cross join: the 64-bit hash splits into
@@ -1015,20 +921,14 @@ object Media {
     * dHash — see [[aHash64]] for when to run both. One decode per row,
     * no shuffle.
     */
-  def imageAHash(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
+  def imageAHash(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, Seq(
       StructField("width", IntegerType, nullable = false),
       StructField("height", IntegerType, nullable = false),
-      StructField("ahash", LongType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, _, px) = decodeLuma(r.getAs[Array[Byte]](1))
-        Row(r.get(0), w, h, aHash64(px, w, h))
-      }
-    }, outSchema)
-  }
+      StructField("ahash", LongType, nullable = false))) { bytes =>
+      val (w, h, _, px) = decodeLuma(bytes)
+      Seq(Seq[Any](w, h, aHash64(px, w, h)))
+    }
 
   /** Per-image luma statistics for image-quality curation — the numeric
     * facts a LAION-style filter keys on, all exact integers so an oracle
@@ -1040,10 +940,8 @@ object Media {
     * variance proxy `n_px·luma_sq_sum − luma_sum²`. One decode per row,
     * no shuffle; all thresholds stay in the query plan, not the decoder.
     */
-  def imageStats(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
+  def imageStats(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, Seq(
       StructField("width", IntegerType, nullable = false),
       StructField("height", IntegerType, nullable = false),
       StructField("n_px", IntegerType, nullable = false),
@@ -1051,23 +949,19 @@ object Media {
       StructField("luma_sq_sum", LongType, nullable = false),
       StructField("luma_min", IntegerType, nullable = false),
       StructField("luma_max", IntegerType, nullable = false),
-      StructField("mean_milli", LongType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, _, px) = decodeLuma(r.getAs[Array[Byte]](1))
-        var s = 0L; var sq = 0L; var mn = 255; var mx = 0
-        var i = 0
-        while (i < px.length) {
-          val v = px(i)
-          s += v; sq += v.toLong * v
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          i += 1
-        }
-        Row(r.get(0), w, h, px.length, s, sq, mn, mx, s * 1000 / px.length)
+      StructField("mean_milli", LongType, nullable = false))) { bytes =>
+      val (w, h, _, px) = decodeLuma(bytes)
+      var s = 0L; var sq = 0L; var mn = 255; var mx = 0
+      var i = 0
+      while (i < px.length) {
+        val v = px(i)
+        s += v; sq += v.toLong * v
+        if (v < mn) mn = v
+        if (v > mx) mx = v
+        i += 1
       }
-    }, outSchema)
-  }
+      Seq(Seq[Any](w, h, px.length, s, sq, mn, mx, s * 1000 / px.length))
+    }
 
   /** Deterministic gray-pattern PNG fixtures, one per input row: pixel
     * (x,y) of row (k = `patternCol`, p = `perturbCol`) is
@@ -1079,31 +973,28 @@ object Media {
     * decoding anything. Output: (idCol, content PNG binary).
     */
   def genPatternPngs(df: DataFrame, idCol: String, patternCol: String,
-                     perturbCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(perturbCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1); val p = r.getInt(2)
-        val px = new Array[Int](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val base = ((k * 31 + x.toLong * x * 3 + y.toLong * y * 5 +
-              x.toLong * y * 7) % 256).toInt
-            val bump = if (p != 0 && (x + y * w) % 29 == 0) 1 else 0
-            px(y * w + x) = (base + bump) % 256
-            x += 1
-          }
-          y += 1
-        }
-        Row(r.get(0), encodeGrayPng(px, w, h))
+                     perturbCol: String, w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(perturbCol).cast("int")) { r =>
+      encodeGrayPng(patternGrid(r.getLong(1), r.getInt(2), w, h), w, h)
+    }
+
+  /** The [[genPatternPngs]] pixel formula for pattern `k`, perturb `p`. */
+  private def patternGrid(k: Long, p: Int, w: Int, h: Int): Array[Int] = {
+    val px = new Array[Int](w * h)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val base = ((k * 31 + x.toLong * x * 3 + y.toLong * y * 5 +
+          x.toLong * y * 7) % 256).toInt
+        val bump = if (p != 0 && (x + y * w) % 29 == 0) 1 else 0
+        px(y * w + x) = (base + bump) % 256
+        x += 1
       }
-    }, outSchema)
+      y += 1
+    }
+    px
   }
 
   /** [[genPatternPngs]] with a per-row EXIF orientation (`orientCol`,
@@ -1117,33 +1008,13 @@ object Media {
     */
   def genPatternPngsOriented(df: DataFrame, idCol: String, patternCol: String,
                              perturbCol: String, orientCol: String,
-                             w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(perturbCol).cast("int"), col(orientCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1); val p = r.getInt(2); val o = r.getInt(3)
-        val px = new Array[Int](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val base = ((k * 31 + x.toLong * x * 3 + y.toLong * y * 5 +
-              x.toLong * y * 7) % 256).toInt
-            val bump = if (p != 0 && (x + y * w) % 29 == 0) 1 else 0
-            px(y * w + x) = (base + bump) % 256
-            x += 1
-          }
-          y += 1
-        }
-        val (stored, sw, sh) = unorientLuma(px, w, h, o)
-        Row(r.get(0), pngWithOrientation(encodeGrayPng(stored, sw, sh), o))
-      }
-    }, outSchema)
-  }
+                             w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(perturbCol).cast("int"), col(orientCol).cast("int")) { r =>
+      val o = r.getInt(3)
+      val (stored, sw, sh) = unorientLuma(patternGrid(r.getLong(1), r.getInt(2), w, h), w, h, o)
+      pngWithOrientation(encodeGrayPng(stored, sw, sh), o)
+    }
 
   // ----------------------------------------------------------------- audio
 
@@ -1217,64 +1088,35 @@ object Media {
     * output adds (sample_rate, channels, bits, n_frames, duration_ms).
     */
   def decodeAudioMeta(df: DataFrame, idCol: String,
-                      contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(in.schema.fields ++ Seq(
-      StructField("sample_rate", IntegerType, nullable = false),
-      StructField("channels", IntegerType, nullable = false),
-      StructField("bits", IntegerType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("duration_ms", LongType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parseWav(r.getAs[Array[Byte]](1))
-        Row(r.get(0), r.get(1), m.sampleRate, m.channels, m.bitsPerSample,
-          m.dataBytes.toLong / m.blockAlign,
-          m.dataBytes.toLong * 1000 / m.byteRate)
-      }
-    }, outSchema)
+                      contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 2, AudioFields)(
+      bytes => Seq(audioFacts(bytes)))
+
+  /** Fact columns of [[decodeAudioMeta]]. */
+  private val AudioFields = Seq(
+    StructField("sample_rate", IntegerType, nullable = false),
+    StructField("channels", IntegerType, nullable = false),
+    StructField("bits", IntegerType, nullable = false),
+    StructField("n_frames", LongType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false))
+
+  private def audioFacts(bytes: Array[Byte]): Seq[Any] = {
+    val m = parseWav(bytes)
+    Seq[Any](m.sampleRate, m.channels, m.bitsPerSample,
+      m.dataBytes.toLong / m.blockAlign, m.dataBytes.toLong * 1000 / m.byteRate)
   }
 
-  /** [[decodeAudioMeta]] for DIRTY corpora — the audio twin of
-    * [[decodeImageMetaLenient]]: malformed payloads (wrong container,
-    * non-PCM format, missing fmt/data chunks) are quarantined in place
-    * with `decode_ok=false`, null facts, and the failure class in
-    * `decode_err`, instead of failing the job. One pass splits a crawl
-    * into the processable stream and a quarantine ledger; good rows carry
-    * facts bit-equal to the strict path.
+  /** [[decodeAudioMeta]] for DIRTY corpora (wrong container, non-PCM
+    * format, missing fmt/data chunks), under the [[graft.core.RowDecode]]
+    * quarantine policy: (decode_ok, decode_err, mime) precede the facts,
+    * and a quarantined row keeps its sniffed `mime`.
     */
   def decodeAudioMetaLenient(df: DataFrame, idCol: String,
-                             contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(in.schema.fields ++ Seq(
-      StructField("decode_ok", BooleanType, nullable = false),
-      StructField("decode_err", StringType, nullable = true),
-      StructField("mime", StringType, nullable = false),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("channels", IntegerType, nullable = true),
-      StructField("bits", IntegerType, nullable = true),
-      StructField("n_frames", LongType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val mime = if (bytes == null) "application/octet-stream" else sniffMime(bytes)
-        try {
-          require(bytes != null, "null payload")
-          val m = parseWav(bytes)
-          Row(r.get(0), r.get(1), true, null, mime, m.sampleRate, m.channels,
-            m.bitsPerSample, m.dataBytes.toLong / m.blockAlign,
-            m.dataBytes.toLong * 1000 / m.byteRate)
-        } catch {
-          case e: Exception =>
-            Row(r.get(0), r.get(1), false, e.getClass.getSimpleName, mime,
-              null, null, null, null, null)
-        }
-      }
-    }, outSchema)
-  }
+                             contentCol: String): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 2,
+      RowDecode.flags("decode") ++ (MimeField +: RowDecode.nullable(AudioFields)),
+      keepOnFailure = { case ("mime", b) => mimeOf(b) })(
+      bytes => Seq(sniffMime(bytes) +: audioFacts(bytes)))
 
   /** Container-aware audio windowing — the honest replacement for byte-
     * stride sampling ([[Multimodal.sampleFrames]], which documents itself
@@ -1291,29 +1133,24 @@ object Media {
   def audioWindows(df: DataFrame, idCol: String, contentCol: String,
                    windowMs: Int): DataFrame = {
     require(windowMs > 0)
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
+    RowDecode.strict(df, idCol, contentCol, keep = 1, Seq(
       StructField("window_idx", IntegerType, nullable = false),
       StructField("start_ms", LongType, nullable = false),
       StructField("n_bytes", IntegerType, nullable = false),
-      StructField("n_frames", IntegerType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val m = parseWav(r.getAs[Array[Byte]](1))
-        val wBytes = math.max(m.blockAlign,
-          m.byteRate.toLong * windowMs / 1000 / m.blockAlign * m.blockAlign).toInt
-        // a zero-length data chunk yields ZERO windows (not one empty one):
-        // windows exist only where samples do, matching the DuckDB oracle's
-        // unnest-join which produces no row for an empty payload
-        val nW = ((m.dataBytes + wBytes - 1L) / wBytes).toInt
-        (0 until nW).iterator.map { i =>
-          val off = i.toLong * wBytes
-          val n = math.min(wBytes.toLong, m.dataBytes - off).toInt
-          Row(r.get(0), i, off * 1000 / m.byteRate, n, n / m.blockAlign)
-        }
+      StructField("n_frames", IntegerType, nullable = false))) { bytes =>
+      val m = parseWav(bytes)
+      val wBytes = math.max(m.blockAlign,
+        m.byteRate.toLong * windowMs / 1000 / m.blockAlign * m.blockAlign).toInt
+      // a zero-length data chunk yields ZERO windows (not one empty one):
+      // windows exist only where samples do, matching the DuckDB oracle's
+      // unnest-join which produces no row for an empty payload
+      val nW = ((m.dataBytes + wBytes - 1L) / wBytes).toInt
+      (0 until nW).iterator.map { i =>
+        val off = i.toLong * wBytes
+        val n = math.min(wBytes.toLong, m.dataBytes - off).toInt
+        Seq[Any](i, off * 1000 / m.byteRate, n, n / m.blockAlign)
       }
-    }, outSchema)
+    }
   }
 
   /** Per-window PCM energy over 16-bit WAV payloads — the real-sample
@@ -1332,43 +1169,37 @@ object Media {
   def audioEnergy(df: DataFrame, idCol: String, contentCol: String,
                   windowMs: Int): DataFrame = {
     require(windowMs > 0)
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
+    RowDecode.strict(df, idCol, contentCol, keep = 1, Seq(
       StructField("window_idx", IntegerType, nullable = false),
       StructField("start_ms", LongType, nullable = false),
       StructField("n_samples", IntegerType, nullable = false),
       StructField("sum_sq", LongType, nullable = false),
-      StructField("peak_abs", IntegerType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val m = parseWav(bytes)
-        require(m.bitsPerSample == 16,
-          s"audioEnergy reads 16-bit PCM, got ${m.bitsPerSample}-bit")
-        val bb = java.nio.ByteBuffer.wrap(bytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val wBytes = math.max(m.blockAlign,
-          m.byteRate.toLong * windowMs / 1000 / m.blockAlign * m.blockAlign).toInt
-        // zero-data payload -> zero windows, same rule (and oracle) as
-        // [[audioWindows]]
-        val nW = ((m.dataBytes + wBytes - 1L) / wBytes).toInt
-        (0 until nW).iterator.map { i =>
-          val off = i.toLong * wBytes
-          val n = math.min(wBytes.toLong, m.dataBytes - off).toInt
-          var sumSq = 0L; var peak = 0
-          var j = 0
-          while (j < n / 2) {
-            val v = bb.getShort(m.dataOff + off.toInt + j * 2).toInt
-            sumSq += v.toLong * v
-            val a = math.abs(v)
-            if (a > peak) peak = a
-            j += 1
-          }
-          Row(r.get(0), i, off * 1000 / m.byteRate, n / 2, sumSq, peak)
+      StructField("peak_abs", IntegerType, nullable = false))) { bytes =>
+      val m = parseWav(bytes)
+      require(m.bitsPerSample == 16,
+        s"audioEnergy reads 16-bit PCM, got ${m.bitsPerSample}-bit")
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val wBytes = math.max(m.blockAlign,
+        m.byteRate.toLong * windowMs / 1000 / m.blockAlign * m.blockAlign).toInt
+      // zero-data payload -> zero windows, same rule (and oracle) as
+      // [[audioWindows]]
+      val nW = ((m.dataBytes + wBytes - 1L) / wBytes).toInt
+      (0 until nW).iterator.map { i =>
+        val off = i.toLong * wBytes
+        val n = math.min(wBytes.toLong, m.dataBytes - off).toInt
+        var sumSq = 0L; var peak = 0
+        var j = 0
+        while (j < n / 2) {
+          val v = bb.getShort(m.dataOff + off.toInt + j * 2).toInt
+          sumSq += v.toLong * v
+          val a = math.abs(v)
+          if (a > peak) peak = a
+          j += 1
         }
+        Seq[Any](i, off * 1000 / m.byteRate, n / 2, sumSq, peak)
       }
-    }, outSchema)
+    }
   }
 
   /** 64-bit acoustic fingerprint from window-energy DELTA SIGNS: bit w
@@ -1388,46 +1219,40 @@ object Media {
   def audioFingerprint(df: DataFrame, idCol: String, contentCol: String,
                        windowMs: Int = 20): DataFrame = {
     require(windowMs > 0)
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
+    RowDecode.strict(df, idCol, contentCol, keep = 1, Seq(
       StructField("n_windows", IntegerType, nullable = false),
-      StructField("afp", LongType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val m = parseWav(bytes)
-        require(m.bitsPerSample == 16,
-          s"audioFingerprint reads 16-bit PCM, got ${m.bitsPerSample}-bit")
-        val bb = java.nio.ByteBuffer.wrap(bytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val wBytes = math.max(m.blockAlign,
-          m.byteRate.toLong * windowMs / 1000 / m.blockAlign * m.blockAlign).toInt
-        val nW = ((m.dataBytes + wBytes - 1L) / wBytes).toInt
-        val e = new Array[Long](nW)
-        var i = 0
-        while (i < nW) {
-          val off = i.toLong * wBytes
-          val n = math.min(wBytes.toLong, m.dataBytes - off).toInt
-          var sumSq = 0L
-          var j = 0
-          while (j < n / 2) {
-            val v = bb.getShort(m.dataOff + off.toInt + j * 2).toInt
-            sumSq += v.toLong * v
-            j += 1
-          }
-          e(i) = sumSq
-          i += 1
+      StructField("afp", LongType, nullable = false))) { bytes =>
+      val m = parseWav(bytes)
+      require(m.bitsPerSample == 16,
+        s"audioFingerprint reads 16-bit PCM, got ${m.bitsPerSample}-bit")
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val wBytes = math.max(m.blockAlign,
+        m.byteRate.toLong * windowMs / 1000 / m.blockAlign * m.blockAlign).toInt
+      val nW = ((m.dataBytes + wBytes - 1L) / wBytes).toInt
+      val e = new Array[Long](nW)
+      var i = 0
+      while (i < nW) {
+        val off = i.toLong * wBytes
+        val n = math.min(wBytes.toLong, m.dataBytes - off).toInt
+        var sumSq = 0L
+        var j = 0
+        while (j < n / 2) {
+          val v = bb.getShort(m.dataOff + off.toInt + j * 2).toInt
+          sumSq += v.toLong * v
+          j += 1
         }
-        var fp = 0L
-        var w = 0
-        while (w < 64 && w + 1 < nW) {
-          if (e(w + 1) > e(w)) fp |= 1L << w
-          w += 1
-        }
-        Row(r.get(0), nW, fp)
+        e(i) = sumSq
+        i += 1
       }
-    }, outSchema)
+      var fp = 0L
+      var w = 0
+      while (w < 64 && w + 1 < nW) {
+        if (e(w + 1) > e(w)) fp |= 1L << w
+        w += 1
+      }
+      Seq(Seq[Any](nW, fp))
+    }
   }
 
   /** Deterministic constant-amplitude-per-window WAV fixtures for the
@@ -1445,30 +1270,13 @@ object Media {
     * 127 and start at 1 > 0, so the flip is total).
     */
   def genToneWavs(df: DataFrame, idCol: String, patternCol: String,
-                  perturbCol: String, windowsCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(perturbCol).cast("int"), col(windowsCol).cast("int"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1); val p = r.getInt(2); val nw = r.getInt(3)
-        def amp(w: Int): Int = ((k * 31 + w.toLong * w * 7 + w * 3) % 120).toInt + 1
-        val a0 = if (p != 0) { if (amp(1) > amp(0)) 127 else 0 } else amp(0)
-        val samples = new Array[Short](nw * 160)
-        var w = 0
-        while (w < nw) {
-          val a = (if (w == 0) a0 else amp(w)).toShort
-          var j = 0
-          while (j < 160) { samples(w * 160 + j) = a; j += 1 }
-          w += 1
-        }
-        Row(r.get(0), encodeWav(8000, 1, samples))
-      }
-    }, outSchema)
-  }
+                  perturbCol: String, windowsCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(perturbCol).cast("int"), col(windowsCol).cast("int")) { r =>
+      val k = r.getLong(1)
+      toneWav(r.getInt(2), r.getInt(3), w =>
+        ((k * 31 + w.toLong * w * 7 + w * 3) % 120).toInt + 1)
+    }
 
   // The streaming media-dedup signature indexes
   // ([[graft.streaming.Streams.ingestImageDedup]] / ingestVideoDedup /
@@ -1606,83 +1414,57 @@ object Media {
     * to quarantine whole files first.
     */
   def videoFrames(df: DataFrame, idCol: String, contentCol: String,
-                  maxFrames: Int = Int.MaxValue): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("dhash", LongType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.get(0)
-        val payloads = framePayloads(r.getAs[Array[Byte]](1))
-        // one video's frames decode inside ONE task (the per-video memory
-        // bound): maxFrames is the guard rail for corpora where hour-long
-        // videos can appear — over-cap videos FAIL (or quarantine, in the
-        // lenient twin) rather than silently emitting a frame prefix,
-        // which would admit a truncated signature set into the dedup tier
-        require(payloads.length <= maxFrames,
-          s"video has ${payloads.length} frames > maxFrames=$maxFrames")
-        payloads.iterator.zipWithIndex.map {
-          case (payload, i) =>
-            val (w, h, _, px) = decodeLuma(payload)
-            Row(id, i, w, h, dHash64(px, w, h))
-        }
-      }
-    }, outSchema)
+                  maxFrames: Int = Int.MaxValue): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, FrameFields)(
+      bytes => frameFacts(allFrames(bytes, maxFrames)))
+
+  /** Fact columns of the frame decoders: one row per decoded frame. */
+  private val FrameFields = Seq(
+    StructField("frame_idx", IntegerType, nullable = false),
+    StructField("width", IntegerType, nullable = false),
+    StructField("height", IntegerType, nullable = false),
+    StructField("dhash", LongType, nullable = false))
+
+  /** [[FrameFields]] facts of one frame payload at sample index `i`. */
+  private def frameFact(i: Int, payload: Array[Byte]): Seq[Any] = {
+    val (w, h, _, px) = decodeLuma(payload)
+    Seq[Any](i, w, h, dHash64(px, w, h))
+  }
+
+  private def frameFacts(frames: Seq[(Int, Array[Byte])]): Iterator[Seq[Any]] =
+    frames.iterator.map { case (i, payload) => frameFact(i, payload) }
+
+  /** Every frame payload of a video, indexed. One video's frames decode
+    * inside ONE task (the per-video memory bound): `maxFrames` is the
+    * guard rail for corpora where hour-long videos can appear — over-cap
+    * videos FAIL (or quarantine, in a lenient twin) rather than silently
+    * emitting a frame prefix, which would admit a truncated signature set
+    * into the dedup tier.
+    */
+  private def allFrames(bytes: Array[Byte], maxFrames: Int): Seq[(Int, Array[Byte])] = {
+    val payloads = framePayloads(bytes)
+    require(payloads.length <= maxFrames,
+      s"video has ${payloads.length} frames > maxFrames=$maxFrames")
+    payloads.zipWithIndex.map(_.swap)
   }
 
   /** [[videoFrames]] for DIRTY corpora — the frame-level twin of
     * [[decodeVideoMetaLenient]], which validates only the CONTAINER
     * header: a valid-container AVI can still carry an undecodable frame
-    * payload (truncated JPEG, codec ImageIO lacks), and in a continuous
-    * ingest that single frame must quarantine the VIDEO, not fail the
-    * micro-batch — a failed batch replays on restart and the stream is
-    * permanently wedged. Per video: the whole frame walk + decode runs
-    * under one try; success emits the [[videoFrames]] rows with
-    * `frame_ok=true`, any failure emits ONE row for the video with
-    * `frame_ok=false` and the failure class in `frame_err` (null frame
-    * facts). A zero-frame valid container emits nothing, same as the
-    * strict path. Good rows carry facts bit-equal to [[videoFrames]].
+    * payload (truncated JPEG, codec ImageIO lacks) or exceed `maxFrames`,
+    * and that video must quarantine as ONE `frame_ok=false` row under the
+    * [[graft.core.RowDecode]] quarantine policy (a video is healthy only
+    * as a whole). A zero-frame valid container emits nothing, same as the
+    * strict path.
     */
   def videoFramesLenient(df: DataFrame, idCol: String, contentCol: String,
-                         maxFrames: Int = Int.MaxValue): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("frame_ok", BooleanType, nullable = false),
-      StructField("frame_err", StringType, nullable = true),
-      StructField("frame_idx", IntegerType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("dhash", LongType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.get(0)
-        try {
-          // decode EVERY frame before emitting any: a video is healthy
-          // only as a whole (emitting a prefix of its frames would admit
-          // a truncated signature set into the dedup tier); an over-cap
-          // video (see videoFrames' maxFrames rationale) quarantines as
-          // one row, same as any other per-video failure
-          val payloads = framePayloads(r.getAs[Array[Byte]](1))
-          require(payloads.length <= maxFrames,
-            s"video has ${payloads.length} frames > maxFrames=$maxFrames")
-          payloads.iterator.zipWithIndex.map {
-            case (payload, i) =>
-              val (w, h, _, px) = decodeLuma(payload)
-              Row(id, true, null, i, w, h, dHash64(px, w, h))
-          }.toVector
-        } catch {
-          case e: Exception =>
-            Seq(Row(id, false, e.getClass.getSimpleName,
-              null, null, null, null))
-        }
-      }
-    }, outSchema)
-  }
+                         maxFrames: Int = Int.MaxValue): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 1, FrameLenientFields)(
+      bytes => frameFacts(allFrames(bytes, maxFrames)))
+
+  /** Output columns of the lenient frame decoders after the id. */
+  private val FrameLenientFields =
+    RowDecode.flags("frame") ++ RowDecode.nullable(FrameFields)
 
   /** Video-level near-duplicate pairs from a frame table ([[videoFrames]]
     * output): two videos are near-dups when they share at least
@@ -1826,21 +1608,14 @@ object Media {
     */
   def genSceneAvis(df: DataFrame, idCol: String, patternCol: String,
                    framesCol: String, sceneLenCol: String,
-                   w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(framesCol).cast("int"), col(sceneLenCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1); val n = r.getInt(2); val len = r.getInt(3)
-        require(len > 0, "scene length must be positive")
-        Row(r.get(0), patternAviBytes(n, w, h,
-          kfOf = f => k * 16 + f / len, flipFirstGradient = false))
-      }
-    }, outSchema)
-  }
+                   w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(framesCol).cast("int"), col(sceneLenCol).cast("int")) { r =>
+      val k = r.getLong(1); val len = r.getInt(3)
+      require(len > 0, "scene length must be positive")
+      patternAviBytes(r.getInt(2), w, h,
+        kfOf = f => k * 16 + f / len, flipFirstGradient = false)
+    }
 
   /** One pattern-grid AVI payload: frame f's pixels from the shared
     * formula at `kfOf(f)`; `flipFirstGradient` applies the guaranteed
@@ -1861,17 +1636,7 @@ object Media {
     */
   private def patternFramePng(kf: Long, w: Int, h: Int,
                               flipFirstGradient: Boolean): Array[Byte] = {
-    val px = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        px(y * w + x) = ((kf * 31 + x.toLong * x * 3 + y.toLong * y * 5 +
-          x.toLong * y * 7) % 256).toInt
-        x += 1
-      }
-      y += 1
-    }
+    val px = patternGrid(kf, 0, w, h)
     if (flipFirstGradient) px(0) = if (px(1) > px(0)) 255 else 0
     encodeGrayPng(px, w, h)
   }
@@ -1886,6 +1651,13 @@ object Media {
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
   }
+
+  /** Noise frame `f` of seed `seed` as a gray PNG: pixel i is the low byte
+    * of [[mix64]] over (seed, f, i).
+    */
+  private def noiseFramePng(seed: Long, f: Long, w: Int, h: Int): Array[Byte] =
+    encodeGrayPng(Array.tabulate(w * h)(i =>
+      (mix64(seed * 0x100000001B3L + f * 0x9E3779B97F4A7C15L + i) & 0xff).toInt), w, h)
 
   /** Wrap already-encoded PNG frame payloads as a canonical AVI (one
     * `00dc` movi sub-chunk per frame, word-aligned) — the container
@@ -1917,29 +1689,15 @@ object Media {
     */
   def genNoiseVideos(df: DataFrame, idCol: String, seedCol: String,
                      framesCol: String, mp4Col: String,
-                     w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(seedCol).cast("long"),
-      col(framesCol).cast("int"), col(mp4Col).cast("boolean"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val seed = r.getLong(1)
-        val n = r.getInt(2)
-        val frames = (0 until n).map { f =>
-          val px = Array.tabulate(w * h)(i =>
-            (mix64(seed * 0x100000001B3L + f * 0x9E3779B97F4A7C15L + i)
-              & 0xff).toInt)
-          encodeGrayPng(px, w, h)
-        }
-        Row(r.get(0),
-          if (r.getBoolean(3)) encodeMp4("isom", 30000L, 1001L * n,
-            Seq((w, h)), frames, 1001L)
-          else framesToAvi(frames, usPerFrame = 33333, w, h))
-      }
-    }, outSchema)
-  }
+                     w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(seedCol).cast("long"),
+      col(framesCol).cast("int"), col(mp4Col).cast("boolean")) { r =>
+      val n = r.getInt(2)
+      val frames = (0 until n).map(f => noiseFramePng(r.getLong(1), f, w, h))
+      if (r.getBoolean(3)) encodeMp4("isom", 30000L, 1001L * n,
+        Seq((w, h)), frames, 1001L)
+      else framesToAvi(frames, usPerFrame = 33333, w, h)
+    }
 
   /** LONG keyframed MP4s carrying [[genNoiseVideos]] content in their
     * SYNC samples — the keyframe-admission soak plant: `scenesCol` scenes
@@ -1954,34 +1712,21 @@ object Media {
     */
   def genNoiseKeyframedMp4s(df: DataFrame, idCol: String, seedCol: String,
                             scenesCol: String, stepCol: String,
-                            w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(seedCol).cast("long"),
-      col(scenesCol).cast("int"), col(stepCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val seed = r.getLong(1)
-        val scenes = r.getInt(2)
-        val step = r.getInt(3)
-        val n = scenes * step
-        def noiseFrame(f: Long): Array[Byte] = {
-          val px = Array.tabulate(w * h)(i =>
-            (mix64(seed * 0x100000001B3L + f * 0x9E3779B97F4A7C15L + i)
-              & 0xff).toInt)
-          encodeGrayPng(px, w, h)
-        }
-        val frames = (0 until n).map { f =>
-          if (f % step == 0) noiseFrame(f / step) // scene start = stored frame
-          else noiseFrame(f + 1000000L) // filler: unique, never stored
-        }
-        Row(r.get(0), encodeMp4Tracks("isom", 30000L, 1001L * n, Seq(
-          Mp4Track("vide", w, h, frames, Seq((n, 1001L)),
-            syncSamples = (0 until scenes).map(_ * step + 1)))))
+                            w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(seedCol).cast("long"),
+      col(scenesCol).cast("int"), col(stepCol).cast("int")) { r =>
+      val seed = r.getLong(1)
+      val scenes = r.getInt(2)
+      val step = r.getInt(3)
+      val n = scenes * step
+      val frames = (0 until n).map { f =>
+        if (f % step == 0) noiseFramePng(seed, f / step, w, h) // scene start = stored frame
+        else noiseFramePng(seed, f + 1000000L, w, h) // filler: unique, never stored
       }
-    }, outSchema)
-  }
+      encodeMp4Tracks("isom", 30000L, 1001L * n, Seq(
+        Mp4Track("vide", w, h, frames, Seq((n, 1001L)),
+          syncSamples = (0 until scenes).map(_ * step + 1))))
+    }
 
   /** [[genNoiseVideos]]' frames in a FRAGMENTED MP4 (2-sample moof
     * fragments) — the soak-side fMP4 twin: a DASH re-packaging of stored
@@ -1989,27 +1734,12 @@ object Media {
     * hashes byte-identical to the plain-container noise fixtures.
     */
   def genNoiseFmp4s(df: DataFrame, idCol: String, seedCol: String,
-                    framesCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(seedCol).cast("long"),
-      col(framesCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val seed = r.getLong(1)
-        val n = r.getInt(2)
-        val frames = (0 until n).map { f =>
-          val px = Array.tabulate(w * h)(i =>
-            (mix64(seed * 0x100000001B3L + f * 0x9E3779B97F4A7C15L + i)
-              & 0xff).toInt)
-          encodeGrayPng(px, w, h)
-        }
-        Row(r.get(0), encodeFmp4("isom", 30000L, 1001L, w, h,
-          frames.grouped(2).toSeq))
-      }
-    }, outSchema)
-  }
+                    framesCol: String, w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(seedCol).cast("long"),
+      col(framesCol).cast("int")) { r =>
+      val frames = (0 until r.getInt(2)).map(f => noiseFramePng(r.getLong(1), f, w, h))
+      encodeFmp4("isom", 30000L, 1001L, w, h, frames.grouped(2).toSeq)
+    }
 
   /** [[genNoiseVideos]]' MP4 form with the AUDIO track declared FIRST
     * (junk `soun` samples + its own sample table, then the `vide` trak
@@ -2019,30 +1749,18 @@ object Media {
     * quarantine on garbage frames a positional reader would pick.
     */
   def genNoiseVideosAvOrder(df: DataFrame, idCol: String, seedCol: String,
-                            framesCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(seedCol).cast("long"),
-      col(framesCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val seed = r.getLong(1)
-        val n = r.getInt(2)
-        val frames = (0 until n).map { f =>
-          val px = Array.tabulate(w * h)(i =>
-            (mix64(seed * 0x100000001B3L + f * 0x9E3779B97F4A7C15L + i)
-              & 0xff).toInt)
-          encodeGrayPng(px, w, h)
-        }
-        val audio = (0 until n * 4).map(i => Array[Byte](
-          (mix64(seed + i) & 0xff).toByte, (mix64(seed - i) & 0xff).toByte))
-        Row(r.get(0), encodeMp4Tracks("isom", 30000L, 1001L * n, Seq(
-          Mp4Track("soun", 0, 0, audio, Seq((audio.length, 250L))),
-          Mp4Track("vide", w, h, frames, Seq((n, 1001L))))))
-      }
-    }, outSchema)
-  }
+                            framesCol: String, w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(seedCol).cast("long"),
+      col(framesCol).cast("int")) { r =>
+      val seed = r.getLong(1)
+      val n = r.getInt(2)
+      val frames = (0 until n).map(f => noiseFramePng(seed, f, w, h))
+      val audio = (0 until n * 4).map(i => Array[Byte](
+        (mix64(seed + i) & 0xff).toByte, (mix64(seed - i) & 0xff).toByte))
+      encodeMp4Tracks("isom", 30000L, 1001L * n, Seq(
+        Mp4Track("soun", 0, 0, audio, Seq((audio.length, 250L))),
+        Mp4Track("vide", w, h, frames, Seq((n, 1001L)))))
+    }
 
   /** NOISE-window WAV fixtures for scale soaks — [[genToneWavs]] with
     * [[mix64]] amplitudes (1..120) instead of the oracle-replayable tone
@@ -2052,31 +1770,30 @@ object Media {
     * 127/0 against window 1's amplitude → fingerprint flips bit 0 only).
     */
   def genNoiseWavs(df: DataFrame, idCol: String, seedCol: String,
-                   perturbCol: String, windowsCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(seedCol).cast("long"),
-      col(perturbCol).cast("int"), col(windowsCol).cast("int"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val seed = r.getLong(1); val p = r.getInt(2); val nw = r.getInt(3)
-        def amp(w: Int): Int =
-          (java.lang.Math.floorMod(
-            mix64(seed * 0x100000001B3L + w), 120L) + 1L).toInt
-        val a0 = if (p != 0) { if (amp(1) > amp(0)) 127 else 0 } else amp(0)
-        val samples = new Array[Short](nw * 160)
-        var w = 0
-        while (w < nw) {
-          val a = (if (w == 0) a0 else amp(w)).toShort
-          var j = 0
-          while (j < 160) { samples(w * 160 + j) = a; j += 1 }
-          w += 1
-        }
-        Row(r.get(0), encodeWav(8000, 1, samples))
-      }
-    }, outSchema)
+                   perturbCol: String, windowsCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(seedCol).cast("long"),
+      col(perturbCol).cast("int"), col(windowsCol).cast("int")) { r =>
+      val seed = r.getLong(1)
+      toneWav(r.getInt(2), r.getInt(3), w =>
+        (java.lang.Math.floorMod(mix64(seed * 0x100000001B3L + w), 120L) + 1L).toInt)
+    }
+
+  /** An 8 kHz mono clip of `nw` 20 ms windows, window w at the constant
+    * amplitude `amp(w)` — except window 0 under `p ≠ 0`, forced to 127
+    * when the first delta is positive, else 0 (the modeled re-encode of
+    * [[genToneWavs]]).
+    */
+  private def toneWav(p: Int, nw: Int, amp: Int => Int): Array[Byte] = {
+    val a0 = if (p != 0) { if (amp(1) > amp(0)) 127 else 0 } else amp(0)
+    val samples = new Array[Short](nw * 160)
+    var w = 0
+    while (w < nw) {
+      val a = (if (w == 0) a0 else amp(w)).toShort
+      var j = 0
+      while (j < 160) { samples(w * 160 + j) = a; j += 1 }
+      w += 1
+    }
+    encodeWav(8000, 1, samples)
   }
 
   /** Deterministic multi-frame AVI fixtures: frame f of row (k =
@@ -2109,20 +1826,13 @@ object Media {
     */
   def genPatternAvisPerturbed(df: DataFrame, idCol: String,
                               patternCol: String, perturbCol: String,
-                              framesCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(perturbCol).cast("int"), col(framesCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1); val p = r.getInt(2); val n = r.getInt(3)
-        Row(r.get(0), patternAviBytes(n, w, h,
-          kfOf = f => k * 8 + f, flipFirstGradient = p != 0))
-      }
-    }, outSchema)
-  }
+                              framesCol: String, w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(perturbCol).cast("int"), col(framesCol).cast("int")) { r =>
+      val k = r.getLong(1)
+      patternAviBytes(r.getInt(3), w, h,
+        kfOf = f => k * 8 + f, flipFirstGradient = r.getInt(2) != 0)
+    }
 
   /** Encode a minimal canonical AVI container: `RIFF(AVI  LIST(hdrl
     * avih(...)) LIST(movi <payload>))` — the fixture generator and the
@@ -2160,80 +1870,48 @@ object Media {
     * (width, height, n_frames, n_streams, fps_x1000, duration_ms).
     */
   def decodeVideoMeta(df: DataFrame, idCol: String,
-                      contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(in.schema.fields ++ Seq(
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("n_frames", IntegerType, nullable = false),
-      StructField("n_streams", IntegerType, nullable = false),
-      StructField("fps_x1000", LongType, nullable = false),
-      StructField("duration_ms", LongType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parseAvi(r.getAs[Array[Byte]](1))
-        Row(r.get(0), r.get(1), m.width, m.height, m.totalFrames, m.streams,
-          // frames per 1000 s = 1e9 / usPerFrame — integer, no FP
-          1000000000L / m.usPerFrame,
-          m.usPerFrame.toLong * m.totalFrames / 1000)
-      }
-    }, outSchema)
-  }
+                      contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 2, VideoFields)(
+      bytes => Seq(aviFacts(parseAvi(bytes))))
 
-  /** [[decodeVideoMeta]] for DIRTY corpora — the video twin of
-    * [[decodeImageMetaLenient]]: malformed payloads (wrong container,
-    * missing `avih`/`mvhd`) quarantine in place with `decode_ok=false` and
-    * the failure class in `decode_err`; good rows carry facts bit-equal to
-    * the strict paths. Sniff-dispatched per container: AVI through
-    * [[parseAvi]], MP4 through [[parseMp4]] (n_streams = track count,
-    * n_frames/fps from the sample table when present, duration from
-    * `mvhd` — the same integer-floor math as [[decodeMp4Meta]]).
+  /** Fact columns of [[decodeVideoMeta]]. */
+  private val VideoFields = Seq(
+    StructField("width", IntegerType, nullable = false),
+    StructField("height", IntegerType, nullable = false),
+    StructField("n_frames", IntegerType, nullable = false),
+    StructField("n_streams", IntegerType, nullable = false),
+    StructField("fps_x1000", LongType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false))
+
+  private def aviFacts(m: AviMeta): Seq[Any] =
+    Seq[Any](m.width, m.height, m.totalFrames, m.streams,
+      // frames per 1000 s = 1e9 / usPerFrame — integer, no FP
+      1000000000L / m.usPerFrame,
+      m.usPerFrame.toLong * m.totalFrames / 1000)
+
+  /** [[decodeVideoMeta]] for DIRTY corpora (wrong container, missing
+    * `avih`/`mvhd`), under the [[graft.core.RowDecode]] quarantine policy:
+    * (decode_ok, decode_err, mime) precede the facts, and a quarantined
+    * row keeps its sniffed `mime`. Sniff-dispatched per container: AVI
+    * through [[parseAvi]], MP4 through [[parseMp4]] (n_streams = track
+    * count, n_frames/fps from the sample table when present, duration
+    * from `mvhd` — the same integer-floor math as [[decodeMp4Meta]]).
     */
   def decodeVideoMetaLenient(df: DataFrame, idCol: String,
-                             contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(in.schema.fields ++ Seq(
-      StructField("decode_ok", BooleanType, nullable = false),
-      StructField("decode_err", StringType, nullable = true),
-      StructField("mime", StringType, nullable = false),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("n_frames", IntegerType, nullable = true),
-      StructField("n_streams", IntegerType, nullable = true),
-      StructField("fps_x1000", LongType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val mime = if (bytes == null) "application/octet-stream" else sniffMime(bytes)
-        try {
-          require(bytes != null, "null payload")
-          mime match {
-            case "video/avi" =>
-              val m = parseAvi(bytes)
-              Row(r.get(0), r.get(1), true, null, mime, m.width, m.height,
-                m.totalFrames, m.streams, 1000000000L / m.usPerFrame,
-                m.usPerFrame.toLong * m.totalFrames / 1000)
-            case "video/mp4" =>
-              val m = parseMp4(bytes)
-              Row(r.get(0), r.get(1), true, null, mime, m.width, m.height,
-                if (m.nSamples > 0) m.nSamples else null, m.nTracks,
-                m.fpsX1000.map(Long.box).orNull,
-                m.duration * 1000L / m.timescale)
-            case other =>
-              throw new IllegalArgumentException(
-                s"unsupported video container: $other")
-          }
-        } catch {
-          case e: Exception =>
-            Row(r.get(0), r.get(1), false, e.getClass.getSimpleName, mime,
-              null, null, null, null, null, null)
-        }
-      }
-    }, outSchema)
-  }
+                             contentCol: String): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 2,
+      RowDecode.flags("decode") ++ (MimeField +: RowDecode.nullable(VideoFields)),
+      keepOnFailure = { case ("mime", b) => mimeOf(b) }) { bytes =>
+      val mime = sniffMime(bytes)
+      Seq(mime +: (mime match {
+        case "video/avi" => aviFacts(parseAvi(bytes))
+        case "video/mp4" =>
+          val m = parseMp4(bytes)
+          Seq[Any](m.width, m.height, m.nFrames, m.nTracks, m.fpsOrNull, m.durationMs)
+        case other =>
+          throw new IllegalArgumentException(s"unsupported video container: $other")
+      }))
+    }
 
   /** Deterministic AVI fixtures, one per input row, from id-derived
     * header parameters. The `movi` payload is a tiny deterministic byte
@@ -2241,23 +1919,14 @@ object Media {
     */
   def genAvis(df: DataFrame, idCol: String, usPerFrameCol: String,
               framesCol: String, widthCol: String,
-              heightCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(usPerFrameCol).cast("int"),
-      col(framesCol).cast("int"), col(widthCol).cast("int"),
-      col(heightCol).cast("int"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val movi = Array.tabulate[Byte](16)(i => ((id * 31 + i * 7) % 256).toByte)
-        Row(id, encodeAvi(r.getInt(1), r.getInt(2), streams = 1,
-          r.getInt(3), r.getInt(4), movi))
-      }
-    }, outSchema)
-  }
+              heightCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"),
+      col(usPerFrameCol).cast("int"), col(framesCol).cast("int"),
+      col(widthCol).cast("int"), col(heightCol).cast("int")) { r =>
+      val id = r.getLong(0)
+      val movi = Array.tabulate[Byte](16)(i => ((id * 31 + i * 7) % 256).toByte)
+      encodeAvi(r.getInt(1), r.getInt(2), streams = 1, r.getInt(3), r.getInt(4), movi)
+    }
 
   // ------------------------------------------------------------- ISO-BMFF
 
@@ -2297,6 +1966,15 @@ object Media {
       if (sttsCount > 0 && sttsDur > 0)
         Some(sttsCount * timescale * 1000L / sttsDur)
       else None
+
+    /** [[fpsX1000]] as a column value: null without a sample table. */
+    def fpsOrNull: java.lang.Long = fpsX1000.map(Long.box).orNull
+
+    /** The video track's sample count, null without a sample table. */
+    def nFrames: Any = if (nSamples > 0) nSamples else null
+
+    /** `mvhd` duration in integer-floor milliseconds. */
+    def durationMs: Long = duration * 1000L / timescale
   }
 
   /** Iterate the boxes of `bytes[from, until)`, calling
@@ -3297,10 +2975,8 @@ object Media {
     * presentation-order-sensitive pipeline routes such files on this flag.
     */
   def decodeMp4Meta(df: DataFrame, idCol: String,
-                    contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
+                    contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, Seq(
       StructField("major_brand", StringType, nullable = false),
       StructField("timescale", LongType, nullable = false),
       StructField("duration_ms", LongType, nullable = false),
@@ -3310,17 +2986,24 @@ object Media {
       StructField("n_frames", IntegerType, nullable = true),
       StructField("fps_x1000", LongType, nullable = true),
       StructField("has_edit_list", BooleanType, nullable = false),
-      StructField("has_comp_offsets", BooleanType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parseMp4(r.getAs[Array[Byte]](1))
-        Row(r.get(0), m.majorBrand, m.timescale,
-          m.duration * 1000L / m.timescale, m.nTracks, m.width, m.height,
-          if (m.nSamples > 0) m.nSamples else null,
-          m.fpsX1000.map(Long.box).orNull, m.hasEditList, m.hasCompOffsets)
-      }
-    }, outSchema)
-  }
+      StructField("has_comp_offsets", BooleanType, nullable = false))) { bytes =>
+      val m = parseMp4(bytes)
+      Seq(Seq[Any](m.majorBrand, m.timescale, m.durationMs, m.nTracks, m.width,
+        m.height, m.nFrames, m.fpsOrNull, m.hasEditList, m.hasCompOffsets))
+    }
+
+  /** `n` tiny 2-byte samples derived from `id` — the sample payloads of
+    * the MP4 metadata fixtures (no decoder reads them).
+    */
+  private def tinySamples(id: Long, n: Int): Seq[Array[Byte]] =
+    (0 until n).map(i => Array[Byte](
+      ((id * 31 + i) % 256).toByte, ((id * 7 + i * 3) % 256).toByte))
+
+  /** Frames 0 until n of pattern row k: the [[patternFramePng]] grid with
+    * pattern k·8+f — the frame payloads of the pattern video fixtures.
+    */
+  private def patternFrames(k: Long, n: Int, w: Int, h: Int): Seq[Array[Byte]] =
+    (0 until n).map(f => patternFramePng(k * 8 + f, w, h, flipFirstGradient = false))
 
   /** Deterministic MP4 metadata fixtures, one per input row:
     * `encodeMp4("isom", ts, frames·delta, video + optional audio track,
@@ -3331,33 +3014,23 @@ object Media {
     */
   def genMp4s(df: DataFrame, idCol: String, tsCol: String, deltaCol: String,
               framesCol: String, widthCol: String, heightCol: String,
-              audioCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(tsCol).cast("long"),
+              audioCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(tsCol).cast("long"),
       col(deltaCol).cast("long"), col(framesCol).cast("int"),
       col(widthCol).cast("int"), col(heightCol).cast("int"),
-      col(audioCol).cast("boolean"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = r.getInt(3)
-        val samples = (0 until n).map(i => Array[Byte](
-          ((id * 31 + i) % 256).toByte, ((id * 7 + i * 3) % 256).toByte))
-        val tracks =
-          if (r.getBoolean(6)) Seq((r.getInt(4), r.getInt(5)), (0, 0))
-          else Seq((r.getInt(4), r.getInt(5)))
-        // every fixture carries a udta metadata atom — the PII channel
-        // the scrub oracle (mm_mp4_scrub) must provably neutralize;
-        // parseMp4 never reads it, so the meta oracles are unaffected
-        Row(id, encodeMp4("isom", r.getLong(1), r.getLong(2) * n,
-          tracks, samples, r.getLong(2),
-          udta = s"GRAFT-PII artist=$id gps=+0.0+0.0/".getBytes("US-ASCII")))
-      }
-    }, outSchema)
-  }
+      col(audioCol).cast("boolean")) { r =>
+      val id = r.getLong(0)
+      val n = r.getInt(3)
+      val tracks =
+        if (r.getBoolean(6)) Seq((r.getInt(4), r.getInt(5)), (0, 0))
+        else Seq((r.getInt(4), r.getInt(5)))
+      // every fixture carries a udta metadata atom — the PII channel
+      // the scrub oracle (mm_mp4_scrub) must provably neutralize;
+      // parseMp4 never reads it, so the meta oracles are unaffected
+      encodeMp4("isom", r.getLong(1), r.getLong(2) * n,
+        tracks, tinySamples(id, n), r.getLong(2),
+        udta = s"GRAFT-PII artist=$id gps=+0.0+0.0/".getBytes("US-ASCII"))
+    }
 
   /** [[genMp4s]] with an optional `edts/elst` EDIT LIST on the video
     * track (single-track form): rows with `elstCol` true plant a
@@ -3369,31 +3042,19 @@ object Media {
     */
   def genElstMp4s(df: DataFrame, idCol: String, tsCol: String,
                   deltaCol: String, framesCol: String, widthCol: String,
-                  heightCol: String, elstCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(tsCol).cast("long"),
+                  heightCol: String, elstCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(tsCol).cast("long"),
       col(deltaCol).cast("long"), col(framesCol).cast("int"),
       col(widthCol).cast("int"), col(heightCol).cast("int"),
-      col(elstCol).cast("boolean"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val ts = r.getLong(1)
-        val d = r.getLong(2)
-        val n = r.getInt(3)
-        val samples = (0 until n).map(i => Array[Byte](
-          ((id * 31 + i) % 256).toByte, ((id * 7 + i * 3) % 256).toByte))
-        val elst =
-          if (r.getBoolean(6)) Seq(((n - 1) * d, d)) else Nil
-        Row(id, encodeMp4Tracks("isom", ts, d * n, Seq(
-          Mp4Track("vide", r.getInt(4), r.getInt(5), samples,
-            Seq((n, d)), editList = elst))))
-      }
-    }, outSchema)
-  }
+      col(elstCol).cast("boolean")) { r =>
+      val d = r.getLong(2)
+      val n = r.getInt(3)
+      val elst =
+        if (r.getBoolean(6)) Seq(((n - 1) * d, d)) else Nil
+      encodeMp4Tracks("isom", r.getLong(1), d * n, Seq(
+        Mp4Track("vide", r.getInt(4), r.getInt(5), tinySamples(r.getLong(0), n),
+          Seq((n, d)), editList = elst)))
+    }
 
   /** [[genElstMp4s]]' `ctts` sibling: rows with `cttsCol` true plant a
     * composition-offset table (one v0 run: every sample offset by one
@@ -3403,30 +3064,18 @@ object Media {
     */
   def genCttsMp4s(df: DataFrame, idCol: String, tsCol: String,
                   deltaCol: String, framesCol: String, widthCol: String,
-                  heightCol: String, cttsCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(tsCol).cast("long"),
+                  heightCol: String, cttsCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(tsCol).cast("long"),
       col(deltaCol).cast("long"), col(framesCol).cast("int"),
       col(widthCol).cast("int"), col(heightCol).cast("int"),
-      col(cttsCol).cast("boolean"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val ts = r.getLong(1)
-        val d = r.getLong(2)
-        val n = r.getInt(3)
-        val samples = (0 until n).map(i => Array[Byte](
-          ((id * 31 + i) % 256).toByte, ((id * 7 + i * 3) % 256).toByte))
-        val ctts = if (r.getBoolean(6)) Seq((n, d.toInt)) else Nil
-        Row(id, encodeMp4Tracks("isom", ts, d * n, Seq(
-          Mp4Track("vide", r.getInt(4), r.getInt(5), samples,
-            Seq((n, d)), cttsRuns = ctts))))
-      }
-    }, outSchema)
-  }
+      col(cttsCol).cast("boolean")) { r =>
+      val d = r.getLong(2)
+      val n = r.getInt(3)
+      val ctts = if (r.getBoolean(6)) Seq((n, d.toInt)) else Nil
+      encodeMp4Tracks("isom", r.getLong(1), d * n, Seq(
+        Mp4Track("vide", r.getInt(4), r.getInt(5), tinySamples(r.getLong(0), n),
+          Seq((n, d)), cttsRuns = ctts)))
+    }
 
   /** [[genPatternAvis]] in an MP4 container: frame f of row (k =
     * `patternCol`) is the same [[patternFramePng]] grid with pattern
@@ -3436,23 +3085,13 @@ object Media {
     * (idCol, content MP4 binary).
     */
   def genPatternMp4s(df: DataFrame, idCol: String, patternCol: String,
-                     framesCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(framesCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1)
-        val n = r.getInt(2)
-        val samples = (0 until n).map(f =>
-          patternFramePng(k * 8 + f, w, h, flipFirstGradient = false))
-        Row(r.get(0), encodeMp4("isom", 30000L, 1001L * n,
-          Seq((w, h)), samples, 1001L))
-      }
-    }, outSchema)
-  }
+                     framesCol: String, w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(framesCol).cast("int")) { r =>
+      val n = r.getInt(2)
+      encodeMp4("isom", 30000L, 1001L * n, Seq((w, h)),
+        patternFrames(r.getLong(1), n, w, h), 1001L)
+    }
 
   /** [[genPatternMp4s]] with the AUDIO track declared FIRST — the
     * real-crawl track order that breaks positional track selection: both
@@ -3464,26 +3103,17 @@ object Media {
     * byte-identical to [[genPatternMp4s]]'s.
     */
   def genPatternMp4sAvOrder(df: DataFrame, idCol: String, patternCol: String,
-                            framesCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(framesCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1)
-        val n = r.getInt(2)
-        val audio = (0 until n * 4).map(i => Array[Byte](
-          ((k * 13 + i * 7) % 256).toByte, ((k * 5 + i * 11) % 256).toByte))
-        val video = (0 until n).map(f =>
-          patternFramePng(k * 8 + f, w, h, flipFirstGradient = false))
-        Row(r.get(0), encodeMp4Tracks("isom", 30000L, 1001L * n, Seq(
-          Mp4Track("soun", 0, 0, audio, Seq((audio.length, 250L))),
-          Mp4Track("vide", w, h, video, Seq((n, 1001L))))))
-      }
-    }, outSchema)
-  }
+                            framesCol: String, w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(framesCol).cast("int")) { r =>
+      val k = r.getLong(1)
+      val n = r.getInt(2)
+      val audio = (0 until n * 4).map(i => Array[Byte](
+        ((k * 13 + i * 7) % 256).toByte, ((k * 5 + i * 11) % 256).toByte))
+      encodeMp4Tracks("isom", 30000L, 1001L * n, Seq(
+        Mp4Track("soun", 0, 0, audio, Seq((audio.length, 250L))),
+        Mp4Track("vide", w, h, patternFrames(k, n, w, h), Seq((n, 1001L)))))
+    }
 
   /** [[genPatternMp4s]] with a planted `stss` sync-sample table: frame f
     * of row k is the pattern-`(k·8+f)` PNG, and samples 1, 1+step,
@@ -3492,26 +3122,16 @@ object Media {
     */
   def genPatternMp4sKeyframed(df: DataFrame, idCol: String,
                               patternCol: String, framesCol: String,
-                              stepCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(framesCol).cast("int"), col(stepCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1)
-        val n = r.getInt(2)
-        val step = r.getInt(3)
-        require(step >= 1, s"sync step must be >= 1, got $step")
-        val samples = (0 until n).map(f =>
-          patternFramePng(k * 8 + f, w, h, flipFirstGradient = false))
-        Row(r.get(0), encodeMp4Tracks("isom", 30000L, 1001L * n, Seq(
-          Mp4Track("vide", w, h, samples, Seq((n, 1001L)),
-            syncSamples = (0 until n by step).map(_ + 1)))))
-      }
-    }, outSchema)
-  }
+                              stepCol: String, w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(framesCol).cast("int"), col(stepCol).cast("int")) { r =>
+      val n = r.getInt(2)
+      val step = r.getInt(3)
+      require(step >= 1, s"sync step must be >= 1, got $step")
+      encodeMp4Tracks("isom", 30000L, 1001L * n, Seq(
+        Mp4Track("vide", w, h, patternFrames(r.getLong(1), n, w, h), Seq((n, 1001L)),
+          syncSamples = (0 until n by step).map(_ + 1))))
+    }
 
   /** [[genPatternMp4s]] in a FRAGMENTED container: the same pattern-PNG
     * frames (byte-identical payloads, so the frame/keyframe oracles are
@@ -3522,25 +3142,14 @@ object Media {
     */
   def genPatternFmp4s(df: DataFrame, idCol: String, patternCol: String,
                       framesCol: String, fragCol: String,
-                      w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(framesCol).cast("int"), col(fragCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1)
-        val n = r.getInt(2)
-        val frag = r.getInt(3)
-        require(frag >= 1, s"fragment size must be >= 1, got $frag")
-        val samples = (0 until n).map(f =>
-          patternFramePng(k * 8 + f, w, h, flipFirstGradient = false))
-        Row(r.get(0), encodeFmp4("isom", 30000L, 1001L, w, h,
-          samples.grouped(frag).toSeq))
-      }
-    }, outSchema)
-  }
+                      w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(framesCol).cast("int"), col(fragCol).cast("int")) { r =>
+      val frag = r.getInt(3)
+      require(frag >= 1, s"fragment size must be >= 1, got $frag")
+      encodeFmp4("isom", 30000L, 1001L, w, h,
+        patternFrames(r.getLong(1), r.getInt(2), w, h).grouped(frag).toSeq)
+    }
 
   /** [[genPatternFmp4s]]' MEDIA-SEGMENT twin: the same pattern-PNG frames
     * in a moov-LESS `styp sidx moof mdat…` container ([[encodeMediaSegment]],
@@ -3549,25 +3158,14 @@ object Media {
     */
   def genPatternSegMp4s(df: DataFrame, idCol: String, patternCol: String,
                         framesCol: String, fragCol: String,
-                        w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(patternCol).cast("long"),
-      col(framesCol).cast("int"), col(fragCol).cast("int"))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(1)
-        val n = r.getInt(2)
-        val frag = r.getInt(3)
-        require(frag >= 1, s"fragment size must be >= 1, got $frag")
-        val samples = (0 until n).map(f =>
-          patternFramePng(k * 8 + f, w, h, flipFirstGradient = false))
-        Row(r.get(0), encodeMediaSegment("msdh", 30000L, 1001L,
-          samples.grouped(frag).toSeq))
-      }
-    }, outSchema)
-  }
+                        w: Int, h: Int): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol), col(patternCol).cast("long"),
+      col(framesCol).cast("int"), col(fragCol).cast("int")) { r =>
+      val frag = r.getInt(3)
+      require(frag >= 1, s"fragment size must be >= 1, got $frag")
+      encodeMediaSegment("msdh", 30000L, 1001L,
+        patternFrames(r.getLong(1), r.getInt(2), w, h).grouped(frag).toSeq)
+    }
 
   /** [[genMp4s]]' fragmented twin for the metadata oracle: single `vide`
     * track, tiny 2-byte samples in 8-sample fragments, `trex` carrying
@@ -3576,27 +3174,16 @@ object Media {
     */
   def genFmp4s(df: DataFrame, idCol: String, tsCol: String, deltaCol: String,
                framesCol: String, widthCol: String,
-               heightCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(tsCol).cast("long"),
+               heightCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(tsCol).cast("long"),
       col(deltaCol).cast("long"), col(framesCol).cast("int"),
-      col(widthCol).cast("int"), col(heightCol).cast("int"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = r.getInt(3)
-        val samples = (0 until n).map(i => Array[Byte](
-          ((id * 31 + i) % 256).toByte, ((id * 7 + i * 3) % 256).toByte))
-        // same udta PII plant as genMp4s — the frag-scrub oracle's target
-        Row(id, encodeFmp4("isom", r.getLong(1), r.getLong(2),
-          r.getInt(4), r.getInt(5), samples.grouped(8).toSeq,
-          udta = s"GRAFT-PII artist=$id gps=+0.0+0.0/".getBytes("US-ASCII")))
-      }
-    }, outSchema)
-  }
+      col(widthCol).cast("int"), col(heightCol).cast("int")) { r =>
+      val id = r.getLong(0)
+      // same udta PII plant as genMp4s — the frag-scrub oracle's target
+      encodeFmp4("isom", r.getLong(1), r.getLong(2), r.getInt(4), r.getInt(5),
+        tinySamples(id, r.getInt(3)).grouped(8).toSeq,
+        udta = s"GRAFT-PII artist=$id gps=+0.0+0.0/".getBytes("US-ASCII"))
+    }
 
   /** [[genFmp4s]]' MEDIA-SEGMENT twin for the metadata oracle: the same
     * 2-byte samples in 8-sample fragments, but moov-LESS (`styp sidx
@@ -3605,24 +3192,12 @@ object Media {
     * dims don't exist in this shape (0×0).
     */
   def genSegMp4s(df: DataFrame, idCol: String, tsCol: String,
-                 deltaCol: String, framesCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(tsCol).cast("long"),
-      col(deltaCol).cast("long"), col(framesCol).cast("int"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = r.getInt(3)
-        val samples = (0 until n).map(i => Array[Byte](
-          ((id * 31 + i) % 256).toByte, ((id * 7 + i * 3) % 256).toByte))
-        Row(id, encodeMediaSegment("msdh", r.getLong(1), r.getLong(2),
-          samples.grouped(8).toSeq))
-      }
-    }, outSchema)
-  }
+                 deltaCol: String, framesCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(tsCol).cast("long"),
+      col(deltaCol).cast("long"), col(framesCol).cast("int")) { r =>
+      encodeMediaSegment("msdh", r.getLong(1), r.getLong(2),
+        tinySamples(r.getLong(0), r.getInt(3)).grouped(8).toSeq)
+    }
 
   /** Variable-frame-rate MP4 fixtures: the video track's `stts` carries
     * TWO runs — the first `n/2` samples at `deltaCol`, the rest at twice
@@ -3633,31 +3208,19 @@ object Media {
     */
   def genVfrMp4s(df: DataFrame, idCol: String, tsCol: String,
                  deltaCol: String, framesCol: String, widthCol: String,
-                 heightCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(tsCol).cast("long"),
+                 heightCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(tsCol).cast("long"),
       col(deltaCol).cast("long"), col(framesCol).cast("int"),
-      col(widthCol).cast("int"), col(heightCol).cast("int"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val ts = r.getLong(1)
-        val d = r.getLong(2)
-        val n = r.getInt(3)
-        val n1 = n / 2
-        val samples = (0 until n).map(i => Array[Byte](
-          ((id * 31 + i) % 256).toByte, ((id * 7 + i * 3) % 256).toByte))
-        val dur = n1 * d + (n - n1) * 2 * d
-        Row(id, encodeMp4Tracks("isom", ts, dur, Seq(
-          Mp4Track("vide", r.getInt(4), r.getInt(5), samples,
-            Seq((n1, d), (n - n1, 2 * d))),
-          Mp4Track("soun", 0, 0))))
-      }
-    }, outSchema)
-  }
+      col(widthCol).cast("int"), col(heightCol).cast("int")) { r =>
+      val d = r.getLong(2)
+      val n = r.getInt(3)
+      val n1 = n / 2
+      val dur = n1 * d + (n - n1) * 2 * d
+      encodeMp4Tracks("isom", r.getLong(1), dur, Seq(
+        Mp4Track("vide", r.getInt(4), r.getInt(5), tinySamples(r.getLong(0), n),
+          Seq((n1, d), (n - n1, 2 * d))),
+        Mp4Track("soun", 0, 0)))
+    }
 
   /** Keyframe rows from every MP4 payload via its `stss` sync-sample
     * table ([[mp4KeyframePayloads]]): output (idCol, frame_idx, width,
@@ -3677,65 +3240,21 @@ object Media {
     * unbounded inside one task.
     */
   def mp4Keyframes(df: DataFrame, idCol: String, contentCol: String,
-                   maxFrames: Int = Int.MaxValue): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("dhash", LongType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.get(0)
-        mp4KeyframePayloads(r.getAs[Array[Byte]](1), maxFrames).iterator.map {
-          case (i, payload) =>
-            val (w, h, _, px) = decodeLuma(payload)
-            Row(id, i, w, h, dHash64(px, w, h))
-        }
-      }
-    }, outSchema)
-  }
+                   maxFrames: Int = Int.MaxValue): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, FrameFields)(
+      bytes => frameFacts(mp4KeyframePayloads(bytes, maxFrames)))
 
   /** [[mp4Keyframes]] for DIRTY corpora — the keyframe twin of
-    * [[videoFramesLenient]]: per video the whole sync-sample walk +
-    * decode runs under one try; success emits the [[mp4Keyframes]] rows
-    * with `frame_ok=true`, any failure — malformed container, rotten
-    * keyframe payload, or the `maxFrames` keyframe-count cap (the
-    * no-`stss`/all-intra degenerate shapes) — emits ONE
-    * `frame_ok=false` row with the failure class, never failing the
-    * task: in a continuous ingest one bad video must quarantine, not
-    * wedge the batch. Good rows carry facts bit-equal to
-    * [[mp4Keyframes]].
+    * [[videoFramesLenient]]: a malformed container, a rotten keyframe
+    * payload or the `maxFrames` keyframe-count cap (the
+    * no-`stss`/all-intra degenerate shapes) quarantines the video as ONE
+    * `frame_ok=false` row under the [[graft.core.RowDecode]] quarantine
+    * policy.
     */
   def mp4KeyframesLenient(df: DataFrame, idCol: String, contentCol: String,
-                          maxFrames: Int = Int.MaxValue): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("frame_ok", BooleanType, nullable = false),
-      StructField("frame_err", StringType, nullable = true),
-      StructField("frame_idx", IntegerType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("dhash", LongType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.get(0)
-        try {
-          mp4KeyframePayloads(r.getAs[Array[Byte]](1), maxFrames).map {
-            case (i, payload) =>
-              val (w, h, _, px) = decodeLuma(payload)
-              Row(id, true, null, i, w, h, dHash64(px, w, h))
-          }
-        } catch {
-          case e: Exception =>
-            Seq(Row(id, false, e.getClass.getSimpleName,
-              null, null, null, null))
-        }
-      }
-    }, outSchema)
-  }
+                          maxFrames: Int = Int.MaxValue): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 1, FrameLenientFields)(
+      bytes => frameFacts(mp4KeyframePayloads(bytes, maxFrames)))
 
   /** Scene table from an MP4's OWN sync-sample declaration — the
     * `stss`/fragment-start analogue of [[videoScenes]], which must first
@@ -3754,65 +3273,30 @@ object Media {
     * full unbounded decode.
     */
   def mp4Scenes(df: DataFrame, idCol: String, contentCol: String,
-                maxFrames: Int = Int.MaxValue): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("scene_idx", IntegerType, nullable = false),
-      StructField("start_frame_idx", IntegerType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("dhash", LongType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.get(0)
-        mp4KeyframePayloads(r.getAs[Array[Byte]](1), maxFrames)
-          .iterator.zipWithIndex
-          .map { case ((frameIdx, payload), sceneIdx) =>
-            val (w, h, _, px) = decodeLuma(payload)
-            Row(id, sceneIdx, frameIdx, w, h, dHash64(px, w, h))
-          }
-      }
-    }, outSchema)
-  }
+                maxFrames: Int = Int.MaxValue): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, SceneFields)(
+      sceneFacts(maxFrames))
+
+  /** Fact columns of [[mp4Scenes]]: the scene rank, then the frame facts
+    * of its sync sample.
+    */
+  private val SceneFields = StructField("scene_idx", IntegerType, nullable = false) +:
+    StructField("start_frame_idx", IntegerType, nullable = false) +: FrameFields.tail
+
+  private def sceneFacts(maxFrames: Int)(bytes: Array[Byte]): Iterator[Seq[Any]] =
+    mp4KeyframePayloads(bytes, maxFrames).iterator.zipWithIndex.map {
+      case ((frameIdx, payload), sceneIdx) => sceneIdx +: frameFact(frameIdx, payload)
+    }
 
   /** [[mp4Scenes]] for DIRTY corpora — the scene-table sibling of
-    * [[mp4KeyframesLenient]] (same one-try-per-video contract): success
-    * emits the [[mp4Scenes]] rows with `frame_ok=true`, any failure —
-    * including the `maxFrames` keyframe-count cap — emits ONE
-    * `frame_ok=false` row with the failure class instead of failing the
-    * task.
+    * [[mp4KeyframesLenient]], same one-row-per-failed-video quarantine
+    * (the `maxFrames` keyframe-count cap included) under the
+    * [[graft.core.RowDecode]] policy.
     */
   def mp4ScenesLenient(df: DataFrame, idCol: String, contentCol: String,
-                       maxFrames: Int = Int.MaxValue): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("frame_ok", BooleanType, nullable = false),
-      StructField("frame_err", StringType, nullable = true),
-      StructField("scene_idx", IntegerType, nullable = true),
-      StructField("start_frame_idx", IntegerType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("dhash", LongType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.get(0)
-        try {
-          mp4KeyframePayloads(r.getAs[Array[Byte]](1), maxFrames)
-            .zipWithIndex.map { case ((frameIdx, payload), sceneIdx) =>
-              val (w, h, _, px) = decodeLuma(payload)
-              Row(id, true, null, sceneIdx, frameIdx, w, h,
-                dHash64(px, w, h))
-            }
-        } catch {
-          case e: Exception =>
-            Seq(Row(id, false, e.getClass.getSimpleName,
-              null, null, null, null, null))
-        }
-      }
-    }, outSchema)
-  }
+                       maxFrames: Int = Int.MaxValue): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 1,
+      RowDecode.flags("frame") ++ RowDecode.nullable(SceneFields))(sceneFacts(maxFrames))
 
   /** Admission-SIGNATURE decoder for the keyframe mode of
     * [[graft.streaming.Streams.ingestVideoDedup]] — output bit-compatible
@@ -3830,41 +3314,12 @@ object Media {
     * consequence is documented on the ingest's `admit` parameter.
     */
   def videoKeySigsLenient(df: DataFrame, idCol: String, contentCol: String,
-                          maxFrames: Int = Int.MaxValue): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("frame_ok", BooleanType, nullable = false),
-      StructField("frame_err", StringType, nullable = true),
-      StructField("frame_idx", IntegerType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("dhash", LongType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.get(0)
-        try {
-          val bytes = r.getAs[Array[Byte]](1)
-          val payloads: Seq[(Int, Array[Byte])] = sniffMime(bytes) match {
-            case "video/mp4" => mp4KeyframePayloads(bytes, maxFrames)
-            case _ =>
-              val ps = framePayloads(bytes)
-              require(ps.length <= maxFrames,
-                s"video has ${ps.length} frames > maxFrames=$maxFrames")
-              ps.zipWithIndex.map(_.swap)
-          }
-          payloads.map { case (i, payload) =>
-            val (w, h, _, px) = decodeLuma(payload)
-            Row(id, true, null, i, w, h, dHash64(px, w, h))
-          }
-        } catch {
-          case e: Exception =>
-            Seq(Row(id, false, e.getClass.getSimpleName,
-              null, null, null, null))
-        }
-      }
-    }, outSchema)
-  }
+                          maxFrames: Int = Int.MaxValue): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 1, FrameLenientFields) { bytes =>
+      frameFacts(
+        if (sniffMime(bytes) == "video/mp4") mp4KeyframePayloads(bytes, maxFrames)
+        else allFrames(bytes, maxFrames))
+    }
 
   /** Deterministic WAV fixtures, one per input row: 16-bit PCM at
     * (`rateCol`, `channelsCol`, `framesCol`) with sample j =
@@ -3872,21 +3327,12 @@ object Media {
     * decode; it just has to be real frames). Output (idCol, content).
     */
   def genWavs(df: DataFrame, idCol: String, rateCol: String,
-              channelsCol: String, framesCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(rateCol).cast("int"),
-      col(channelsCol).cast("int"), col(framesCol).cast("int"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0); val rate = r.getInt(1)
-        val ch = r.getInt(2); val frames = r.getInt(3)
-        val samples = Array.tabulate[Short](frames * ch)(j =>
-          ((id * 7 + j * 13) % 256 - 128).toShort)
-        Row(id, encodeWav(rate, ch, samples))
-      }
-    }, outSchema)
-  }
+              channelsCol: String, framesCol: String): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(rateCol).cast("int"),
+      col(channelsCol).cast("int"), col(framesCol).cast("int")) { r =>
+      val id = r.getLong(0); val ch = r.getInt(2)
+      val samples = Array.tabulate[Short](r.getInt(3) * ch)(j =>
+        ((id * 7 + j * 13) % 256 - 128).toShort)
+      encodeWav(r.getInt(1), ch, samples)
+    }
 }

@@ -4,7 +4,8 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.util.zip.{Deflater, Inflater}
 
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.core.RowDecode
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -151,7 +152,6 @@ object Pdf {
     * `stream` keywords and decode each through [[decodeStreamAt]].
     */
   private[ext] def contentStreams(bytes: Array[Byte]): Seq[Array[Byte]] = {
-    require(bytes != null, "null payload")
     require(bytes.length >= 8 &&
       new String(bytes, 0, 5, ISO_8859_1) == "%PDF-",
       "not a PDF: missing %PDF- header")
@@ -554,57 +554,30 @@ object Pdf {
     * text — (idCol, stream_idx, pdf_version, text), file order. Strict
     * ([[pdfTextLenient]] is the dirty-crawl twin).
     */
-  def pdfText(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("stream_idx", IntegerType, nullable = false),
-      StructField("pdf_version", StringType, nullable = false),
-      StructField("text", StringType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val fonts = fontCMaps(bytes)
-        val texts = contentStreams(bytes).map(streamText(_, fonts))
-          .filter(_.nonEmpty)
-        val ver = versionOf(bytes)
-        texts.zipWithIndex.map { case (t, idx) => Row(r.get(0), idx, ver, t) }
-      }
-    }, outSchema)
+  def pdfText(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, TextFields)(textFacts)
+
+  /** Fact columns of [[pdfText]]: one row per text-showing stream. */
+  private val TextFields = Seq(
+    StructField("stream_idx", IntegerType, nullable = false),
+    StructField("pdf_version", StringType, nullable = false),
+    StructField("text", StringType, nullable = false))
+
+  private def textFacts(bytes: Array[Byte]): Seq[Seq[Any]] = {
+    val fonts = fontCMaps(bytes)
+    val texts = contentStreams(bytes).map(streamText(_, fonts)).filter(_.nonEmpty)
+    val ver = versionOf(bytes)
+    texts.zipWithIndex.map { case (t, idx) => Seq[Any](idx, ver, t) }
   }
 
   /** [[pdfText]] for DIRTY corpora: a file that fails (not a PDF,
-    * unsupported filter, corrupt deflate) quarantines as ONE row with
-    * the failure class instead of failing the job — the
-    * `Media.decodeImageMetaLenient` contract.
+    * unsupported filter, corrupt deflate) quarantines as ONE
+    * `decode_ok=false` row under the [[graft.core.RowDecode]] quarantine
+    * policy instead of failing the job.
     */
-  def pdfTextLenient(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
-      StructField("decode_ok", BooleanType, nullable = false),
-      StructField("decode_err", StringType, nullable = true),
-      StructField("stream_idx", IntegerType, nullable = true),
-      StructField("pdf_version", StringType, nullable = true),
-      StructField("text", StringType, nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        try {
-          val bytes = r.getAs[Array[Byte]](1)
-          val fonts = fontCMaps(bytes)
-          val texts = contentStreams(bytes).map(streamText(_, fonts))
-            .filter(_.nonEmpty)
-          val ver = versionOf(bytes)
-          texts.zipWithIndex.map { case (t, idx) =>
-            Row(r.get(0), true, null, idx, ver, t) }
-        } catch {
-          case e: Exception =>
-            Seq(Row(r.get(0), false, e.getClass.getSimpleName,
-              null, null, null))
-        }
-      }
-    }, outSchema)
-  }
+  def pdfTextLenient(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 1,
+      RowDecode.flags("decode") ++ RowDecode.nullable(TextFields))(textFacts)
 
   // ---- fixture generation (encode side) ----------------------------------
 
@@ -843,21 +816,19 @@ object Pdf {
     * FlateDecode on every stream of the file. Output (idCol, content).
     */
   def genPdfs(df: DataFrame, idCol: String, nPagesCol: String,
-              flateCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(nPagesCol).cast("int"),
-      col(flateCol).cast("boolean"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(0)
-        val pages = (0 until r.getInt(1)).map(i => fixturePage(k, i))
-        Row(k, encodePdf(pages, r.getBoolean(2)))
-      }
-    }, outSchema)
-  }
+              flateCol: String): DataFrame =
+    genPages(df, idCol, nPagesCol, flateCol) { (k, n, flate) =>
+      encodePdf((0 until n).map(i => fixturePage(k, i)), flate)
+    }
+
+  /** The fixture generators' round trip: `encode(k, nPages, flate)` per
+    * input row; output (idCol, content).
+    */
+  private def genPages(df: DataFrame, idCol: String, nPagesCol: String,
+                       flateCol: String)
+                      (encode: (Long, Int, Boolean) => Array[Byte]): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(nPagesCol).cast("int"),
+      col(flateCol).cast("boolean"))(r => encode(r.getLong(0), r.getInt(1), r.getBoolean(2)))
 
   /** The non-Latin fixture formula shared with the DuckDB oracle: doc k
     * page i paints a Latin line through /F1 (`"Doc {k} page {i}:"`), a
@@ -881,21 +852,10 @@ object Pdf {
     * FlateDecode on the page AND CMap streams. Output (idCol, content).
     */
   def genPdfsUnicode(df: DataFrame, idCol: String, nPagesCol: String,
-                     flateCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(nPagesCol).cast("int"),
-      col(flateCol).cast("boolean"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(0)
-        val pages = (0 until r.getInt(1)).map(i => fixturePageUnicode(k, i))
-        Row(k, encodePdfCmap(pages, FixtureCMap, r.getBoolean(2)))
-      }
-    }, outSchema)
-  }
+                     flateCol: String): DataFrame =
+    genPages(df, idCol, nPagesCol, flateCol) { (k, n, flate) =>
+      encodePdfCmap((0 until n).map(i => fixturePageUnicode(k, i)), FixtureCMap, flate)
+    }
 
   /** [[genPdfsUnicode]] in the PDF 1.5+ `/Type /ObjStm` layout
     * ([[encodePdfObjStm]]) — identical page text, so its oracle is the
@@ -903,19 +863,8 @@ object Pdf {
     * page/font dicts resolve exactly like top-level ones.
     */
   def genPdfsObjStm(df: DataFrame, idCol: String, nPagesCol: String,
-                    flateCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(nPagesCol).cast("int"),
-      col(flateCol).cast("boolean"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(0)
-        val pages = (0 until r.getInt(1)).map(i => fixturePageUnicode(k, i))
-        Row(k, encodePdfObjStm(pages, FixtureCMap, r.getBoolean(2)))
-      }
-    }, outSchema)
-  }
+                    flateCol: String): DataFrame =
+    genPages(df, idCol, nPagesCol, flateCol) { (k, n, flate) =>
+      encodePdfObjStm((0 until n).map(i => fixturePageUnicode(k, i)), FixtureCMap, flate)
+    }
 }

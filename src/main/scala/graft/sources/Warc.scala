@@ -4,7 +4,8 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.util.zip.{CRC32, GZIPOutputStream, Inflater}
 
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.core.RowDecode
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -122,7 +123,6 @@ object Warc {
     * enforced between records (tolerated absent at EOF).
     */
   private[sources] def parseWarc(raw: Array[Byte]): Seq[WarcRecord] = {
-    require(raw != null, "null payload")
     val bytes =
       if (raw.length >= 2 && (raw(0) & 0xff) == 0x1f && (raw(1) & 0xff) == 0x8b)
         gunzipMembers(raw)
@@ -215,51 +215,23 @@ object Warc {
     * malformed file fails the job with the record index and byte-level
     * cause ([[warcRecordsLenient]] is the dirty-crawl twin).
     */
-  def warcRecords(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(in.schema.head +: recordSchemaTail)
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        parseWarc(r.getAs[Array[Byte]](1)).map { w =>
-          Row(r.get(0), w.idx, w.warcType, w.recordId, w.targetUri.orNull,
-            w.warcDate, w.contentType.orNull, w.body.length.toLong, w.body)
-        }
-      }
-    }, outSchema)
-  }
+  def warcRecords(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, recordSchemaTail)(recordFacts)
+
+  private def recordFacts(bytes: Array[Byte]): Seq[Seq[Any]] =
+    parseWarc(bytes).map { w =>
+      Seq[Any](w.idx, w.warcType, w.recordId, w.targetUri.orNull, w.warcDate,
+        w.contentType.orNull, w.body.length.toLong, w.body)
+    }
 
   /** [[warcRecords]] for DIRTY corpora: a file that fails to parse is
-    * quarantined as ONE row (`decode_ok=false`, null record fields, the
-    * failure class in `decode_err`) instead of failing the job; files
-    * that parse emit their records with `decode_ok=true`. One pass
-    * splits a crawl into processable records and a quarantine ledger —
-    * the same contract as `Media.decodeImageMetaLenient`.
+    * quarantined as ONE `decode_ok=false` row under the
+    * [[graft.core.RowDecode]] quarantine policy instead of failing the
+    * job; files that parse emit their records with `decode_ok=true`.
     */
-  def warcRecordsLenient(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(
-      Seq(in.schema.head,
-        StructField("decode_ok", BooleanType, nullable = false),
-        StructField("decode_err", StringType, nullable = true)) ++
-        recordSchemaTail.map(_.copy(nullable = true)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        try {
-          parseWarc(r.getAs[Array[Byte]](1)).map { w =>
-            Row(r.get(0), true, null, w.idx, w.warcType, w.recordId,
-              w.targetUri.orNull, w.warcDate, w.contentType.orNull,
-              w.body.length.toLong, w.body)
-          }
-        } catch {
-          case e: Exception =>
-            Seq(Row(r.get(0), false, e.getClass.getSimpleName,
-              null, null, null, null, null, null, null, null))
-        }
-      }
-    }, outSchema)
-  }
+  def warcRecordsLenient(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    RowDecode.lenient(df, idCol, contentCol, keep = 1,
+      RowDecode.flags("decode") ++ RowDecode.nullable(recordSchemaTail))(recordFacts)
 
   /** The page-extraction composition: records → keep
     * `warc_type=response` wrapping `application/http` → split the HTTP
@@ -268,28 +240,21 @@ object Warc {
     * through `TextFunctions.htmlToText` and the whole text tier
     * (quality, langid, dedup, curation) applies to the crawl unchanged.
     */
-  def warcResponses(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol), col(contentCol))
-    val outSchema = StructType(Seq(in.schema.head,
+  def warcResponses(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    RowDecode.strict(df, idCol, contentCol, keep = 1, Seq(
       StructField("rec_idx", IntegerType, nullable = false),
       StructField("target_uri", StringType, nullable = true),
       StructField("http_status", IntegerType, nullable = false),
       StructField("http_content_type", StringType, nullable = false),
-      StructField("http_body", StringType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        parseWarc(r.getAs[Array[Byte]](1))
-          .filter(w => w.warcType == "response" &&
-            w.contentType.exists(_.startsWith("application/http")))
-          .map { w =>
-            val (status, ct, body) = parseHttpResponse(w.body)
-            Row(r.get(0), w.idx, w.targetUri.orNull, status, ct,
-              new String(body, UTF_8))
-          }
-      }
-    }, outSchema)
-  }
+      StructField("http_body", StringType, nullable = false))) { bytes =>
+      parseWarc(bytes)
+        .filter(w => w.warcType == "response" &&
+          w.contentType.exists(_.startsWith("application/http")))
+        .map { w =>
+          val (status, ct, body) = parseHttpResponse(w.body)
+          Seq[Any](w.idx, w.targetUri.orNull, status, ct, new String(body, UTF_8))
+        }
+    }
 
   // ---- fixture generation (encode side) ----------------------------------
 
@@ -420,25 +385,16 @@ object Warc {
 
   private def genFromRecords(df: DataFrame, idCol: String, nCol: String,
                              gzCol: String,
-                             recs: (Long, Int) => Seq[(String, String, String, Option[String], String, Array[Byte])]): DataFrame = {
-    val spark = df.sparkSession
-    val in = df.select(col(idCol).cast("long"), col(nCol).cast("int"),
-      col(gzCol).cast("boolean"))
-    val outSchema = StructType(Seq(
-      in.schema.head.copy(name = idCol),
-      StructField("content", BinaryType, nullable = false)))
-    spark.createDataFrame(in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val k = r.getLong(0)
-        val encoded = recs(k, r.getInt(1)).map {
-          case (t, rid, date, uri, ct, body) =>
-            encodeWarcRecord(t, rid, date, uri, ct, body)
-        }
-        val out = new ByteArrayOutputStream()
-        if (r.getBoolean(2)) encoded.foreach(rec => out.write(gzipBytes(rec)))
-        else encoded.foreach(out.write)
-        Row(k, out.toByteArray)
+                             recs: (Long, Int) => Seq[(String, String, String, Option[String], String, Array[Byte])]): DataFrame =
+    RowDecode.generate(df, idCol, col(idCol).cast("long"), col(nCol).cast("int"),
+      col(gzCol).cast("boolean")) { r =>
+      val encoded = recs(r.getLong(0), r.getInt(1)).map {
+        case (t, rid, date, uri, ct, body) =>
+          encodeWarcRecord(t, rid, date, uri, ct, body)
       }
-    }, outSchema)
-  }
+      val out = new ByteArrayOutputStream()
+      if (r.getBoolean(2)) encoded.foreach(rec => out.write(gzipBytes(rec)))
+      else encoded.foreach(out.write)
+      out.toByteArray
+    }
 }

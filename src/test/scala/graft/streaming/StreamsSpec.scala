@@ -15,7 +15,7 @@ class StreamsSpec extends SparkSpec {
 
   test("queue stream delivers to JDBC exactly-once via foreachBatch upsert") {
     System.setProperty("derby.stream.error.file", "/tmp/graft_test_derby.log")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sjdbc_").toString
+    val dir = tempDir("graft_sjdbc_")
     val url = s"jdbc:derby:$dir/db;create=true"
     // seed the target table (and its schema) with one stale row for offset 0
     graft.sources.JdbcSink.append(
@@ -170,7 +170,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestDedup admits only new content across micro-batches, idempotently") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_").toString
+    val dir = tempDir("graft_ingest_")
     val mem = MemoryStream[(Long, String)]
     val q = Streams.ingestDedup(mem.toDF().toDF("doc_id", "text"),
       s"$dir/corpus", contentCols = Seq("text"), idCol = "doc_id",
@@ -196,7 +196,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestDecontam filters against the benchmark index, then dedups") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_dc_").toString
+    val dir = tempDir("graft_ingest_dc_")
     graft.ext.Curation.buildDecontamIndex(
       Seq((100L, "benchmark alpha question one")).toDF("doc_id", "text"),
       "doc_id", "text", s"$dir/idx", shingleN = 3)
@@ -230,7 +230,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestNearDedup admits one representative per near-dup group across batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_near_").toString
+    val dir = tempDir("graft_ingest_near_")
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val mem = MemoryStream[(Long, String)]
     val q = Streams.ingestNearDedup(mem.toDF().toDF("doc_id", "text"),
@@ -262,7 +262,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestNearDedup bootstrap crash-replay does not duplicate the corpus") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_boot_").toString
+    val dir = tempDir("graft_ingest_boot_")
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     // Simulate a bootstrap that crashed AFTER the corpus write but BEFORE
     // buildNearIndex started: corpus rows on disk, no index dir at all.
@@ -291,7 +291,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestNearDedup fails loudly when index data exists without a stamp") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_nostamp_").toString
+    val dir = tempDir("graft_ingest_nostamp_")
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     graft.ext.Dedup.buildNearIndex(
       Seq((1L, a)).toDF("doc_id", "text"), "doc_id", "text", s"$dir/idx",
@@ -321,7 +321,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestImageDedup admits one representative per dHash group across batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_img_").toString
+    val dir = tempDir("graft_ingest_img_")
     // pattern PNGs: same k → identical hash (dup); k and k' differ wildly
     def png(k: Long, p: Int): Array[Byte] = {
       val gen = graft.ext.Media.genPatternPngs(
@@ -360,7 +360,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestImageDedup replayed quarantine partition does not double-append") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_imgq_").toString
+    val dir = tempDir("graft_ingest_imgq_")
     // Simulate a quarantine write that committed while the BATCH did not:
     // the same micro-batch replays and must REWRITE batch_id=0, not append
     Seq((4L, "junk payload".getBytes, "IllegalArgumentException",
@@ -390,7 +390,7 @@ class StreamsSpec extends SparkSpec {
 
   test("media sig index compacts and erases with the stamped lifecycle") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigmaint_").toString
+    val dir = tempDir("graft_sigmaint_")
     def wav(k: Long): Array[Byte] = graft.ext.Media.genToneWavs(
       Seq((0L, k, 0, 65)).toDF("id", "k", "p", "nw"), "id", "k", "p", "nw")
       .select("content").as[Array[Byte]].head()
@@ -442,7 +442,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestAudioDedup admits one clip per fingerprint group across batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_aud_").toString
+    val dir = tempDir("graft_ingest_aud_")
     // tone WAVs: same k → near-identical fingerprints (perturbed = 1 bit
     // off); distinct k → distant
     def wav(k: Long, p: Int): Array[Byte] = graft.ext.Media.genToneWavs(
@@ -480,7 +480,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestVideoDedup admits one video per shared-frame group across batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_vid_").toString
+    val dir = tempDir("graft_ingest_vid_")
     // pattern AVIs: same k → identical frame set; k and k' disjoint
     def avi(k: Long, n: Int): Array[Byte] = graft.ext.Media.genPatternAvis(
       Seq((0L, k, n)).toDF("id", "k", "n"), "id", "k", "n", 9, 8)
@@ -518,7 +518,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestAudioDedup quarantines non-16-bit PCM with its payload, stream survives") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_aud24_").toString
+    val dir = tempDir("graft_ingest_aud24_")
     def wav(k: Long): Array[Byte] = graft.ext.Media.genToneWavs(
       Seq((0L, k, 0, 65)).toDF("id", "k", "p", "nw"), "id", "k", "p", "nw")
       .select("content").as[Array[Byte]].head()
@@ -551,7 +551,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("ingestVideoDedup: MP4 re-container of stored AVI content is a dup") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vid_xcont_").toString
+    val dir = tempDir("graft_vid_xcont_")
     def avi(id: Long, k: Long, n: Int) = graft.ext.Media.genPatternAvis(
       Seq((id, k, n)).toDF("id", "k", "n"), "id", "k", "n", 9, 8)
     def mp4(id: Long, k: Long, n: Int) = graft.ext.Media.genPatternMp4s(
@@ -581,7 +581,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestVideoDedup quarantines a corrupt-frame video; batch survives") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_vidbad_").toString
+    val dir = tempDir("graft_ingest_vidbad_")
     def avi(k: Long, n: Int): Array[Byte] = graft.ext.Media.genPatternAvis(
       Seq((0L, k, n)).toDF("id", "k", "n"), "id", "k", "n", 9, 8)
       .select("content").as[Array[Byte]].head()
@@ -621,7 +621,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestVideoDedup quarantines an over-maxFrames video WITH payload; stream survives replay") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_vidcap_").toString
+    val dir = tempDir("graft_ingest_vidcap_")
     def avi(k: Long, n: Int): Array[Byte] = graft.ext.Media.genPatternAvis(
       Seq((0L, k, n)).toDF("id", "k", "n"), "id", "k", "n", 9, 8)
       .select("content").as[Array[Byte]].head()
@@ -655,7 +655,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestVideoDedup keyframe admission: over-cap stss MP4 classifies, not quarantines") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_vidkf_").toString
+    val dir = tempDir("graft_ingest_vidkf_")
     def kfMp4(k: Long, n: Int, step: Int): Array[Byte] =
       graft.ext.Media.genPatternMp4sKeyframed(
         Seq((0L, k, n, step)).toDF("id", "k", "n", "step"),
@@ -710,7 +710,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestVideoDedup replay of a DEGENERATE video (n_frames < minShared) appends nothing") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_viddgn_").toString
+    val dir = tempDir("graft_ingest_viddgn_")
     def avi(k: Long, n: Int): Array[Byte] = graft.ext.Media.genPatternAvis(
       Seq((0L, k, n)).toDF("id", "k", "n"), "id", "k", "n", 9, 8)
       .select("content").as[Array[Byte]].head()
@@ -740,7 +740,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestPdf admits pages by text identity, quarantines corrupt documents") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_pdf_").toString
+    val dir = tempDir("graft_ingest_pdf_")
     def pdf(k: Long, n: Int): Array[Byte] = graft.ext.Pdf.genPdfs(
       Seq((k, n, true)).toDF("id", "n", "flate"), "id", "n", "flate")
       .select("content").as[Array[Byte]].head()
@@ -774,7 +774,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestWarc admits records by content identity, quarantines rotten segments") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_warc_").toString
+    val dir = tempDir("graft_ingest_warc_")
     def warc(k: Long, n: Int): Array[Byte] = graft.sources.Warc.genWarcs(
       Seq((k, n, true)).toDF("id", "n", "gz"), "id", "n", "gz")
       .select("content").as[Array[Byte]].head()
@@ -812,7 +812,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestWarc replayed quarantine rewrites its partition; bootstrap defers") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_warcq_").toString
+    val dir = tempDir("graft_ingest_warcq_")
     // a quarantine write that committed while the batch did not: the
     // replayed micro-batch must REWRITE batch_id=0, not double-append
     Seq((99L, "IllegalArgumentException"))
@@ -841,7 +841,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("appendCorpusAndNearIndex keeps corpus+index under one commit marker") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_append_both_").toString
+    val dir = tempDir("graft_append_both_")
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     graft.ext.Dedup.buildNearIndex(
       Seq((1L, a)).toDF("doc_id", "text"), "doc_id", "text", s"$dir/idx")
@@ -868,7 +868,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestVectors admits only new ids and keeps the IVF index searchable") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_vec_").toString
+    val dir = tempDir("graft_ingest_vec_")
     def v(x: Double, y: Double, z: Double) = Seq(x.toFloat, y.toFloat, z.toFloat)
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = Streams.ingestVectors(mem.toDF().toDF("vec_id", "embedding"),
@@ -907,7 +907,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestSemanticDedup admits one representative per cosine group across batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_sem_").toString
+    val dir = tempDir("graft_ingest_sem_")
     def v(x: Double, y: Double, z: Double, w: Double) =
       Seq(x.toFloat, y.toFloat, z.toFloat, w.toFloat)
     val va = v(1, 0, 0, 0); val vb = v(0, 1, 0, 0); val vc = v(0, 0, 1, 0)
@@ -942,7 +942,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestSemanticDedup fails loudly when index data exists without a stamp") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_semnostamp_").toString
+    val dir = tempDir("graft_ingest_semnostamp_")
     def v(x: Double, y: Double, z: Double, w: Double) =
       Seq(x.toFloat, y.toFloat, z.toFloat, w.toFloat)
     graft.ext.Dedup.buildSemanticIndex(
@@ -971,7 +971,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestSearchDocs admits only new ids and keeps BM25 queryable") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_srch_").toString
+    val dir = tempDir("graft_ingest_srch_")
     val mem = MemoryStream[(Long, String)]
     val q = Streams.ingestSearchDocs(mem.toDF().toDF("doc_id", "text"),
       s"$dir/idx", idCol = "doc_id", textCol = "text",
@@ -1003,7 +1003,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestQualityGated gates on the stored LM, honors retrains, dedups") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_qg_").toString
+    val dir = tempDir("graft_ingest_qg_")
     // model trained on fluent reference: good:2 clean:2 text:1 prose:1
     // → in-vocab avg ≈ -1434 milli-nats, pure-OOV avg = -2398
     val ref = Seq((100L, "good clean text"), (101L, "good clean prose"))
@@ -1040,7 +1040,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestDedup stays compatible with a pre-hash-format corpus") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_leg_").toString
+    val dir = tempDir("graft_ingest_leg_")
     // corpus written by the old format: content columns only, no __h
     Seq((1L, "alpha"), (3L, "beta")).toDF("doc_id", "text")
       .write.parquet(s"$dir/corpus")
@@ -1062,7 +1062,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestDedup rejects a batch that carries the reserved hash column") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_res_").toString
+    val dir = tempDir("graft_ingest_res_")
     val mem = MemoryStream[(Long, String, String)]
     val q = Streams.ingestDedup(mem.toDF().toDF("doc_id", "text", "__h"),
       s"$dir/corpus", contentCols = Seq("text"), idCol = "doc_id",
@@ -1079,7 +1079,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestDedup admits one micro-batch into a hash-format corpus in at most 5 jobs and one file") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_jobs_").toString
+    val dir = tempDir("graft_ingest_jobs_")
     val mem = MemoryStream[(Long, String)]
     val q = Streams.ingestDedup(mem.toDF().toDF("doc_id", "text"),
       s"$dir/corpus", contentCols = Seq("text"), idCol = "doc_id",
@@ -1123,7 +1123,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestDedup treats an existing corpus dir without parquet files as no corpus") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_empty_").toString
+    val dir = tempDir("graft_ingest_empty_")
     new java.io.File(s"$dir/corpus").mkdirs()
     new java.io.File(s"$dir/corpus/_SUCCESS").createNewFile()
     val mem = MemoryStream[(Long, String)]
@@ -1144,7 +1144,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestUrlDedup dedups by canonical URL then content, idempotently") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_url_").toString
+    val dir = tempDir("graft_ingest_url_")
     val mem = MemoryStream[(Long, String, String)]
     val q = Streams.ingestUrlDedup(mem.toDF().toDF("doc_id", "url", "text"),
       s"$dir/corpus", urlCol = "url", contentCols = Seq("text"),
@@ -1186,7 +1186,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestBloomDedup admits novel content map-only, replays append nothing") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_bloom_").toString
+    val dir = tempDir("graft_ingest_bloom_")
     val mem = MemoryStream[(Long, String)]
     val q = Streams.ingestBloomDedup(mem.toDF().toDF("doc_id", "text"),
       s"$dir/corpus", s"$dir/bloom", idCol = "doc_id", textCol = "text",
@@ -1214,7 +1214,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestBloomDedup fails loudly on a torn append (unstamped bitmap)") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_bloomt_").toString
+    val dir = tempDir("graft_ingest_bloomt_")
     val mem = MemoryStream[(Long, String)]
     val q = Streams.ingestBloomDedup(mem.toDF().toDF("doc_id", "text"),
       s"$dir/corpus", s"$dir/bloom", idCol = "doc_id", textCol = "text",
@@ -1245,7 +1245,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestGopherGated drops rule-failing rows, then dedups") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_gq_").toString
+    val dir = tempDir("graft_ingest_gq_")
     val good = (Seq.fill(30)("the quick brown fox jumps with energy") :+ "of it")
       .mkString(" ")
     val mem = MemoryStream[(Long, String)]
@@ -1268,7 +1268,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestUrlDedup refuses a foreign corpus without the stored columns") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_urlf_").toString
+    val dir = tempDir("graft_ingest_urlf_")
     // a corpus NOT created by ingestUrlDedup (no __u/__h)
     Seq((1L, "https://a.com/p", "x")).toDF("doc_id", "url", "text")
       .write.parquet(s"$dir/corpus")
