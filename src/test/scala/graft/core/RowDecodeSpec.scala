@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.ext.{Media, Pdf}
 import graft.sources.Warc
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 /** The one quarantine policy of [[RowDecode.lenient]], seen through every
   * lenient twin: a null payload is an `IllegalArgumentException` ("null
@@ -60,8 +61,7 @@ class RowDecodeSpec extends SparkSpec {
   test("a lenient field list without an *_ok/*_err pair is rejected") {
     intercept[IllegalArgumentException] {
       RowDecode.lenient(nullPayload, "id", "content", keep = 1,
-        RowDecode.nullable(Seq(org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.IntegerType, nullable = false))))(_ => Nil)
+        Seq(StructField("n", IntegerType, nullable = true)))(_ => Nil)
     }
   }
 }
