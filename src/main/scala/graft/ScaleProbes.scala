@@ -979,8 +979,7 @@ object ScaleProbes {
       .unionByName(plants(1, 920000000L)).localCheckpoint(true)
     val nProbe = probe.count()
 
-    dayBatch(0).write.parquet(sigs)
-    IndexFormat.stamp(spark, root, fmt)
+    IndexFormat.commit(spark, root, fmt)(dayBatch(0).write.parquet(sigs))
 
     def classifyTimed(expectFloor: Long, tag: String): (Double, Long) = {
       val (sec, dups) = noop(
@@ -998,9 +997,8 @@ object ScaleProbes {
         val admitted = batch.join(
           Media.dhashDupIds(batch, "aid", "afp", spark.read.parquet(sigs), "afp"),
           Seq("aid"), "left_anti").localCheckpoint(true)
-        IndexFormat.invalidate(spark, root)
-        admitted.write.mode(SaveMode.Append).parquet(sigs)
-        IndexFormat.stamp(spark, root, fmt)
+        IndexFormat.commit(spark, root, fmt)(
+          admitted.write.mode(SaveMode.Append).parquet(sigs))
       }
       // from day 1 on both plant sets are in the table
       val (sec, dups) = classifyTimed(nPlant * 2, s"day $day")

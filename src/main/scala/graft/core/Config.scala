@@ -871,7 +871,7 @@ object Config {
       // fail loudly, not silently fork a second index
       case "bloomRebuild" =>
         val sp = df.sparkSession; val p = str(n, "path")
-        require(graft.ext.Dedup.nearIndexDataExists(sp, p),
+        require(graft.ext.IndexFormat.dataExists(sp, p),
           s"bloomRebuild: no existing bitmap at $p (use bloomBuild to create one)")
         graft.ext.Bloom.writeBits(sp, p,
           graft.ext.Bloom.build(df, str(n, "column"),

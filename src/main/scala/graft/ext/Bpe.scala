@@ -159,11 +159,11 @@ object Bpe {
   def writeMerges(spark: SparkSession, merges: Seq[(String, String)],
                   dir: String): Unit = {
     import spark.implicits._
-    IndexFormat.invalidate(spark, dir)
-    merges.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
-      .toDF("rank", "left", "right")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/merges")
-    IndexFormat.stamp(spark, dir, FormatId)
+    IndexFormat.commit(spark, dir, FormatId) {
+      merges.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
+        .toDF("rank", "left", "right")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/merges")
+    }
   }
 
   def readMerges(spark: SparkSession, dir: String): Seq[(String, String)] = {

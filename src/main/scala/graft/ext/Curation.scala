@@ -527,35 +527,34 @@ object Curation {
     * 100 TB side), so the index stores 8-byte hashes per posting — the
     * eval text is shingled exactly once, at build/append time, and every
     * later training batch classifies against hashes alone.
-    * [[IndexFormat]] commit-marker ordering: invalidate → data → stamp.
+    * Written under one [[IndexFormat.commit]].
     */
   def buildDecontamIndex(eval: DataFrame, idCol: String, textCol: String,
-                         dir: String, shingleN: Int = 3): Unit = {
-    val spark = eval.sparkSession
-    IndexFormat.invalidate(spark, dir)
-    evalPostings(eval, idCol, textCol, shingleN)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/shingles")
-    IndexFormat.stamp(spark, dir, decontamFormat(shingleN))
-  }
+                         dir: String, shingleN: Int = 3): Unit =
+    writeDecontamIndex(eval, idCol, textCol, dir, shingleN,
+      org.apache.spark.sql.SaveMode.Overwrite)
 
   /** Append a NEW eval set (a benchmark added after the index was built)
-    * under the same commit marker discipline as every index family:
-    * check → invalidate → append → stamp. The caller's contract is that
+    * after a format [[IndexFormat.check]], under one
+    * [[IndexFormat.commit]]. The caller's contract is that
     * each append carries eval ids not already stored (re-appending an id
     * would double its postings and inflate [[contaminationReportIndexed]]
     * counts; [[decontaminateIncremental]] is insensitive to duplicates).
     */
   def appendDecontamIndex(eval: DataFrame, idCol: String, textCol: String,
                           dir: String, shingleN: Int = 3): Unit = {
-    val spark = eval.sparkSession
-    IndexFormat.check(spark, dir, decontamFormat(shingleN))
-    IndexFormat.invalidate(spark, dir)
-    evalPostings(eval, idCol, textCol, shingleN)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$dir/shingles")
-    IndexFormat.stamp(spark, dir, decontamFormat(shingleN))
+    IndexFormat.check(eval.sparkSession, dir, decontamFormat(shingleN))
+    writeDecontamIndex(eval, idCol, textCol, dir, shingleN,
+      org.apache.spark.sql.SaveMode.Append)
   }
+
+  private def writeDecontamIndex(eval: DataFrame, idCol: String,
+                                 textCol: String, dir: String, shingleN: Int,
+                                 mode: org.apache.spark.sql.SaveMode): Unit =
+    IndexFormat.commit(eval.sparkSession, dir, decontamFormat(shingleN)) {
+      evalPostings(eval, idCol, textCol, shingleN)
+        .write.mode(mode).parquet(s"$dir/shingles")
+    }
 
   /** [[decontaminate]] against a [[buildDecontamIndex]] layout: drop every
     * `batch` row sharing any (batch-side df-capped) shingle with the stored

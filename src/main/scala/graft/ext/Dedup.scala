@@ -490,13 +490,46 @@ object Dedup {
       // the using-column join moves the key first; keep fresh's order
       pinned.join(stored.select(col(keyCol)), Seq(keyCol), "left_anti")
         .select(pinned.columns.map(pinned(_)): _*)
-    } else {
-      val probe = stored.select(col(keyCol))
-        .join(broadcast(pinned.select(key).where(key.isNotNull)), Seq(keyCol), "left_semi")
-      val hits = probe.mapPartitions(_.toSet.iterator)(Encoders.row(probe.schema))
-        .collect().map(_.get(0)).distinct
-      if (hits.isEmpty) pinned else pinned.where(key.isNull || !key.isin(hits: _*))
-    }
+    } else withoutHits(pinned, keyCol, storedHits(pinned, stored, keyCol))
+  }
+
+  /** [[admitNewByKey]] (broadcast shape) for a `fresh` whose `keyCol` is
+    * unique and non-null — what [[exactHashed]] leaves in `__h`. Also
+    * returns whether any row was admitted, with no extra Spark job: the
+    * pin's own job counts the pinned rows (a named `observe`), and each
+    * collected hit is the key of exactly one of them, so rows are admitted
+    * iff the count exceeds the hits. This lets an ingest skip an
+    * all-duplicate batch's write, which would otherwise leave a
+    * schema-only parquet file per trigger. The count can only err high (a
+    * re-run task adds its rows again), which costs that empty write and
+    * never drops an admitted row.
+    */
+  private[graft] def admitNewByUniqueKey(fresh: DataFrame, stored: DataFrame,
+                                         keyCol: String): (DataFrame, Boolean) = {
+    val observed = fresh.observe("__admit_rows", count(lit(1)))
+    val pinned = observed.localCheckpoint(true)
+    val rows = observed.queryExecution.observedMetrics("__admit_rows").getLong(0)
+    val hits = storedHits(pinned, stored, keyCol)
+    (withoutHits(pinned, keyCol, hits), rows > hits.length)
+  }
+
+  /** The distinct stored keys that match a pinned batch's keys: the
+    * batch's non-null keys broadcast into one scan of `stored`,
+    * deduplicated per partition (no `distinct` shuffle), collected.
+    */
+  private def storedHits(pinned: DataFrame, stored: DataFrame,
+                         keyCol: String): Array[Any] = {
+    val key = pinned(keyCol)
+    val probe = stored.select(col(keyCol))
+      .join(broadcast(pinned.select(key).where(key.isNotNull)), Seq(keyCol), "left_semi")
+    probe.mapPartitions(_.toSet.iterator)(Encoders.row(probe.schema))
+      .collect().map(_.get(0)).distinct
+  }
+
+  private def withoutHits(pinned: DataFrame, keyCol: String,
+                          hits: Array[Any]): DataFrame = {
+    val key = pinned(keyCol)
+    if (hits.isEmpty) pinned else pinned.where(key.isNull || !key.isin(hits: _*))
   }
 
   /** Incremental exact dedup: admit only the rows of `batch` whose content
@@ -1140,110 +1173,72 @@ object Dedup {
     * 100 TB the entire point is that daily ingest never re-tokenizes the
     * corpus: the batch joins against stored postings and rescores against
     * stored shingle hashes (~a few hundred longs per document).
-    * [[IndexFormat]] commit-marker ordering: invalidate → data → stamp.
+    * Written under one [[IndexFormat.commit]].
     */
   def buildNearIndex(docs: DataFrame, idCol: String, textCol: String,
                      dir: String, shingleN: Int = 3,
-                     bands: Int = 4, rowsPerBand: Int = 4): Unit = {
-    val spark = docs.sparkSession
-    IndexFormat.invalidate(spark, dir)
-    val shingled = shingledFrame(docs, idCol, textCol, shingleN,
-      bands * rowsPerBand).persist()
-    try {
-      bandedSignatures(shingled, bands, rowsPerBand)
-        .select("band", "bucket", "id")
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/buckets")
-      shingled.select(col("id"), col("__sh").as("sh"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/shingles")
-      IndexFormat.stamp(spark, dir, nearIndexFormat(shingleN, bands, rowsPerBand))
-    } finally {
-      shingled.unpersist(blocking = false)
-      ()
-    }
-  }
+                     bands: Int = 4, rowsPerBand: Int = 4): Unit =
+    writeNearIndex(docs, None, idCol, textCol, dir, shingleN, bands,
+      rowsPerBand, SaveMode.Overwrite)
 
   /** Append `docs` (typically a batch's admitted survivors) to a
     * [[buildNearIndex]] layout, so tomorrow's batch dedups against today's
-    * admissions too. Same commit-marker discipline: the stamp comes off
-    * before the appends and back on after both, so a failure in between
-    * leaves an unstamped index that readers reject, never a half-appended
-    * one they trust.
+    * admissions too. Both appends sit in one [[IndexFormat.commit]], so a
+    * failure between them leaves an unstamped index that readers reject,
+    * never a half-appended one they trust.
     */
   def appendNearIndex(docs: DataFrame, idCol: String, textCol: String,
                       dir: String, shingleN: Int = 3,
                       bands: Int = 4, rowsPerBand: Int = 4): Unit = {
-    val spark = docs.sparkSession
-    IndexFormat.check(spark, dir, nearIndexFormat(shingleN, bands, rowsPerBand))
-    IndexFormat.invalidate(spark, dir)
-    appendNearIndexData(docs, idCol, textCol, dir, shingleN, bands, rowsPerBand)
-  }
-
-  /** The append-and-restamp half of [[appendNearIndex]]: writes the postings
-    * and shingle rows, then stamps. Callers MUST have validated and removed
-    * the stamp first — this exists so [[appendCorpusAndNearIndex]] can pull
-    * the invalidate earlier and stretch the commit marker over the corpus
-    * append too.
-    */
-  private[graft] def appendNearIndexData(docs: DataFrame, idCol: String,
-                                         textCol: String, dir: String,
-                                         shingleN: Int, bands: Int,
-                                         rowsPerBand: Int): Unit = {
-    val spark = docs.sparkSession
-    val shingled = shingledFrame(docs, idCol, textCol, shingleN,
-      bands * rowsPerBand).persist()
-    try {
-      bandedSignatures(shingled, bands, rowsPerBand)
-        .select("band", "bucket", "id")
-        .write.mode(SaveMode.Append).parquet(s"$dir/buckets")
-      shingled.select(col("id"), col("__sh").as("sh"))
-        .write.mode(SaveMode.Append).parquet(s"$dir/shingles")
-      IndexFormat.stamp(spark, dir, nearIndexFormat(shingleN, bands, rowsPerBand))
-    } finally {
-      shingled.unpersist(blocking = false)
-      ()
-    }
+    IndexFormat.check(docs.sparkSession, dir, nearIndexFormat(shingleN, bands, rowsPerBand))
+    writeNearIndex(docs, None, idCol, textCol, dir, shingleN, bands,
+      rowsPerBand, SaveMode.Append)
   }
 
   /** Append admitted `docs` to BOTH the corpus parquet and the signature
-    * index under ONE commit marker: check → invalidate → corpus append →
-    * index append → stamp. The ingest loop's correctness depends on this
-    * ordering: if the corpus append landed while the index was still
+    * index under ONE commit marker. The ingest loop's correctness depends
+    * on it: if the corpus append landed while the index was still
     * stamped, a crash before the index append would leave a valid-looking
     * index that lacks the batch's signatures, and the replayed batch would
     * re-classify its own rows as `admitted` and append them to the corpus a
-    * second time — silent duplication. With the stamp off first, a crash
-    * anywhere in the window leaves an unstamped index that every reader
-    * rejects loudly ([[IndexFormat.check]]) until the operator repairs it.
+    * second time — silent duplication. With the corpus append inside the
+    * window, a crash anywhere in it leaves an unstamped index that every
+    * reader rejects loudly ([[IndexFormat.check]]) until the operator
+    * repairs it.
     */
   def appendCorpusAndNearIndex(docs: DataFrame, corpusPath: String,
                                idCol: String, textCol: String, dir: String,
                                shingleN: Int = 3, bands: Int = 4,
                                rowsPerBand: Int = 4): Unit = {
-    val spark = docs.sparkSession
-    IndexFormat.check(spark, dir, nearIndexFormat(shingleN, bands, rowsPerBand))
-    IndexFormat.invalidate(spark, dir)
-    docs.write.mode(SaveMode.Append).parquet(corpusPath)
-    appendNearIndexData(docs, idCol, textCol, dir, shingleN, bands, rowsPerBand)
+    IndexFormat.check(docs.sparkSession, dir, nearIndexFormat(shingleN, bands, rowsPerBand))
+    writeNearIndex(docs, Some(corpusPath), idCol, textCol, dir, shingleN,
+      bands, rowsPerBand, SaveMode.Append)
   }
 
-  /** Whether `dir` holds ANY near-index state (data dirs, stamp, or
-    * leftover maintenance temp dirs). Branch dispatch for ingest must key
-    * off this, not the `_meta` stamp: the stamp is legitimately absent
-    * mid-append (commit-marker window), and treating that state as "no
-    * index" would route a replay into the bootstrap branch, where
-    * [[buildNearIndex]] OVERWRITES the whole index with just that batch —
-    * silent index destruction. The check is deliberately any-content, not
-    * `buckets/`-specific: a crash inside [[compactNearIndex]]'s swap can
-    * leave a moment with no `buckets/` dir but renamed remnants, and that
-    * state too must reach [[IndexFormat.check]]'s loud failure, never a
-    * fresh bootstrap.
+  /** The one write body of the near family: `docs` appended to `corpus`
+    * (when given), then the postings and shingle rows written in `mode`,
+    * all inside one [[IndexFormat.commit]].
     */
-  def nearIndexDataExists(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
+  private def writeNearIndex(docs: DataFrame, corpus: Option[String],
+                             idCol: String, textCol: String, dir: String,
+                             shingleN: Int, bands: Int, rowsPerBand: Int,
+                             mode: SaveMode): Unit =
+    IndexFormat.commit(docs.sparkSession, dir,
+        nearIndexFormat(shingleN, bands, rowsPerBand)) {
+      corpus.foreach(docs.write.mode(SaveMode.Append).parquet(_))
+      val shingled = shingledFrame(docs, idCol, textCol, shingleN,
+        bands * rowsPerBand).persist()
+      try {
+        bandedSignatures(shingled, bands, rowsPerBand)
+          .select("band", "bucket", "id")
+          .write.mode(mode).parquet(s"$dir/buckets")
+        shingled.select(col("id"), col("__sh").as("sh"))
+          .write.mode(mode).parquet(s"$dir/shingles")
+      } finally {
+        shingled.unpersist(blocking = false)
+        ()
+      }
+    }
 
   /** Compact a [[buildNearIndex]] layout after many [[appendNearIndex]]
     * batches: every daily append adds a few parquet files to `buckets/` and
@@ -1255,10 +1250,10 @@ object Dedup {
     *
     * Crash safety: the expensive rewrites land in hidden `.compact_*` temp
     * dirs while the index stays stamped and readable; only the swap itself
-    * runs inside the commit-marker window (invalidate → rename old out,
-    * new in, delete old → stamp). A crash mid-swap leaves an unstamped dir
-    * with remnants that [[nearIndexDataExists]] still reports as present,
-    * so ingest fails loudly instead of bootstrapping over the corpus.
+    * runs inside the commit-marker window (rename old out, new in, delete
+    * old). A crash mid-swap leaves an unstamped dir with remnants that
+    * [[IndexFormat.dataExists]] still reports as present, so ingest fails
+    * loudly instead of bootstrapping over the corpus.
     */
   def compactNearIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                        shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
@@ -1384,26 +1379,18 @@ object Dedup {
     * same anchors or cells stop meaning the same thing) — and `vectors/`
     * = (cell, id, v) corpus vectors with their cell, stored in the
     * corpus's own element type (float stays float — half the bytes of
-    * double at 100 TB). [[IndexFormat]] commit-marker ordering:
-    * invalidate → data → stamp.
+    * double at 100 TB). Written under one [[IndexFormat.commit]].
     */
   def buildSemanticIndex(docs: DataFrame, idCol: String, vecCol: String,
                          dir: String, k: Int = 64, dim: Int = 64): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val anchors = semanticAnchors(docs, idCol, vecCol, k)
     require(anchors.nonEmpty, "cannot build a semantic index over an empty corpus")
     require(anchors.length == k,
       s"corpus has only ${anchors.length} rows — pass k <= that (got k=$k)")
     require(anchors.forall(_.length == dim),
       s"anchor dimension ${anchors.head.length} != declared dim $dim")
-    IndexFormat.invalidate(spark, dir)
-    anchors.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }.toDF("cell", "v")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/anchors")
-    assignCells(
-        docs.select(col(idCol).as("id"), col(vecCol).as("v")), anchors)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/vectors")
-    IndexFormat.stamp(spark, dir, semanticIndexFormat(k, dim))
+    writeSemanticIndex(docs, None, idCol, vecCol, dir, k, dim, anchors,
+      SaveMode.Overwrite)
   }
 
   /** The stored anchors, in cell order — k rows, the bounded driver-side
@@ -1414,14 +1401,16 @@ object Dedup {
     spark.read.parquet(s"$dir/anchors").orderBy("cell")
       .select("v").collect().map(_.getSeq[Double](0).toArray)
 
-  /** Whether `dir` holds ANY semantic-index state — same any-content
-    * dispatch contract as [[nearIndexDataExists]] (the `_meta` stamp is
-    * legitimately absent mid-append; mid-compaction remnants must reach
-    * [[IndexFormat.check]]'s loud failure, never a fresh bootstrap).
+  /** The anchor count `k` a [[buildSemanticIndex]] layout was stamped
+    * with, parsed from the `_meta` stamp — zero Spark jobs. None when the
+    * stamp is missing or names another format; [[IndexFormat.check]]
+    * reports those states.
     */
-  def semanticIndexDataExists(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): Boolean =
-    nearIndexDataExists(spark, dir)
+  private[graft] def semanticIndexK(spark: org.apache.spark.sql.SparkSession,
+                                    dir: String): Option[Int] = {
+    val Stamp = """sem-cells-v1:k=(\d+),dim=\d+""".r
+    IndexFormat.readFormat(spark, dir).collect { case Stamp(k) => k.toInt }
+  }
 
   /** Incremental semantic dedup: classify a daily `batch` of embeddings
     * against a [[buildSemanticIndex]] corpus. Returns (id, verdict) with
@@ -1486,42 +1475,51 @@ object Dedup {
   /** Append `docs` (a batch's admitted survivors) to a
     * [[buildSemanticIndex]] layout: assign with the STORED anchors (never
     * re-derive — the partition is frozen at build) and append to
-    * `vectors/`. Same commit-marker discipline as [[appendNearIndex]].
+    * `vectors/` under one [[IndexFormat.commit]].
     */
   def appendSemanticIndex(docs: DataFrame, idCol: String, vecCol: String,
                           dir: String, k: Int = 64, dim: Int = 64): Unit = {
     val spark = docs.sparkSession
     IndexFormat.check(spark, dir, semanticIndexFormat(k, dim))
-    val anchors = readSemanticAnchors(spark, dir)
-    IndexFormat.invalidate(spark, dir)
-    appendSemanticIndexData(docs, idCol, vecCol, dir, k, dim, anchors)
-  }
-
-  private def appendSemanticIndexData(docs: DataFrame, idCol: String,
-                                      vecCol: String, dir: String,
-                                      k: Int, dim: Int,
-                                      anchors: Array[Array[Double]]): Unit = {
-    assignCells(
-        docs.select(col(idCol).as("id"), col(vecCol).as("v")), anchors)
-      .write.mode(SaveMode.Append).parquet(s"$dir/vectors")
-    IndexFormat.stamp(docs.sparkSession, dir, semanticIndexFormat(k, dim))
+    writeSemanticIndex(docs, None, idCol, vecCol, dir, k, dim,
+      readSemanticAnchors(spark, dir), SaveMode.Append)
   }
 
   /** Append admitted `docs` to BOTH the corpus parquet and the semantic
-    * index under ONE commit marker — same ordering rationale as
-    * [[appendCorpusAndNearIndex]]: check → read anchors → invalidate →
-    * corpus append → index append → stamp, so a crash anywhere in the
-    * window leaves an unstamped index every reader rejects loudly.
+    * index under ONE commit marker — same rationale as
+    * [[appendCorpusAndNearIndex]]: a crash anywhere in the window leaves
+    * an unstamped index every reader rejects loudly.
     */
   def appendCorpusAndSemanticIndex(docs: DataFrame, corpusPath: String,
                                    idCol: String, vecCol: String, dir: String,
                                    k: Int = 64, dim: Int = 64): Unit = {
     val spark = docs.sparkSession
     IndexFormat.check(spark, dir, semanticIndexFormat(k, dim))
-    val anchors = readSemanticAnchors(spark, dir)
-    IndexFormat.invalidate(spark, dir)
-    docs.write.mode(SaveMode.Append).parquet(corpusPath)
-    appendSemanticIndexData(docs, idCol, vecCol, dir, k, dim, anchors)
+    writeSemanticIndex(docs, Some(corpusPath), idCol, vecCol, dir, k, dim,
+      readSemanticAnchors(spark, dir), SaveMode.Append)
+  }
+
+  /** The one write body of the semantic family, inside one
+    * [[IndexFormat.commit]]: a build (`Overwrite`) freezes `anchors`, an
+    * append reuses the stored ones; `docs` is appended to `corpus` (when
+    * given), then its cell-assigned vectors are written in `mode`.
+    */
+  private def writeSemanticIndex(docs: DataFrame, corpus: Option[String],
+                                 idCol: String, vecCol: String, dir: String,
+                                 k: Int, dim: Int,
+                                 anchors: Array[Array[Double]],
+                                 mode: SaveMode): Unit = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    IndexFormat.commit(spark, dir, semanticIndexFormat(k, dim)) {
+      if (mode == SaveMode.Overwrite)
+        anchors.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }.toDF("cell", "v")
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/anchors")
+      corpus.foreach(docs.write.mode(SaveMode.Append).parquet(_))
+      assignCells(
+          docs.select(col(idCol).as("id"), col(vecCol).as("v")), anchors)
+        .write.mode(mode).parquet(s"$dir/vectors")
+    }
   }
 
   /** Compact `vectors/` after many daily appends (anchors are written

@@ -28,8 +28,9 @@ import org.apache.spark.sql.SparkSession
   * compact) pays 1-3 of them: pure scheduler overhead at any scale, a
   * driver↔cluster round trip per call on a real deployment (guide §5: the
   * driver should do metadata work directly, not via jobs). The commit-
-  * marker semantics are unchanged — stamp LAST, delete FIRST; a torn
-  * stamp reads as missing or as a mismatched string, both loud failures.
+  * marker semantics are unchanged — stamp LAST, delete FIRST ([[commit]]);
+  * a torn stamp reads as missing or as a mismatched string, both loud
+  * failures.
   */
 object IndexFormat {
 
@@ -39,15 +40,50 @@ object IndexFormat {
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Stamp `path/_meta` with this index's format id (overwrite-safe).
+  /** Write an index's data under the commit marker: [[invalidate]] →
+    * `write` → [[stamp]]. Every persisted-index writer goes through this
+    * one window; none orders the two calls itself.
     *
-    * Ordering contract: the stamp is a COMMIT MARKER, not a label —
-    * writers must [[invalidate]] first, write every data dir, and stamp
-    * LAST. A stamp written before the data would validate a partially
-    * (re)written index: a failure after the stamp but before the data
-    * dirs finish leaves a current-format `_meta` over stale or
-    * mixed-generation data, and [[check]] would wave the exact mis-ranking
-    * through that it exists to stop.
+    * The contract:
+    *  - Delete first. An in-place (re)write that dies anywhere in `write`
+    *    leaves an UNSTAMPED index that [[check]] rejects, never a
+    *    validly-stamped mix of old and new generations.
+    *  - Stamp last. A stamp written before the data would validate a
+    *    partially (re)written index: a failure after it leaves a
+    *    current-format `_meta` over stale or mixed-generation data, and
+    *    [[check]] would wave through the exact mis-ranking it exists to
+    *    stop.
+    *  - Only the writes go inside. [[check]], reads of stored anchors,
+    *    centroids or codebooks, the planning of assignments and encodes,
+    *    and argument `require`s run BEFORE the call, so a malformed batch
+    *    fails with the index still stamped and readable. Everything that
+    *    must land together (a corpus append and its index append) goes in
+    *    one `write`.
+    */
+  def commit(spark: SparkSession, path: String, format: String)(write: => Unit): Unit = {
+    invalidate(spark, path)
+    write
+    stamp(spark, path, format)
+  }
+
+  /** Whether `path` holds ANY index state: data dirs, a stamp, or leftover
+    * maintenance temp dirs. Ingest dispatch keys off this, never the
+    * stamp: the stamp is legitimately absent inside a [[commit]] window,
+    * and reading that state as "no index" would route a replay into the
+    * bootstrap branch, which OVERWRITES the index with one batch. The
+    * probe is any-content, not data-dir-specific, because a crash inside
+    * a compaction swap ([[IndexMaintenance]]) can leave a moment with no
+    * data dir but renamed remnants, and that state too must reach
+    * [[check]]'s loud failure, never a fresh bootstrap.
+    */
+  def dataExists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = fsOf(spark, p)
+    fs.exists(p) && fs.listStatus(p).nonEmpty
+  }
+
+  /** Stamp `path/_meta` with this index's format id (overwrite-safe) —
+    * the last step of [[commit]].
     */
   def stamp(spark: SparkSession, path: String, format: String): Unit = {
     val p = metaFile(path)
@@ -58,15 +94,10 @@ object IndexFormat {
     try out.write(format.getBytes(UTF_8)) finally out.close()
   }
 
-  /** Remove `path/_meta` (no-op if absent) — the first step of every index
-    * (re)write, so an in-place rewrite that dies mid-data leaves an
-    * UNSTAMPED index that [[check]] rejects, never a validly-stamped mix
-    * of old and new generations.
-    */
+  /** Remove `path/_meta` (no-op if absent) — the first step of [[commit]]. */
   def invalidate(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
+    fsOf(spark, p).delete(p, true)
     ()
   }
 

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions.col
   *
   * Crash safety contract (same as [[Dedup.compactNearIndex]], which
   * delegates here): rewrites land in hidden `.compact_*` siblings while
-  * the index stays stamped and readable; then invalidate → swap → stamp.
+  * the index stays stamped and readable; then the swap runs inside one
+  * [[IndexFormat.commit]].
   * A crash mid-swap leaves an unstamped root with remnants that
   * data-presence dispatch still reports as an index, so ingest fails
   * loudly instead of bootstrapping over it; readers reject via
@@ -48,7 +49,7 @@ object IndexMaintenance {
     * small side by nature — it broadcasts, the index streams), and
     * rewritten into evenly-sized files with the expensive rewrite OUTSIDE
     * the commit-marker window, exactly like [[compactStamped]] (same
-    * `.compact_*` staging, same invalidate → swap → stamp, same crash
+    * `.compact_*` staging, same swap inside the commit, same crash
     * behavior). Partitioned layouts keep their partitioning, so IVF probe
     * pruning survives a delete.
     *
@@ -78,7 +79,8 @@ object IndexMaintenance {
 
   /** The generalized stamped rewrite both passes above share: stage each
     * subdir's transformed frame in a hidden `.compact_*` sibling while the
-    * index stays stamped and readable, then invalidate → swap → stamp.
+    * index stays stamped and readable, then swap inside one
+    * [[IndexFormat.commit]].
     * `xform(sub, df)` maps a subdir's current content to its replacement —
     * callers with cross-subdir derived state (e.g. [[SearchIndex.delete]]
     * recomputing corpus stats from the filtered doc ledger) build their
@@ -113,14 +115,14 @@ object IndexMaintenance {
           .partitionBy(parts: _*)
           .parquet(s"$root/.compact_$sub")
     }
-    IndexFormat.invalidate(spark, root)
-    subs.foreach { case (sub, _) =>
-      fs.delete(p(s".old_$sub"), true)
-      require(fs.rename(p(sub), p(s".old_$sub")), s"rename $sub -> .old_$sub failed")
-      require(fs.rename(p(s".compact_$sub"), p(sub)), s"rename .compact_$sub -> $sub failed")
-      fs.delete(p(s".old_$sub"), true)
+    IndexFormat.commit(spark, root, formatId) {
+      subs.foreach { case (sub, _) =>
+        fs.delete(p(s".old_$sub"), true)
+        require(fs.rename(p(sub), p(s".old_$sub")), s"rename $sub -> .old_$sub failed")
+        require(fs.rename(p(s".compact_$sub"), p(sub)), s"rename .compact_$sub -> $sub failed")
+        fs.delete(p(s".old_$sub"), true)
+      }
     }
-    IndexFormat.stamp(spark, root, formatId)
   }
 
   private def unchanged(sub: String, df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = df

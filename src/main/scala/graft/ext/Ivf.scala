@@ -80,18 +80,26 @@ object Ivf {
     */
   def writeIndex(index: Index, path: String): Unit = {
     val spark = index.assigned.sparkSession
-    IndexFormat.invalidate(spark, path)
-    index.assigned.write.mode(SaveMode.Overwrite)
-      .partitionBy("list_id").parquet(s"$path/assigned")
+    IndexFormat.commit(spark, path, FormatId) {
+      index.assigned.write.mode(SaveMode.Overwrite)
+        .partitionBy("list_id").parquet(s"$path/assigned")
+      writeCentroidTable(spark, path, index.centroids)
+    }
+  }
+
+  /** Write `path/centroids` (list_id, centroid) plus its FS-direct
+    * [[TinyTable]] mirror of the same array: readers skip the 2-job
+    * parquet read; the parquet stays canonical for the oracle. Shared
+    * with [[IvfPq.writeIndex]].
+    */
+  private[ext] def writeCentroidTable(spark: SparkSession, path: String,
+                                      centroids: Array[Array[Double]]): Unit = {
     import spark.implicits._
-    index.centroids.zipWithIndex
+    centroids.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("list_id", "centroid")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    // FS-direct mirror of the same array (see TinyTable): readers skip the
-    // 2-job parquet read; the parquet above stays canonical for the oracle
-    TinyTable.writeCentroids(spark, s"$path/centroids", index.centroids)
-    IndexFormat.stamp(spark, path, FormatId)
+    TinyTable.writeCentroids(spark, s"$path/centroids", centroids)
   }
 
   /** Centroid table of a persisted index: the [[TinyTable]] sidecar when
@@ -165,55 +173,43 @@ object Ivf {
     * when the data distribution does, which is a rebuild decision, not an
     * append one (same trade as FAISS's add-after-train).
     *
-    * Commit-marker ordering ([[IndexFormat]]): the stamp comes off before
-    * the assignment append and back on after, so a torn append leaves an
-    * unstamped index every reader rejects, never a silently partial cell.
+    * The assignment append sits in one [[IndexFormat.commit]], so a torn
+    * append leaves an unstamped index every reader rejects, never a
+    * silently partial cell.
     */
   def appendIndex(spark: SparkSession, path: String, newVecs: DataFrame,
-                  idCol: String, vecCol: String): Unit = {
-    IndexFormat.check(spark, path, FormatId)
-    val centroids = readCentroidTable(spark, path)
-    val assigned = assignCells(newVecs, idCol, vecCol, centroids)
-    IndexFormat.invalidate(spark, path)
-    assigned.write.mode(SaveMode.Append)
-      .partitionBy("list_id").parquet(s"$path/assigned")
-    IndexFormat.stamp(spark, path, FormatId)
-  }
+                  idCol: String, vecCol: String): Unit =
+    appendAssigned(spark, path, newVecs, None, idCol, vecCol)
 
   /** Append admitted vectors to BOTH a corpus parquet and the persisted
-    * index under ONE commit marker: check → assign → invalidate → corpus
-    * append → assignment append → stamp — the same marker-covers-both
-    * ordering as [[Dedup.appendCorpusAndNearIndex]], and for the same
-    * reason: if the corpus append landed while the index was still
-    * stamped, a crash before the index append would leave a valid-looking
-    * index missing the batch, and an id-anti-join ingest loop would
-    * re-admit nothing (ids are in the corpus) while searches silently miss
-    * the batch forever. With the stamp off first, any crash in the window
-    * fails every reader loudly until repaired.
+    * index under ONE commit marker — the same marker-covers-both shape as
+    * [[Dedup.appendCorpusAndNearIndex]], and for the same reason: if the
+    * corpus append landed while the index was still stamped, a crash
+    * before the index append would leave a valid-looking index missing
+    * the batch, and an id-anti-join ingest loop would re-admit nothing
+    * (ids are in the corpus) while searches silently miss the batch
+    * forever. With both inside the window, any crash in it fails every
+    * reader loudly until repaired.
     */
   def appendCorpusAndIndex(docs: DataFrame, corpusPath: String,
                            idCol: String, vecCol: String,
-                           dir: String): Unit = {
-    val spark = docs.sparkSession
-    IndexFormat.check(spark, dir, FormatId)
-    val centroids = readCentroidTable(spark, dir)
-    val assigned = assignCells(docs, idCol, vecCol, centroids)
-    IndexFormat.invalidate(spark, dir)
-    docs.write.mode(SaveMode.Append).parquet(corpusPath)
-    assigned.write.mode(SaveMode.Append)
-      .partitionBy("list_id").parquet(s"$dir/assigned")
-    IndexFormat.stamp(spark, dir, FormatId)
-  }
+                           dir: String): Unit =
+    appendAssigned(docs.sparkSession, dir, docs, Some(corpusPath), idCol, vecCol)
 
-  /** Whether `dir` holds ANY IVF index state — same any-content dispatch
-    * contract as [[Dedup.nearIndexDataExists]], for the same reason: a
-    * mid-maintenance crash can leave remnants without `assigned/`, and
-    * that state must fail loudly, never re-bootstrap over a corpus.
+  /** The one append body: check and assign against the stored centroids
+    * before the window, then append `docs` to `corpus` (when given) and
+    * the assignment to its cells inside one [[IndexFormat.commit]].
     */
-  def indexDataExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
+  private def appendAssigned(spark: SparkSession, dir: String, docs: DataFrame,
+                             corpus: Option[String], idCol: String,
+                             vecCol: String): Unit = {
+    IndexFormat.check(spark, dir, FormatId)
+    val assigned = assignCells(docs, idCol, vecCol, readCentroidTable(spark, dir))
+    IndexFormat.commit(spark, dir, FormatId) {
+      corpus.foreach(docs.write.mode(SaveMode.Append).parquet(_))
+      assigned.write.mode(SaveMode.Append)
+        .partitionBy("list_id").parquet(s"$dir/assigned")
+    }
   }
 
   /** Rewrite the appended `assigned/` layout into one evenly-rolled file

@@ -122,26 +122,12 @@ object IvfPq {
     */
   def writeIndex(index: Index, path: String): Unit = {
     val spark = index.codes.sparkSession
-    // invalidate → data → stamp: the stamp is a commit marker (see
-    // IndexFormat.stamp's ordering contract), so a rewrite that dies
-    // mid-data leaves an index check() rejects, never a stamped mix
-    IndexFormat.invalidate(spark, path)
-    index.codes.write.mode(SaveMode.Overwrite)
-      .partitionBy("list_id").parquet(s"$path/codes")
-    import spark.implicits._
-    index.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    index.cb.books.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (c, ci) => (j, ci, c.toSeq) }
-    }.toSeq.toDF("subspace", "code", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/codebooks")
-    // FS-direct mirrors (TinyTable): readIndex skips 4 Spark jobs; the
-    // parquet tables above stay canonical for the DuckDB oracle
-    TinyTable.writeCentroids(spark, s"$path/centroids", index.centroids)
-    TinyTable.writeCodebooks(spark, s"$path/codebooks", index.cb.books)
-    IndexFormat.stamp(spark, path, FormatId)
+    IndexFormat.commit(spark, path, FormatId) {
+      index.codes.write.mode(SaveMode.Overwrite)
+        .partitionBy("list_id").parquet(s"$path/codes")
+      Ivf.writeCentroidTable(spark, path, index.centroids)
+      Pq.writeCodebookTable(spark, path, index.cb.books)
+    }
   }
 
   /** Reload: codes stay a lazy partition-pruned scan; only the two tiny
@@ -153,22 +139,10 @@ object IvfPq {
   def readIndex(spark: SparkSession, path: String): Index = {
     IndexFormat.check(spark, path, FormatId)
     val codes = spark.read.parquet(s"$path/codes")
-    // sidecar fast path (TinyTable — zero Spark jobs), parquet fallback
+    // sidecar fast paths (TinyTable — zero Spark jobs), parquet fallback
     // for pre-sidecar indexes; both sort identically
-    val centroids = Ivf.readCentroidTable(spark, path)
-    val books = TinyTable.readCodebooks(spark, s"$path/codebooks").getOrElse {
-      val rows = spark.read.parquet(s"$path/codebooks")
-        .select("subspace", "code", "centroid").collect()
-      require(rows.nonEmpty, s"no codebooks at $path/codebooks")
-      val m = rows.map(_.getInt(0)).max + 1
-      val nCodes = rows.map(_.getInt(1)).max + 1
-      val bs = Array.ofDim[Array[Double]](m, nCodes)
-      rows.foreach(r => bs(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-      require(bs.forall(_.forall(_ != null)),
-        s"codebooks at $path are not a dense $m x $nCodes table")
-      bs
-    }
-    Index(codes, centroids, Pq.Codebooks(books))
+    Index(codes, Ivf.readCentroidTable(spark, path),
+      Pq.Codebooks(Pq.readCodebookTable(spark, path)))
   }
 
   /** Append new vectors to a [[writeIndex]]-persisted index without
@@ -183,11 +157,10 @@ object IvfPq {
     * data distribution is a REBUILD decision (same trade as FAISS
     * add-after-train), not an append one.
     *
-    * Commit-marker ordering ([[IndexFormat]]): stamp off → codes append →
-    * stamp on; a torn append leaves an unstamped index every reader
-    * rejects. Assignment + encode are planned (and eagerly analyzed)
-    * BEFORE the marker comes off, so a malformed batch fails with the
-    * index still stamped and readable.
+    * The codes append sits in one [[IndexFormat.commit]]; a torn append
+    * leaves an unstamped index every reader rejects. Assignment + encode
+    * are planned (and eagerly analyzed) BEFORE the window, so a malformed
+    * batch fails with the index still stamped and readable.
     */
   /** Rewrite the appended `codes/` layout into one evenly-rolled file set
     * per cell (partition pruning preserved, search results unchanged; see
@@ -214,10 +187,10 @@ object IvfPq {
     val withRes = withResidual(assigned, vecCol, idx.centroids)
     val encoded = Pq.encode(withRes, idCol, "__residual", idx.cb,
       keep = Seq("list_id"))
-    IndexFormat.invalidate(spark, path)
-    encoded.write.mode(SaveMode.Append)
-      .partitionBy("list_id").parquet(s"$path/codes")
-    IndexFormat.stamp(spark, path, FormatId)
+    IndexFormat.commit(spark, path, FormatId) {
+      encoded.write.mode(SaveMode.Append)
+        .partitionBy("list_id").parquet(s"$path/codes")
+    }
   }
 
   /** Single-query IVF-PQ: probe the `nProbe` nearest cells (driver math

@@ -177,9 +177,9 @@ object Lm {
   // Persisted model artifact
   // ---------------------------------------------------------------------
 
-  /** Format stamp for persisted unigram models (same [[IndexFormat]]
-    * commit-marker discipline as every stamped index family: invalidate →
-    * data → stamp, so a torn write is rejected loudly by [[readModel]]).
+  /** Format stamp for persisted unigram models (written under
+    * [[IndexFormat.commit]], so a torn write is rejected loudly by
+    * [[readModel]]).
     */
   val FormatId = "unigram-lm-v1"
 
@@ -191,9 +191,9 @@ object Lm {
     * smoothing constants for marginal gain.
     */
   def writeModel(spark: SparkSession, model: DataFrame, dir: String): Unit = {
-    IndexFormat.invalidate(spark, dir)
-    model.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/vocab")
-    IndexFormat.stamp(spark, dir, FormatId)
+    IndexFormat.commit(spark, dir, FormatId) {
+      model.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/vocab")
+    }
   }
 
   /** Read a stamped model for [[scoreUnigram]] / [[pplBuckets]]. Fails
@@ -317,16 +317,15 @@ object Lm {
   /** Format stamp for persisted bigram models. */
   val BigramFormatId = "bigram-lm-v1"
 
-  /** Persist a [[BigramLm]] under `dir/{vocab,bigrams}` with one `_meta`
-    * stamp over both tables (invalidate → data → stamp — a torn write is
-    * rejected loudly by [[readBigramModel]]).
+  /** Persist a [[BigramLm]] under `dir/{vocab,bigrams}` with one
+    * [[IndexFormat.commit]] over both tables (a torn write is rejected
+    * loudly by [[readBigramModel]]).
     */
-  def writeBigramModel(spark: SparkSession, model: BigramLm, dir: String): Unit = {
-    IndexFormat.invalidate(spark, dir)
-    model.unigram.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/vocab")
-    model.bigram.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/bigrams")
-    IndexFormat.stamp(spark, dir, BigramFormatId)
-  }
+  def writeBigramModel(spark: SparkSession, model: BigramLm, dir: String): Unit =
+    IndexFormat.commit(spark, dir, BigramFormatId) {
+      model.unigram.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/vocab")
+      model.bigram.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/bigrams")
+    }
 
   /** Read a stamped bigram model for [[scoreBigram]]. */
   def readBigramModel(spark: SparkSession, dir: String): BigramLm = {

@@ -237,27 +237,53 @@ object Pq {
     */
   def writeIndex(codes: DataFrame, cb: Codebooks, path: String): Unit = {
     val spark = codes.sparkSession
-    // invalidate → data → stamp: the stamp is a commit marker (see
-    // IndexFormat.stamp's ordering contract), so a rewrite that dies
-    // mid-data leaves an index check() rejects, never a stamped mix
-    IndexFormat.invalidate(spark, path)
-    writeCodes(codes, s"$path/codes")
+    IndexFormat.commit(spark, path, FormatId) {
+      writeCodes(codes, s"$path/codes")
+      writeCodebookTable(spark, path, cb.books)
+    }
+  }
+
+  /** Write `path/codebooks` (subspace, code, centroid) plus its FS-direct
+    * [[TinyTable]] mirror: [[readCodebookTable]] skips the 2-job parquet
+    * read; the parquet stays canonical for the DuckDB oracle. Shared with
+    * [[IvfPq.writeIndex]].
+    */
+  private[ext] def writeCodebookTable(spark: org.apache.spark.sql.SparkSession,
+                                      path: String,
+                                      books: Array[Array[Array[Double]]]): Unit = {
     import spark.implicits._
-    cb.books.zipWithIndex.flatMap { case (book, j) =>
+    books.zipWithIndex.flatMap { case (book, j) =>
       book.zipWithIndex.map { case (c, ci) => (j, ci, c.toSeq) }
     }.toSeq.toDF("subspace", "code", "centroid")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/codebooks")
-    // FS-direct mirror (TinyTable): readIndex skips the 2-job parquet
-    // read; the parquet above stays canonical for the DuckDB oracle
-    TinyTable.writeCodebooks(spark, s"$path/codebooks", cb.books)
-    IndexFormat.stamp(spark, path, FormatId)
+    TinyTable.writeCodebooks(spark, s"$path/codebooks", books)
   }
+
+  /** The codebooks under `path`: the [[TinyTable]] sidecar (zero Spark
+    * jobs), else the canonical parquet for pre-sidecar indexes.
+    */
+  private[ext] def readCodebookTable(spark: org.apache.spark.sql.SparkSession,
+                                     path: String): Array[Array[Array[Double]]] =
+    TinyTable.readCodebooks(spark, s"$path/codebooks").getOrElse {
+      val rows = spark.read.parquet(s"$path/codebooks")
+        .select("subspace", "code", "centroid").collect()
+      require(rows.nonEmpty, s"no codebooks at $path/codebooks")
+      val m = rows.map(_.getInt(0)).max + 1
+      val nCodes = rows.map(_.getInt(1)).max + 1
+      val bs = Array.ofDim[Array[Double]](m, nCodes)
+      rows.foreach { r =>
+        bs(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
+      }
+      require(bs.forall(_.forall(_ != null)),
+        s"codebooks at $path are not a dense $m x $nCodes table")
+      bs
+    }
 
   /** Append new vectors to a [[writeIndex]]-persisted index: encode with
     * the EXISTING codebooks (no retrain — the trade every add-after-train
     * index makes; re-fit is a rebuild decision) and append to the code
-    * table under the [[IndexFormat]] commit marker. Encoding is planned
-    * (eagerly analyzed) before the stamp comes off, so a malformed batch
+    * table under one [[IndexFormat.commit]]. Encoding is planned
+    * (eagerly analyzed) before the window, so a malformed batch
     * fails with the index still readable; a torn append leaves it
     * unstamped and rejected by every reader. A verbatim copy of an
     * indexed vector encodes to the identical code, so append-then-search
@@ -267,9 +293,9 @@ object Pq {
                   newVecs: DataFrame, idCol: String, vecCol: String): Unit = {
     val (_, cb) = readIndex(spark, path)
     val encoded = encode(newVecs, idCol, vecCol, cb)
-    IndexFormat.invalidate(spark, path)
-    encoded.write.mode(SaveMode.Append).parquet(s"$path/codes")
-    IndexFormat.stamp(spark, path, FormatId)
+    IndexFormat.commit(spark, path, FormatId) {
+      encoded.write.mode(SaveMode.Append).parquet(s"$path/codes")
+    }
   }
 
   /** Rewrite the appended code table into evenly-rolled files (search
@@ -298,24 +324,7 @@ object Pq {
   def readIndex(spark: org.apache.spark.sql.SparkSession,
                 path: String): (DataFrame, Codebooks) = {
     IndexFormat.check(spark, path, FormatId)
-    val codes = spark.read.parquet(s"$path/codes")
-    // sidecar fast path (TinyTable — zero Spark jobs), parquet fallback
-    // for pre-sidecar indexes
-    val books = TinyTable.readCodebooks(spark, s"$path/codebooks").getOrElse {
-      val rows = spark.read.parquet(s"$path/codebooks")
-        .select("subspace", "code", "centroid").collect()
-      require(rows.nonEmpty, s"no codebooks at $path/codebooks")
-      val m = rows.map(_.getInt(0)).max + 1
-      val nCodes = rows.map(_.getInt(1)).max + 1
-      val bs = Array.ofDim[Array[Double]](m, nCodes)
-      rows.foreach { r =>
-        bs(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
-      }
-      require(bs.forall(_.forall(_ != null)),
-        s"codebooks at $path are not a dense $m x $nCodes table")
-      bs
-    }
-    (codes, Codebooks(books))
+    (spark.read.parquet(s"$path/codes"), Codebooks(readCodebookTable(spark, path)))
   }
 
   /** ADC top-k: nearest `k` corpus codes to the FULL-PRECISION `queryVec`

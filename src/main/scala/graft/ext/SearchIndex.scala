@@ -28,10 +28,10 @@ import org.apache.spark.sql.functions._
   *     append): query-time corpus stats are a sum over O(segments) rows,
   *     so appends never rewrite global state.
   *
-  * Write discipline (same commit-marker contract as
-  * [[Dedup.appendNearIndex]]): invalidate the stamp, write every data dir,
-  * stamp last. A torn build/append leaves an unstamped index that every
-  * reader rejects loudly instead of scoring against mixed generations.
+  * Write discipline: every build and append goes through one
+  * [[IndexFormat.commit]], so a torn build/append leaves an unstamped index
+  * that every reader rejects loudly instead of scoring against mixed
+  * generations.
   *
   * Reference anchor: the reference has no search tier — this extends the
   * engine the same way the ANN/dedup indexes do, per the training-data
@@ -89,14 +89,7 @@ object SearchIndex {
   def build(docs: DataFrame, idCol: String, textCol: String, dir: String,
             nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
-    val spark = docs.sparkSession
-    val base = baseOf(docs, idCol, textCol)
-    IndexFormat.invalidate(spark, dir)
-    postingsOf(base, nBuckets).write.mode(SaveMode.Overwrite)
-      .partitionBy("bkt").parquet(s"$dir/postings")
-    base.select("id", "dl").write.mode(SaveMode.Overwrite).parquet(s"$dir/docs")
-    statsOf(base).write.mode(SaveMode.Overwrite).parquet(s"$dir/stats")
-    IndexFormat.stamp(spark, dir, formatId(nBuckets))
+    write(docs, idCol, textCol, dir, nBuckets, SaveMode.Overwrite)
   }
 
   /** Append a batch of NEW documents (ids not already indexed — callers
@@ -107,27 +100,23 @@ object SearchIndex {
     * readers and the next ingest batch reject loudly.
     */
   def append(docs: DataFrame, idCol: String, textCol: String,
-             dir: String): Unit = {
-    val spark = docs.sparkSession
-    val nBuckets = readNBuckets(spark, dir)
-    val base = baseOf(docs, idCol, textCol)
-    IndexFormat.invalidate(spark, dir)
-    postingsOf(base, nBuckets).write.mode(SaveMode.Append)
-      .partitionBy("bkt").parquet(s"$dir/postings")
-    base.select("id", "dl").write.mode(SaveMode.Append).parquet(s"$dir/docs")
-    statsOf(base).write.mode(SaveMode.Append).parquet(s"$dir/stats")
-    IndexFormat.stamp(spark, dir, formatId(nBuckets))
-  }
+             dir: String): Unit =
+    write(docs, idCol, textCol, dir, readNBuckets(docs.sparkSession, dir),
+      SaveMode.Append)
 
-  /** Whether `dir` holds ANY index state — the same any-content dispatch
-    * contract as [[Dedup.nearIndexDataExists]]: mid-maintenance remnants
-    * must read as "present" so ingest fails loudly instead of
-    * bootstrapping over them.
+  /** The one write body of [[build]] and [[append]]: tokenize once
+    * (pinned before the window), then write postings, docs and one stats
+    * segment in `mode` inside one [[IndexFormat.commit]].
     */
-  def indexDataExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
+  private def write(docs: DataFrame, idCol: String, textCol: String,
+                    dir: String, nBuckets: Int, mode: SaveMode): Unit = {
+    val base = baseOf(docs, idCol, textCol)
+    IndexFormat.commit(docs.sparkSession, dir, formatId(nBuckets)) {
+      postingsOf(base, nBuckets).write.mode(mode)
+        .partitionBy("bkt").parquet(s"$dir/postings")
+      base.select("id", "dl").write.mode(mode).parquet(s"$dir/docs")
+      statsOf(base).write.mode(mode).parquet(s"$dir/stats")
+    }
   }
 
   /** Roll up append-accreted small files ([[IndexMaintenance]]): postings

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -271,8 +271,8 @@ object Streams {
     *
     * Crash discipline matches the other persisted-index ingests: bootstrap
     * dispatch keys off DATA presence (not the stamp); appends run inside
-    * one commit-marker window over corpus + bitmap (invalidate → append →
-    * OR-write → restamp), so a torn append fails the replay loudly via
+    * one [[graft.ext.IndexFormat.commit]] over corpus + bitmap (append →
+    * OR-write), so a torn append fails the replay loudly via
     * [[graft.ext.IndexFormat.check]] instead of double-ingesting or
     * silently dropping. A replayed COMMITTED batch re-tests against a
     * bitmap that already holds its bits, admits nothing, and appends
@@ -288,14 +288,14 @@ object Streams {
       val bitsPath = s"$bloomDir/bits"
       val fresh = graft.ext.Dedup.exact(batch, Seq(textCol), idCol)
         .localCheckpoint(true)
-      if (!graft.ext.Dedup.nearIndexDataExists(spark, bloomDir)) {
+      if (!graft.ext.IndexFormat.dataExists(spark, bloomDir)) {
         // bootstrap: a replay overwrites identical content (corpusPath
         // belongs to this ingest), then the stamp commits the bitmap
-        fresh.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(corpusPath)
-        graft.ext.Bloom.writeBits(spark, bitsPath,
-          graft.ext.Bloom.build(fresh, textCol, k, mBits))
-        graft.ext.IndexFormat.stamp(spark, bloomDir, fmt)
+        graft.ext.IndexFormat.commit(spark, bloomDir, fmt) {
+          fresh.write.mode(SaveMode.Overwrite).parquet(corpusPath)
+          graft.ext.Bloom.writeBits(spark, bitsPath,
+            graft.ext.Bloom.build(fresh, textCol, k, mBits))
+        }
       } else {
         graft.ext.IndexFormat.check(spark, bloomDir, fmt)
         val bits = graft.ext.Bloom.readBits(spark, bitsPath)
@@ -309,13 +309,10 @@ object Streams {
             .filter(!org.apache.spark.sql.functions.col("maybe_dup"))
             .drop("maybe_dup").localCheckpoint(true)
           finally bc.destroy()
-        if (!admitted.isEmpty) {
-          graft.ext.IndexFormat.invalidate(spark, bloomDir)
-          admitted.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(corpusPath)
+        if (!admitted.isEmpty) graft.ext.IndexFormat.commit(spark, bloomDir, fmt) {
+          admitted.write.mode(SaveMode.Append).parquet(corpusPath)
           graft.ext.Bloom.writeBits(spark, bitsPath, graft.ext.Bloom.orInto(
             bits, graft.ext.Bloom.build(admitted, textCol, k, mBits)))
-          graft.ext.IndexFormat.stamp(spark, bloomDir, fmt)
         }
       }
     }
@@ -333,21 +330,14 @@ object Streams {
     * `corpusPath` WITH their dhash; their signatures append to the index
     * so the NEXT batch dedups against them too.
     *
-    * Exactly-once discipline, mirroring [[ingestNearDedup]]:
-    *  - branch dispatch keys off signature DATA presence, never the stamp;
-    *  - bootstrap writes corpus with Overwrite (a replayed bootstrap
-    *    rewrites identical content — `corpusPath` belongs to this ingest);
-    *  - incremental appends run inside one commit-marker window over
-    *    corpus + signatures (invalidate → append both → restamp), so a
-    *    torn append fails the next batch loudly via
-    *    [[graft.ext.IndexFormat.check]];
-    *  - a replayed COMMITTED batch re-classifies its own rows as dups
-    *    (their hashes are in the index, Hamming 0 ≤ maxDist) and appends
-    *    nothing;
-    *  - quarantine writes go to `quarantinePath/batch_id=N` with
-    *    Overwrite — a replay rewrites the same partition instead of
-    *    double-appending, and the write is O(batch) with no scan of the
-    *    existing quarantine.
+    * Exactly-once discipline, mirroring [[ingestNearDedup]], is the step
+    * the five quarantining ingests share (`quarantineAndAdmit`):
+    * data-presence dispatch, an Overwrite bootstrap deferred past an
+    * all-quarantined first batch, one [[graft.ext.IndexFormat.commit]] over
+    * corpus + signatures, and quarantine partitions Overwritten per batch
+    * id. A replayed COMMITTED batch re-classifies its own rows as dups
+    * (their hashes are in the index, Hamming 0 ≤ maxDist) and appends
+    * nothing.
     *
     * Upgrade note (applies to every ingest's quarantine): the quarantine
     * schema has evolved (payload column added; WARC/PDF column order
@@ -385,44 +375,68 @@ object Streams {
       val sigsPath = s"$indexDir/sigs"
       val decoded = graft.ext.Media
         .decodeImageMetaLenient(batch, idCol, contentCol).localCheckpoint(true)
-      decoded.filter(!org.apache.spark.sql.functions.col("decode_ok"))
-        .select(col(idCol), col(contentCol), col("decode_err"), col("mime"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$quarantinePath/batch_id=$batchId")
       val good = decoded.filter(col("decode_ok"))
         .select(col(idCol), col(contentCol), col("dhash"))
       // in-batch representatives: drop the larger id of every near pair
       val losers = graft.ext.Media
         .dhashNearPairs(good, idCol, "dhash", maxDist, bandBits)
         .select(col("right_id").as(idCol))
-      val reps = good.join(losers, Seq(idCol), "left_anti")
-      if (!graft.ext.Dedup.nearIndexDataExists(spark, sigsPath)) {
-        val kept = reps.localCheckpoint(true)
-        // an all-quarantined first batch must NOT bootstrap: an empty
-        // write would leave a schema-less sigs dir the next batch cannot
-        // read — bootstrap waits for the first decodable batch
-        if (!kept.isEmpty) {
-          kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(corpusPath)
-          kept.select(col(idCol), col("dhash"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sigsPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      } else {
-        graft.ext.IndexFormat.check(spark, indexDir, fmt)
-        val dups = graft.ext.Media.dhashDupIds(reps, idCol, "dhash",
-          spark.read.parquet(sigsPath), "dhash", maxDist, bandBits)
-        val admitted = reps.join(dups, Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-        if (!admitted.isEmpty) {
-          graft.ext.IndexFormat.invalidate(spark, indexDir)
-          admitted.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(corpusPath)
-          admitted.select(col(idCol), col("dhash"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sigsPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      }
+      quarantineAndAdmit(batchId, quarantinePath,
+        decoded.filter(!col("decode_ok"))
+          .select(col(idCol), col(contentCol), col("decode_err"), col("mime")),
+        good.join(losers, Seq(idCol), "left_anti"), sigsPath, indexDir, fmt)(
+        reps => reps.join(graft.ext.Media.dhashDupIds(reps, idCol, "dhash",
+            spark.read.parquet(sigsPath), "dhash", maxDist, bandBits),
+          Seq(idCol), "left_anti").localCheckpoint(true),
+        (rows, mode) => {
+          rows.write.mode(mode).parquet(corpusPath)
+          rows.select(col(idCol), col("dhash")).write.mode(mode).parquet(sigsPath)
+        })
     }
+
+  /** The bootstrap-or-admit step the five quarantining ingests share
+    * ([[ingestImageDedupBatch]], [[ingestAudioDedupBatch]],
+    * [[ingestVideoDedupBatch]], [[ingestWarcBatch]], [[ingestPdfBatch]]):
+    *  - `quarantine` is written to `quarantinePath/batch_id=N` with
+    *    Overwrite — a replay rewrites the same partition instead of
+    *    double-appending, O(batch), no scan of the existing quarantine;
+    *  - dispatch keys off DATA presence at `dataPath`
+    *    ([[graft.ext.IndexFormat.dataExists]]), never the stamp;
+    *  - bootstrap: `candidates` are pinned and, unless empty, written with
+    *    Overwrite (a replayed bootstrap rewrites identical content —
+    *    `corpusPath` belongs to the ingest). An all-quarantined first
+    *    batch must NOT bootstrap: an empty write would leave a schema-less
+    *    data dir the next batch cannot read, so bootstrap waits for the
+    *    first healthy batch;
+    *  - otherwise: [[graft.ext.IndexFormat.check]], then `admit` (which
+    *    returns the admitted rows PINNED, so the emptiness test and the
+    *    writes never re-run the probe), then, unless nothing was admitted,
+    *    an Append of corpus and index;
+    *  - both writes go through `write(rows, mode)` inside one
+    *    [[graft.ext.IndexFormat.commit]] at `indexDir`, so a torn append
+    *    fails the next batch loudly, and a replayed COMMITTED batch
+    *    re-classifies its own rows as dups and appends nothing.
+    */
+  private def quarantineAndAdmit(batchId: Long, quarantinePath: String,
+                                 quarantine: DataFrame, candidates: DataFrame,
+                                 dataPath: String, indexDir: String,
+                                 fmt: String)(
+      admit: DataFrame => DataFrame,
+      write: (DataFrame, SaveMode) => Unit): Unit = {
+    val spark = candidates.sparkSession
+    quarantine.write.mode(SaveMode.Overwrite)
+      .parquet(s"$quarantinePath/batch_id=$batchId")
+    if (!graft.ext.IndexFormat.dataExists(spark, dataPath)) {
+      val kept = candidates.localCheckpoint(true)
+      if (!kept.isEmpty)
+        graft.ext.IndexFormat.commit(spark, indexDir, fmt)(write(kept, SaveMode.Overwrite))
+    } else {
+      graft.ext.IndexFormat.check(spark, indexDir, fmt)
+      val admitted = admit(candidates)
+      if (!admitted.isEmpty)
+        graft.ext.IndexFormat.commit(spark, indexDir, fmt)(write(admitted, SaveMode.Append))
+    }
+  }
 
   /** Streaming AUDIO ingest with fingerprint dedup — the audio member of
     * the exactly-once ingest family, completing the modality triple
@@ -473,15 +487,13 @@ object Streams {
       // forever: one 24-bit WAV must not wedge the stream). The payload
       // rides along so quarantined clips stay triage-able after the
       // source batch is gone.
-      decoded.filter(!col("decode_ok") ||
+      val quarantine = decoded.filter(!col("decode_ok") ||
           !(col("bits") <=> lit(16)))
         .select(col(idCol), col(contentCol),
           coalesce(col("decode_err"),
             format_string("UnsupportedBitDepth(%d)", col("bits")))
             .as("decode_err"),
           col("mime"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$quarantinePath/batch_id=$batchId")
       val clips = decoded.filter(col("decode_ok") && col("bits") === 16)
         .select(col(idCol), col(contentCol))
       val good = graft.ext.Media
@@ -491,30 +503,15 @@ object Streams {
       val losers = graft.ext.Media
         .dhashNearPairs(good, idCol, "afp", maxDist, bandBits)
         .select(col("right_id").cast(good.schema(idCol).dataType).as(idCol))
-      val reps = good.join(losers, Seq(idCol), "left_anti")
-      if (!graft.ext.Dedup.nearIndexDataExists(spark, sigsPath)) {
-        val kept = reps.localCheckpoint(true)
-        if (!kept.isEmpty) {
-          kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(corpusPath)
-          kept.select(col(idCol), col("afp"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sigsPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      } else {
-        graft.ext.IndexFormat.check(spark, indexDir, fmt)
-        val dups = graft.ext.Media.dhashDupIds(reps, idCol, "afp",
-          spark.read.parquet(sigsPath), "afp", maxDist, bandBits)
-        val admitted = reps.join(dups, Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-        if (!admitted.isEmpty) {
-          graft.ext.IndexFormat.invalidate(spark, indexDir)
-          admitted.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(corpusPath)
-          admitted.select(col(idCol), col("afp"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sigsPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      }
+      quarantineAndAdmit(batchId, quarantinePath, quarantine,
+        good.join(losers, Seq(idCol), "left_anti"), sigsPath, indexDir, fmt)(
+        reps => reps.join(graft.ext.Media.dhashDupIds(reps, idCol, "afp",
+            spark.read.parquet(sigsPath), "afp", maxDist, bandBits),
+          Seq(idCol), "left_anti").localCheckpoint(true),
+        (rows, mode) => {
+          rows.write.mode(mode).parquet(corpusPath)
+          rows.select(col(idCol), col("afp")).write.mode(mode).parquet(sigsPath)
+        })
     }
 
   /** Streaming VIDEO ingest with frame-level dedup — the video member of
@@ -647,13 +644,11 @@ object Streams {
       // one quarantine partition per batch: container failures and frame
       // failures together, each WITH its payload so quarantined rows stay
       // re-processable after the source batch is gone
-      decoded.filter(!col("decode_ok"))
+      val quarantine = decoded.filter(!col("decode_ok"))
         .select(col(idCol), col(contentCol), col("decode_err"), col("mime"))
         .unionByName(container.join(broadcast(badFrames), Seq(idCol))
           .select(col(idCol), col(contentCol),
             col("frame_err").as("decode_err"), col("mime")))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$quarantinePath/batch_id=$batchId")
       val good = container
         .join(broadcast(badFrames.select(col(idCol))), Seq(idCol), "left_anti")
         .select(col(idCol), col(contentCol), col("n_frames"))
@@ -667,15 +662,8 @@ object Streams {
         .select(col("right_id").cast(good.schema(idCol).dataType).as(idCol))
       val reps = good.join(losers, Seq(idCol), "left_anti")
       val repFrames = frames.join(reps.select(col(idCol)), Seq(idCol), "left_semi")
-      if (!graft.ext.Dedup.nearIndexDataExists(spark, sigsPath)) {
-        val kept = reps.localCheckpoint(true)
-        if (!kept.isEmpty) {
-          kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(corpusPath)
-          repFrames.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sigsPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      } else {
-        graft.ext.IndexFormat.check(spark, indexDir, fmt)
+      quarantineAndAdmit(batchId, quarantinePath, quarantine, reps, sigsPath,
+          indexDir, fmt)({ reps =>
         // exact-id admission FIRST: a replayed COMMITTED batch's videos are
         // already in the corpus BY ID — including degenerate ones (fewer
         // than minShared distinct frames, or zero frames) that the
@@ -710,17 +698,16 @@ object Streams {
           .agg(count(lit(1)).as("__n"))
           .filter(col("__n") >= minShared)
           .select(col("__bid").as(idCol)).distinct()
-        val admitted = novel.join(broadcast(dupIds), Seq(idCol), "left_anti")
+        novel.join(broadcast(dupIds), Seq(idCol), "left_anti")
           .localCheckpoint(true)
-        if (!admitted.isEmpty) {
-          graft.ext.IndexFormat.invalidate(spark, indexDir)
-          admitted.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(corpusPath)
-          repFrames.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sigsPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      }
+      }, (rows, mode) => {
+        rows.write.mode(mode).parquet(corpusPath)
+        // a bootstrap writes every representative's frames as they are;
+        // an append keeps only the admitted videos' frames
+        (if (mode == SaveMode.Overwrite) repFrames
+         else repFrames.join(rows.select(col(idCol)), Seq(idCol), "left_semi"))
+          .write.mode(mode).parquet(sigsPath)
+      })
     }
 
   /** Streaming WARC CRAWL ingest — crawls arrive as daily `.warc.gz`
@@ -736,21 +723,10 @@ object Streams {
     * (a column-pruned scan of fixed-width hashes; corpus record bodies
     * are never re-read).
     *
-    * Exactly-once discipline, mirroring [[ingestImageDedup]]:
-    *  - branch dispatch keys off hash DATA presence, never the stamp;
-    *  - an all-quarantined first batch does NOT bootstrap (an empty write
-    *    would leave a schema-less hashes dir the next batch cannot read);
-    *  - bootstrap writes corpus + hashes with Overwrite (a replayed
-    *    bootstrap rewrites identical content);
-    *  - incremental appends run inside one commit-marker window over
-    *    corpus + hashes (invalidate → append both → restamp) so a torn
-    *    append fails the next batch loudly via
-    *    [[graft.ext.IndexFormat.check]];
-    *  - a replayed COMMITTED batch re-classifies its own rows as dups and
-    *    appends nothing;
-    *  - quarantine writes go to `quarantinePath/batch_id=N` with
-    *    Overwrite — a replay rewrites the same partition, O(batch), no
-    *    scan of the existing quarantine.
+    * Exactly-once discipline is [[ingestImageDedup]]'s shared step, with
+    * the hash DATA presence at `indexDir/hashes` as the dispatch and one
+    * commit over corpus + hashes; a replayed COMMITTED batch
+    * re-classifies its own rows as dups and appends nothing.
     */
   def ingestWarc(stream: DataFrame, corpusPath: String, indexDir: String,
                  quarantinePath: String, idCol: String, contentCol: String,
@@ -775,11 +751,9 @@ object Streams {
       // quarantine keeps the raw segment bytes (joined back from the
       // batch — the lenient record schema deliberately drops them): a
       // rotten segment stays triage-able after the source batch is gone
-      batch.select(col(idCol), col(contentCol))
+      val quarantine = batch.select(col(idCol), col(contentCol))
         .join(broadcast(parsed.filter(!col("decode_ok"))
           .select(col(idCol), col("decode_err"))), Seq(idCol))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$quarantinePath/batch_id=$batchId")
       val outCols = Seq("rec_uid", "file_id", "rec_idx", "warc_type",
         "record_id", "target_uri", "warc_date", "content_type", "body", "__h")
       val recs = parsed.filter(col("decode_ok"))
@@ -788,33 +762,16 @@ object Streams {
           col(idCol).as("file_id"), col("rec_idx"), col("warc_type"),
           col("record_id"), col("target_uri"), col("warc_date"),
           col("content_type"), col("body"))
-      val fresh = graft.ext.Dedup.exactHashed(recs, Seq("target_uri", "body"), "rec_uid")
-      if (!graft.ext.Dedup.nearIndexDataExists(spark, hashesPath)) {
-        val kept = fresh.localCheckpoint(true)
-        if (!kept.isEmpty) {
-          kept.select(outCols.map(col): _*)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(corpusPath)
-          kept.select("__h")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(hashesPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      } else {
-        graft.ext.IndexFormat.check(spark, indexDir, fmt)
+      quarantineAndAdmit(batchId, quarantinePath, quarantine,
+        graft.ext.Dedup.exactHashed(recs, Seq("target_uri", "body"), "rec_uid"),
+        hashesPath, indexDir, fmt)(
         // batch hashes broadcast into the stored table; the hit set comes
         // back bounded — the identity table is scanned, never shuffled.
         // The admitted frame reads only the pinned batch, so the appends
-        // below cannot re-probe the table they grow
-        val admitted = graft.ext.Dedup.admitNewByKey(
-            fresh, spark.read.parquet(hashesPath), "__h")
-        if (!admitted.isEmpty) {
-          graft.ext.IndexFormat.invalidate(spark, indexDir)
-          admitted.select(outCols.map(col): _*)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(corpusPath)
-          admitted.select("__h")
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(hashesPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      }
+        // cannot re-probe the table they grow
+        fresh => graft.ext.Dedup.admitNewByKey(
+          fresh, spark.read.parquet(hashesPath), "__h"),
+        hashedWriter(outCols, corpusPath, hashesPath))
     }
 
   /** Streaming PDF ingest — document drops arrive as files, so the batch
@@ -855,11 +812,9 @@ object Streams {
         .pdfTextLenient(batch, idCol, contentCol).localCheckpoint(true)
       // quarantine keeps the raw document bytes, same rationale as
       // ingestWarc's quarantine join
-      batch.select(col(idCol), col(contentCol))
+      val quarantine = batch.select(col(idCol), col(contentCol))
         .join(broadcast(parsed.filter(!col("decode_ok"))
           .select(col(idCol), col("decode_err"))), Seq(idCol))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$quarantinePath/batch_id=$batchId")
       val outCols = Seq("page_uid", "doc_id", "stream_idx", "pdf_version",
         "text", "__h")
       val pages = parsed.filter(col("decode_ok"))
@@ -867,32 +822,24 @@ object Streams {
           concat_ws(":", col(idCol).cast("string"), col("stream_idx")).as("page_uid"),
           col(idCol).as("doc_id"), col("stream_idx"), col("pdf_version"),
           col("text"))
-      val fresh = graft.ext.Dedup.exactHashed(pages, Seq("text"), "page_uid")
-      if (!graft.ext.Dedup.nearIndexDataExists(spark, hashesPath)) {
-        val kept = fresh.localCheckpoint(true)
-        if (!kept.isEmpty) {
-          kept.select(outCols.map(col): _*)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(corpusPath)
-          kept.select("__h")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(hashesPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      } else {
-        graft.ext.IndexFormat.check(spark, indexDir, fmt)
+      quarantineAndAdmit(batchId, quarantinePath, quarantine,
+        graft.ext.Dedup.exactHashed(pages, Seq("text"), "page_uid"),
+        hashesPath, indexDir, fmt)(
         // same admission shape as ingestWarc: stored hashes scanned, never
         // shuffled — see Dedup.admitNewByKey
-        val admitted = graft.ext.Dedup.admitNewByKey(
-            fresh, spark.read.parquet(hashesPath), "__h")
-        if (!admitted.isEmpty) {
-          graft.ext.IndexFormat.invalidate(spark, indexDir)
-          admitted.select(outCols.map(col): _*)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(corpusPath)
-          admitted.select("__h")
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(hashesPath)
-          graft.ext.IndexFormat.stamp(spark, indexDir, fmt)
-        }
-      }
+        fresh => graft.ext.Dedup.admitNewByKey(
+          fresh, spark.read.parquet(hashesPath), "__h"),
+        hashedWriter(outCols, corpusPath, hashesPath))
     }
+
+  /** The WARC/PDF writer: the corpus gets `outCols`, the identity table
+    * only the content hash `__h`.
+    */
+  private def hashedWriter(outCols: Seq[String], corpusPath: String,
+                           hashesPath: String)(rows: DataFrame, mode: SaveMode): Unit = {
+    rows.select(outCols.map(col): _*).write.mode(mode).parquet(corpusPath)
+    rows.select("__h").write.mode(mode).parquet(hashesPath)
+  }
 
   private val HashStampFamilies = Seq("warcingest:v1:", "pdfingest:v1:")
 
@@ -1012,21 +959,25 @@ object Streams {
       // both admission paths go through Dedup.admitNewByKey: the stored
       // hash column (or the recomputed legacy hashes) is scanned with the
       // bounded batch hashes broadcast into it, never shuffled per batch
-      val (admitted, outCols) = corpusColumns(spark, corpusPath) match {
-        case None => (fresh, batch.columns :+ "__h")
+      // `__h` is unique per batch (exactHashed), so the admission knows
+      // without a job whether it admitted anything: an all-duplicate
+      // batch writes no file
+      val ((admitted, any), outCols) = corpusColumns(spark, corpusPath) match {
+        case None => ((fresh, true), batch.columns :+ "__h")
         case Some(cols) if cols("__h") =>
-          (graft.ext.Dedup.admitNewByKey(fresh, storedKeys(spark, corpusPath, "__h"), "__h"),
+          (graft.ext.Dedup.admitNewByUniqueKey(fresh, storedKeys(spark, corpusPath, "__h"), "__h"),
             batch.columns :+ "__h")
         case Some(_) =>
-          (graft.ext.Dedup.admitNewByKey(fresh,
+          (graft.ext.Dedup.admitNewByUniqueKey(fresh,
             spark.read.parquet(corpusPath)
               .select(graft.ext.Dedup.contentHash(contentCols).as("__h")),
             "__h"),
             batch.columns)
       }
       // fixed column order: every corpus file carries the identical schema
-      admitted.select(outCols.map(col): _*)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(corpusPath)
+      if (any)
+        admitted.select(outCols.map(col): _*)
+          .write.mode(SaveMode.Append).parquet(corpusPath)
   }
 
   /** The column names of the corpus at `corpusPath`, or None when it has
@@ -1084,8 +1035,8 @@ object Streams {
       val urlKept = graft.ext.Urls.dedupByUrl(batch, idCol, urlCol)
         .withColumnRenamed("url_norm", "__u")
       val fresh = graft.ext.Dedup.exactHashed(urlKept, contentCols, idCol)
-      val admitted = corpusColumns(spark, corpusPath) match {
-        case None => fresh
+      val (admitted, any) = corpusColumns(spark, corpusPath) match {
+        case None => (fresh, true)
         case Some(cols) =>
           require(cols("__u") && cols("__h"),
             s"corpus at $corpusPath lacks the stored __u/__h columns — it was " +
@@ -1094,14 +1045,17 @@ object Streams {
           // NULL __u never equi-joins → malformed-URL rows pass to the
           // content stage on both sides, by construction (admitNewByKey
           // preserves that); stored __u/__h columns are scanned with the
-          // batch keys broadcast into them, never shuffled per batch
-          graft.ext.Dedup.admitNewByKey(
+          // batch keys broadcast into them, never shuffled per batch.
+          // `__h` stays unique per batch, so an all-duplicate batch is
+          // known without a job and writes no file
+          graft.ext.Dedup.admitNewByUniqueKey(
             graft.ext.Dedup.admitNewByKey(fresh, stored.select("__u"), "__u"),
             stored.select("__h"), "__h")
       }
       val outCols = batch.columns :+ "__u" :+ "__h"
-      admitted.select(outCols.map(col): _*)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(corpusPath)
+      if (any)
+        admitted.select(outCols.map(col): _*)
+          .write.mode(SaveMode.Append).parquet(corpusPath)
     }
 
   /** Streaming corpus ingest with NEAR-duplicate dedup — [[ingestDedup]]'s
@@ -1118,7 +1072,7 @@ object Streams {
     * `dup_corpus` and appends nothing — content-level idempotency, same
     * contract as [[ingestDedup]]. Crash windows are covered end to end:
     *   - Branch dispatch keys off index DATA presence
-    *     ([[graft.ext.Dedup.nearIndexDataExists]]), never the `_meta`
+    *     ([[graft.ext.IndexFormat.dataExists]]), never the `_meta`
     *     stamp — the stamp is legitimately off mid-append, and dispatching
     *     on it would send a replay into the bootstrap branch, whose
     *     `buildNearIndex` would overwrite the whole index with one batch.
@@ -1140,7 +1094,7 @@ object Streams {
                       trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
     foreachBatchSink(stream, checkpoint, trigger) { (batch, _) =>
       val spark = batch.sparkSession
-      if (!graft.ext.Dedup.nearIndexDataExists(spark, indexDir)) {
+      if (!graft.ext.IndexFormat.dataExists(spark, indexDir)) {
         val kept = graft.ext.Dedup.nearDedup(batch, idCol, textCol,
             minJaccard, shingleN, bands, rowsPerBand)
           .localCheckpoint(true)
@@ -1175,7 +1129,7 @@ object Streams {
     * sized for the EVENTUAL corpus, not the first batch).
     *
     * Crash windows carry the exact hardened shape of [[ingestNearDedup]]:
-    * data-presence dispatch ([[graft.ext.Dedup.semanticIndexDataExists]]),
+    * data-presence dispatch ([[graft.ext.IndexFormat.dataExists]]),
     * Overwrite bootstrap (a replayed bootstrap rewrites identical
     * content — `corpusPath` belongs to this ingest), and one commit
     * marker over corpus + index appends
@@ -1188,7 +1142,7 @@ object Streams {
                           trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
     foreachBatchSink(stream, checkpoint, trigger) { (batch, _) =>
       val spark = batch.sparkSession
-      if (!graft.ext.Dedup.semanticIndexDataExists(spark, indexDir)) {
+      if (!graft.ext.IndexFormat.dataExists(spark, indexDir)) {
         val kept = graft.ext.Dedup.semanticDedup(batch, idCol, vecCol,
             math.min(k, batch.count().toInt.max(1)), threshold)
           .localCheckpoint(true)
@@ -1196,30 +1150,24 @@ object Streams {
         graft.ext.Dedup.buildSemanticIndex(kept, idCol, vecCol, indexDir,
           math.min(k, kept.count().toInt.max(1)), dim)
       } else {
+        // the bootstrap may have built with fewer anchors than the
+        // configured k (a first batch smaller than k), and every later
+        // classify/append must pass the k the STAMP carries. Read from the
+        // stamp once per batch (no Spark job); a missing or foreign stamp
+        // falls back to the configured k and fails at IndexFormat.check
+        val kIndex = graft.ext.Dedup.semanticIndexK(spark, indexDir).getOrElse(k)
         val admitted = batch.join(
             graft.ext.Dedup.semanticDedupIncremental(batch, idCol, vecCol,
-                indexDir, kOfIndex(spark, indexDir, k), dim, threshold)
+                indexDir, kIndex, dim, threshold)
               .filter(col("verdict") === "admitted")
               .select(col("id").as(idCol)),
             Seq(idCol), "left_semi")
           .localCheckpoint(true)
         if (!admitted.isEmpty)
           graft.ext.Dedup.appendCorpusAndSemanticIndex(admitted, corpusPath,
-            idCol, vecCol, indexDir, kOfIndex(spark, indexDir, k), dim)
+            idCol, vecCol, indexDir, kIndex, dim)
       }
     }
-
-  /** The effective anchor count of a bootstrapped semantic index: the
-    * bootstrap may have built with fewer anchors than the configured `k`
-    * (a first batch smaller than k), and every later classify/append must
-    * pass the k the STAMP carries or [[graft.ext.IndexFormat.check]]
-    * rejects it. Reads the stored anchor count (cheap: k rows).
-    */
-  private def kOfIndex(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, configured: Int): Int = {
-    val n = spark.read.parquet(s"$indexDir/anchors").count().toInt
-    if (n > 0) n else configured
-  }
 
   /** Streaming embedding ingest into a persisted IVF index — the vector
     * sibling of [[ingestDedup]]: each micro-batch keeps one row per id
@@ -1232,7 +1180,7 @@ object Streams {
     * train-on-initial-sample bootstrap) and seeds corpus + index.
     *
     * Crash windows mirror [[ingestNearDedup]]'s hardened shape:
-    * data-presence dispatch ([[graft.ext.Ivf.indexDataExists]]), Overwrite
+    * data-presence dispatch ([[graft.ext.IndexFormat.dataExists]]), Overwrite
     * bootstrap (a replayed bootstrap rewrites identical content — the
     * corpus path belongs to this ingest), and one commit marker over
     * corpus + index appends (a torn append fails the next batch loudly).
@@ -1248,7 +1196,7 @@ object Streams {
       val spark = batch.sparkSession
       val perId = batch.select(col(idCol), col(vecCol))
         .groupBy(col(idCol)).agg(org.apache.spark.sql.functions.first(col(vecCol)).as(vecCol))
-      if (!graft.ext.Ivf.indexDataExists(spark, indexDir)) {
+      if (!graft.ext.IndexFormat.dataExists(spark, indexDir)) {
         val seed = perId.localCheckpoint(true)
         // a coarse quantizer cannot have more cells than training points —
         // clamp to the bootstrap batch size (rebuild when the corpus has
@@ -1276,7 +1224,7 @@ object Streams {
     * so the next query sees them. The first batch bootstraps the index.
     *
     * Crash windows mirror the other ingests: data-presence dispatch
-    * ([[graft.ext.SearchIndex.indexDataExists]]), Overwrite bootstrap (a
+    * ([[graft.ext.IndexFormat.dataExists]]), Overwrite bootstrap (a
     * replayed bootstrap rewrites identical content — the index dir belongs
     * to this ingest), and [[graft.ext.SearchIndex.append]]'s single commit
     * marker over postings + docs + stats (a torn append fails the next
@@ -1292,7 +1240,7 @@ object Streams {
       val perId = batch.select(col(idCol).cast("long").as(idCol), col(textCol))
         .groupBy(col(idCol))
         .agg(org.apache.spark.sql.functions.first(col(textCol)).as(textCol))
-      if (!graft.ext.SearchIndex.indexDataExists(spark, indexDir))
+      if (!graft.ext.IndexFormat.dataExists(spark, indexDir))
         graft.ext.SearchIndex.build(perId, idCol, textCol, indexDir, nBuckets)
       else {
         val indexed = spark.read.parquet(s"$indexDir/docs")

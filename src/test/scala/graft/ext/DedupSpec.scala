@@ -98,7 +98,7 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents reliable-checkpoint mode matches the local default") {
     // cluster fault-tolerance path: rounds checkpoint to a real dir instead
     // of executor block managers; labels must be identical
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt_").toString
+    val dir = tempDir("graft_cc_ckpt_")
     val pairs = Seq((2L, 1L), (2L, 3L), (5L, 6L), (7L, 8L), (8L, 9L))
       .toDF("id_a", "id_b")
     // an application-configured checkpoint dir must survive the call (the
@@ -283,7 +283,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("admitNewByKey on an all-hit replay admits nothing, and never re-reads stored") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_admit_").toString
+    val dir = tempDir("graft_admit_")
     val fresh = Seq((1L, "aa"), (2L, "bb"), (3L, "cc")).toDF("id", "k")
     fresh.select("k").write.parquet(s"$dir/stored")
     def stored = spark.read.parquet(s"$dir/stored")
@@ -315,7 +315,7 @@ class DedupSpec extends SparkSpec {
 
   /** A corpus with planted near-dup clusters, as a parquet source. */
   private def nearDupParquet(): (String, Long) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nd_scan_").toString
+    val dir = tempDir("graft_nd_scan_")
     val r = new scala.util.Random(11L)
     val rows = (0 until 60).flatMap { d =>
       val text = Seq.fill(30)(s"w${r.nextInt(5000)}").mkString(" ")
@@ -363,7 +363,7 @@ class DedupSpec extends SparkSpec {
     import graft.functions.{ShingleOracle, TextFunctions}
     val (path, _) = nearDupParquet()
     val docs = spark.read.parquet(path)
-    val dir = java.nio.file.Files.createTempDirectory("graft_nd_idx_").toString
+    val dir = tempDir("graft_nd_idx_")
     Dedup.buildNearIndex(docs, "id", "text", dir)
     // the stored layout, recomputed from the declarative compositions
     val sig = docs.select(col("id"),
@@ -426,7 +426,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("nearDedupIncremental classifies dup_corpus / dup_batch / admitted against a persisted index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nearidx_").toString
+    val dir = tempDir("graft_nearidx_")
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val corpus = Seq(
       (1L, a),
@@ -458,7 +458,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("compactNearIndex shrinks files and leaves classify results identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nearidx_cmp_").toString
+    val dir = tempDir("graft_nearidx_cmp_")
     val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split(" ")
     def doc(i: Long) = (0 until 8).map(j => words(((i + j) % 10).toInt) + (i % 7)).mkString(" ")
     Dedup.buildNearIndex((1L to 40L).map(i => (i, doc(i))).toDF("id", "text"),
@@ -494,14 +494,14 @@ class DedupSpec extends SparkSpec {
     graft.ext.IndexFormat.invalidate(spark, dir)
     fs.rename(new org.apache.hadoop.fs.Path(s"$dir/buckets"),
       new org.apache.hadoop.fs.Path(s"$dir/.old_buckets"))
-    assert(Dedup.nearIndexDataExists(spark, dir))
+    assert(IndexFormat.dataExists(spark, dir))
     intercept[IllegalStateException] {
       Dedup.nearDedupIncremental(batch, "id", "text", dir, minJaccard = 0.5)
     }
   }
 
   test("nearDedupIncremental caps degenerate corpus buckets like the batch side") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nearidx_hot_").toString
+    val dir = tempDir("graft_nearidx_hot_")
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     // 10 identical corpus docs share every (band,bucket) → a degenerate
     // stored bucket of 10 postings
@@ -521,7 +521,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("nearDedupIncremental rejects an index built with different LSH parameters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nearidx_drift_").toString
+    val dir = tempDir("graft_nearidx_drift_")
     val corpus = Seq((1L, "alpha beta gamma delta epsilon")).toDF("id", "text")
     Dedup.buildNearIndex(corpus, "id", "text", dir, bands = 2, rowsPerBand = 8)
     val batch = Seq((10L, "alpha beta gamma delta epsilon")).toDF("id", "text")
@@ -602,7 +602,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("deleteFromNearIndex erases a document so its content re-admits") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardel_").toString
+    val dir = tempDir("graft_neardel_")
     val a = "alpha beta gamma delta epsilon zeta"
     val b = "one two three four five six"
     Dedup.buildNearIndex(Seq((1L, a), (2L, b)).toDF("id", "text"),
@@ -618,7 +618,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("deleteFromSemanticIndex erases a vector so its direction re-admits") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_semdel_").toString
+    val dir = tempDir("graft_semdel_")
     val va = Seq(1f, 0f, 0f, 0f); val vb = Seq(0f, 1f, 0f, 0f)
     Dedup.buildSemanticIndex(Seq((1L, va), (2L, vb)).toDF("id", "v"),
       "id", "v", dir, k = 2, dim = 4)
@@ -670,7 +670,7 @@ class DedupSpec extends SparkSpec {
   private def sv(xs: Double*): Seq[Float] = xs.map(_.toFloat)
 
   test("semanticDedupIncremental classifies dup_corpus / dup_batch / admitted against a cell index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_semidx_").toString
+    val dir = tempDir("graft_semidx_")
     val va = sv(1, 0, 0, 0); val vb = sv(0, 1, 0, 0); val vc = sv(0, 0, 1, 0)
     Dedup.buildSemanticIndex(Seq((1L, va), (10L, vb)).toDF("id", "v"),
       "id", "v", dir, k = 2, dim = 4)
@@ -692,7 +692,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("semanticDedupIncremental rejects an index built with different k or dim") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_semfmt_").toString
+    val dir = tempDir("graft_semfmt_")
     Dedup.buildSemanticIndex(
       Seq((1L, sv(1, 0, 0, 0)), (2L, sv(0, 1, 0, 0))).toDF("id", "v"),
       "id", "v", dir, k = 2, dim = 4)
@@ -706,7 +706,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("compactSemanticIndex shrinks vectors files and preserves classify results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_semcompact_").toString
+    val dir = tempDir("graft_semcompact_")
     val va = sv(1, 0, 0, 0); val vb = sv(0, 1, 0, 0)
     Dedup.buildSemanticIndex(Seq((1L, va), (2L, vb)).toDF("id", "v"),
       "id", "v", dir, k = 2, dim = 4)

@@ -191,6 +191,8 @@ class StreamsSpec extends SparkSpec {
       val corpus = stored.select("doc_id", "text")
         .as[(Long, String)].collect().sortBy(_._1).toSeq
       assert(corpus == Seq((1L, "alpha"), (3L, "beta"), (5L, "gamma")))
+      // one file per admitting batch: the replay wrote none
+      assert(new java.io.File(s"$dir/corpus").list().count(_.endsWith(".parquet")) == 2)
     } finally q.stop()
   }
 
@@ -377,7 +379,7 @@ class StreamsSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.read.parquet(s"$dir/quarantine").count() == 1L)
       // nothing decodable ever arrived → bootstrap deferred, no index dir
-      assert(!graft.ext.Dedup.nearIndexDataExists(spark, s"$dir/idx/sigs"))
+      assert(!graft.ext.IndexFormat.dataExists(spark, s"$dir/idx/sigs"))
       // the first decodable batch still bootstraps normally afterwards
       val gen = graft.ext.Media.genPatternPngs(
         Seq((0L, 7L, 0)).toDF("id", "k", "p"), "id", "k", "p", 9, 8)
@@ -828,7 +830,7 @@ class StreamsSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.read.parquet(s"$dir/quarantine").count() == 1L)
       // an all-quarantined first batch must NOT bootstrap
-      assert(!graft.ext.Dedup.nearIndexDataExists(spark, s"$dir/idx/hashes"))
+      assert(!graft.ext.IndexFormat.dataExists(spark, s"$dir/idx/hashes"))
       // the first healthy batch still bootstraps normally afterwards
       val good = graft.sources.Warc.genWarcs(
         Seq((7L, 1, false)).toDF("id", "n", "gz"), "id", "n", "gz")
