@@ -42,7 +42,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("IVF index layout prunes partitions on the probe filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfplan_").toString
+    val dir = tempDir("graft_ivfplan_")
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val idx = graft.ext.Ivf.build(e, "vec_id", "embedding", nLists = 4, maxIter = 2)
     graft.ext.Ivf.writeIndex(idx, s"$dir/ivf")
@@ -54,7 +54,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("day-partitioned events layout prunes the day-range scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_partplan_").toString
+    val dir = tempDir("graft_partplan_")
     val ev = spark.range(100).select(
       ($"id" % 7).as("day"), ($"id" % 3).cast("string").as("event_type"))
     graft.sources.Layout.writePartitioned(ev, s"$dir/by_day", "day")
@@ -65,7 +65,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("same-bucket-count tables join with zero Exchange below the join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bktplan_").toString
+    val dir = tempDir("graft_bktplan_")
     val a = spark.range(100).select($"id".as("k"), ($"id" * 2).as("va"))
     val b = spark.range(50).select($"id".as("j"), ($"id" * 3).as("vb"))
     graft.sources.Layout.writeBucketed(a, "g_bkt_plan_a", s"$dir/a", 4, "k")
@@ -156,7 +156,7 @@ class PlanShapeSpec extends SparkSpec {
     // BROADCAST over stored corpus postings, and the r12 corpus-side
     // hot-bucket cap must plan like every other df-cap (partial agg +
     // broadcast anti-join), never a count window over the postings
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_nearidx_").toString
+    val dir = tempDir("graft_plan_nearidx_")
     val d = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
     graft.ext.Dedup.buildNearIndex(d.limit(50), "doc_id", "text", dir)
     val out = graft.ext.Dedup.nearDedupIncremental(
@@ -322,7 +322,7 @@ class PlanShapeSpec extends SparkSpec {
     // side) must meet the stored eval hashes through a broadcast join —
     // contamination is decided map-side; only the df-cap agg and the
     // contaminated-id distinct may shuffle, and both are id/hash sized
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_decontam_").toString
+    val dir = tempDir("graft_plan_decontam_")
     val d = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
     graft.ext.Curation.buildDecontamIndex(d.limit(20), "doc_id", "text", dir)
     val out = graft.ext.Curation.decontaminateIncremental(

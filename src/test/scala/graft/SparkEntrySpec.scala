@@ -60,7 +60,7 @@ class SparkEntrySpec extends SparkSpec {
     // derives ts_us adaptively. Pin both paths to the same answer through
     // a registered query that surfaces ts_us and needs only events.
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tsdrift_").toString
+    val tmp = tempDir("graft_tsdrift_")
     val base = spark.range(6).select(
       col("id").as("event_id"),
       // 2 users × 2 event types, distinct µs timestamps
@@ -90,7 +90,7 @@ class SparkEntrySpec extends SparkSpec {
     // assumes array<float>; Tables.embeddings normalizes a float64
     // regeneration back to float32 instead of every query breaking
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_embdrift_").toString
+    val tmp = tempDir("graft_embdrift_")
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .withColumn("embedding", col("embedding").cast("array<double>"))
       .write.parquet(s"$tmp/embeddings.parquet")

@@ -8,7 +8,7 @@ class ConfigSpec extends SparkSpec {
   import spark.implicits._
 
   test("yaml task builds a source → transforms → sink pipeline") {
-    val dir = Files.createTempDirectory("graft_cfg_").toString
+    val dir = tempDir("graft_cfg_")
     Seq((1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)).toDF("id", "name", "amount")
       .write.parquet(s"$dir/in")
     val yaml =
@@ -41,7 +41,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("latestVersion and delWhere ops compose from config") {
-    val dir = Files.createTempDirectory("graft_cfg_").toString
+    val dir = tempDir("graft_cfg_")
     Seq((1, "k1", 1), (2, "k1", 2), (3, "k2", 1)).toDF("id", "key", "ver")
       .write.parquet(s"$dir/in")
     val yaml =
@@ -59,7 +59,7 @@ class ConfigSpec extends SparkSpec {
 
   test("jdbc source + query transform + jdbc sink round-trip through Derby") {
     System.setProperty("derby.stream.error.file", "/tmp/graft_test_derby.log")
-    val dir = Files.createTempDirectory("graft_cfg_jdbc_").toString
+    val dir = tempDir("graft_cfg_jdbc_")
     val url = s"jdbc:derby:$dir/db;create=true"
     graft.sources.JdbcSink.append(
       Seq((1, "a", 5.0), (2, "a", 15.0), (3, "b", 30.0)).toDF("id", "k", "x"),
@@ -82,7 +82,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("lineparser source with dataLines parses from config") {
-    val dir = Files.createTempDirectory("graft_cfg_lp_").toString
+    val dir = tempDir("graft_cfg_lp_")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/f.csv"),
       "a,b\nskip,skip\n1,2\n3,4\n".getBytes("UTF-8"))
     val yaml =
@@ -98,7 +98,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("curation ops run from config: split + mixture + clean + dedup") {
-    val dir = Files.createTempDirectory("graft_cfg_cur_").toString
+    val dir = tempDir("graft_cfg_cur_")
     (1L to 200L).map(i => (i, s"src${i % 2}", s"<b>text</b>  body $i"))
       .toDF("id", "source", "text").write.parquet(s"$dir/docs")
     val yaml =
@@ -130,7 +130,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("web-crawl ops from config: htmlExtract + gopherFilter + urlDedup + domainFilter") {
-    val dir = Files.createTempDirectory("graft_cfg_web_").toString
+    val dir = tempDir("graft_cfg_web_")
     val body = (Seq.fill(20)("the quick brown fox jumps with zeal") :+ "of it").mkString(" ")
     Seq(
       (1L, "https://a.com/p?b=2&a=1", s"<html><body><p>$body</p></body></html>"),
@@ -163,7 +163,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("chunkSentences + packFfd ops and the upsertParquet sink from config") {
-    val dir = Files.createTempDirectory("graft_cfg_pack_").toString
+    val dir = tempDir("graft_cfg_pack_")
     Seq((1L, "d1", "one two three. four five six! seven eight nine?"),
         (2L, "d1", "a b. c d."),
         (3L, "d2", "x y z."))
@@ -200,7 +200,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("sample op from config is a pure filter of the source") {
-    val dir = Files.createTempDirectory("graft_cfg_smp_").toString
+    val dir = tempDir("graft_cfg_smp_")
     (1L to 500L).toDF("id").write.parquet(s"$dir/in")
     val out = Config.run(spark,
       s"source: {type: parquet, path: $dir/in}\ntransforms: [{op: sample, key: id, perMille: 100}]")
@@ -209,7 +209,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("config expressions can call graft SQL functions (quality gate from YAML)") {
-    val dir = Files.createTempDirectory("graft_cfg_fn_").toString
+    val dir = tempDir("graft_cfg_fn_")
     Seq((1L, ("word " * 150).trim), (2L, "!!! ... !!!"))
       .toDF("id", "text").write.parquet(s"$dir/docs")
     val yaml =
@@ -230,7 +230,7 @@ class ConfigSpec extends SparkSpec {
   test("pure-JSON task configs parse (reference JsonParser parity)") {
     // the reference ships YamlParser + JsonParser; YAML 1.2 is a JSON
     // superset, so one parser covers both — pin that with a real JSON doc
-    val dir = Files.createTempDirectory("graft_cfg_json_").toString
+    val dir = tempDir("graft_cfg_json_")
     Seq((1, "a"), (2, "b")).toDF("id", "v").write.parquet(s"$dir/in")
     val json =
       s"""{"name": "t1",
@@ -241,7 +241,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("the same task as YAML and as JSON builds the identical plan and result") {
-    val dir = Files.createTempDirectory("graft_cfg_parity_").toString
+    val dir = tempDir("graft_cfg_parity_")
     Seq((1, 10.0, "x"), (2, 20.0, "y"), (3, 30.0, "z")).toDF("id", "v", "s")
       .write.parquet(s"$dir/in")
     val yaml =
@@ -275,7 +275,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("sinks: fan-out delivers the same result to every target") {
-    val dir = Files.createTempDirectory("graft_cfg_fan_").toString
+    val dir = tempDir("graft_cfg_fan_")
     Seq((1, "a"), (2, "b")).toDF("id", "v").write.parquet(s"$dir/in")
     val yaml =
       s"""source: {type: parquet, path: $dir/in}
@@ -289,7 +289,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("chunk + pack ops compose from config (context-window prep)") {
-    val dir = Files.createTempDirectory("graft_cfg_chunk_").toString
+    val dir = tempDir("graft_cfg_chunk_")
     (1L to 20L).map(i => (i, ("tok " * 100).trim)).toDF("doc_id", "text")
       .write.parquet(s"$dir/docs")
     val yaml =
@@ -314,7 +314,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("multi-task DAG: tasks feed tasks, each task can sink independently") {
-    val dir = Files.createTempDirectory("graft_cfg_dag_").toString
+    val dir = tempDir("graft_cfg_dag_")
     (1L to 100L).map(i => (i, i % 10)).toDF("id", "grp")
       .write.parquet(s"$dir/in")
     val yaml =
@@ -347,7 +347,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("expect op gates delivery on data-quality rules") {
-    val dir = Files.createTempDirectory("graft_cfg_dq_").toString
+    val dir = tempDir("graft_cfg_dq_")
     Seq((1, 5), (2, -3)).toDF("id", "n").write.parquet(s"$dir/in")
     val ok = Config.run(spark,
       s"""source: {type: parquet, path: $dir/in}
@@ -374,7 +374,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("shuffle op from config orders by the epoch permutation key") {
-    val dir = Files.createTempDirectory("graft_cfg_shuf_").toString
+    val dir = tempDir("graft_cfg_shuf_")
     (1L to 200L).toDF("id").write.parquet(s"$dir/in")
     val out = Config.run(spark,
       s"""source: {type: parquet, path: $dir/in}
@@ -385,7 +385,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("sourceCap + weightedSample + spanStats + dedupIncremental from config") {
-    val dir = Files.createTempDirectory("graft_cfg_cap_").toString
+    val dir = tempDir("graft_cfg_cap_")
     (1L to 100L).map(i => (i, s"src${i % 2}", s"alpha beta gamma word$i tail$i"))
       .toDF("id", "source", "text").write.parquet(s"$dir/docs")
     // corpus for the incremental dedup: holds the text of ids 1..10
@@ -425,7 +425,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("tokenBudget and rareTokens ops run from config") {
-    val dir = Files.createTempDirectory("graft_cfg_tb_").toString
+    val dir = tempDir("graft_cfg_tb_")
     (1L to 40L).map(i => (i, if (i <= 30) "en" else "code",
       s"common words here plus unique$i", 10L))
       .toDF("id", "lang", "text", "toks").write.parquet(s"$dir/docs")
@@ -452,7 +452,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("infer op scores through a registered model with batch/partition knobs") {
-    val dir = Files.createTempDirectory("graft_cfg_infer_").toString
+    val dir = tempDir("graft_cfg_infer_")
     (1L to 20L).map(i => (i, "x" * i.toInt)).toDF("id", "text")
       .write.parquet(s"$dir/docs")
     graft.ext.Inference.registerModel("len-model", _.map(_.length.toDouble))
@@ -478,7 +478,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("idKey kinds from config: ordered (dense), default (unique), snowflake") {
-    val dir = Files.createTempDirectory("graft_cfg_idkey_").toString
+    val dir = tempDir("graft_cfg_idkey_")
     (1 to 50).map(i => (i, s"r$i")).toDF("n", "payload").write.parquet(s"$dir/in")
     def run(op: String) = Config.run(spark,
       s"""source: {type: parquet, path: $dir/in}
@@ -495,7 +495,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("streaming task from config: queue source drains to a parquet sink (cron -1)") {
-    val dir = Files.createTempDirectory("graft_cfg_stream_").toString
+    val dir = tempDir("graft_cfg_stream_")
     graft.streaming.MessageQueues.clear("cfg_q")
     graft.streaming.MessageQueues.push("cfg_q", "alpha", "beta", "alpha")
     val df = Config.run(spark,
@@ -527,7 +527,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("dedupNear op collapses a near-duplicate cluster to one representative") {
-    val dir = Files.createTempDirectory("graft_cfg_near_").toString
+    val dir = tempDir("graft_cfg_near_")
     val text = "the quick brown fox jumps over the lazy dog again and again"
     Seq(
       (1L, text), (2L, text),                       // exact dupes of each other
@@ -543,7 +543,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("dedupNearIndexBuild + dedupNearIncremental classify a batch from config") {
-    val dir = Files.createTempDirectory("graft_cfg_nearinc_").toString
+    val dir = tempDir("graft_cfg_nearinc_")
     val text = "the quick brown fox jumps over the lazy dog again and again"
     Seq((1L, text), (2L, "entirely different corpus content with no overlap at all"))
       .toDF("doc_id", "text").write.parquet(s"$dir/corpus")
@@ -564,7 +564,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("LM lifecycle from config: train on one task, score/gate/select on another") {
-    val dir = Files.createTempDirectory("graft_cfg_lm_").toString
+    val dir = tempDir("graft_cfg_lm_")
     Seq((1L, "good clean text", "en"), (2L, "good clean prose", "en"),
       (3L, "zq xv qq", "xx"), (4L, "good text here", "en"))
       .toDF("doc_id", "text", "lang").write.parquet(s"$dir/docs")
@@ -604,7 +604,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("BPE lifecycle from config: train the merge table, count subword tokens") {
-    val dir = Files.createTempDirectory("graft_cfg_bpe_").toString
+    val dir = tempDir("graft_cfg_bpe_")
     Seq((1L, "aa aa ab"), (2L, "aaab xyz"))
       .toDF("doc_id", "text").write.parquet(s"$dir/docs")
     Config.run(spark,
@@ -623,7 +623,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("search index lifecycle from config: build, append, query, compact") {
-    val dir = Files.createTempDirectory("graft_cfg_sidx_").toString
+    val dir = tempDir("graft_cfg_sidx_")
     Seq((1L, "spark hash join beats sort merge"),
         (2L, "vector similarity search index"))
       .toDF("doc_id", "text").write.parquet(s"$dir/day1")
@@ -653,7 +653,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("layout ops from config: writePartitioned prunes, writeBucketed joins shuffle-free") {
-    val dir = Files.createTempDirectory("graft_cfg_layout_").toString
+    val dir = tempDir("graft_cfg_layout_")
     (0L until 40L).map(i => (i, i % 4, s"v$i")).toDF("id", "day", "v")
       .write.parquet(s"$dir/in")
     Config.run(spark,
@@ -674,7 +674,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("retrieval tier from config: IVF build task + batch-search task find the planted copy") {
-    val dir = Files.createTempDirectory("graft_cfg_ivf_").toString
+    val dir = tempDir("graft_cfg_ivf_")
     // 60 well-separated 8-dim vectors + an exact copy of each (+1000 ids)
     val rnd = new scala.util.Random(7)
     val base = (0L until 60L).map { i =>
@@ -706,7 +706,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("daily-append task extends a persisted IVF index from config") {
-    val dir = Files.createTempDirectory("graft_cfg_ivfapp_").toString
+    val dir = tempDir("graft_cfg_ivfapp_")
     val rnd = new scala.util.Random(7)
     val base = (0L until 60L).map { i =>
       (i, Array.tabulate(8)(d => if (d == (i % 4).toInt * 2) 10.0f else rnd.nextFloat() * 0.3f).toSeq)
@@ -742,7 +742,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("retrieval tier from config: IVF-PQ build + probe-pruned batch ADC search") {
-    val dir = Files.createTempDirectory("graft_cfg_ivfpq_").toString
+    val dir = tempDir("graft_cfg_ivfpq_")
     val rnd = new scala.util.Random(13)
     val base = (0L until 90L).map { i =>
       (i, Array.tabulate(16)(d => if (d / 4 == (i % 3).toInt) 9.0f + rnd.nextFloat() else rnd.nextFloat() * 0.2f).toSeq)
@@ -769,7 +769,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("retrieval tier from config: PQ build + batch ADC search from the persisted index") {
-    val dir = Files.createTempDirectory("graft_cfg_pq_").toString
+    val dir = tempDir("graft_cfg_pq_")
     val rnd = new scala.util.Random(9)
     val base = (0L until 80L).map { i =>
       (i, Array.tabulate(16)(d => if (d / 4 == (i % 4).toInt) 8.0f + rnd.nextFloat() else rnd.nextFloat() * 0.2f).toSeq)
@@ -798,7 +798,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("infer op fails loud on a missing score and collapses duplicate ids deterministically") {
-    val dir = Files.createTempDirectory("graft_cfg_infer2_").toString
+    val dir = tempDir("graft_cfg_infer2_")
     graft.ext.Inference.registerModel("len-model2", _.map(_.length.toDouble))
     // a NULL id can never join its score back — the old inner join silently
     // dropped the row; now the output column itself raises
@@ -827,7 +827,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("httpEnrich wires timeoutMs and the minIntervalMs throttle from config") {
-    val dir = Files.createTempDirectory("graft_cfg_http_").toString
+    val dir = tempDir("graft_cfg_http_")
     Seq((1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")).toDF("id", "payload")
       .coalesce(1).write.parquet(s"$dir/in")
     val server = com.sun.net.httpserver.HttpServer.create(
@@ -859,7 +859,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("erasure from config: ivfErase retires ids from the persisted index") {
-    val dir = Files.createTempDirectory("graft_cfg_erase_").toString
+    val dir = tempDir("graft_cfg_erase_")
     val rnd = new scala.util.Random(7)
     val base = (0L until 60L).map { i =>
       (i, Array.tabulate(8)(d => if (d == (i % 4).toInt * 2) 10.0f else rnd.nextFloat() * 0.3f).toSeq)
@@ -895,7 +895,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("decontam lifecycle from config: build, classify, append, compact, erase") {
-    val dir = Files.createTempDirectory("graft_cfg_dc_").toString
+    val dir = tempDir("graft_cfg_dc_")
     // two eval docs; training batch shares text with eval 1 only
     Seq((1L, "alpha beta gamma delta epsilon zeta"),
         (2L, "one two three four five six"))
@@ -940,7 +940,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("media pipeline from config: binaryFile source, real decode, pair dedup") {
-    val dir = Files.createTempDirectory("graft_cfg_media_").toString
+    val dir = tempDir("graft_cfg_media_")
     // write REAL PNG files to disk (two near-dup pairs + decoys), then
     // drive the whole tier from YAML: binaryFile → decode → band-join
     new java.io.File(s"$dir/imgs").mkdirs()
@@ -977,7 +977,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("mp4Meta op: ISO-BMFF box walk declares in YAML") {
-    val dir = Files.createTempDirectory("graft_cfg_mp4_").toString
+    val dir = tempDir("graft_cfg_mp4_")
     graft.ext.Media.genMp4s(
       Seq((1L, 12800L, 512L, 25, 480, 360, false))
         .toDF("id", "ts", "dl", "n", "w", "h", "audio"),
@@ -994,7 +994,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("mediaScrub op strips metadata upstream of a sink") {
-    val dir = Files.createTempDirectory("graft_cfg_scrub_").toString
+    val dir = tempDir("graft_cfg_scrub_")
     val wav = graft.ext.Media.encodeWav(8000, 1,
       Array.tabulate[Short](160)(_.toShort))
     graft.ext.Media.genInfoTagged(
@@ -1020,7 +1020,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("mediaScrubLenient op survives dirty payloads upstream of a sink") {
-    val dir = Files.createTempDirectory("graft_cfg_scrubl_").toString
+    val dir = tempDir("graft_cfg_scrubl_")
     val wav = graft.ext.Media.encodeWav(8000, 1,
       Array.tabulate[Short](160)(_.toShort))
     graft.ext.Media.genInfoTagged(
@@ -1047,7 +1047,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("WARC crawl pipeline from config: binaryFile → responses → page text") {
-    val dir = Files.createTempDirectory("graft_cfg_warc_").toString
+    val dir = tempDir("graft_cfg_warc_")
     new java.io.File(s"$dir/warcs").mkdirs()
     // two real .warc.gz segment files (per-record gzip members) + one
     // rotten file the lenient path must quarantine instead of failing on
@@ -1092,7 +1092,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("PDF extraction composes from config into the text tier") {
-    val dir = Files.createTempDirectory("graft_cfg_pdf_").toString
+    val dir = tempDir("graft_cfg_pdf_")
     val ids = Seq((1L, 2, true), (2L, 1, false)).toDF("id", "n", "flate")
     graft.ext.Pdf.genPdfs(ids, "id", "n", "flate").write.parquet(s"$dir/pdfs")
     val out = Config.runAll(spark,
@@ -1109,7 +1109,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("image/audio quality and C4 ops compose from config") {
-    val dir = Files.createTempDirectory("graft_cfg_quality_").toString
+    val dir = tempDir("graft_cfg_quality_")
     val ids = (0L until 6L).map(i => (i, i, 0)).toDF("id", "k", "p")
     graft.ext.Media.genPatternPngs(ids, "id", "k", "p", 9, 8)
       .write.parquet(s"$dir/imgs")
@@ -1154,7 +1154,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("bloom membership dedup lifecycle from config: build, flag, append") {
-    val dir = Files.createTempDirectory("graft_cfg_bloom_").toString
+    val dir = tempDir("graft_cfg_bloom_")
     (0L until 50L).map(i => (i, s"corpus doc $i")).toDF("doc_id", "text")
       .write.parquet(s"$dir/corpus")
     // batch: 5 resubmitted corpus docs under new ids + 5 novel
@@ -1190,7 +1190,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("bloomRebuild from config replaces the bitmap with the survivors'") {
-    val dir = Files.createTempDirectory("graft_cfg_bloomrb_").toString
+    val dir = tempDir("graft_cfg_bloomrb_")
     (0L until 40L).map(i => (i, s"stored doc $i")).toDF("doc_id", "text")
       .write.parquet(s"$dir/corpus")
     // survivors after an erasure request: docs 0..19 only
@@ -1223,7 +1223,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("bpeLoad wires an external merges.txt into the bpeCounts path") {
-    val dir = Files.createTempDirectory("graft_cfg_bpeload_").toString
+    val dir = tempDir("graft_cfg_bpeload_")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/merges.txt"),
       "#version: 0.2\nt h\nth e\ni n\nin g\n".getBytes("UTF-8"))
     Seq((1L, "the thing"), (2L, "nothing here")).toDF("doc_id", "text")
@@ -1246,7 +1246,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("lenient media decode and videoFrames compose from config") {
-    val dir = Files.createTempDirectory("graft_cfg_media2_").toString
+    val dir = tempDir("graft_cfg_media2_")
     val wavs = graft.ext.Media.genWavs(
       Seq((0L, 8000, 1, 100)).toDF("id", "rate", "ch", "frames"),
       "id", "rate", "ch", "frames")
@@ -1273,7 +1273,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("videoFrames maxFrames guard plumbs through the config ops") {
-    val dir = Files.createTempDirectory("graft_cfg_vcap_").toString
+    val dir = tempDir("graft_cfg_vcap_")
     // 2-frame and 4-frame videos; cap = 3 → strict op fails the task,
     // lenient op quarantines the long video in place
     graft.ext.Media.genPatternAvis(
@@ -1314,7 +1314,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("mp4Keyframes/mp4Scenes maxFrames guard plumbs through the config ops") {
-    val dir = Files.createTempDirectory("graft_cfg_kfcap_").toString
+    val dir = tempDir("graft_cfg_kfcap_")
     // one sparse-stss MP4 (3 keyframes) + one NO-stss MP4 (6 frames, the
     // degenerate every-sample-sync shape); cap = 4 -> strict op fails the
     // task, lenient ops quarantine the degenerate video in place
@@ -1364,7 +1364,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("mp4Keyframes op: stss sync-sample decode declares in YAML") {
-    val dir = Files.createTempDirectory("graft_cfg_kf_").toString
+    val dir = tempDir("graft_cfg_kf_")
     graft.ext.Media.genPatternMp4sKeyframed(
       Seq((0L, 4L, 6, 2)).toDF("id", "k", "n", "step"),
       "id", "k", "n", "step", 9, 8)
@@ -1381,7 +1381,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("videoDedupPairs composes from config, exact and clustered") {
-    val dir = Files.createTempDirectory("graft_cfg_vdedup_").toString
+    val dir = tempDir("graft_cfg_vdedup_")
     // ids 0,1 = same pattern (1 re-encoded), 2 = unrelated pattern
     graft.ext.Media.genPatternAvisPerturbed(
       Seq((0L, 0L, 0, 3), (1L, 0L, 1, 3), (2L, 7L, 0, 3)).toDF("id", "k", "p", "n"),
@@ -1420,7 +1420,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("media sig maintenance from config: mediaSigCompact + mediaSigErase") {
-    val dir = Files.createTempDirectory("graft_cfg_sigm_").toString
+    val dir = tempDir("graft_cfg_sigm_")
     // hand-build a stamped audio-sig index (the streaming ingest's layout)
     Seq((1L, 11L), (2L, 22L), (3L, 33L)).toDF("aid", "afp")
       .repartition(3).write.parquet(s"$dir/idx/sigs")
@@ -1442,7 +1442,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("the full video pipeline declares in YAML: frames → scenes → keyframes → pairs") {
-    val dir = Files.createTempDirectory("graft_cfg_vpipe_").toString
+    val dir = tempDir("graft_cfg_vpipe_")
     // videos 0,1 share pattern 4 (scene-identical), 2 is unrelated
     graft.ext.Media.genSceneAvis(
       Seq((0L, 4L, 6, 2), (1L, 4L, 6, 2), (2L, 9L, 6, 2)).toDF("id", "k", "n", "len"),
@@ -1480,7 +1480,7 @@ class ConfigSpec extends SparkSpec {
     * output dir).
     */
   private def dropFile(df: org.apache.spark.sql.DataFrame, dest: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_cfg_drop_").toString
+    val tmp = tempDir("graft_cfg_drop_")
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -1490,7 +1490,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("ingestWarc declares in YAML: fileStream arrivals → exactly-once ingest sink") {
-    val dir = Files.createTempDirectory("graft_cfg_iwarc_").toString
+    val dir = tempDir("graft_cfg_iwarc_")
     def warc(k: Long, n: Int): Array[Byte] = graft.sources.Warc.genWarcs(
       Seq((k, n, true)).toDF("id", "n", "gz"), "id", "n", "gz")
       .select("content").as[Array[Byte]].head()
@@ -1524,7 +1524,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("ingestPdf as a one-shot batch task: bootstrap, then re-drop admits nothing") {
-    val dir = Files.createTempDirectory("graft_cfg_ipdf_").toString
+    val dir = tempDir("graft_cfg_ipdf_")
     def pdf(k: Long, n: Int): Array[Byte] = graft.ext.Pdf.genPdfs(
       Seq((k, n, true)).toDF("id", "n", "flate"), "id", "n", "flate")
       .select("content").as[Array[Byte]].head()
@@ -1544,7 +1544,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("ingestImageDedup as a batch task dedups in-batch and against the index") {
-    val dir = Files.createTempDirectory("graft_cfg_iimg_").toString
+    val dir = tempDir("graft_cfg_iimg_")
     def png(k: Long, p: Int): Array[Byte] = graft.ext.Media.genPatternPngs(
       Seq((0L, k, p)).toDF("id", "k", "p"), "id", "k", "p", 9, 8)
       .select("content").as[Array[Byte]].head()
@@ -1567,7 +1567,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("ingestAudioDedup as a batch task: fingerprint dedup + bit-depth quarantine") {
-    val dir = Files.createTempDirectory("graft_cfg_iaud_").toString
+    val dir = tempDir("graft_cfg_iaud_")
     def wav(k: Long, p: Int): Array[Byte] = graft.ext.Media.genToneWavs(
       Seq((0L, k, p, 65)).toDF("id", "k", "p", "nw"), "id", "k", "p", "nw")
       .select("content").as[Array[Byte]].head()
@@ -1587,7 +1587,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("ingestVideoDedup as a batch task: shared-frame dedup via YAML") {
-    val dir = Files.createTempDirectory("graft_cfg_ivid_").toString
+    val dir = tempDir("graft_cfg_ivid_")
     def avi(k: Long, n: Int): Array[Byte] = graft.ext.Media.genPatternAvis(
       Seq((0L, k, n)).toDF("id", "k", "n"), "id", "k", "n", 9, 8)
       .select("content").as[Array[Byte]].head()
@@ -1610,7 +1610,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("ingestVideoDedup admit: keyframe plumbs through YAML (over-cap stss MP4 classifies)") {
-    val dir = Files.createTempDirectory("graft_cfg_ividkf_").toString
+    val dir = tempDir("graft_cfg_ividkf_")
     def kfMp4(k: Long, n: Int, step: Int): Array[Byte] =
       graft.ext.Media.genPatternMp4sKeyframed(
         Seq((0L, k, n, step)).toDF("id", "k", "n", "step"),
@@ -1646,7 +1646,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("batch-task ingest reruns keep prior quarantine (per-run batch id)") {
-    val dir = Files.createTempDirectory("graft_cfg_requar_").toString
+    val dir = tempDir("graft_cfg_requar_")
     def yaml(in: String) =
       s"""source: {type: parquet, path: $in}
          |sink: {type: ingestPdf, corpus: $dir/corpus, index: $dir/idx,
@@ -1682,7 +1682,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("fileStream source fails fast on an empty or missing arrivals dir") {
-    val dir = Files.createTempDirectory("graft_cfg_fsempty_").toString
+    val dir = tempDir("graft_cfg_fsempty_")
     val e = intercept[IllegalArgumentException] {
       Config.run(spark,
         s"""source: {type: fileStream, path: $dir/nowhere, format: parquet}
@@ -1693,7 +1693,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("hash-index maintenance from config: hashIndexCompact + hashIndexErase") {
-    val dir = Files.createTempDirectory("graft_cfg_hashm_").toString
+    val dir = tempDir("graft_cfg_hashm_")
     def pdf(k: Long, n: Int): Array[Byte] = graft.ext.Pdf.genPdfs(
       Seq((k, n, true)).toDF("id", "n", "flate"), "id", "n", "flate")
       .select("content").as[Array[Byte]].head()
@@ -1733,7 +1733,7 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("unknown op fails fast with a clear message") {
-    val dir = Files.createTempDirectory("graft_cfg_").toString
+    val dir = tempDir("graft_cfg_")
     Seq((1, 2)).toDF("a", "b").write.parquet(s"$dir/in")
     val e = intercept[IllegalArgumentException] {
       Config.run(spark, s"source: {type: parquet, path: $dir/in}\ntransforms: [{op: nope}]")
@@ -1753,7 +1753,7 @@ class ConfigSpec extends SparkSpec {
           |""".stripMargin)
     }
     assert(eSrc.getMessage.contains("spark-sql-kafka"))
-    val dir = Files.createTempDirectory("graft_cfg_kafka_").toString
+    val dir = tempDir("graft_cfg_kafka_")
     Seq((1, "a")).toDF("key", "value").write.parquet(s"$dir/in")
     val eSink = intercept[IllegalArgumentException] {
       Config.run(spark,

@@ -46,7 +46,7 @@ class BloomSpec extends SparkSpec {
   }
 
   test("bitmap persists, appends by OR, and erasure is refused by design") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_").toString
+    val dir = tempDir("graft_bloom_")
     val c1 = Seq((1L, "first doc here")).toDF("id", "text")
     val c2 = Seq((2L, "second doc here")).toDF("id", "text")
     val b1 = Bloom.build(c1, "text", K, M)
@@ -64,7 +64,7 @@ class BloomSpec extends SparkSpec {
     // the primitive-chunk read path must place words by idx, not file
     // order: rewrite the persisted bitmap across 4 partitions in hashed
     // (non-sequential) row order and demand bit-exact reassembly
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloomrd_").toString
+    val dir = tempDir("graft_bloomrd_")
     val bits = Bloom.build(Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
       .toDF("id", "text"), "text", K, M)
     Bloom.writeBits(spark, s"$dir/seq", bits)

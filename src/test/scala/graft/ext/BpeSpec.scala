@@ -62,7 +62,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("merge table round-trips through the stamped artifact, fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("bpe_model").toString
+    val dir = tempDir("bpe_model")
     val docs = Seq((1L, "banana bandana banana")).toDF("id", "text")
     val merges = Bpe.trainMerges(docs, "text", maxMerges = 8)
     Bpe.writeMerges(spark, merges, dir)
@@ -89,7 +89,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("loadMergesText round-trips through a real file and the apply path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_ext_")
+    val dir = java.nio.file.Paths.get(tempDir("graft_bpe_ext_"))
     val f = dir.resolve("merges.txt")
     java.nio.file.Files.write(f,
       "#version: 0.2\nt h\nth e\ni n\nin g\n".getBytes("UTF-8"))

@@ -347,7 +347,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("decontam index: build, classify, append visibility, pair report") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_decontam_").toString
+    val dir = tempDir("graft_decontam_")
     val evalA = Seq((100L, "alpha beta gamma delta")).toDF("id", "text")
     val evalB = Seq((200L, "epsilon zeta eta theta")).toDF("id", "text")
     Curation.buildDecontamIndex(evalA, "id", "text", dir, shingleN = 3)
@@ -372,7 +372,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("decontam index rejects shingle-width drift and missing stamp") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_decontamfmt_").toString
+    val dir = tempDir("graft_decontamfmt_")
     val eval = Seq((1L, "a b c d e")).toDF("id", "text")
     Curation.buildDecontamIndex(eval, "id", "text", dir, shingleN = 3)
     val batch = Seq((9L, "a b c d e")).toDF("id", "text")
@@ -386,7 +386,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("deleteFromDecontamIndex retires a benchmark's shingles") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_decontamdel_").toString
+    val dir = tempDir("graft_decontamdel_")
     Curation.buildDecontamIndex(
       Seq((100L, "alpha beta gamma delta")).toDF("id", "text"),
       "id", "text", dir, shingleN = 3)
@@ -405,7 +405,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("compactDecontamIndex shrinks files and preserves classification") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_decontamcomp_").toString
+    val dir = tempDir("graft_decontamcomp_")
     Curation.buildDecontamIndex(
       Seq((1L, "alpha beta gamma delta")).toDF("id", "text"),
       "id", "text", dir, shingleN = 3)

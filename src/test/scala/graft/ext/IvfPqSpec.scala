@@ -28,7 +28,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("writeIndex/readIndex round-trip: identical search results, pruned scan") {
-    val dir = Files.createTempDirectory("graft_ivfpq_").toString
+    val dir = tempDir("graft_ivfpq_")
     val idx = IvfPq.build(corpus, "vec_id", "embedding", dim = 16, m = 4,
       nLists = 3, codes = 16)
     IvfPq.writeIndex(idx, dir)
@@ -68,7 +68,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("appendIndex encodes a daily batch with the existing quantizers; search finds it") {
-    val dir = Files.createTempDirectory("graft_ivfpq_app_").toString
+    val dir = tempDir("graft_ivfpq_app_")
     val idx = IvfPq.build(corpus, "vec_id", "embedding", dim = 16, m = 4,
       nLists = 3, codes = 16)
     IvfPq.writeIndex(idx, dir)
@@ -118,7 +118,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("deleteFromIndex erases residual codes; search and pruning survive") {
-    val dir = Files.createTempDirectory("graft_ivfpq_del_").toString
+    val dir = tempDir("graft_ivfpq_del_")
     IvfPq.writeIndex(IvfPq.build(corpus, "vec_id", "embedding", dim = 16,
       m = 4, nLists = 3, codes = 16), dir)
     IvfPq.deleteFromIndex(spark, dir, "vec_id", Seq(3L).toDF("vec_id"))
@@ -134,7 +134,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("a torn appendIndex leaves IVF-PQ unstamped; a bad batch leaves it readable") {
-    val dir = Files.createTempDirectory("graft_ivfpq_torn_").toString
+    val dir = tempDir("graft_ivfpq_torn_")
     val idx = IvfPq.build(corpus, "vec_id", "embedding", dim = 16, m = 4,
       nLists = 3, codes = 16)
     IvfPq.writeIndex(idx, dir)
@@ -151,7 +151,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("readIndex fails fast on an unstamped (pre-versioning) directory") {
-    val dir = Files.createTempDirectory("graft_ivfpq_old_").toString
+    val dir = tempDir("graft_ivfpq_old_")
     val idx = IvfPq.build(corpus, "vec_id", "embedding", dim = 16, m = 4,
       nLists = 3, codes = 16)
     IvfPq.writeIndex(idx, dir)
@@ -164,7 +164,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("readIndex rejects a Pq-format (raw-code) directory, not mis-ranks it") {
-    val dir = Files.createTempDirectory("graft_ivfpq_cross_").toString
+    val dir = tempDir("graft_ivfpq_cross_")
     val cb = Pq.train(corpus, "embedding", dim = 16, m = 4, codes = 16)
     val codes = Pq.encode(corpus, "vec_id", "embedding", cb)
     Pq.writeIndex(codes, cb, dir)
@@ -226,7 +226,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("planted duplicates retrieved from the persisted index at nProbe=1") {
-    val dir = Files.createTempDirectory("graft_ivfpq_rec_").toString
+    val dir = tempDir("graft_ivfpq_rec_")
     val doubled = corpus.unionByName(
       corpus.withColumn("vec_id", $"vec_id" + 1000L))
     val idx = IvfPq.build(doubled, "vec_id", "embedding", dim = 16, m = 4,

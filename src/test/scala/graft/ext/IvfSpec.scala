@@ -60,7 +60,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("partitioned index layout prunes to the probed cells") {
-    val dir = Files.createTempDirectory("graft_ivf_").toString
+    val dir = tempDir("graft_ivf_")
     val idx = Ivf.build(corpus, "vec_id", "embedding", nLists = 3)
     Ivf.writeIndex(idx, dir)
     val assigned = spark.read.parquet(s"$dir/assigned")
@@ -76,7 +76,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("readIndex round-trips: reloaded index searches identically, no refit") {
-    val dir = Files.createTempDirectory("graft_ivf_rt_").toString
+    val dir = tempDir("graft_ivf_rt_")
     val idx = Ivf.build(corpus, "vec_id", "embedding", nLists = 3)
     Ivf.writeIndex(idx, dir)
     val loaded = Ivf.readIndex(spark, dir)
@@ -93,7 +93,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("appendIndex adds daily vectors to existing cells; search finds them, no refit") {
-    val dir = Files.createTempDirectory("graft_ivf_app_").toString
+    val dir = tempDir("graft_ivf_app_")
     val idx = Ivf.build(corpus, "vec_id", "embedding", nLists = 3)
     Ivf.writeIndex(idx, dir)
     // daily batch: verbatim copies of an x-cluster and a y-cluster member
@@ -137,7 +137,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("deleteFromIndex erases vectors; search and pruning survive") {
-    val dir = Files.createTempDirectory("graft_ivf_del_").toString
+    val dir = tempDir("graft_ivf_del_")
     Ivf.writeIndex(Ivf.build(corpus, "vec_id", "embedding", nLists = 3), dir)
     // erase two x-cluster members; everything else must search identically
     Ivf.deleteFromIndex(spark, dir, "vec_id", Seq(0L, 3L).toDF("vec_id"))
@@ -155,7 +155,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("a torn appendIndex leaves the index unstamped and readers reject it") {
-    val dir = Files.createTempDirectory("graft_ivf_torn_").toString
+    val dir = tempDir("graft_ivf_torn_")
     val idx = Ivf.build(corpus, "vec_id", "embedding", nLists = 3)
     Ivf.writeIndex(idx, dir)
     // a malformed batch fails ANALYSIS inside assignCells — before the

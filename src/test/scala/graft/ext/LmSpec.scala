@@ -162,7 +162,7 @@ class LmSpec extends SparkSpec {
   }
 
   test("persisted model round-trips losslessly and readers fail loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("lm_model").toString
+    val dir = tempDir("lm_model")
     val m = Lm.unigramModel(ref, "text", maxVocab = 100)
     Lm.writeModel(spark, m, dir)
     val docs = Seq((1L, "the cat sat"), (2L, "zq xv"), (3L, "")).toDF("id", "text")
@@ -251,7 +251,7 @@ class LmSpec extends SparkSpec {
   }
 
   test("persisted bigram model round-trips; torn/foreign stamps rejected") {
-    val dir = java.nio.file.Files.createTempDirectory("lm_bigram").toString
+    val dir = tempDir("lm_bigram")
     val m = Lm.bigramModel(ref, "text", maxVocab = 100, maxBigrams = 100)
     Lm.writeBigramModel(spark, m, dir)
     val docs = Seq((1L, "the cat sat"), (2L, "sat the"), (3L, "")).toDF("id", "text")

@@ -69,7 +69,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("codes persist and reread: 1-byte elements, same ADC result") {
-    val dir = Files.createTempDirectory("graft_pq_").toString
+    val dir = tempDir("graft_pq_")
     val cb = Pq.train(corpus, "embedding", dim = 16, m = 4, codes = 16)
     val codes = Pq.encode(corpus, "vec_id", "embedding", cb)
     Pq.writeCodes(codes, s"$dir/codes")
@@ -87,7 +87,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("writeIndex/readIndex round-trips codes AND codebooks: identical top-k") {
-    val dir = Files.createTempDirectory("graft_pq_idx_").toString
+    val dir = tempDir("graft_pq_idx_")
     val cb = Pq.train(corpus, "embedding", dim = 16, m = 4, codes = 16)
     val codes = Pq.encode(corpus, "vec_id", "embedding", cb)
     Pq.writeIndex(codes, cb, dir)
@@ -118,7 +118,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("appendIndex encodes a daily batch with the existing codebooks; search finds it") {
-    val dir = Files.createTempDirectory("graft_pq_app_").toString
+    val dir = tempDir("graft_pq_app_")
     val cb = Pq.train(corpus, "embedding", dim = 16, m = 4, codes = 16)
     Pq.writeIndex(Pq.encode(corpus, "vec_id", "embedding", cb), cb, dir)
     val newVecs = corpus.filter($"vec_id" < 5)
@@ -144,7 +144,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("deleteFromIndex erases codes; the erased vector stops ranking") {
-    val dir = Files.createTempDirectory("graft_pq_del_").toString
+    val dir = tempDir("graft_pq_del_")
     val cb = Pq.train(corpus, "embedding", dim = 16, m = 4, codes = 16)
     Pq.writeIndex(Pq.encode(corpus, "vec_id", "embedding", cb), cb, dir)
     Pq.deleteFromIndex(spark, dir, "vec_id", Seq(3L).toDF("vec_id"))
@@ -194,7 +194,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("a failed index rewrite leaves no valid stamp (commit-marker ordering)") {
-    val dir = Files.createTempDirectory("graft_pq_torn_").toString
+    val dir = tempDir("graft_pq_torn_")
     val cb = Pq.train(corpus, "embedding", dim = 16, m = 4, codes = 16)
     val codes = Pq.encode(corpus, "vec_id", "embedding", cb)
     Pq.writeIndex(codes, cb, dir)
@@ -212,7 +212,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("readIndex rejects an unstamped or IvfPq-format directory") {
-    val dir = Files.createTempDirectory("graft_pq_unstamped_").toString
+    val dir = tempDir("graft_pq_unstamped_")
     val cb = Pq.train(corpus, "embedding", dim = 16, m = 4, codes = 16)
     val codes = Pq.encode(corpus, "vec_id", "embedding", cb)
     Pq.writeIndex(codes, cb, dir)
@@ -221,7 +221,7 @@ class PqSpec extends SparkSpec {
     val ex = intercept[IllegalStateException] { Pq.readIndex(spark, dir) }
     assert(ex.getMessage.contains("no _meta format stamp"), ex.getMessage)
     // reverse cross-load: residual-encoded IvfPq layout must not read as Pq
-    val dir2 = Files.createTempDirectory("graft_pq_cross_").toString
+    val dir2 = tempDir("graft_pq_cross_")
     val ividx = IvfPq.build(corpus, "vec_id", "embedding", dim = 16, m = 4,
       nLists = 3, codes = 16)
     IvfPq.writeIndex(ividx, dir2)

@@ -21,7 +21,7 @@ class SearchIndexSpec extends SparkSpec {
     df.as[(Long, Double)].collect().toSeq
 
   test("indexed BM25 equals the full-scan form, score for score") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_").toString
+    val dir = tempDir("graft_sidx_")
     SearchIndex.build(corpus, "doc_id", "text", dir, nBuckets = 8)
     val scan = scores(Search.bm25TopK(corpus, "doc_id", "text", terms, k = 10))
     val idx = scores(SearchIndex.bm25TopKIndexed(spark, dir, terms, k = 10,
@@ -30,8 +30,8 @@ class SearchIndexSpec extends SparkSpec {
   }
 
   test("append equals a from-scratch build over the union") {
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_sidx_ap_").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_sidx_full_").toString
+    val dir1 = tempDir("graft_sidx_ap_")
+    val dir2 = tempDir("graft_sidx_full_")
     val (day1, day2) = (corpus.filter($"doc_id" <= 4), corpus.filter($"doc_id" > 4))
     SearchIndex.build(day1, "doc_id", "text", dir1, nBuckets = 8)
     SearchIndex.append(day2, "doc_id", "text", dir1)
@@ -46,8 +46,8 @@ class SearchIndexSpec extends SparkSpec {
   }
 
   test("delete equals a from-scratch build over the survivors, score for score") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_del_").toString
-    val ref = java.nio.file.Files.createTempDirectory("graft_sidx_ref_").toString
+    val dir = tempDir("graft_sidx_del_")
+    val ref = tempDir("graft_sidx_ref_")
     SearchIndex.build(corpus, "doc_id", "text", dir, nBuckets = 8)
     SearchIndex.delete(spark, dir, Seq(1L, 6L).toDF("doc_id"))
     SearchIndex.build(corpus.filter(!$"doc_id".isin(1L, 6L)),
@@ -61,7 +61,7 @@ class SearchIndexSpec extends SparkSpec {
   }
 
   test("readers fail loudly on a torn write (no stamp) and a foreign format") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_torn_").toString
+    val dir = tempDir("graft_sidx_torn_")
     SearchIndex.build(corpus, "doc_id", "text", dir, nBuckets = 8)
     IndexFormat.invalidate(spark, dir)
     val e1 = intercept[IllegalStateException] {
@@ -76,7 +76,7 @@ class SearchIndexSpec extends SparkSpec {
   }
 
   test("compaction shrinks append-accreted files; results identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_cmp_").toString
+    val dir = tempDir("graft_sidx_cmp_")
     SearchIndex.build(corpus.filter($"doc_id" <= 2), "doc_id", "text", dir,
       nBuckets = 4)
     (3L to 7L).foreach { i =>
@@ -102,7 +102,7 @@ class SearchIndexSpec extends SparkSpec {
   }
 
   test("batch BM25 agrees with per-query single-form ranking") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_b_").toString
+    val dir = tempDir("graft_sidx_b_")
     SearchIndex.build(corpus, "doc_id", "text", dir, nBuckets = 8)
     val queries = Seq((7L, Seq("hash", "join")), (9L, Seq("vector")))
       .toDF("query_id", "terms")
@@ -139,7 +139,7 @@ class SearchIndexSpec extends SparkSpec {
   }
 
   test("query scan prunes postings partitions on the term buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_plan_").toString
+    val dir = tempDir("graft_sidx_plan_")
     SearchIndex.build(corpus, "doc_id", "text", dir, nBuckets = 8)
     val q = SearchIndex.bm25TopKIndexed(spark, dir, terms, k = 10)
     val scans = q.queryExecution.executedPlan.collectLeaves().map(_.toString)

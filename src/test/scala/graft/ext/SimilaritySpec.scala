@@ -39,7 +39,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("persisted codes reproduce the in-memory int8 top-k exactly") {
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_codes_").toString
+    val dir = tempDir("graft_codes_")
     Similarity.writeCodes(real, "vec_id", "embedding", s"$dir/codes")
     val fromCodes = Similarity.int8TopKFromCodes(
       spark.read.parquet(s"$dir/codes"), "vec_id", queryId = 1L, k = 10)
@@ -57,7 +57,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("int8TopKMany equals per-query int8TopKFromCodes, one pass over codes") {
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_codes_b_").toString
+    val dir = tempDir("graft_codes_b_")
     Similarity.writeCodes(real, "vec_id", "embedding", s"$dir/codes")
     val codes = spark.read.parquet(s"$dir/codes").repartition(3)
     val batch = Similarity.int8TopKMany(codes, "vec_id",
@@ -74,7 +74,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("int8TopKManyVecs quantizes float queries bit-identically to the code table") {
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_codes_v_").toString
+    val dir = tempDir("graft_codes_v_")
     Similarity.writeCodes(real, "vec_id", "embedding", s"$dir/codes")
     val codes = spark.read.parquet(s"$dir/codes")
     // float queries = corpus rows 0..2 → must equal searching by their codes
@@ -91,7 +91,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("int8TopKManyVecs default keeps a corpus row whose id collides with a query id") {
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_codes_c_").toString
+    val dir = tempDir("graft_codes_c_")
     Similarity.writeCodes(real, "vec_id", "embedding", s"$dir/codes")
     val codes = spark.read.parquet(s"$dir/codes")
     val n = codes.count()
@@ -192,7 +192,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("hammingTopKMany from persisted signatures equals per-query hammingTopK") {
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigs_").toString
+    val dir = tempDir("graft_sigs_")
     Similarity.writeSignBits(real, "vec_id", "embedding", dim = 64, s"$dir/sigs")
     val sigs = spark.read.parquet(s"$dir/sigs")
     // stored signature really is one 8-byte word per 64 dims
@@ -213,7 +213,7 @@ class SimilaritySpec extends SparkSpec {
   test("batch kernels accept caller-named signature/code columns") {
     // r12 advice: the column name is a parameter, not a hardcoded contract
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigs2_").toString
+    val dir = tempDir("graft_sigs2_")
     Similarity.writeSignBits(real, "vec_id", "embedding", dim = 64, s"$dir/sigs")
     val sigs = spark.read.parquet(s"$dir/sigs")
     val renamed = sigs.withColumnRenamed("sig", "my_signature")
@@ -225,7 +225,7 @@ class SimilaritySpec extends SparkSpec {
       sigCol = "my_signature")
       .as[(Long, Long, Long)].collect().sortBy(r => (r._3, r._2)).toSeq
     assert(a == b && a.nonEmpty)
-    val cdir = java.nio.file.Files.createTempDirectory("graft_codes2_").toString
+    val cdir = tempDir("graft_codes2_")
     Similarity.writeCodes(real, "vec_id", "embedding", s"$cdir/codes")
     val codes = spark.read.parquet(s"$cdir/codes").select($"vec_id", $"code")
     val rcodes = codes.withColumnRenamed("code", "c8")

@@ -130,7 +130,7 @@ class SyncSpec extends SparkSpec {
 
   test("upsertPartitioned rewrites only touched partitions, merges by key") {
     import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("graft_upsert_p_").toString + "/t"
+    val base = tempDir("graft_upsert_p_") + "/t"
     Seq((1L, "d1", 10.0), (2L, "d1", 20.0), (3L, "d2", 30.0), (4L, "d3", 40.0))
       .toDF("k", "day", "v")
       .write.partitionBy("day").parquet(base)
@@ -153,7 +153,7 @@ class SyncSpec extends SparkSpec {
     // r12 advice: isin(touched) is never true for a null partition value,
     // so before the explicit isNull branch an update touching the null
     // partition silently deleted every non-updated row living in it
-    val base = java.nio.file.Files.createTempDirectory("graft_upsert_n_").toString + "/t"
+    val base = tempDir("graft_upsert_n_") + "/t"
     Seq((1L, Option("d1"), 10.0), (2L, None: Option[String], 20.0),
       (3L, None: Option[String], 30.0))
       .toDF("k", "day", "v").write.partitionBy("day").parquet(base)
@@ -166,7 +166,7 @@ class SyncSpec extends SparkSpec {
   }
 
   test("upsertPartitioned refuses unbounded partition fans and no-ops on empty") {
-    val base = java.nio.file.Files.createTempDirectory("graft_upsert_pe_").toString + "/t"
+    val base = tempDir("graft_upsert_pe_") + "/t"
     Seq((1L, "d1", 10.0)).toDF("k", "day", "v").write.partitionBy("day").parquet(base)
     val wide = (1 to 5).map(i => (i.toLong, s"day$i", 1.0)).toDF("k", "day", "v")
     intercept[IllegalArgumentException] {

@@ -64,7 +64,7 @@ class ExcelSpec extends SparkSpec {
     Seq("gamma")))                         // sparse row
 
   test("read parses shared strings, numerics, skips empty rows, pads sparse rows") {
-    val dir = Files.createTempDirectory("graft_xlsx_").toString
+    val dir = tempDir("graft_xlsx_")
     val f = new FileOutputStream(s"$dir/t.xlsx"); f.write(sample); f.close()
     val df = Excel.read(spark, s"$dir/t.xlsx")
     assert(df.columns.toSeq == Seq("name", "qty", "note"))
@@ -73,7 +73,7 @@ class ExcelSpec extends SparkSpec {
   }
 
   test("write fails fast past the enforced row cap, and the cap bounds the collect") {
-    val dir = Files.createTempDirectory("graft_xlsx_cap_").toString
+    val dir = tempDir("graft_xlsx_cap_")
     val big = spark.range(0, 100).selectExpr("id", "id * 2 as v")
     val ex = intercept[IllegalArgumentException] {
       Excel.write(big, s"$dir/too_big.xlsx", maxRows = 10)
@@ -85,7 +85,7 @@ class ExcelSpec extends SparkSpec {
   }
 
   test("readDir parses a directory of workbooks distributed") {
-    val dir = Files.createTempDirectory("graft_xlsx_d_").toString
+    val dir = tempDir("graft_xlsx_d_")
     val a = ExcelSpec.makeXlsx(Seq(Seq("k", "v"), Seq("a", 1)))
     val b = ExcelSpec.makeXlsx(Seq(Seq("k", "v"), Seq("b", 2)))
     val f1 = new FileOutputStream(s"$dir/a.xlsx"); f1.write(a); f1.close()

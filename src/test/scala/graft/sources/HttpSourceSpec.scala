@@ -37,7 +37,7 @@ class HttpSourceSpec extends SparkSpec {
 
   test("download writes the body to the target dir and names it from the URL") {
     withServer("payload") { url =>
-      val dir = Files.createTempDirectory("graft_http_t_").toString
+      val dir = tempDir("graft_http_t_")
       val path = HttpSource.download(url, dir)
       assert(path.getFileName.toString == "data.csv")
       assert(new String(Files.readAllBytes(path), "UTF-8") == "payload")

@@ -13,7 +13,7 @@ class JdbcSpec extends SparkSpec {
   System.setProperty("derby.stream.error.file", "/tmp/graft_test_derby.log")
 
   private def freshUrl(): String = {
-    val dir = Files.createTempDirectory("graft_derby_").toString
+    val dir = tempDir("graft_derby_")
     s"jdbc:derby:$dir/db;create=true"
   }
 

@@ -51,7 +51,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("parquetSized caps rows per output file and round-trips content") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sized_").toString + "/out"
+    val dir = tempDir("graft_sized_") + "/out"
     val df = spark.range(10000).toDF("id").coalesce(1)
     FileSink.parquetSized(df, dir, maxRecordsPerFile = 1000)
     val parts = new java.io.File(dir).listFiles()
@@ -61,7 +61,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("orc round-trips every column type bit-exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc_").toString + "/out"
+    val dir = tempDir("graft_orc_") + "/out"
     val df = Seq(
       (1L, "a", 1.5, java.sql.Timestamp.valueOf("2024-01-01 10:30:00.123456")),
       (2L, "b", -0.25, java.sql.Timestamp.valueOf("2024-06-30 23:59:59.999999")))
@@ -76,7 +76,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("jsonlSized writes one JSON object per line in sized shards") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_").toString + "/out"
+    val dir = tempDir("graft_jsonl_") + "/out"
     val df = spark.range(5000)
       .selectExpr("id", "concat('doc ', id) AS text").coalesce(1)
     FileSink.jsonlSized(df, dir, maxRecordsPerFile = 1000)
@@ -93,7 +93,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("jsonlSized gzip shards round-trip through the text reader") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonlgz_").toString + "/out"
+    val dir = tempDir("graft_jsonlgz_") + "/out"
     FileSink.jsonlSized(spark.range(100).toDF("id"), dir,
       maxRecordsPerFile = 1000, compression = Some("gzip"))
     assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".txt.gz")))
@@ -101,7 +101,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactTo rewrites many small files into the sized layout") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cmp_").toString
+    val base = tempDir("graft_cmp_")
     spark.range(5000).toDF("id").repartition(50).write.parquet(s"$base/small")
     def parts(p: String) = new java.io.File(p).listFiles()
       .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
@@ -151,7 +151,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("overwritePartitions replaces only the partitions present in the frame") {
-    val dir = Files.createTempDirectory("graft_dpo_").toString + "/t"
+    val dir = tempDir("graft_dpo_") + "/t"
     Seq((1, "d1"), (2, "d1"), (3, "d2")).toDF("id", "day")
       .write.partitionBy("day").parquet(dir)
     // backfill day d1 with corrected data; d2 must remain untouched
@@ -167,7 +167,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("checkpointed incremental ingest processes only NEW files per run") {
-    val dir = Files.createTempDirectory("graft_incr_").toString
+    val dir = tempDir("graft_incr_")
     val data = s"$dir/data"; val ckpt = s"$dir/ckpt"
     new java.io.File(data).mkdirs()
     def drop(name: String, rows: Seq[Long]): Unit = {
@@ -197,7 +197,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("fileStream turns file arrivals into micro-batches") {
-    val dir = Files.createTempDirectory("graft_fs_").toString
+    val dir = tempDir("graft_fs_")
     val df1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     df1.write.parquet(s"$dir/batch1")
     // move parquet files into the watched dir root

@@ -41,7 +41,7 @@ class ZOrderSpec extends SparkSpec {
     val n = 64
     val df = (for { x <- 0 until n; y <- 0 until n } yield (x, y))
       .toDF("x", "y").repartition(13)          // scrambled input layout
-    val dir = java.nio.file.Files.createTempDirectory("graft_z_").toString
+    val dir = tempDir("graft_z_")
     ZOrder.writeClustered(df, s"$dir/z", Seq("x", "y"), numPartitions = 16, bits = 6)
     val spreads = spark.read.parquet(s"$dir/z")
       .groupBy(input_file_name().as("f"))

@@ -134,7 +134,7 @@ class AmqpIntegrationSpec extends SparkSpec {
     val ingest = new AmqpIngest(broker, q, prefetch = 1000)
     broker.publish((1 to 40).map(i => s"payload-$i"): _*)
     ingest.pump()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_amqp_e2e_").toString
+    val ckpt = tempDir("graft_amqp_e2e_")
     def runOnce(name: String): Unit = {
       val out = spark.readStream.format("graft.streaming.QueueSourceProvider")
         .option("queue", q).option("maxPerBatch", "1000").load()

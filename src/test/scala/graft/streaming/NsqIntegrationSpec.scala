@@ -200,7 +200,7 @@ class NsqIntegrationSpec extends SparkSpec {
     val ingest = new NsqIngest(nsqd, q, maxInFlight = 1000)
     nsqd.publish((1 to 40).map(i => s"payload-$i"): _*)
     ingest.pump()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_nsq_e2e_").toString
+    val ckpt = tempDir("graft_nsq_e2e_")
     def runOnce(name: String): Unit = {
       val out = spark.readStream.format("graft.streaming.QueueSourceProvider")
         .option("queue", q).option("maxPerBatch", "1000").load()

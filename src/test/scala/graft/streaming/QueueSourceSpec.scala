@@ -48,8 +48,8 @@ class QueueSourceSpec extends SparkSpec {
 
   test("restart from checkpoint resumes at the committed offset — no reprocessing") {
     import java.nio.file.Files
-    val ckpt = Files.createTempDirectory("graft_q_ckpt_").toString
-    val out = Files.createTempDirectory("graft_q_out_").toString
+    val ckpt = tempDir("graft_q_ckpt_")
+    val out = tempDir("graft_q_out_")
     MessageQueues.clear("qr")
     MessageQueues.push("qr", "m1", "m2")
 
