@@ -76,7 +76,8 @@ object Config {
     * ProcessingTime(N s) query and returns immediately with the query
     * running (manage it via `spark.streams`). Each micro-batch is
     * delivered to every declared sink; `checkpoint:` pins the offset log
-    * (defaults to a temp dir = this run only).
+    * (defaults to a temp dir = this run only: a run-once task deletes it
+    * when the run ends, a continuous task leaves it to its running query).
     */
   def run(spark: SparkSession, yaml: String): DataFrame = {
     val task = parse(yaml)
@@ -90,6 +91,7 @@ object Config {
       require(task.sinks.nonEmpty, "a streaming task needs a sink")
       val ckpt = task.checkpoint.getOrElse(
         java.nio.file.Files.createTempDirectory("graft_cfg_ckpt_").toString)
+      val runOnce = task.cron.getOrElse(-1) == -1
       val trigger = graft.streaming.Streams.triggerOf(task.cron.getOrElse(-1))
       val q = graft.streaming.Streams.foreachBatchSink(df, ckpt, trigger) {
         (batch, batchId) =>
@@ -100,7 +102,12 @@ object Config {
           try task.sinks.foreach(sink(b, _, streaming = true, batchId))
           finally if (task.sinks.length > 1) b.unpersist()
       }
-      if (task.cron.getOrElse(-1) == -1) q.awaitTermination()
+      if (runOnce)
+        try q.awaitTermination()
+        finally if (task.checkpoint.isEmpty) {
+          val p = new org.apache.hadoop.fs.Path(ckpt)
+          p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+        }
     } else {
       // fan-out: persist once when delivering to several sinks so the
       // transform chain computes once, not once per target
@@ -113,9 +120,14 @@ object Config {
     * (`Scheduler.php:154-188` walks plugin `output` edges): a `tasks:` list
     * where later tasks read earlier ones via `source: {type: task, name:}`.
     * Tasks must be listed in dependency order (the reference's configs are
-    * written the same way); each task's frame is registered by name, so a
-    * task consumed twice is still ONE lazy plan — Spark reuses the subtree,
-    * and Catalyst sees through the whole graph for pushdown.
+    * written the same way). Each task is delivered as soon as it is built,
+    * and a consumer's source is the producer's lazy plan, registered by
+    * name: Catalyst sees through the whole graph for pushdown, but every
+    * sink is its own action, so each consumer RE-EXECUTES its upstream
+    * tasks from their sources. A producer whose output is not a pure
+    * function of a stable input (`idKey` ids, `httpEnrich`, `queue`/`http`/
+    * `jdbc` sources that change between reads) can therefore hand its
+    * consumers rows that differ from what its own sink wrote.
     * Returns the result of every task by name.
     */
   def runAll(spark: SparkSession, yaml: String): Map[String, DataFrame] = {

@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** The reference's DB-to-DB sync jobs re-expressed as native relational
   * operators. In the reference these are generated SQL strings executed by
@@ -12,10 +19,14 @@ import org.apache.spark.sql.functions._
   * plans them (broadcast vs shuffle anti-join, AQE skew handling) instead of
   * an external server.
   *
-  * Scale notes (100 TB): every op below is a single shuffle-or-broadcast
-  * join or window — no driver-side collection. Anti-joins on a small target
-  * broadcast automatically (AQE); large-large anti-joins shuffle on the key,
-  * which is the optimal distributed plan for set difference.
+  * Scale notes (100 TB): every op below but [[upsertPartitioned]] is a
+  * single shuffle-or-broadcast join or window — no driver-side collection.
+  * Anti-joins on a small target broadcast automatically (AQE); large-large
+  * anti-joins shuffle on the key, which is the optimal distributed plan
+  * for set difference. [[upsertPartitioned]] is a driver-coordinated
+  * merge: it pins its update batch and brings the batch's distinct
+  * partition values to the driver, so the partitions it reads and
+  * rewrites are known before the table is touched.
   */
 object Sync {
 
@@ -158,14 +169,34 @@ object Sync {
     * path for plain parquet (what a table format's MERGE does, minus the
     * log): at 100 TB a daily update batch touches a handful of recent
     * partitions, so the read AND the rewrite are bounded by the batch, not
-    * the table. Mechanics: collect the updates' distinct partition values
-    * (bounded by construction — that is this operator's contract; it
-    * throws above `maxPartitions` rather than silently planning a
-    * full-table rewrite), read ONLY those partitions (literal IN predicate
-    * → directory pruning at plan time), keep base rows whose key has no
-    * update (anti-join — updates win wholesale), union the updates, and
-    * write back with dynamic partition overwrite so untouched partitions'
-    * files are never opened, read, or replaced.
+    * the table.
+    *
+    * Mechanics: the updates are pinned once (`localCheckpoint`), and the
+    * pin's own job also yields, through a named `observe`, the batch's
+    * distinct partition values and whether any is NULL — so the driver
+    * receives every distinct partition value of the batch, not only the
+    * first `maxPartitions + 1` (bounded by construction — that is this
+    * operator's contract; it throws above `maxPartitions` before the
+    * table is read or written, rather than silently planning a
+    * full-table rewrite). Each value is named as the
+    * writer names its directory (Spark's partition-path escaping, NULL
+    * and "" under `__HIVE_DEFAULT_PARTITION__`), and only the touched
+    * directories that exist are read, through the `basePath` option with
+    * a known schema: the data columns come from one parquet footer read
+    * on the driver, so no listing of the table and no footer job is
+    * needed (only a batch whose touched directories hold no file yet
+    * lists the table's root, to find that footer elsewhere; Spark itself
+    * lists the touched directories in a job above 32 of them). Base rows
+    * whose key has no update are kept (anti-join against the pinned keys
+    * — updates win wholesale), the pinned updates are unioned in, and the
+    * result is written back with dynamic partition overwrite so untouched
+    * partitions' files are never opened, read, or replaced.
+    *
+    * Pinning is also what makes the merge safe: the partitions read and
+    * the rows written come from ONE evaluation of `updates`. Evaluated
+    * twice, a source that changes between reads (a `jdbc` table, a
+    * nondeterministic expression) could name a partition the read never
+    * saw, and the overwrite would replace it with the update rows alone.
     *
     * An update row whose `partitionCol` differs from its key's current
     * partition lands in the NEW partition while the anti-join removes the
@@ -174,12 +205,16 @@ object Sync {
     * updates in one batch (documented contract, checked nowhere: the
     * operator cannot see an untouched partition by design).
     *
-    * A NULL `partitionCol` in the updates is handled explicitly: `isin`
-    * alone would never match the null partition (three-valued logic), so
-    * without the `isNull` branch the base rows living under
-    * `__HIVE_DEFAULT_PARTITION__` would be neither read nor kept while
-    * dynamic overwrite still rewrote that partition with only the update
-    * rows — silently deleting every non-updated row in it (r12 advice).
+    * A NULL `partitionCol` in the updates is handled explicitly: the null
+    * partition lives under `__HIVE_DEFAULT_PARTITION__`, which is read
+    * and its non-updated rows kept like any other touched partition —
+    * otherwise dynamic overwrite would rewrite that partition with only
+    * the update rows, silently deleting every non-updated row in it (r12
+    * advice).
+    *
+    * A `basePath` that does not exist fails with Spark's `PATH_NOT_FOUND`
+    * before any job; one that holds no data file fails with
+    * `UNABLE_TO_INFER_SCHEMA`, as reading it would.
     *
     * NOT ATOMIC vs readers/failure: this is a read-then-dynamic-overwrite
     * of the SAME path in one job. That self-overwrite is safe against
@@ -193,32 +228,64 @@ object Sync {
     * wholesale). Use a table format with a real log when readers must
     * never observe the torn state (r12 advice: documented hazard).
     */
-  def upsertPartitioned(spark: org.apache.spark.sql.SparkSession,
+  def upsertPartitioned(spark: SparkSession,
                         basePath: String, updates: DataFrame,
                         keys: Seq[String], partitionCol: String,
                         maxPartitions: Int = 1000): Unit = {
     require(keys.nonEmpty && !keys.contains(partitionCol),
       "need row keys distinct from the partition column")
-    val touched = updates.select(partitionCol).distinct()
-      .limit(maxPartitions + 1).collect().map(_.get(0))
-    require(touched.length <= maxPartitions,
+    val root = new Path(basePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root))
+      throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> fs.makeQualified(root).toString))
+    val observed = updates.observe("__upsert_partitions",
+      collect_set(col(partitionCol).cast("string")), max(col(partitionCol).isNull))
+    val pinned = observed.localCheckpoint(true)
+    val parts = observed.queryExecution.observedMetrics("__upsert_partitions")
+    val hasNull = !parts.isNullAt(1) && parts.getBoolean(1)
+    // the writer's own naming: cast to string, escape, NULL and "" → default
+    val dirs = (parts.getSeq[String](0) ++ (if (hasNull) Seq(null) else Nil))
+      .map(ExternalCatalogUtils.getPartitionPathString(partitionCol, _)).distinct
+    require(dirs.length <= maxPartitions,
       s"updates touch more than $maxPartitions partitions — this operator " +
         "is for bounded-partition merges; rewrite the table instead")
-    if (touched.isEmpty) return
-    val (nullTouched, nonNullTouched) = touched.partition(_ == null)
-    // explicit isNull branch: isin(...) is NULL (not true) for the null
-    // partition, which would drop __HIVE_DEFAULT_PARTITION__'s kept rows
-    val touchedPred = {
-      val inPred =
-        if (nonNullTouched.nonEmpty) col(partitionCol).isin(nonNullTouched.toSeq: _*)
-        else lit(false)
-      if (nullTouched.nonEmpty) inPred || col(partitionCol).isNull else inPred
+    if (dirs.isEmpty) return
+    val touched = dirs.map(new Path(root, _)).filter(fs.exists)
+    val schema = StructType(partitionDataColumns(fs, root, touched, partitionCol) :+
+      StructField(partitionCol, pinned.schema(partitionCol).dataType))
+    val fresh = pinned.select(schema.fieldNames.toSeq.map(col): _*)
+    val merged = if (touched.isEmpty) fresh else {
+      val base = spark.read.schema(schema).option("basePath", basePath)
+        .parquet(touched.map(_.toString): _*)
+      // no distinct: duplicate keys on the build side cannot change a left-anti result
+      fresh.unionByName(base.join(pinned.select(keys.map(col): _*), keys, "left_anti"))
     }
-    val base = spark.read.parquet(basePath).filter(touchedPred)
-    val kept = base.join(
-      updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    graft.sources.FileSink.overwritePartitions(
-      updates.select(base.columns.map(col): _*).unionByName(kept),
-      basePath, Seq(partitionCol))
+    graft.sources.FileSink.overwritePartitions(merged, basePath, Seq(partitionCol))
+  }
+
+  /** The data columns of a table partitioned by `partitionCol`, from the
+    * footer of one of its data files, read on the driver: preferably one
+    * under `touched`, else under any partition directory of `root`. A
+    * partitioned table never mixes schemas by this operator's writes, so
+    * any file speaks for all; Spark's own inference would read one footer
+    * too, in a job of its own.
+    */
+  private def partitionDataColumns(fs: FileSystem, root: Path, touched: Seq[Path],
+                                   partitionCol: String): Seq[StructField] = {
+    val visible = new PathFilter {
+      def accept(p: Path): Boolean = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    }
+    val prefix = ExternalCatalogUtils.escapePathName(partitionCol) + "="
+    def others = fs.listStatus(root).iterator
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix)).map(_.getPath)
+    val file = (touched.iterator ++ others)
+      .flatMap(d => fs.listStatus(d, visible).iterator.filter(_.isFile)).nextOption()
+      .getOrElse(throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet")))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, fs.getConf))
+    val meta = try reader.getFileMetaData finally reader.close()
+    val schema = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+    schema.fields.toSeq.filterNot(_.name == partitionCol)
   }
 }

@@ -526,6 +526,45 @@ class ConfigSpec extends SparkSpec {
     assert(out2 == 0L, s"checkpointed re-run re-admitted $out2 rows")
   }
 
+  test("a run-once streaming task deletes its default checkpoint dir; a continuous one keeps it") {
+    val dir = tempDir("graft_cfg_oneshot_")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckpts = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_cfg_ckpt_")).toSet
+    graft.streaming.MessageQueues.clear("cfg_ckpt_q")
+    graft.streaming.MessageQueues.push("cfg_ckpt_q", "alpha", "beta")
+    val before = ckpts
+    Config.run(spark,
+      s"""name: once
+         |cron: -1
+         |source: {type: queue, name: cfg_ckpt_q}
+         |sink: {type: parquet, path: $dir/once}
+         |""".stripMargin)
+    assert(spark.read.parquet(s"$dir/once").count() == 2L)
+    assert(ckpts -- before == Set.empty[String])
+    // a continuous task returns with its query running on that dir
+    val running = spark.streams.active.map(_.id).toSet
+    Config.run(spark,
+      s"""name: continuous
+         |cron: 1
+         |source: {type: queue, name: cfg_ckpt_q}
+         |sink: {type: parquet, path: $dir/continuous}
+         |""".stripMargin)
+    val q = spark.streams.active.filterNot(q => running(q.id)).head
+    val kept = ckpts -- before
+    try {
+      q.processAllAvailable()
+      assert(kept.size == 1 && new java.io.File(tmp, kept.head).isDirectory, kept)
+    } finally {
+      q.stop()
+      kept.foreach { name =>
+        val paths = Files.walk(new java.io.File(tmp, name).toPath)
+        try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally paths.close()
+      }
+    }
+  }
+
   test("dedupNear op collapses a near-duplicate cluster to one representative") {
     val dir = tempDir("graft_cfg_near_")
     val text = "the quick brown fox jumps over the lazy dog again and again"

@@ -165,6 +165,19 @@ class SyncSpec extends SparkSpec {
     assert(got == Seq((1L, 10.0), (2L, 22.0), (3L, 30.0)))
   }
 
+  test("upsertPartitioned keeps the NULL partition's rows when an update's value is the empty string") {
+    // the writer files "" under __HIVE_DEFAULT_PARTITION__ too, so an
+    // update with day = "" rewrites the null partition
+    val base = tempDir("graft_upsert_e_") + "/t"
+    Seq((1L, None: Option[String], 10.0), (2L, None: Option[String], 20.0),
+      (3L, Option("d1"), 30.0)).toDF("k", "day", "v").write.partitionBy("day").parquet(base)
+    Sync.upsertPartitioned(spark, base, Seq((1L, "", 11.0)).toDF("k", "day", "v"),
+      keys = Seq("k"), partitionCol = "day")
+    val got = spark.read.parquet(base).select("k", "day", "v")
+      .as[(Long, Option[String], Double)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1L, None, 11.0), (2L, None, 20.0), (3L, Some("d1"), 30.0)))
+  }
+
   test("upsertPartitioned refuses unbounded partition fans and no-ops on empty") {
     val base = tempDir("graft_upsert_pe_") + "/t"
     Seq((1L, "d1", 10.0)).toDF("k", "day", "v").write.partitionBy("day").parquet(base)
@@ -177,4 +190,122 @@ class SyncSpec extends SparkSpec {
       Seq.empty[(Long, String, Double)].toDF("k", "day", "v"), Seq("k"), "day")
     assert(spark.read.parquet(base).count() == 1)
   }
+
+  private def readMerged(base: String) =
+    spark.read.parquet(base).select("k", "day", "v")
+      .as[(Long, String, Double)].collect().sortBy(_._1).toSeq
+
+  test("upsertPartitioned reads and rewrites ONE evaluation of the updates") {
+    // an update batch evaluated twice could name a partition the read never
+    // saw: dynamic overwrite would then replace it with the update rows
+    // alone. Here the first evaluation of k=1's day gives d1, later ones d2.
+    val base = tempDir("graft_upsert_once_") + "/t"
+    Seq((1L, "d1", 10.0), (2L, "d1", 20.0), (3L, "d2", 30.0), (4L, "d2", 40.0))
+      .toDF("k", "day", "v").write.partitionBy("day").parquet(base)
+    SyncSpec.evaluations.set(0)
+    val day = udf(() => if (SyncSpec.evaluations.getAndIncrement() == 0) "d1" else "d2")
+      .asNondeterministic()
+    val updates = Seq((1L, 11.0)).toDF("k", "v").withColumn("day", day())
+    Sync.upsertPartitioned(spark, base, updates, keys = Seq("k"), partitionCol = "day")
+    assert(readMerged(base) ==
+      Seq((1L, "d1", 11.0), (2L, "d1", 20.0), (3L, "d2", 30.0), (4L, "d2", 40.0)))
+  }
+
+  test("upsertPartitioned finds a partition whose value needs path escaping") {
+    val base = tempDir("graft_upsert_esc_") + "/t"
+    val odd = "a b/c=d"
+    Seq((1L, odd, 10.0), (2L, odd, 20.0), (3L, "plain", 30.0))
+      .toDF("k", "day", "v").write.partitionBy("day").parquet(base)
+    assert(new java.io.File(s"$base/day=a b%2Fc%3Dd").isDirectory)
+    Sync.upsertPartitioned(spark, base,
+      Seq((1L, odd, 11.0), (9L, odd, 90.0)).toDF("k", "day", "v"), Seq("k"), "day")
+    assert(readMerged(base) ==
+      Seq((1L, odd, 11.0), (2L, odd, 20.0), (3L, "plain", 30.0), (9L, odd, 90.0)))
+  }
+
+  test("upsertPartitioned inserts a batch whose partitions have no directory yet") {
+    val base = tempDir("graft_upsert_new_") + "/t"
+    Seq((1L, "d1", 10.0), (2L, "d2", 20.0)).toDF("k", "day", "v")
+      .write.partitionBy("day").parquet(base)
+    Sync.upsertPartitioned(spark, base,
+      Seq((7L, "d7", 70.0), (8L, "d8", 80.0), (9L, "d8", 90.0)).toDF("k", "day", "v"),
+      Seq("k"), "day")
+    assert(readMerged(base) == Seq((1L, "d1", 10.0), (2L, "d2", 20.0),
+      (7L, "d7", 70.0), (8L, "d8", 80.0), (9L, "d8", 90.0)))
+  }
+
+  test("upsertPartitioned merges a batch over existing and new partitions") {
+    val base = tempDir("graft_upsert_mix_") + "/t"
+    Seq((1L, "d1", 10.0), (2L, "d1", 20.0), (3L, "d2", 30.0)).toDF("k", "day", "v")
+      .write.partitionBy("day").parquet(base)
+    def d2Files = new java.io.File(s"$base/day=d2").listFiles()
+      .map(f => f.getName -> f.lastModified).toSet
+    val d2Before = d2Files
+    Sync.upsertPartitioned(spark, base,
+      Seq((2L, "d1", 22.0), (5L, "d5", 50.0), (6L, "d1", 60.0)).toDF("k", "day", "v"),
+      Seq("k"), "day")
+    assert(readMerged(base) == Seq((1L, "d1", 10.0), (2L, "d1", 22.0),
+      (3L, "d2", 30.0), (5L, "d5", 50.0), (6L, "d1", 60.0)))
+    assert(d2Files == d2Before)
+  }
+
+  test("upsertPartitioned fails loudly on a missing base path and writes nothing") {
+    val base = tempDir("graft_upsert_miss_") + "/absent"
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Sync.upsertPartitioned(spark, base,
+        Seq((1L, "d1", 10.0)).toDF("k", "day", "v"), Seq("k"), "day")
+    }
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+    assert(!new java.io.File(base).exists())
+  }
+
+  test("upsertPartitioned merges a batch touching a few of 40 partitions in at most 4 jobs") {
+    // the etl_sync shape: a latest-version window over a staged parquet
+    // delta, merged into a table with more partition directories (40) than
+    // Spark lists on the driver (32). Reading the whole table and running
+    // the window twice took 9 jobs; the pinned merge takes 4 (the window's
+    // exchange, the pin, the broadcast of the pinned keys, the write), in
+    // every run measured, idle or under CPU load.
+    val dir = tempDir("graft_upsert_jobs_")
+    (0L until 400L).map(k => (k, (k % 40).toInt, k.toDouble)).toDF("k", "day", "v")
+      .write.partitionBy("day").parquet(s"$dir/t")
+    (0L until 200L).map(i => (i % 10 * 40 + i % 6, (i % 6).toInt, i.toDouble, i))
+      .toDF("k", "day", "v", "ver").write.parquet(s"$dir/staged")
+    val updates = Sync.latestVersion(spark.read.parquet(s"$dir/staged"), Seq("k"),
+      Seq(col("ver"))).drop("ver")
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tag = java.util.UUID.randomUUID().toString
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.run") == tag)
+          jobs.add(e.jobId)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.add(e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty("graft.spec.run", tag)
+    try {
+      Sync.upsertPartitioned(spark, s"$dir/t", updates, Seq("k"), "day")
+      val deadline = System.currentTimeMillis() + 10000
+      while (!ended.containsAll(jobs) && System.currentTimeMillis() < deadline) Thread.sleep(25)
+      Thread.sleep(200)
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.spec.run", null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    info(s"jobs: ${jobs.size}")
+    assert(jobs.size >= 1 && jobs.size <= 4, s"upsertPartitioned ran ${jobs.size} jobs")
+    val got = spark.read.parquet(s"$dir/t")
+    assert(got.count() == 400L)
+    assert(got.filter(col("day") >= 6).as[(Long, Double, Int)].collect()
+      .forall { case (k, v, _) => v == k.toDouble })
+  }
+}
+
+object SyncSpec {
+  /** Evaluations of the nondeterministic partition UDF, JVM-wide: tasks of
+    * the local session run in this JVM.
+    */
+  val evaluations = new java.util.concurrent.atomic.AtomicInteger()
 }
