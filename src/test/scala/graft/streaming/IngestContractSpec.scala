@@ -69,9 +69,11 @@ class IngestContractSpec extends SparkSpec {
   private def vec(x: Double, y: Double, z: Double) = Seq(x.toFloat, y.toFloat, z.toFloat)
 
   // job bounds (bootstrap, admitting, replay): the most jobs each batch ran
-  // before the ingests shared one commit step. The audio admitting batch
-  // ran 17 or 18: adaptive execution may plan one more job depending on
-  // which shuffle stage finishes first.
+  // before the ingests shared one commit step; for the near and bloom
+  // ingests, the most over 5 runs with no other load and 5 beside three
+  // busy-loop processes. The audio admitting batch ran 17 or 18: adaptive
+  // execution may plan one more job depending on which shuffle stage
+  // finishes first.
   private val cases = Seq(
     IngestCase("ingestImageDedup", "corpus", "idx", Seq(11, 15, 13), dir =>
       payloadRun(dir, pngs((5, 0), (5, 1), (40, 0), (90, 0), (120, 0)), p => Seq(
@@ -140,6 +142,33 @@ class IngestContractSpec extends SparkSpec {
         Seq((6L, v(1, 0, 0)), (7L, v(0, 0, 1))),
         Seq((8L, v(1, 1, 0)))).map(b => () => { mem.addData(b: _*); () }))
     }),
+    IngestCase("ingestNearDedup", "corpus", "idx", Seq(21, 46, 43), { dir =>
+      implicit val sqlCtx = spark.sqlContext
+      val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+      val mem = MemoryStream[(Long, String)]
+      val q = Streams.ingestNearDedup(mem.toDF().toDF("doc_id", "text"),
+        s"$dir/corpus", s"$dir/idx", idCol = "doc_id", textCol = "text",
+        checkpoint = s"$dir/ckpt", minJaccard = 0.5,
+        trigger = Trigger.ProcessingTime(0))
+      Run(q, Seq(
+        Seq((1L, a), (2L, a + " lambda"), (3L, "one two three four five six seven eight")),
+        Seq((4L, a + " mu"), (5L, "qq1 qq2 qq3 qq4 qq5 qq6")),
+        Seq((6L, a), (7L, "qq1 qq2 qq3 qq4 qq5 qq6")),
+        Seq((8L, "fresh words for the last batch"))).map(b => () => { mem.addData(b: _*); () }))
+    }),
+    IngestCase("ingestBloomDedup", "corpus", "bloom", Seq(5, 9, 6), { dir =>
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(Long, String)]
+      val q = Streams.ingestBloomDedup(mem.toDF().toDF("doc_id", "text"),
+        s"$dir/corpus", s"$dir/bloom", idCol = "doc_id", textCol = "text",
+        checkpoint = s"$dir/ckpt", k = 5, mBits = 1L << 16,
+        trigger = Trigger.ProcessingTime(0))
+      Run(q, Seq(
+        Seq((1L, "alpha doc"), (2L, "beta doc"), (3L, "alpha doc")),
+        Seq((4L, "beta doc"), (5L, "gamma doc")),
+        Seq((6L, "alpha doc"), (7L, "gamma doc")),
+        Seq((8L, "delta doc"))).map(b => () => { mem.addData(b: _*); () }))
+    }),
     IngestCase("ingestSearchDocs", "idx/docs", "idx", Seq(7, 12, 6), { dir =>
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[(Long, String)]
@@ -165,15 +194,22 @@ class IngestContractSpec extends SparkSpec {
       val dir = tempDir(s"graft_contract_${c.name}_")
       val run = c.start(dir)
       val qid = run.q.id.toString
-      // job id → micro-batch id, for this query's jobs only
-      val jobs = new ConcurrentHashMap[Int, Long]()
+      // job id → (micro-batch id, the job's last stage: its name and the
+      // operator scopes of its RDDs), for this query's jobs only. Every
+      // stage of a micro-batch is named after the query's `start` call
+      // site, so the scopes are what tell its jobs apart
+      val jobs = new ConcurrentHashMap[Int, (Long, String)]()
       val ended = ConcurrentHashMap.newKeySet[Int]()
       val listener = new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit =
           if (e.properties != null &&
               e.properties.getProperty("sql.streaming.queryId") == qid)
             Option(e.properties.getProperty("streaming.sql.batchId"))
-              .foreach(b => jobs.put(e.jobId, b.toLong))
+              .foreach(b => jobs.put(e.jobId, (b.toLong,
+                e.stageInfos.maxByOption(_.stageId).fold("?") { st =>
+                  s"${st.name}, ${st.numTasks} tasks: " +
+                    st.rddInfos.flatMap(_.scope.map(_.name)).distinct.mkString(" < ")
+                })))
         override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
       }
       spark.sparkContext.addSparkListener(listener)
@@ -186,10 +222,13 @@ class IngestContractSpec extends SparkSpec {
         while (!ended.containsAll(jobs.keySet()) &&
             System.currentTimeMillis() < deadline) Thread.sleep(25)
         Thread.sleep(200)
-        val perBatch = (0L to 2L).map(b => jobs.values().asScala.count(_ == b))
+        def named(b: Long) = jobs.asScala.toSeq.sortBy(_._1).collect {
+          case (id, (`b`, name)) => s"$id: $name" }
+        val perBatch = (0L to 2L).map(named(_).size)
         info(s"jobs per batch: $perBatch")
         perBatch.zip(c.maxJobs).zipWithIndex.foreach { case ((n, max), b) =>
-          assert(n >= 1 && n <= max, s"${c.name} batch $b ran $n jobs (bound $max): $perBatch")
+          assert(n >= 1 && n <= max, s"${c.name} batch $b ran $n jobs (bound $max): " +
+            s"$perBatch; its jobs:\n${named(b.toLong).mkString("\n")}")
         }
         val files = filesAfter(2)
         assert(files > 0 && files == filesAfter(1), s"corpus files per batch: $filesAfter")
