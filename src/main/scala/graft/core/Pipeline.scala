@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** A pipeline is a composition of `DataFrame => DataFrame` stages.
   *
@@ -42,5 +43,24 @@ object Pipeline {
     require(metrics.nonEmpty, "need at least one metric")
     val obs = Observation(name)
     (df.observe(obs, metrics.head, metrics.tail: _*), obs)
+  }
+
+  /** A pinned frame and what its pin's job counted: `rows` rows, and the
+    * values of the extra aggregates in `aggs`, in the order given.
+    */
+  final case class Pinned(df: DataFrame, rows: Long, aggs: Row)
+
+  /** Pin `df` (an eager `localCheckpoint`) and learn its row count and the
+    * values of `aggs` in the pin's own job, through a named `observe`: a
+    * caller that must know whether a batch is empty, or which partitions
+    * it touches, spends no second job on it. Later actions read only the
+    * pin, so `df` is evaluated once. The count can only err high (a re-run
+    * task adds its rows again), never low.
+    */
+  def pin(df: DataFrame, aggs: Column*): Pinned = {
+    val observed = df.observe("__pin", count(lit(1)), aggs: _*)
+    val pinned = observed.localCheckpoint(true)
+    val m = observed.queryExecution.observedMetrics("__pin")
+    Pinned(pinned, m.getLong(0), Row.fromSeq(m.toSeq.tail))
   }
 }

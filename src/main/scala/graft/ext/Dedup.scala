@@ -469,8 +469,9 @@ object Dedup {
     * hit set's `IN` onto the stored scan instead of the semi join: parquet
     * pushes the list down and the scan costs several times the join.
     * NULL keys never equi-match, so null-keyed fresh rows are always
-    * admitted — same semantics as the plain anti-join (callers relying on
-    * that: URL ingest's unparseable-URL passthrough).
+    * admitted — same semantics as the plain anti-join, and as
+    * [[admitNewByUniqueKey]] (the URL ingest's unparseable-URL passthrough
+    * relies on it).
     *
     * The broadcast assumes `fresh` is BOUNDED (a micro-batch): its key set
     * must fit the driver and Spark's 8 GB broadcast hard limit. Streaming
@@ -493,25 +494,32 @@ object Dedup {
     } else withoutHits(pinned, keyCol, storedHits(pinned, stored, keyCol))
   }
 
-  /** [[admitNewByKey]] (broadcast shape) for a `fresh` whose `keyCol` is
-    * unique and non-null — what [[exactHashed]] leaves in `__h`. Also
-    * returns whether any row was admitted, with no extra Spark job: the
-    * pin's own job counts the pinned rows (a named `observe`), and each
-    * collected hit is the key of exactly one of them, so rows are admitted
-    * iff the count exceeds the hits. This lets an ingest skip an
-    * all-duplicate batch's write, which would otherwise leave a
-    * schema-only parquet file per trigger. The count can only err high (a
-    * re-run task adds its rows again), which costs that empty write and
-    * never drops an admitted row.
+  /** [[admitNewByKey]] (broadcast shape) over ONE pin of `fresh`, probed
+    * by each `(stored, key)` of `probes` in turn: each probe broadcasts
+    * the pin already filtered by the earlier probes' hits. Every `key`
+    * must be unique among the batch's rows — what [[exactHashed]] leaves
+    * in `__h`, or an id after a `groupBy`. Null keys never match, so
+    * null-keyed rows are admitted and counted.
+    *
+    * Returns the admitted rows with their count, with no job beyond the
+    * pin and the probes: the pin's own job counts the batch
+    * ([[graft.core.Pipeline.pin]]), and rows are admitted iff that count
+    * exceeds the sum of the collected hits. The count is exact because
+    * each hit removes exactly one row: a hit is a distinct non-null stored
+    * key equal to the key of some row still in the filtered pin, and a
+    * unique key names one row; a null key is never a hit; and a row a
+    * probe removes is gone from every later probe's broadcast, so no row
+    * is removed twice. This lets an ingest skip an all-duplicate batch's
+    * write, which would otherwise leave a schema-only parquet file per
+    * trigger. The pin's count can only err high (a re-run task), which
+    * costs that empty write and never drops an admitted row.
     */
-  private[graft] def admitNewByUniqueKey(fresh: DataFrame, stored: DataFrame,
-                                         keyCol: String): (DataFrame, Boolean) = {
-    val observed = fresh.observe("__admit_rows", count(lit(1)))
-    val pinned = observed.localCheckpoint(true)
-    val rows = observed.queryExecution.observedMetrics("__admit_rows").getLong(0)
-    val hits = storedHits(pinned, stored, keyCol)
-    (withoutHits(pinned, keyCol, hits), rows > hits.length)
-  }
+  private[graft] def admitNewByUniqueKey(fresh: DataFrame,
+                                         probes: (DataFrame, String)*): graft.core.Pipeline.Pinned =
+    probes.foldLeft(graft.core.Pipeline.pin(fresh)) { case (p, (stored, key)) =>
+      val hits = storedHits(p.df, stored, key)
+      p.copy(df = withoutHits(p.df, key, hits), rows = p.rows - hits.length)
+    }
 
   /** The distinct stored keys that match a pinned batch's keys: the
     * batch's non-null keys broadcast into one scan of `stored`,
@@ -1163,7 +1171,7 @@ object Dedup {
     * collapse recall to ~zero — a parameter drift IS an incompatible
     * encoding, caught the same way as the raw-vs-residual PQ codes.
     */
-  private def nearIndexFormat(shingleN: Int, bands: Int, rowsPerBand: Int) =
+  private[graft] def nearIndexFormat(shingleN: Int, bands: Int, rowsPerBand: Int) =
     s"near-lsh:v1:n=$shingleN,b=$bands,r=$rowsPerBand"
 
   /** Persist the corpus side of incremental near-dedup at `dir`:
@@ -1215,17 +1223,17 @@ object Dedup {
       bands, rowsPerBand, SaveMode.Append)
   }
 
-  /** The one write body of the near family: `docs` appended to `corpus`
-    * (when given), then the postings and shingle rows written in `mode`,
-    * all inside one [[IndexFormat.commit]].
+  /** The one write body of the near family: `docs` written to `corpus`
+    * (when given), then the postings and shingle rows, all in `mode` and
+    * inside one [[IndexFormat.commit]].
     */
-  private def writeNearIndex(docs: DataFrame, corpus: Option[String],
+  private[graft] def writeNearIndex(docs: DataFrame, corpus: Option[String],
                              idCol: String, textCol: String, dir: String,
                              shingleN: Int, bands: Int, rowsPerBand: Int,
                              mode: SaveMode): Unit =
     IndexFormat.commit(docs.sparkSession, dir,
         nearIndexFormat(shingleN, bands, rowsPerBand)) {
-      corpus.foreach(docs.write.mode(SaveMode.Append).parquet(_))
+      corpus.foreach(docs.write.mode(mode).parquet(_))
       val shingled = shingledFrame(docs, idCol, textCol, shingleN,
         bands * rowsPerBand).persist()
       try {
@@ -1371,7 +1379,7 @@ object Dedup {
     * mismatched dimensions over the common prefix without erroring — both
     * drifts must fail loudly at [[IndexFormat.check]] instead.
     */
-  private def semanticIndexFormat(k: Int, dim: Int) = s"sem-cells-v1:k=$k,dim=$dim"
+  private[graft] def semanticIndexFormat(k: Int, dim: Int) = s"sem-cells-v1:k=$k,dim=$dim"
 
   /** Persist the corpus side of incremental semantic dedup at `dir`:
     * `anchors/` = (cell, v) — the k deterministic hash-ordered anchors,

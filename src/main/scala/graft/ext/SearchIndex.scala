@@ -46,7 +46,7 @@ object SearchIndex {
     * [[IndexFormat.check]]'s fail-loud semantics: a missing or
     * foreign-format stamp is an error, never a default.
     */
-  private[ext] def readNBuckets(spark: SparkSession, dir: String): Int = {
+  private[graft] def readNBuckets(spark: SparkSession, dir: String): Int = {
     val found = IndexFormat.readFormat(spark, dir)
     val pfx = s"$FormatPrefix:b"
     found match {
@@ -62,16 +62,15 @@ object SearchIndex {
     }
   }
 
-  /** One row per document: (id, lowered text, token count). Materialized
-    * eagerly so the three index writes (postings/docs/stats) share one
-    * tokenization pass — and so a streaming micro-batch input is pinned
-    * before the first write begins.
+  /** One row per document: (id, lowered text, token count), the frame
+    * [[writeBase]] writes. Callers pin it before the write, so the three
+    * index writes (postings/docs/stats) share one tokenization pass, and a
+    * streaming micro-batch input is pinned before the first write begins.
     */
-  private def baseOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  private[graft] def baseOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).cast("long").as("id"),
         lower(col(textCol)).cast("string").as("__t"),
         T.tokenCount(col(textCol)).as("dl"))
-      .localCheckpoint(true)
 
   private def postingsOf(base: DataFrame, nBuckets: Int): DataFrame =
     base.select(col("id"), col("dl"), explode(T.tokens(col("__t"))).as("w"))
@@ -87,10 +86,9 @@ object SearchIndex {
     * a crashed-and-retried bootstrap rewrites identical content).
     */
   def build(docs: DataFrame, idCol: String, textCol: String, dir: String,
-            nBuckets: Int = 64): Unit = {
-    require(nBuckets > 0, "nBuckets must be positive")
-    write(docs, idCol, textCol, dir, nBuckets, SaveMode.Overwrite)
-  }
+            nBuckets: Int = 64): Unit =
+    writeBase(baseOf(docs, idCol, textCol).localCheckpoint(true), dir,
+      nBuckets, SaveMode.Overwrite)
 
   /** Append a batch of NEW documents (ids not already indexed — callers
     * dedup upstream; [[graft.streaming.Streams.ingestSearchDocs]] anti-joins
@@ -101,17 +99,17 @@ object SearchIndex {
     */
   def append(docs: DataFrame, idCol: String, textCol: String,
              dir: String): Unit =
-    write(docs, idCol, textCol, dir, readNBuckets(docs.sparkSession, dir),
-      SaveMode.Append)
+    writeBase(baseOf(docs, idCol, textCol).localCheckpoint(true), dir,
+      readNBuckets(docs.sparkSession, dir), SaveMode.Append)
 
-  /** The one write body of [[build]] and [[append]]: tokenize once
-    * (pinned before the window), then write postings, docs and one stats
-    * segment in `mode` inside one [[IndexFormat.commit]].
+  /** The one write body of [[build]] and [[append]]: from a pinned
+    * [[baseOf]] frame, write postings, docs and one stats segment in
+    * `mode` inside one [[IndexFormat.commit]].
     */
-  private def write(docs: DataFrame, idCol: String, textCol: String,
-                    dir: String, nBuckets: Int, mode: SaveMode): Unit = {
-    val base = baseOf(docs, idCol, textCol)
-    IndexFormat.commit(docs.sparkSession, dir, formatId(nBuckets)) {
+  private[graft] def writeBase(base: DataFrame, dir: String, nBuckets: Int,
+                               mode: SaveMode): Unit = {
+    require(nBuckets > 0, "nBuckets must be positive")
+    IndexFormat.commit(base.sparkSession, dir, formatId(nBuckets)) {
       postingsOf(base, nBuckets).write.mode(mode)
         .partitionBy("bkt").parquet(s"$dir/postings")
       base.select("id", "dl").write.mode(mode).parquet(s"$dir/docs")

@@ -1,15 +1,13 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.core.Pipeline
 
 /** The reference's DB-to-DB sync jobs re-expressed as native relational
   * operators. In the reference these are generated SQL strings executed by
@@ -171,8 +169,8 @@ object Sync {
     * partitions, so the read AND the rewrite are bounded by the batch, not
     * the table.
     *
-    * Mechanics: the updates are pinned once (`localCheckpoint`), and the
-    * pin's own job also yields, through a named `observe`, the batch's
+    * Mechanics: the updates are pinned once ([[graft.core.Pipeline.pin]]),
+    * and the pin's own job also yields the batch's
     * distinct partition values and whether any is NULL — so the driver
     * receives every distinct partition value of the batch, not only the
     * first `maxPartitions + 1` (bounded by construction — that is this
@@ -238,10 +236,8 @@ object Sync {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root))
       throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> fs.makeQualified(root).toString))
-    val observed = updates.observe("__upsert_partitions",
+    val Pipeline.Pinned(pinned, _, parts) = Pipeline.pin(updates,
       collect_set(col(partitionCol).cast("string")), max(col(partitionCol).isNull))
-    val pinned = observed.localCheckpoint(true)
-    val parts = observed.queryExecution.observedMetrics("__upsert_partitions")
     val hasNull = !parts.isNullAt(1) && parts.getBoolean(1)
     // the writer's own naming: cast to string, escape, NULL and "" → default
     val dirs = (parts.getSeq[String](0) ++ (if (hasNull) Seq(null) else Nil))
@@ -281,11 +277,7 @@ object Sync {
     val file = (touched.iterator ++ others)
       .flatMap(d => fs.listStatus(d, visible).iterator.filter(_.isFile)).nextOption()
       .getOrElse(throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet")))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, fs.getConf))
-    val meta = try reader.getFileMetaData finally reader.close()
-    val schema = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
-    schema.fields.toSeq.filterNot(_.name == partitionCol)
+    graft.sources.FileSource.parquetSchema(file, fs.getConf)
+      .fields.toSeq.filterNot(_.name == partitionCol)
   }
 }

@@ -1,7 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** File ingestion — the reference's `Sources\FindFiles` (emit one message
   * per file under a dir filtered by extension allow-list,
@@ -41,6 +47,19 @@ object FileSource {
   }
 
   def parquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver: the row schema Spark stored in the footer's key-value
+    * metadata, else the file's parquet schema converted as Spark would.
+    * Spark's own inference reads one footer too, but in a job of its own.
+    */
+  def parquetSchema(file: FileStatus, conf: Configuration): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val meta = try reader.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+  }
 
   /** XML file scan (`Transforms\XmlParser` file mode,
     * `/root/reference/src/Transforms/XmlParser.php:31-36`): Spark 4

@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.core.Pipeline.{Pinned, pin}
 
 /** Structured Streaming layer. The reference's "streaming" is a push loop —
   * one MQ delivery per DAG walk, no event time, no windows, no late-data
@@ -269,14 +269,13 @@ object Streams {
     * trade being the Bloom false-positive rate (novel rows dropped at
     * ~fill^k; never the reverse — duplicates are always caught).
     *
-    * Crash discipline matches the other persisted-index ingests: bootstrap
-    * dispatch keys off DATA presence (not the stamp); appends run inside
-    * one [[graft.ext.IndexFormat.commit]] over corpus + bitmap (append →
-    * OR-write), so a torn append fails the replay loudly via
-    * [[graft.ext.IndexFormat.check]] instead of double-ingesting or
-    * silently dropping. A replayed COMMITTED batch re-tests against a
-    * bitmap that already holds its bits, admits nothing, and appends
-    * nothing — idempotent by construction, same as [[ingestDedup]].
+    * Crash discipline is the contract of the shared ingest step
+    * (`bootstrapOrAdmit`), written out here because two things differ: the
+    * bootstrap writes even an empty batch, and the append's writer ORs
+    * into the bitmap its admission read. Appends run inside one
+    * [[graft.ext.IndexFormat.commit]] over corpus + bitmap; a replayed
+    * COMMITTED batch re-tests against a bitmap that already holds its
+    * bits and appends nothing.
     */
   def ingestBloomDedup(stream: DataFrame, corpusPath: String, bloomDir: String,
                        idCol: String, textCol: String, checkpoint: String,
@@ -304,12 +303,11 @@ object Streams {
         // broadcast is dead weight — destroying it here keeps a long-running
         // stream at ONE bitmap-sized block, not one leaked per micro-batch
         val bc = spark.sparkContext.broadcast(bits)
-        val admitted =
-          try graft.ext.Bloom.flagDuplicatesBc(fresh, textCol, bc, k, mBits)
-            .filter(!org.apache.spark.sql.functions.col("maybe_dup"))
-            .drop("maybe_dup").localCheckpoint(true)
+        val Pinned(admitted, n, _) =
+          try pin(graft.ext.Bloom.flagDuplicatesBc(fresh, textCol, bc, k, mBits)
+            .filter(!col("maybe_dup")).drop("maybe_dup"))
           finally bc.destroy()
-        if (!admitted.isEmpty) graft.ext.IndexFormat.commit(spark, bloomDir, fmt) {
+        if (n > 0) graft.ext.IndexFormat.commit(spark, bloomDir, fmt) {
           admitted.write.mode(SaveMode.Append).parquet(corpusPath)
           graft.ext.Bloom.writeBits(spark, bitsPath, graft.ext.Bloom.orInto(
             bits, graft.ext.Bloom.build(admitted, textCol, k, mBits)))
@@ -330,14 +328,14 @@ object Streams {
     * `corpusPath` WITH their dhash; their signatures append to the index
     * so the NEXT batch dedups against them too.
     *
-    * Exactly-once discipline, mirroring [[ingestNearDedup]], is the step
-    * the five quarantining ingests share (`quarantineAndAdmit`):
-    * data-presence dispatch, an Overwrite bootstrap deferred past an
-    * all-quarantined first batch, one [[graft.ext.IndexFormat.commit]] over
-    * corpus + signatures, and quarantine partitions Overwritten per batch
-    * id. A replayed COMMITTED batch re-classifies its own rows as dups
-    * (their hashes are in the index, Hamming 0 ≤ maxDist) and appends
-    * nothing.
+    * Exactly-once discipline is the contract of the step every stamped
+    * ingest shares (`bootstrapOrAdmit`), dispatching on the signature
+    * data; a replayed COMMITTED batch re-classifies its own rows as dups
+    * (their hashes are in the index, Hamming 0 ≤ maxDist). Every
+    * quarantining ingest (this one, audio, video, WARC, PDF) writes its
+    * quarantine rows to `quarantinePath/batch_id=N` with Overwrite before
+    * that step, so a replay rewrites the same partition instead of
+    * appending it twice (O(batch), no scan of the existing quarantine).
     *
     * Upgrade note (applies to every ingest's quarantine): the quarantine
     * schema has evolved (payload column added; WARC/PDF column order
@@ -381,61 +379,62 @@ object Streams {
       val losers = graft.ext.Media
         .dhashNearPairs(good, idCol, "dhash", maxDist, bandBits)
         .select(col("right_id").as(idCol))
-      quarantineAndAdmit(batchId, quarantinePath,
-        decoded.filter(!col("decode_ok"))
-          .select(col(idCol), col(contentCol), col("decode_err"), col("mime")),
-        good.join(losers, Seq(idCol), "left_anti"), sigsPath, indexDir, fmt)(
-        reps => reps.join(graft.ext.Media.dhashDupIds(reps, idCol, "dhash",
+      val reps = good.join(losers, Seq(idCol), "left_anti")
+      decoded.filter(!col("decode_ok"))
+        .select(col(idCol), col(contentCol), col("decode_err"), col("mime"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$quarantinePath/batch_id=$batchId")
+      bootstrapOrAdmit(spark, sigsPath, indexDir, fmt)(reps,
+        pin(reps.join(graft.ext.Media.dhashDupIds(reps, idCol, "dhash",
             spark.read.parquet(sigsPath), "dhash", maxDist, bandBits),
-          Seq(idCol), "left_anti").localCheckpoint(true),
-        (rows, mode) => {
+          Seq(idCol), "left_anti")),
+        (rows, _, mode) => graft.ext.IndexFormat.commit(spark, indexDir, fmt) {
           rows.write.mode(mode).parquet(corpusPath)
           rows.select(col(idCol), col("dhash")).write.mode(mode).parquet(sigsPath)
         })
     }
 
-  /** The bootstrap-or-admit step the five quarantining ingests share
+  /** The one bootstrap-or-admit step of every stamped stream ingest
     * ([[ingestImageDedupBatch]], [[ingestAudioDedupBatch]],
-    * [[ingestVideoDedupBatch]], [[ingestWarcBatch]], [[ingestPdfBatch]]):
-    *  - `quarantine` is written to `quarantinePath/batch_id=N` with
-    *    Overwrite — a replay rewrites the same partition instead of
-    *    double-appending, O(batch), no scan of the existing quarantine;
+    * [[ingestVideoDedupBatch]], [[ingestWarcBatch]], [[ingestPdfBatch]],
+    * [[ingestNearDedup]], [[ingestSemanticDedup]], [[ingestVectors]] and
+    * [[ingestSearchDocs]]), and the crash-window contract they share:
     *  - dispatch keys off DATA presence at `dataPath`
-    *    ([[graft.ext.IndexFormat.dataExists]]), never the stamp;
-    *  - bootstrap: `candidates` are pinned and, unless empty, written with
-    *    Overwrite (a replayed bootstrap rewrites identical content —
-    *    `corpusPath` belongs to the ingest). An all-quarantined first
-    *    batch must NOT bootstrap: an empty write would leave a schema-less
-    *    data dir the next batch cannot read, so bootstrap waits for the
-    *    first healthy batch;
-    *  - otherwise: [[graft.ext.IndexFormat.check]], then `admit` (which
-    *    returns the admitted rows PINNED, so the emptiness test and the
-    *    writes never re-run the probe), then, unless nothing was admitted,
-    *    an Append of corpus and index;
-    *  - both writes go through `write(rows, mode)` inside one
-    *    [[graft.ext.IndexFormat.commit]] at `indexDir`, so a torn append
-    *    fails the next batch loudly, and a replayed COMMITTED batch
-    *    re-classifies its own rows as dups and appends nothing.
+    *    ([[graft.ext.IndexFormat.dataExists]]), never the `_meta` stamp:
+    *    the stamp is legitimately absent inside a commit window, and
+    *    reading that state as "no index" would send a replay into the
+    *    bootstrap branch, which overwrites the index with one batch;
+    *  - bootstrap: `bootstrap` is pinned with its row count
+    *    ([[graft.core.Pipeline.pin]]) and, unless empty, written with
+    *    Overwrite, so a replayed bootstrap rewrites identical content
+    *    instead of appending it twice (corpus and index paths belong to the
+    *    ingest). An empty first batch (say, all quarantined) does not
+    *    bootstrap: an empty write would leave a schema-less data dir the
+    *    next batch cannot read;
+    *  - otherwise: [[graft.ext.IndexFormat.check]] against `fmt`, then
+    *    `admit`, which returns the admitted rows pinned with their count,
+    *    so neither the emptiness decision nor the writes re-run the probe;
+    *    unless nothing was admitted, an Append;
+    *  - `write(rows, rowCount, mode)` opens the batch's one
+    *    [[graft.ext.IndexFormat.commit]], and an append writes corpus and
+    *    index inside it: a crash anywhere in the window leaves data
+    *    without a stamp, and the next batch fails loudly at `check`
+    *    instead of re-admitting or dropping rows;
+    *  - a replayed COMMITTED batch re-probes an index that already holds
+    *    its rows, admits nothing and appends nothing: idempotent by
+    *    construction, across checkpoint loss too.
     */
-  private def quarantineAndAdmit(batchId: Long, quarantinePath: String,
-                                 quarantine: DataFrame, candidates: DataFrame,
-                                 dataPath: String, indexDir: String,
-                                 fmt: String)(
-      admit: DataFrame => DataFrame,
-      write: (DataFrame, SaveMode) => Unit): Unit = {
-    val spark = candidates.sparkSession
-    quarantine.write.mode(SaveMode.Overwrite)
-      .parquet(s"$quarantinePath/batch_id=$batchId")
-    if (!graft.ext.IndexFormat.dataExists(spark, dataPath)) {
-      val kept = candidates.localCheckpoint(true)
-      if (!kept.isEmpty)
-        graft.ext.IndexFormat.commit(spark, indexDir, fmt)(write(kept, SaveMode.Overwrite))
-    } else {
-      graft.ext.IndexFormat.check(spark, indexDir, fmt)
-      val admitted = admit(candidates)
-      if (!admitted.isEmpty)
-        graft.ext.IndexFormat.commit(spark, indexDir, fmt)(write(admitted, SaveMode.Append))
-    }
+  private def bootstrapOrAdmit(spark: SparkSession, dataPath: String,
+                               indexDir: String, fmt: => String)(
+      bootstrap: => DataFrame, admit: => Pinned,
+      write: (DataFrame, Long, SaveMode) => Unit): Unit = {
+    val (p, mode) =
+      if (!graft.ext.IndexFormat.dataExists(spark, dataPath))
+        (pin(bootstrap), SaveMode.Overwrite)
+      else {
+        graft.ext.IndexFormat.check(spark, indexDir, fmt)
+        (admit, SaveMode.Append)
+      }
+    if (p.rows > 0) write(p.df, p.rows, mode)
   }
 
   /** Streaming AUDIO ingest with fingerprint dedup — the audio member of
@@ -452,10 +451,7 @@ object Streams {
     * admit against the persisted fingerprint table via
     * [[graft.ext.Media.dhashDupIds]] — the batch side broadcast, the
     * signature table never shuffled, classify cost flat as it grows.
-    * Same exactly-once discipline as the siblings (data-presence
-    * bootstrap, deferred bootstrap on all-quarantined first batch, one
-    * commit-marker window over corpus + sigs, replay no-op, quarantine
-    * Overwrite per batch id).
+    * Exactly-once discipline and quarantine as [[ingestImageDedup]].
     */
   def ingestAudioDedup(stream: DataFrame, corpusPath: String, indexDir: String,
                        quarantinePath: String, idCol: String, contentCol: String,
@@ -503,12 +499,13 @@ object Streams {
       val losers = graft.ext.Media
         .dhashNearPairs(good, idCol, "afp", maxDist, bandBits)
         .select(col("right_id").cast(good.schema(idCol).dataType).as(idCol))
-      quarantineAndAdmit(batchId, quarantinePath, quarantine,
-        good.join(losers, Seq(idCol), "left_anti"), sigsPath, indexDir, fmt)(
-        reps => reps.join(graft.ext.Media.dhashDupIds(reps, idCol, "afp",
+      val reps = good.join(losers, Seq(idCol), "left_anti")
+      quarantine.write.mode(SaveMode.Overwrite).parquet(s"$quarantinePath/batch_id=$batchId")
+      bootstrapOrAdmit(spark, sigsPath, indexDir, fmt)(reps,
+        pin(reps.join(graft.ext.Media.dhashDupIds(reps, idCol, "afp",
             spark.read.parquet(sigsPath), "afp", maxDist, bandBits),
-          Seq(idCol), "left_anti").localCheckpoint(true),
-        (rows, mode) => {
+          Seq(idCol), "left_anti")),
+        (rows, _, mode) => graft.ext.IndexFormat.commit(spark, indexDir, fmt) {
           rows.write.mode(mode).parquet(corpusPath)
           rows.select(col(idCol), col("afp")).write.mode(mode).parquet(sigsPath)
         })
@@ -539,11 +536,7 @@ object Streams {
     * `corpusPath` and their (id, dhash) frames to the signature table,
     * so the NEXT batch dedups against them too.
     *
-    * Exactly-once discipline: identical to [[ingestImageDedup]] (data-
-    * presence bootstrap dispatch, deferred bootstrap on an all-quarantined
-    * first batch, one commit-marker window over corpus + sigs, replayed
-    * committed batches re-classify as dups, quarantine partitions
-    * Overwrite per batch id).
+    * Exactly-once discipline and quarantine as [[ingestImageDedup]].
     *
     * ==Admission modes (`admit`)==
     *
@@ -662,8 +655,8 @@ object Streams {
         .select(col("right_id").cast(good.schema(idCol).dataType).as(idCol))
       val reps = good.join(losers, Seq(idCol), "left_anti")
       val repFrames = frames.join(reps.select(col(idCol)), Seq(idCol), "left_semi")
-      quarantineAndAdmit(batchId, quarantinePath, quarantine, reps, sigsPath,
-          indexDir, fmt)({ reps =>
+      quarantine.write.mode(SaveMode.Overwrite).parquet(s"$quarantinePath/batch_id=$batchId")
+      bootstrapOrAdmit(spark, sigsPath, indexDir, fmt)(reps, {
         // exact-id admission FIRST: a replayed COMMITTED batch's videos are
         // already in the corpus BY ID — including degenerate ones (fewer
         // than minShared distinct frames, or zero frames) that the
@@ -698,9 +691,8 @@ object Streams {
           .agg(count(lit(1)).as("__n"))
           .filter(col("__n") >= minShared)
           .select(col("__bid").as(idCol)).distinct()
-        novel.join(broadcast(dupIds), Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-      }, (rows, mode) => {
+        pin(novel.join(broadcast(dupIds), Seq(idCol), "left_anti"))
+      }, (rows, _, mode) => graft.ext.IndexFormat.commit(spark, indexDir, fmt) {
         rows.write.mode(mode).parquet(corpusPath)
         // a bootstrap writes every representative's frames as they are;
         // an append keeps only the admitted videos' frames
@@ -723,10 +715,8 @@ object Streams {
     * (a column-pruned scan of fixed-width hashes; corpus record bodies
     * are never re-read).
     *
-    * Exactly-once discipline is [[ingestImageDedup]]'s shared step, with
-    * the hash DATA presence at `indexDir/hashes` as the dispatch and one
-    * commit over corpus + hashes; a replayed COMMITTED batch
-    * re-classifies its own rows as dups and appends nothing.
+    * Exactly-once discipline and quarantine as [[ingestImageDedup]],
+    * dispatching on the hash data at `indexDir/hashes`.
     */
   def ingestWarc(stream: DataFrame, corpusPath: String, indexDir: String,
                  quarantinePath: String, idCol: String, contentCol: String,
@@ -762,16 +752,15 @@ object Streams {
           col(idCol).as("file_id"), col("rec_idx"), col("warc_type"),
           col("record_id"), col("target_uri"), col("warc_date"),
           col("content_type"), col("body"))
-      quarantineAndAdmit(batchId, quarantinePath, quarantine,
-        graft.ext.Dedup.exactHashed(recs, Seq("target_uri", "body"), "rec_uid"),
-        hashesPath, indexDir, fmt)(
+      val fresh = graft.ext.Dedup.exactHashed(recs, Seq("target_uri", "body"), "rec_uid")
+      quarantine.write.mode(SaveMode.Overwrite).parquet(s"$quarantinePath/batch_id=$batchId")
+      bootstrapOrAdmit(spark, hashesPath, indexDir, fmt)(fresh,
         // batch hashes broadcast into the stored table; the hit set comes
         // back bounded — the identity table is scanned, never shuffled.
         // The admitted frame reads only the pinned batch, so the appends
-        // cannot re-probe the table they grow
-        fresh => graft.ext.Dedup.admitNewByKey(
-          fresh, spark.read.parquet(hashesPath), "__h"),
-        hashedWriter(outCols, corpusPath, hashesPath))
+        // cannot re-probe the table they grow. `__h` is unique per batch
+        graft.ext.Dedup.admitNewByUniqueKey(fresh, spark.read.parquet(hashesPath) -> "__h"),
+        hashedWriter(spark, indexDir, fmt, outCols, corpusPath, hashesPath))
     }
 
   /** Streaming PDF ingest — document drops arrive as files, so the batch
@@ -785,10 +774,7 @@ object Streams {
     * pages append nothing — first within the batch (min `page_uid` wins),
     * then against the persisted identity table at `indexDir/hashes`
     * (column-pruned fixed-width scan; corpus text never re-read).
-    * Exactly-once discipline identical to [[ingestWarc]] (data-presence
-    * bootstrap, deferred bootstrap on an all-quarantined first batch, one
-    * commit-marker window over corpus + hashes, replay no-op, quarantine
-    * partitions Overwrite per batch id).
+    * Exactly-once discipline and quarantine as [[ingestWarc]].
     */
   def ingestPdf(stream: DataFrame, corpusPath: String, indexDir: String,
                 quarantinePath: String, idCol: String, contentCol: String,
@@ -822,24 +808,26 @@ object Streams {
           concat_ws(":", col(idCol).cast("string"), col("stream_idx")).as("page_uid"),
           col(idCol).as("doc_id"), col("stream_idx"), col("pdf_version"),
           col("text"))
-      quarantineAndAdmit(batchId, quarantinePath, quarantine,
-        graft.ext.Dedup.exactHashed(pages, Seq("text"), "page_uid"),
-        hashesPath, indexDir, fmt)(
+      val fresh = graft.ext.Dedup.exactHashed(pages, Seq("text"), "page_uid")
+      quarantine.write.mode(SaveMode.Overwrite).parquet(s"$quarantinePath/batch_id=$batchId")
+      bootstrapOrAdmit(spark, hashesPath, indexDir, fmt)(fresh,
         // same admission shape as ingestWarc: stored hashes scanned, never
-        // shuffled — see Dedup.admitNewByKey
-        fresh => graft.ext.Dedup.admitNewByKey(
-          fresh, spark.read.parquet(hashesPath), "__h"),
-        hashedWriter(outCols, corpusPath, hashesPath))
+        // shuffled — see Dedup.admitNewByUniqueKey
+        graft.ext.Dedup.admitNewByUniqueKey(fresh, spark.read.parquet(hashesPath) -> "__h"),
+        hashedWriter(spark, indexDir, fmt, outCols, corpusPath, hashesPath))
     }
 
-  /** The WARC/PDF writer: the corpus gets `outCols`, the identity table
-    * only the content hash `__h`.
+  /** The WARC/PDF writer: one commit window in which the corpus gets
+    * `outCols` and the identity table only the content hash `__h`.
     */
-  private def hashedWriter(outCols: Seq[String], corpusPath: String,
-                           hashesPath: String)(rows: DataFrame, mode: SaveMode): Unit = {
-    rows.select(outCols.map(col): _*).write.mode(mode).parquet(corpusPath)
-    rows.select("__h").write.mode(mode).parquet(hashesPath)
-  }
+  private def hashedWriter(spark: SparkSession, indexDir: String, fmt: String,
+                           outCols: Seq[String], corpusPath: String,
+                           hashesPath: String)(rows: DataFrame, n: Long,
+                                               mode: SaveMode): Unit =
+    graft.ext.IndexFormat.commit(spark, indexDir, fmt) {
+      rows.select(outCols.map(col): _*).write.mode(mode).parquet(corpusPath)
+      rows.select("__h").write.mode(mode).parquet(hashesPath)
+    }
 
   private val HashStampFamilies = Seq("warcingest:v1:", "pdfingest:v1:")
 
@@ -962,16 +950,17 @@ object Streams {
       // `__h` is unique per batch (exactHashed), so the admission knows
       // without a job whether it admitted anything: an all-duplicate
       // batch writes no file
+      def admit(stored: DataFrame) = {
+        val p = graft.ext.Dedup.admitNewByUniqueKey(fresh, stored -> "__h")
+        (p.df, p.rows > 0)
+      }
       val ((admitted, any), outCols) = corpusColumns(spark, corpusPath) match {
         case None => ((fresh, true), batch.columns :+ "__h")
         case Some(cols) if cols("__h") =>
-          (graft.ext.Dedup.admitNewByUniqueKey(fresh, storedKeys(spark, corpusPath, "__h"), "__h"),
-            batch.columns :+ "__h")
+          (admit(storedKeys(spark, corpusPath, "__h")), batch.columns :+ "__h")
         case Some(_) =>
-          (graft.ext.Dedup.admitNewByUniqueKey(fresh,
-            spark.read.parquet(corpusPath)
-              .select(graft.ext.Dedup.contentHash(contentCols).as("__h")),
-            "__h"),
+          (admit(spark.read.parquet(corpusPath)
+              .select(graft.ext.Dedup.contentHash(contentCols).as("__h"))),
             batch.columns)
       }
       // fixed column order: every corpus file carries the identical schema
@@ -992,12 +981,8 @@ object Streams {
     // globStatus returns null (not empty) for zero matches on some
     // filesystems — an existing-but-empty corpus dir reads as absent
     Option(path.getFileSystem(conf).globStatus(new org.apache.hadoop.fs.Path(path, "*.parquet")))
-      .flatMap(_.headOption).map { st =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-        finally reader.close()
-      }
+      .flatMap(_.headOption)
+      .map(graft.sources.FileSource.parquetSchema(_, conf).fieldNames.toSet)
   }
 
   /** The stored string key columns `keys` of an ingest corpus, read with
@@ -1042,15 +1027,16 @@ object Streams {
             s"corpus at $corpusPath lacks the stored __u/__h columns — it was " +
               "not created by ingestUrlDedup (refusing to silently re-ingest)")
           val stored = storedKeys(spark, corpusPath, "__u", "__h")
-          // NULL __u never equi-joins → malformed-URL rows pass to the
-          // content stage on both sides, by construction (admitNewByKey
-          // preserves that); stored __u/__h columns are scanned with the
-          // batch keys broadcast into them, never shuffled per batch.
-          // `__h` stays unique per batch, so an all-duplicate batch is
-          // known without a job and writes no file
-          graft.ext.Dedup.admitNewByUniqueKey(
-            graft.ext.Dedup.admitNewByKey(fresh, stored.select("__u"), "__u"),
-            stored.select("__h"), "__h")
+          // one pin, two probes: stored __u, then stored __h, each scanned
+          // with the remaining batch keys broadcast into it, never shuffled
+          // per batch. NULL __u never equi-joins, so malformed-URL rows
+          // pass to the content stage on both sides. Non-null `__u` is
+          // unique per batch (dedupByUrl keeps one row per canonical URL)
+          // and `__h` is too, so an all-duplicate batch is known without a
+          // job and writes no file
+          val p = graft.ext.Dedup.admitNewByUniqueKey(fresh,
+            stored.select("__u") -> "__u", stored.select("__h") -> "__h")
+          (p.df, p.rows > 0)
       }
       val outCols = batch.columns :+ "__u" :+ "__h"
       if (any)
@@ -1069,23 +1055,9 @@ object Streams {
     *
     * Replay safety: an admitted row's signatures enter the index in the
     * same batch, so a replayed batch re-classifies its own rows as
-    * `dup_corpus` and appends nothing — content-level idempotency, same
-    * contract as [[ingestDedup]]. Crash windows are covered end to end:
-    *   - Branch dispatch keys off index DATA presence
-    *     ([[graft.ext.IndexFormat.dataExists]]), never the `_meta`
-    *     stamp — the stamp is legitimately off mid-append, and dispatching
-    *     on it would send a replay into the bootstrap branch, whose
-    *     `buildNearIndex` would overwrite the whole index with one batch.
-    *   - The bootstrap batch is by definition the entire corpus, so it
-    *     writes `corpusPath` with Overwrite: a crash between the corpus
-    *     write and the index build replays into an identical rewrite, not
-    *     a double-append. (Corollary: `corpusPath` belongs to this ingest —
-    *     a pre-existing foreign corpus there would be replaced.)
-    *   - Incremental appends go through
-    *     [[graft.ext.Dedup.appendCorpusAndNearIndex]], whose commit marker
-    *     covers corpus + index together: any crash in the window leaves an
-    *     unstamped index and the next batch fails loudly instead of
-    *     silently re-admitting near-dups.
+    * `dup_corpus` and appends nothing. Crash windows are the contract of
+    * the shared ingest step (`bootstrapOrAdmit`); corpus and index are
+    * written in one commit window, the Overwrite bootstrap included.
     */
   def ingestNearDedup(stream: DataFrame, corpusPath: String, indexDir: String,
                       idCol: String, textCol: String, checkpoint: String,
@@ -1093,26 +1065,18 @@ object Streams {
                       bands: Int = 4, rowsPerBand: Int = 4,
                       trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
     foreachBatchSink(stream, checkpoint, trigger) { (batch, _) =>
-      val spark = batch.sparkSession
-      if (!graft.ext.IndexFormat.dataExists(spark, indexDir)) {
-        val kept = graft.ext.Dedup.nearDedup(batch, idCol, textCol,
-            minJaccard, shingleN, bands, rowsPerBand)
-          .localCheckpoint(true)
-        kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(corpusPath)
-        graft.ext.Dedup.buildNearIndex(kept, idCol, textCol, indexDir,
-          shingleN, bands, rowsPerBand)
-      } else {
-        val admitted = batch.join(
-            graft.ext.Dedup.nearDedupIncremental(batch, idCol, textCol, indexDir,
-                minJaccard, shingleN, bands, rowsPerBand)
-              .filter(col("verdict") === "admitted")
-              .select(col("id").as(idCol)),
-            Seq(idCol), "left_semi")
-          .localCheckpoint(true)
-        if (!admitted.isEmpty)
-          graft.ext.Dedup.appendCorpusAndNearIndex(admitted, corpusPath,
-            idCol, textCol, indexDir, shingleN, bands, rowsPerBand)
-      }
+      bootstrapOrAdmit(batch.sparkSession, indexDir, indexDir,
+          graft.ext.Dedup.nearIndexFormat(shingleN, bands, rowsPerBand))(
+        graft.ext.Dedup.nearDedup(batch, idCol, textCol,
+          minJaccard, shingleN, bands, rowsPerBand),
+        pin(batch.join(
+          graft.ext.Dedup.nearDedupIncremental(batch, idCol, textCol, indexDir,
+              minJaccard, shingleN, bands, rowsPerBand)
+            .filter(col("verdict") === "admitted")
+            .select(col("id").as(idCol)),
+          Seq(idCol), "left_semi")),
+        (rows, _, mode) => graft.ext.Dedup.writeNearIndex(rows, Some(corpusPath),
+          idCol, textCol, indexDir, shingleN, bands, rowsPerBand, mode))
     }
 
   /** Streaming corpus ingest with SEMANTIC (embedding-cosine) dedup — the
@@ -1128,13 +1092,9 @@ object Streams {
     * contract: cells must mean the same thing forever, so k should be
     * sized for the EVENTUAL corpus, not the first batch).
     *
-    * Crash windows carry the exact hardened shape of [[ingestNearDedup]]:
-    * data-presence dispatch ([[graft.ext.IndexFormat.dataExists]]),
-    * Overwrite bootstrap (a replayed bootstrap rewrites identical
-    * content — `corpusPath` belongs to this ingest), and one commit
-    * marker over corpus + index appends
-    * ([[graft.ext.Dedup.appendCorpusAndSemanticIndex]]) so a torn append
-    * fails the next batch loudly instead of silently re-admitting dups.
+    * Crash windows are the contract of the shared ingest step
+    * (`bootstrapOrAdmit`); appends write corpus and index in the one window
+    * of [[graft.ext.Dedup.appendCorpusAndSemanticIndex]].
     */
   def ingestSemanticDedup(stream: DataFrame, corpusPath: String, indexDir: String,
                           idCol: String, vecCol: String, checkpoint: String,
@@ -1142,31 +1102,31 @@ object Streams {
                           trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
     foreachBatchSink(stream, checkpoint, trigger) { (batch, _) =>
       val spark = batch.sparkSession
-      if (!graft.ext.IndexFormat.dataExists(spark, indexDir)) {
-        val kept = graft.ext.Dedup.semanticDedup(batch, idCol, vecCol,
-            math.min(k, batch.count().toInt.max(1)), threshold)
-          .localCheckpoint(true)
-        kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(corpusPath)
-        graft.ext.Dedup.buildSemanticIndex(kept, idCol, vecCol, indexDir,
-          math.min(k, kept.count().toInt.max(1)), dim)
-      } else {
-        // the bootstrap may have built with fewer anchors than the
-        // configured k (a first batch smaller than k), and every later
-        // classify/append must pass the k the STAMP carries. Read from the
-        // stamp once per batch (no Spark job); a missing or foreign stamp
-        // falls back to the configured k and fails at IndexFormat.check
-        val kIndex = graft.ext.Dedup.semanticIndexK(spark, indexDir).getOrElse(k)
-        val admitted = batch.join(
-            graft.ext.Dedup.semanticDedupIncremental(batch, idCol, vecCol,
-                indexDir, kIndex, dim, threshold)
-              .filter(col("verdict") === "admitted")
-              .select(col("id").as(idCol)),
-            Seq(idCol), "left_semi")
-          .localCheckpoint(true)
-        if (!admitted.isEmpty)
-          graft.ext.Dedup.appendCorpusAndSemanticIndex(admitted, corpusPath,
-            idCol, vecCol, indexDir, kIndex, dim)
-      }
+      // the bootstrap may have built with fewer anchors than the
+      // configured k (a first batch smaller than k), and every later
+      // classify/append must pass the k the STAMP carries. Read from the
+      // stamp once per batch (no Spark job); a missing or foreign stamp
+      // falls back to the configured k and fails at IndexFormat.check
+      lazy val kIndex = graft.ext.Dedup.semanticIndexK(spark, indexDir).getOrElse(k)
+      bootstrapOrAdmit(spark, indexDir, indexDir,
+          graft.ext.Dedup.semanticIndexFormat(kIndex, dim))(
+        graft.ext.Dedup.semanticDedup(batch, idCol, vecCol,
+          math.min(k, batch.count().toInt.max(1)), threshold),
+        pin(batch.join(
+          graft.ext.Dedup.semanticDedupIncremental(batch, idCol, vecCol,
+              indexDir, kIndex, dim, threshold)
+            .filter(col("verdict") === "admitted")
+            .select(col("id").as(idCol)),
+          Seq(idCol), "left_semi")),
+        (rows, n, mode) =>
+          if (mode == SaveMode.Append)
+            graft.ext.Dedup.appendCorpusAndSemanticIndex(rows, corpusPath,
+              idCol, vecCol, indexDir, kIndex, dim)
+          else {
+            rows.write.mode(SaveMode.Overwrite).parquet(corpusPath)
+            graft.ext.Dedup.buildSemanticIndex(rows, idCol, vecCol, indexDir,
+              math.min(k.toLong, n).toInt, dim)
+          })
     }
 
   /** Streaming embedding ingest into a persisted IVF index — the vector
@@ -1179,14 +1139,9 @@ object Streams {
     * coarse quantizer ([[graft.ext.Ivf.build]] — the standard
     * train-on-initial-sample bootstrap) and seeds corpus + index.
     *
-    * Crash windows mirror [[ingestNearDedup]]'s hardened shape:
-    * data-presence dispatch ([[graft.ext.IndexFormat.dataExists]]), Overwrite
-    * bootstrap (a replayed bootstrap rewrites identical content — the
-    * corpus path belongs to this ingest), and one commit marker over
-    * corpus + index appends (a torn append fails the next batch loudly).
-    * Replay idempotency is BY CONSTRUCTION: a replayed batch's ids are
-    * already in the corpus, its anti-join admits nothing, and nothing is
-    * appended twice.
+    * Crash windows are the contract of the shared ingest step
+    * (`bootstrapOrAdmit`); a replayed batch's ids are already in the
+    * corpus, so its anti-join admits nothing.
     */
   def ingestVectors(stream: DataFrame, corpusPath: String, indexDir: String,
                     idCol: String, vecCol: String, checkpoint: String,
@@ -1195,25 +1150,24 @@ object Streams {
     foreachBatchSink(stream, checkpoint, trigger) { (batch, _) =>
       val spark = batch.sparkSession
       val perId = batch.select(col(idCol), col(vecCol))
-        .groupBy(col(idCol)).agg(org.apache.spark.sql.functions.first(col(vecCol)).as(vecCol))
-      if (!graft.ext.IndexFormat.dataExists(spark, indexDir)) {
-        val seed = perId.localCheckpoint(true)
-        // a coarse quantizer cannot have more cells than training points —
-        // clamp to the bootstrap batch size (rebuild when the corpus has
-        // outgrown the day-1 placement; appends never refit)
-        val k = math.max(1, math.min(nLists.toLong, seed.count()).toInt)
-        seed.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(corpusPath)
-        graft.ext.Ivf.writeIndex(
-          graft.ext.Ivf.build(seed, idCol, vecCol, nLists = k, maxIter = 3),
-          indexDir)
-      } else {
-        // stored id column scanned, never shuffled (Dedup.admitNewByKey)
-        val fresh = graft.ext.Dedup.admitNewByKey(perId,
-            spark.read.parquet(corpusPath).select(col(idCol)), idCol)
-        if (!fresh.isEmpty)
-          graft.ext.Ivf.appendCorpusAndIndex(fresh, corpusPath, idCol, vecCol,
-            indexDir)
-      }
+        .groupBy(col(idCol)).agg(first(col(vecCol)).as(vecCol))
+      bootstrapOrAdmit(spark, indexDir, indexDir, graft.ext.Ivf.FormatId)(perId,
+        // stored id column scanned, never shuffled; the id is unique per
+        // batch after the groupBy (Dedup.admitNewByUniqueKey)
+        graft.ext.Dedup.admitNewByUniqueKey(perId,
+          spark.read.parquet(corpusPath).select(col(idCol)) -> idCol),
+        (rows, n, mode) =>
+          if (mode == SaveMode.Append)
+            graft.ext.Ivf.appendCorpusAndIndex(rows, corpusPath, idCol, vecCol,
+              indexDir)
+          else {
+            // a coarse quantizer cannot have more cells than training
+            // points — clamp to the bootstrap batch size (rebuild when the
+            // corpus has outgrown the day-1 placement; appends never refit)
+            rows.write.mode(SaveMode.Overwrite).parquet(corpusPath)
+            graft.ext.Ivf.writeIndex(graft.ext.Ivf.build(rows, idCol, vecCol,
+              nLists = math.min(nLists.toLong, n).toInt, maxIter = 3), indexDir)
+          })
     }
 
   /** Streaming document ingest into a persisted BM25 inverted index
@@ -1223,13 +1177,10 @@ object Streams {
     * text is never re-read), and appends the genuinely-new rows' postings
     * so the next query sees them. The first batch bootstraps the index.
     *
-    * Crash windows mirror the other ingests: data-presence dispatch
-    * ([[graft.ext.IndexFormat.dataExists]]), Overwrite bootstrap (a
-    * replayed bootstrap rewrites identical content — the index dir belongs
-    * to this ingest), and [[graft.ext.SearchIndex.append]]'s single commit
-    * marker over postings + docs + stats (a torn append fails the next
-    * batch loudly). Replay idempotency is by construction: a replayed
-    * batch's ids are already in `docs/`, its anti-join admits nothing.
+    * Crash windows are the contract of the shared ingest step
+    * (`bootstrapOrAdmit`), with one commit window over postings + docs +
+    * stats; a replayed batch's ids are already in `docs/`, so its
+    * anti-join admits nothing.
     */
   def ingestSearchDocs(stream: DataFrame, indexDir: String,
                        idCol: String, textCol: String, checkpoint: String,
@@ -1237,19 +1188,20 @@ object Streams {
                        trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
     foreachBatchSink(stream, checkpoint, trigger) { (batch, _) =>
       val spark = batch.sparkSession
-      val perId = batch.select(col(idCol).cast("long").as(idCol), col(textCol))
-        .groupBy(col(idCol))
-        .agg(org.apache.spark.sql.functions.first(col(textCol)).as(textCol))
-      if (!graft.ext.IndexFormat.dataExists(spark, indexDir))
-        graft.ext.SearchIndex.build(perId, idCol, textCol, indexDir, nBuckets)
-      else {
-        val indexed = spark.read.parquet(s"$indexDir/docs")
-          .select(col("id").as(idCol))
-        // stored doc-id column scanned, never shuffled (Dedup.admitNewByKey)
-        val fresh = graft.ext.Dedup.admitNewByKey(perId, indexed, idCol)
-        if (!fresh.isEmpty)
-          graft.ext.SearchIndex.append(fresh, idCol, textCol, indexDir)
-      }
+      val base = graft.ext.SearchIndex.baseOf(
+        batch.select(col(idCol).cast("long").as(idCol), col(textCol))
+          .groupBy(col(idCol)).agg(first(col(textCol)).as(textCol)),
+        idCol, textCol)
+      // appends keep the bucket count the index was built with
+      lazy val stored = graft.ext.SearchIndex.readNBuckets(spark, indexDir)
+      bootstrapOrAdmit(spark, indexDir, indexDir,
+          graft.ext.SearchIndex.formatId(stored))(base,
+        // stored doc-id column scanned, never shuffled; the id is unique per
+        // batch after the groupBy (Dedup.admitNewByUniqueKey)
+        graft.ext.Dedup.admitNewByUniqueKey(base,
+          spark.read.parquet(s"$indexDir/docs").select("id") -> "id"),
+        (rows, _, mode) => graft.ext.SearchIndex.writeBase(rows, indexDir,
+          if (mode == SaveMode.Append) stored else nBuckets, mode))
     }
 
   /** Stream → JDBC upsert: each micro-batch goes through the batched,

@@ -1290,6 +1290,50 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("ingestUrlDedup admits one micro-batch with one pin and two probes, in at most 8 jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tempDir("graft_ingest_urljobs_")
+    val mem = MemoryStream[(Long, String, String)]
+    val q = Streams.ingestUrlDedup(mem.toDF().toDF("doc_id", "url", "text"),
+      s"$dir/corpus", urlCol = "url", contentCols = Seq("text"),
+      idCol = "doc_id", checkpoint = s"$dir/ckpt",
+      trigger = Trigger.ProcessingTime(0))
+    // jobs of this query only, counted from their start events
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("sql.streaming.queryId") == q.id.toString)
+          jobs.add(e.jobId)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.add(e.jobId)
+    }
+    try {
+      mem.addData((1L to 50L).map(i => (i, s"https://a.com/p$i", s"doc $i")): _*)
+      q.processAllAvailable()
+      spark.sparkContext.addSparkListener(listener)
+      // one micro-batch: new pages, a stored URL with new content, stored
+      // content under a new URL, and a malformed URL with new content
+      mem.addData(((51L to 60L).map(i => (i, s"https://a.com/p$i", s"doc $i")) ++ Seq(
+        (61L, "https://a.com/p1?utm_source=x", "changed"),
+        (62L, "https://b.com/copy", "doc 2"),
+        (63L, "not-a-url", "doc 63"))): _*)
+      q.processAllAvailable()
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (!ended.containsAll(jobs) && System.currentTimeMillis() < deadline) Thread.sleep(25)
+      Thread.sleep(200)
+      info(s"one micro-batch ran ${jobs.size} jobs")
+      assert(jobs.size >= 1 && jobs.size <= 8, s"one micro-batch ran ${jobs.size} jobs")
+      val ids = spark.read.parquet(s"$dir/corpus").select("doc_id").as[Long].collect().sorted.toSeq
+      assert(ids == (1L to 60L) :+ 63L)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      q.stop()
+    }
+  }
+
   test("runningTotalsExpiring survives malformed timestamps and null values") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Option[Double], String)]
