@@ -1193,15 +1193,15 @@ object Streams {
           .groupBy(col(idCol)).agg(first(col(textCol)).as(textCol)),
         idCol, textCol)
       // appends keep the bucket count the index was built with
-      lazy val stored = graft.ext.SearchIndex.readNBuckets(spark, indexDir)
+      lazy val storedBuckets = graft.ext.SearchIndex.readNBuckets(spark, indexDir)
       bootstrapOrAdmit(spark, indexDir, indexDir,
-          graft.ext.SearchIndex.formatId(stored))(base,
+          graft.ext.SearchIndex.formatId(storedBuckets))(base,
         // stored doc-id column scanned, never shuffled; the id is unique per
         // batch after the groupBy (Dedup.admitNewByUniqueKey)
         graft.ext.Dedup.admitNewByUniqueKey(base,
           spark.read.parquet(s"$indexDir/docs").select("id") -> "id"),
         (rows, _, mode) => graft.ext.SearchIndex.writeBase(rows, indexDir,
-          if (mode == SaveMode.Append) stored else nBuckets, mode))
+          if (mode == SaveMode.Append) storedBuckets else nBuckets, mode))
     }
 
   /** Stream → JDBC upsert: each micro-batch goes through the batched,
