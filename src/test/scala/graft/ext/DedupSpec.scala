@@ -358,6 +358,45 @@ class DedupSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("nearDedup and the collect of its kept ids stay within their job count") {
+    val (path, _) = nearDupParquet()
+    val docs = spark.read.parquet(path) // its schema job runs before the count
+    // job id → its last stage's name and RDD operator scopes, for the jobs
+    // this case submits (tagged through a local property)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tag = java.util.UUID.randomUUID().toString
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.run") == tag)
+          jobs.put(e.jobId, e.stageInfos.maxByOption(_.stageId).fold("?") { st =>
+            s"${st.name}, ${st.numTasks} tasks: " +
+              st.rddInfos.flatMap(_.scope.map(_.name)).distinct.mkString(" < ")
+          })
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.add(e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty("graft.spec.run", tag)
+    val kept = try {
+      val ids = Dedup.nearDedup(docs, "id", "text", minJaccard = 0.5)
+        .select("id").as[Long].collect()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!ended.containsAll(jobs.keySet()) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(25)
+      Thread.sleep(200)
+      ids
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.spec.run", null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(kept.length == 60 && kept.forall(_ % 10 == 0))
+    val named = jobs.asScala.toSeq.sortBy(_._1).map { case (id, n) => s"$id: $n" }
+    info(s"jobs: ${named.size}\n${named.mkString("\n")}")
+    assert(named.nonEmpty && named.size <= 16,
+      s"nearDedup ran ${named.size} jobs (bound 16):\n${named.mkString("\n")}")
+  }
+
   test("near-index postings equal those of the pre-kernel signature composition") {
     import org.apache.spark.sql.functions._
     import graft.functions.{ShingleOracle, TextFunctions}
