@@ -626,16 +626,14 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b", maxIter: Int = 20,
                           checkpointDir: Option[String] = None): DataFrame =
-    smallGraphComponents(pairs, idA, idB).getOrElse(
+    smallGraphComponents(pairs, idA, idB, SmallGraphEdgeCap).getOrElse(
       iterativeComponents(pairs, idA, idB, maxIter, checkpointDir))
 
-  /** Edge cap for the driver-side union-find fast path, overridable per
-    * session via `graft.cc.smallGraphEdgeCap` (0 disables the fast path).
-    * 2^19 edges ≈ a few tens of MB of collected rows — bounded driver work
-    * by construction, far below any broadcast-side table this engine
-    * already collects.
+  /** Edge cap for the driver-side union-find fast path. 2^19 edges ≈ a few
+    * tens of MB of collected rows — bounded driver work by construction,
+    * far below any broadcast-side table this engine already collects.
     */
-  private[ext] val DefaultSmallGraphEdgeCap = 1L << 19
+  private[ext] val SmallGraphEdgeCap = 1 << 19
 
   /** Driver-side union-find over a SMALL pair graph — same (id, comp =
     * min id of component) contract as the distributed pointer-jumping
@@ -662,18 +660,8 @@ object Dedup {
     * is a LocalRelation, so downstream joins against it broadcast.
     */
   private[ext] def smallGraphComponents(pairs: DataFrame, idA: String,
-                                        idB: String): Option[DataFrame] = {
+                                        idB: String, cap: Int): Option[DataFrame] = {
     val spark = pairs.sparkSession
-    val cap = spark.conf.getOption("graft.cc.smallGraphEdgeCap")
-      .map { v =>
-        try v.trim.toLong
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"graft.cc.smallGraphEdgeCap must be a long (edge count; 0 " +
-              s"disables the driver fast path), got '$v'")
-        }
-      }.getOrElse(DefaultSmallGraphEdgeCap)
-    if (cap <= 0L) return None
     val sel = pairs.select(col(idA), col(idB))
     val dt = sel.schema.fields(0).dataType
     val integral = dt match {
@@ -681,9 +669,8 @@ object Dedup {
       case _ => false
     }
     if (!integral || sel.schema.fields(1).dataType != dt) return None
-    val capI = math.min(cap, Int.MaxValue.toLong - 1).toInt
-    val rows = sel.limit(capI + 1).collect()
-    if (rows.length > capI) return None
+    val rows = sel.limit(cap + 1).collect()
+    if (rows.length > cap) return None
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     // union-find, then min-label per root — identical to the fixpoint
     val parent = new java.util.HashMap[Any, Any]()
@@ -721,7 +708,7 @@ object Dedup {
   }
 
   /** The distributed pointer-jumping loop behind [[connectedComponents]]
-    * (the only path at > [[DefaultSmallGraphEdgeCap]] edges).
+    * (the only path at > [[SmallGraphEdgeCap]] edges).
     */
   private[ext] def iterativeComponents(pairs: DataFrame, idA: String,
                                        idB: String, maxIter: Int,
@@ -818,6 +805,41 @@ object Dedup {
     docs.join(dupes, Seq(idCol), "left_anti")
   }
 
+  /** The cluster step of every dedup pipeline here: pins the (id_a, id_b)
+    * pairs with their count ([[graft.core.Pipeline.pin]], the pin's own
+    * job) and labels the pin with [[connectedComponents]]. None when the
+    * pin counted no pair, so an input with no duplicates spends no job on
+    * the labels. The pair plan runs once: the labels read only the pin.
+    */
+  private def clusters(pairs: DataFrame,
+                       checkpointDir: Option[String]): Option[DataFrame] = {
+    val pinned = graft.core.Pipeline.pin(pairs.select("id_a", "id_b"))
+    if (pinned.rows == 0L) None
+    else Some(connectedComponents(pinned.df, checkpointDir = checkpointDir))
+  }
+
+  /** The (id, verdict) classification of the incremental dedups: an id of
+    * `ids` whose within-batch cluster ([[clusters]] over `pairs`) has a
+    * smaller id is `dup_batch`, as in [[representatives]]; a kept id among
+    * `crossHits.id_a` (batch ids matched in the stored corpus) is
+    * `dup_corpus`; the rest are `admitted`.
+    */
+  private def verdicts(ids: DataFrame, pairs: DataFrame, crossHits: DataFrame,
+                       checkpointDir: Option[String]): DataFrame = {
+    val comp = clusters(pairs, checkpointDir).fold(
+        ids.select(col("id"), col("id").as("comp"))) { c =>
+      ids.join(c, Seq("id"), "left")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+    }
+    val crossDup = crossHits.select(col("id_a").as("id")).distinct()
+      .withColumn("__x", lit(true))
+    comp.join(crossDup, Seq("id"), "left")
+      .select(col("id"),
+        when(col("comp") =!= col("id"), lit("dup_batch"))
+          .when(col("__x"), lit("dup_corpus"))
+          .otherwise(lit("admitted")).as("verdict"))
+  }
+
   /** Materialized [[shingledFrame]]: `localCheckpoint(true)` instead of
     * `persist()` (r19). Storage footprint is the same — persist's first
     * action materialized every column anyway — but the checkpoint also
@@ -885,9 +907,10 @@ object Dedup {
     * the distinct shingle hashes (`__sh`); the pair pipeline reads its
     * (id, sig, __sh) projection and the kept rows come from the same
     * checkpoint, so an expensive upstream plan (a clean + quality filter)
-    * never runs twice. The confirmed pair set is local-checkpointed before
-    * the `isEmpty` gate, so neither that action nor connectedComponents'
-    * first cut re-executes the candidates→rescore plan.
+    * never runs twice. The confirmed pairs are pinned with their count
+    * ([[clusters]]): the pin's own job says whether any pair exists, and
+    * the component labels read the pin, so the candidates→rescore plan
+    * runs once and an input with no near-dups spends no job on labels.
     */
   def nearDedup(docs: DataFrame, idCol: String, textCol: String,
                 minJaccard: Double = 0.8, shingleN: Int = 3,
@@ -902,34 +925,26 @@ object Dedup {
       col("__sh"))
     val candidates = minhashCandidatePairsShingled(shingled,
       bands, rowsPerBand, maxBucketSize)
-    // eager localCheckpoint: materialize the pair pipeline once; the
-    // confirmed set (id pairs + score) is tiny next to the corpus
-    val confirmed = rescoreJaccardShingled(shingled, candidates, minJaccard)
-      .localCheckpoint(true)
     val kept = withShingles.drop("__sig", "__sh")
-    if (confirmed.isEmpty) kept
-    else representatives(kept,
-      connectedComponents(confirmed, checkpointDir = checkpointDir), idCol)
+    clusters(rescoreJaccardShingled(shingled, candidates, minJaccard), checkpointDir)
+      .fold(kept)(representatives(kept, _, idCol))
   }
 
   /** [[nearDedup]] for the embedding modality: sign-LSH candidate pairs at
     * `threshold` cosine → connected components → one representative
     * (min id) per cluster. Same bounded shapes as the text pipeline
     * (banded multi-table LSH, O(log D) label rounds); identical vectors
-    * collide in every table, so exact-duplicate recall is total.
+    * collide in every table, so exact-duplicate recall is total. The
+    * pairs are pinned with their count ([[clusters]]), so the LSH pair
+    * plan runs once.
     */
   def nearDedupEmbeddings(docs: DataFrame, idCol: String, vecCol: String,
                           dim: Int, threshold: Double = 0.99,
                           bitsPerTable: Int = 16, tables: Int = 4,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    // eager localCheckpoint: `isEmpty` is an action, and connectedComponents'
-    // first cut would otherwise re-run the whole LSH pair plan from scratch
-    val pairs = embeddingDupPairs(docs, idCol, vecCol, dim, threshold,
-      bitsPerTable, tables).localCheckpoint(true)
-    if (pairs.isEmpty) docs
-    else representatives(docs,
-      connectedComponents(pairs, checkpointDir = checkpointDir), idCol)
-  }
+                          checkpointDir: Option[String] = None): DataFrame =
+    clusters(embeddingDupPairs(docs, idCol, vecCol, dim, threshold,
+        bitsPerTable, tables), checkpointDir)
+      .fold(docs)(representatives(docs, _, idCol))
 
   /** Embedding-cosine near-dup pairs: banded (multi-table) sign-LSH to bound
     * the pair space, exact cosine within buckets, keep pairs ≥ threshold.
@@ -1116,14 +1131,17 @@ object Dedup {
     * cosines and share a cell by construction), which is also why the
     * oracle can gate this exactly. `maxCellSize` (off by default) drops
     * whole oversized cells via the [[dropHotKeys]] broadcast anti-join —
-    * deterministic, so a capped run stays oracle-able.
+    * deterministic, so a capped run stays oracle-able. An empty `df` has
+    * no anchors and yields no pairs.
     */
   def semanticDupPairs(df: DataFrame, idCol: String, vecCol: String,
                        k: Int = 64, threshold: Double = 0.99,
                        maxCellSize: Int = Int.MaxValue): DataFrame = {
     val anchors = semanticAnchors(df, idCol, vecCol, k)
-    val assigned = assignCells(
-      df.select(col(idCol).as("id"), col(vecCol).as("v")), anchors)
+    val df0 = df.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val assigned =
+      if (anchors.isEmpty) df0.select(lit(0).as("cell"), col("id"), col("v")).limit(0)
+      else assignCells(df0, anchors)
     withinCellPairs(assigned, threshold, maxCellSize)
   }
 
@@ -1148,20 +1166,17 @@ object Dedup {
   /** The full SemDeDup pipeline: [[semanticDupPairs]] → connected
     * components → one representative (min id) per duplicate cluster.
     * Returns the KEPT rows with their original schema, same contract as
-    * [[nearDedup]]/[[nearDedupEmbeddings]]. The pair frame is
-    * local-checkpointed before the `isEmpty` gate so neither that action
-    * nor the first label round re-runs the within-cell join.
+    * [[nearDedup]]/[[nearDedupEmbeddings]]. The pairs are pinned with
+    * their count ([[clusters]]), so the within-cell join runs once and an
+    * input with no duplicates (an empty one included) is returned as is.
     */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     k: Int = 64, threshold: Double = 0.99,
                     maxCellSize: Int = Int.MaxValue,
-                    checkpointDir: Option[String] = None): DataFrame = {
-    val pairs = semanticDupPairs(df, idCol, vecCol, k, threshold, maxCellSize)
-      .localCheckpoint(true)
-    if (pairs.isEmpty) df
-    else representatives(df,
-      connectedComponents(pairs, checkpointDir = checkpointDir), idCol)
-  }
+                    checkpointDir: Option[String] = None): DataFrame =
+    clusters(semanticDupPairs(df, idCol, vecCol, k, threshold, maxCellSize),
+        checkpointDir)
+      .fold(df)(representatives(df, _, idCol))
 
   // ---- incremental near-dedup against a persisted signature index ------
 
@@ -1327,47 +1342,32 @@ object Dedup {
     // bounded; see [[shingledCheckpointed]] for the plan-size rationale
     val shingled = shingledCheckpointed(batch, idCol, textCol, shingleN,
       bands * rowsPerBand)
-    locally {
-      // within-batch: candidates → exact rescore → min-label components
-      val confirmed = rescoreJaccardShingled(shingled,
-        minhashCandidatePairsShingled(shingled, bands, rowsPerBand, maxBucketSize),
-        minJaccard).localCheckpoint(true)
-      val ids = shingled.select("id")
-      val comp =
-        if (confirmed.isEmpty) ids.select(col("id"), col("id").as("comp"))
-        else ids.join(connectedComponents(confirmed, checkpointDir = checkpointDir),
-            Seq("id"), "left")
-          .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      // batch vs corpus: broadcast the batch's band postings over the
-      // stored corpus postings, then exact-rescore the candidate pairs.
-      // The corpus side gets the SAME (band,bucket) df-cap as the
-      // within-batch pairs: one degenerate stored bucket (boilerplate docs
-      // sharing a signature) would otherwise fan out against every batch
-      // posting in it — the cap drops such buckets whole, the documented
-      // price of boundedness. Semi-join first so the cap's count aggregate
-      // touches only buckets the batch actually probes, keeping the
-      // corpus-side work proportional to the batch, not the corpus.
-      val batchBanded = bandedSignatures(shingled, bands, rowsPerBand)
-        .select(col("band"), col("bucket"), col("id").as("id_a"))
-      val probed = spark.read.parquet(s"$indexDir/buckets")
-        .join(broadcast(batchBanded.select("band", "bucket").distinct()),
-          Seq("band", "bucket"), "left_semi")
-      val crossCand = dropHotKeys(probed, Seq("band", "bucket"), maxBucketSize)
-        .withColumnRenamed("id", "id_b")
-        .join(broadcast(batchBanded), Seq("band", "bucket"))
-        .select("id_a", "id_b")
-      val crossDup = rescoreJaccardTwoSided(
-          shingled.select(col("id"), col("__sh").as("sh")),
-          spark.read.parquet(s"$indexDir/shingles"),
-          crossCand, minJaccard)
-        .select(col("id_a").as("id")).distinct()
-        .withColumn("__x", lit(true))
-      comp.join(crossDup, Seq("id"), "left")
-        .select(col("id"),
-          when(col("comp") =!= col("id"), lit("dup_batch"))
-            .when(col("__x"), lit("dup_corpus"))
-            .otherwise(lit("admitted")).as("verdict"))
-    }
+    // within-batch: candidates → exact rescore
+    val confirmed = rescoreJaccardShingled(shingled,
+      minhashCandidatePairsShingled(shingled, bands, rowsPerBand, maxBucketSize),
+      minJaccard)
+    // batch vs corpus: broadcast the batch's band postings over the
+    // stored corpus postings, then exact-rescore the candidate pairs.
+    // The corpus side gets the SAME (band,bucket) df-cap as the
+    // within-batch pairs: one degenerate stored bucket (boilerplate docs
+    // sharing a signature) would otherwise fan out against every batch
+    // posting in it — the cap drops such buckets whole, the documented
+    // price of boundedness. Semi-join first so the cap's count aggregate
+    // touches only buckets the batch actually probes, keeping the
+    // corpus-side work proportional to the batch, not the corpus.
+    val batchBanded = bandedSignatures(shingled, bands, rowsPerBand)
+      .select(col("band"), col("bucket"), col("id").as("id_a"))
+    val probed = spark.read.parquet(s"$indexDir/buckets")
+      .join(broadcast(batchBanded.select("band", "bucket").distinct()),
+        Seq("band", "bucket"), "left_semi")
+    val crossCand = dropHotKeys(probed, Seq("band", "bucket"), maxBucketSize)
+      .withColumnRenamed("id", "id_b")
+      .join(broadcast(batchBanded), Seq("band", "bucket"))
+      .select("id_a", "id_b")
+    verdicts(shingled.select("id"), confirmed,
+      rescoreJaccardTwoSided(shingled.select(col("id"), col("__sh").as("sh")),
+        spark.read.parquet(s"$indexDir/shingles"), crossCand, minJaccard),
+      checkpointDir)
   }
 
   // ---- incremental semantic dedup against a persisted cell index -------
@@ -1453,31 +1453,16 @@ object Dedup {
     val assigned = assignCells(
       batch.select(col(idCol).as("id"), col(vecCol).as("v")), anchors)
       .localCheckpoint(true)
-    locally {
-      val confirmed = withinCellPairs(assigned, threshold, maxCellSize)
-        .select("id_a", "id_b").localCheckpoint(true)
-      val ids = assigned.select("id")
-      val comp =
-        if (confirmed.isEmpty) ids.select(col("id"), col("id").as("comp"))
-        else ids.join(connectedComponents(confirmed, checkpointDir = checkpointDir),
-            Seq("id"), "left")
-          .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      val stored0 = spark.read.parquet(s"$dir/vectors")
-      val stored =
-        if (maxCellSize == Int.MaxValue) stored0
-        else dropHotKeys(stored0, Seq("cell"), maxCellSize)
-      val crossDup = stored
-        .join(broadcast(assigned.select(col("cell"), col("id").as("id_a"),
-          col("v").as("v_a"))), Seq("cell"))
-        .filter(V.cosine(col("v"), col("v_a")) >= threshold)
-        .select(col("id_a").as("id")).distinct()
-        .withColumn("__x", lit(true))
-      comp.join(crossDup, Seq("id"), "left")
-        .select(col("id"),
-          when(col("comp") =!= col("id"), lit("dup_batch"))
-            .when(col("__x"), lit("dup_corpus"))
-            .otherwise(lit("admitted")).as("verdict"))
-    }
+    val stored0 = spark.read.parquet(s"$dir/vectors")
+    val stored =
+      if (maxCellSize == Int.MaxValue) stored0
+      else dropHotKeys(stored0, Seq("cell"), maxCellSize)
+    val crossHits = stored
+      .join(broadcast(assigned.select(col("cell"), col("id").as("id_a"),
+        col("v").as("v_a"))), Seq("cell"))
+      .filter(V.cosine(col("v"), col("v_a")) >= threshold)
+    verdicts(assigned.select("id"), withinCellPairs(assigned, threshold, maxCellSize),
+      crossHits, checkpointDir)
   }
 
   /** Append `docs` (a batch's admitted survivors) to a

@@ -1110,8 +1110,7 @@ object Streams {
       lazy val kIndex = graft.ext.Dedup.semanticIndexK(spark, indexDir).getOrElse(k)
       bootstrapOrAdmit(spark, indexDir, indexDir,
           graft.ext.Dedup.semanticIndexFormat(kIndex, dim))(
-        graft.ext.Dedup.semanticDedup(batch, idCol, vecCol,
-          math.min(k, batch.count().toInt.max(1)), threshold),
+        graft.ext.Dedup.semanticDedup(batch, idCol, vecCol, k, threshold),
         pin(batch.join(
           graft.ext.Dedup.semanticDedupIncremental(batch, idCol, vecCol,
               indexDir, kIndex, dim, threshold)

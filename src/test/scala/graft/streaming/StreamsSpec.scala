@@ -942,6 +942,34 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("ingestSemanticDedup: an empty file arriving first bootstraps nothing; the next batch does") {
+    val dir = tempDir("graft_ingest_sem_empty_")
+    def v(x: Double, y: Double, z: Double, w: Double) =
+      Seq(x.toFloat, y.toFloat, z.toFloat, w.toFloat)
+    def arrive(rows: (Long, Seq[Float])*): Unit =
+      rows.toDF("vec_id", "embedding").coalesce(1).write.mode("append").parquet(s"$dir/in")
+    arrive()
+    assert(new java.io.File(s"$dir/in").list().count(_.endsWith(".parquet")) == 1)
+    val q = Streams.ingestSemanticDedup(
+      spark.readStream.schema("vec_id bigint, embedding array<float>")
+        .option("maxFilesPerTrigger", "1").parquet(s"$dir/in"),
+      s"$dir/corpus", s"$dir/idx", idCol = "vec_id", vecCol = "embedding",
+      checkpoint = s"$dir/ckpt", k = 4, dim = 4, threshold = 0.999,
+      trigger = Trigger.ProcessingTime(0))
+    try {
+      q.processAllAvailable()
+      assert(q.lastProgress != null && q.lastProgress.numInputRows == 0L)
+      assert(!graft.ext.IndexFormat.dataExists(spark, s"$dir/idx"))
+      assert(!new java.io.File(s"$dir/corpus").exists())
+      // 1 ≡ 2: the bootstrap keeps 1 and 3, and builds min(k, 2) = 2 anchors
+      arrive((1L, v(1, 0, 0, 0)), (2L, v(1, 0, 0, 0)), (3L, v(0, 1, 0, 0)))
+      q.processAllAvailable()
+      assert(spark.read.parquet(s"$dir/corpus").select("vec_id").as[Long]
+        .collect().sorted.toSeq == Seq(1L, 3L))
+      assert(graft.ext.Dedup.semanticIndexK(spark, s"$dir/idx").contains(2))
+    } finally q.stop()
+  }
+
   test("ingestSemanticDedup fails loudly when index data exists without a stamp") {
     implicit val sqlCtx = spark.sqlContext
     val dir = tempDir("graft_ingest_semnostamp_")
