@@ -101,8 +101,9 @@ class DedupSpec extends SparkSpec {
     // SparkContext dir is global state; clobbering it would redirect every
     // later checkpoint in the app into our per-call subdir). SparkContext
     // has no unset, so the dir stays set for the rest of the JVM; that is
-    // safe because nothing else in the specs or the library reads it (the
-    // iterative path sets its own per-call dir), and the suite deletes it
+    // safe because nothing else in the specs or the library checkpoints
+    // into it (the iterative path writes to its own per-call dir and only
+    // re-sets this one), and the suite deletes it
     val appDir = tempDir("graft_app_ckpt_")
     spark.sparkContext.setCheckpointDir(appDir)
     val reliableDf = iterativeCC(pairs, checkpointDir = Some(dir))
